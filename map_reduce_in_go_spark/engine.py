@@ -149,7 +149,9 @@ def write_output(
     (
         result.withColumn("bucket", bucket_of(F.col("key"), n_reduce))
         .repartition(n_reduce, F.col("bucket"))
-        .sortWithinPartitions("key")
+        # bucket first: the partitionBy("bucket") writer requires that
+        # ordering and re-sorts by bucket alone unless it is already met
+        .sortWithinPartitions("bucket", "key")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .option("sep", "\t")

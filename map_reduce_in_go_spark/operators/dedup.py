@@ -24,15 +24,19 @@ Scale posture (100 TB):
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.caching import free_local_checkpoint, scoped_persist
 from ..functions.hashing import sql_minhash_signature
-from ..functions.text import shingles, sql_shingles, sql_tokens, tokens
+from ..functions.text import shingles, shingles_of, sql_shingles, sql_tokens, tokens
 from ..functions.vectors import sql_cosine, sql_double_array
 from .similarity import CENTROID_MOD, CENTROID_OFF
+from ..sources.artifacts import artifact_home as band_index_home
+from ..sources.artifacts import memo as _artifact_memo
+from ..sources.artifacts import served_artifact
 from ..sources.tables import load_documents_parallel, load_table, spread_partitions
 
 NUM_PERM = 32
@@ -86,41 +90,51 @@ def dedup_exact_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------- minhash
 
-def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures as an explode → min-aggregate plan.
+# Per-permutation shingle hash of each MinHash family. ``md5`` over the
+# seeded string is portable (the DuckDB oracles replay it exactly);
+# ``xxhash64`` is JVM-native long math, ~2x cheaper per shingle with 32
+# longs/doc on the shuffle instead of 32 hex strings, but has no DuckDB
+# twin, so its family is pytest-verified against md5 instead of an oracle.
+_PERM_HASH = {
+    "md5": lambda s, sh: F.md5(F.concat(F.lit(f"{s}:"), sh)),
+    "xxhash64": lambda s, sh: F.xxhash64(F.lit(s), sh),
+}
+
+
+def _signatures(spark: SparkSession, sf_dir: str, family: str = "md5") -> DataFrame:
+    """MinHash signatures of the documents table, persisted.
 
     The closed-form nested-HOF variant (``functions.hashing.minhash_signature``)
     computes the same values but higher-order functions are *interpreted*
     expressions in Spark — and every self-join reference re-evaluates them.
-    This shape keeps everything in whole-stage codegen with map-side combine:
-    (doc, seed, shingle) rows → min(md5) per (doc, seed) → ordered array.
-    The result is persisted because the LSH pipeline reuses it three times.
+    :func:`signatures_of` keeps everything in whole-stage codegen with
+    map-side combine. The result is persisted because the LSH pipeline
+    reuses it three times.
     """
     docs = load_documents_parallel(spark, sf_dir, full_width=True)
-    return scoped_persist(signatures_of(docs.withColumn("toks", tokens(F.col("text")))))
+    return scoped_persist(
+        signatures_of(docs.withColumn("toks", tokens(F.col("text"))), family)
+    )
 
 
-def signatures_of(docs: DataFrame) -> DataFrame:
-    """MinHash signatures from a frame carrying ``doc_id`` + ``toks``.
+def signatures_of(docs: DataFrame, family: str = "md5") -> DataFrame:
+    """(doc_id, sig) MinHash signatures from a frame carrying ``doc_id`` + ``toks``.
 
-    Split out so fused pipelines (operators/pipeline.py) can tokenize once
-    and feed the same array to scoring and shingling. Not persisted here —
-    callers own the cache scope.
+    ``family`` picks the permutation hash (``md5`` or ``xxhash64``, see
+    ``_PERM_HASH``). Takes tokens so fused pipelines (operators/pipeline.py)
+    can tokenize once and feed the same array to scoring and shingling.
+    Not persisted here — callers own the cache scope.
     """
-    from ..functions.text import shingles_of
-
+    perm = _PERM_HASH[family]
     sh = docs.select(
         "doc_id", F.explode(shingles_of(F.col("toks"), SHINGLE_N)).alias("shingle")
     )
     # one min() aggregate per permutation instead of a 32× seed explode:
-    # the 32 md5s are projected per shingle row inside codegen, partial
+    # the 32 hashes are projected per shingle row inside codegen, partial
     # aggregation collapses them map-side, and the shuffle carries just
-    # 32 strings per doc instead of 32× the shingle rows.
+    # 32 values per doc instead of 32× the shingle rows.
     mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"s{s}")
-            for s in range(NUM_PERM)
-        ]
+        *[F.min(perm(s, F.col("shingle"))).alias(f"s{s}") for s in range(NUM_PERM)]
     )
     return mins.select(
         "doc_id", F.array(*[F.col(f"s{s}") for s in range(NUM_PERM)]).alias("sig")
@@ -165,9 +179,9 @@ def _band_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs with signature agreement counts."""
-    sigs = _signatures(spark, sf_dir)
+def verified_pairs(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_match): LSH band-join candidates of ``sigs``, each
+    with its signature agreement count out of ``NUM_PERM``."""
     pairs = _band_pairs(sigs)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -183,6 +197,11 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_match"),
         )
     )
+
+
+def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate pairs with signature agreement counts."""
+    return verified_pairs(_signatures(spark, sf_dir))
 
 
 # ------------------------------------------------------------------- simhash
@@ -619,34 +638,14 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: at 100 TB the old side's band table is a *persisted
     index* — bucketed by (band_idx, band_hash) and appended to as batches
     land — so each increment is (batch bands) ⋈ (indexed corpus bands),
-    never a corpus rescan. Here both sides derive from one signature pass;
-    the join shape is identical.
+    never a corpus rescan. Here both sides derive from one signature pass
+    and go through the same probe kernel, :func:`dedup_batch_against_bands`.
     """
-    sigs = scoped_persist(_signatures(spark, sf_dir))
-    bands = scoped_persist(_bands(sigs))
-    new_bands = bands.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 1)
-    old_bands = bands.filter(F.pmod(F.col("doc_id"), F.lit(2)) == 0)
-    drop_old = new_bands.join(
-        old_bands.select("band_idx", "band_hash").distinct(),
-        ["band_idx", "band_hash"],
-        "left_semi",
-    ).select("doc_id")
-    a, b = new_bands.alias("a"), new_bands.alias("b")
-    drop_new = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("doc_id"))
-    )
-    new_docs = load_table(spark, sf_dir, "documents").filter(
-        F.pmod(F.col("doc_id"), F.lit(2)) == 1
-    )
-    return (
-        new_docs.join(drop_old.union(drop_new).distinct(), "doc_id", "left_anti")
-        .select("doc_id")
+    bands = scoped_persist(_bands(_signatures(spark, sf_dir)))
+    is_new = F.pmod(F.col("doc_id"), F.lit(2)) == 1
+    new_docs = load_table(spark, sf_dir, "documents").filter(is_new)
+    return dedup_batch_against_bands(
+        new_docs, bands.filter(~is_new), batch_bands=bands.filter(is_new)
     )
 
 
@@ -692,21 +691,22 @@ def dedup_batch_against_index(
 def dedup_batch_against_bands(
     batch_docs: DataFrame, old_bands: DataFrame, batch_bands: DataFrame | None = None
 ) -> DataFrame:
-    """Core batch-vs-standing-bands dedup, storage-agnostic.
+    """Batch-vs-standing-bands dedup, storage-agnostic: the one probe kernel.
 
+    A batch doc is dropped if one of its bands collides with a standing
+    band (near-dup of the corpus) or with a smaller-id batch doc's band
+    (near-dup within the batch); the surviving ``doc_id``s are returned.
     ``old_bands`` may come from any reader — the plain parquet index, the
     manifest-log table, or a derived frame; only (band_idx, band_hash) is
     consumed. ``batch_bands`` lets a caller that already materialized the
     batch's band table (e.g. to derive probe keys for stats pruning) skip
     the second signature pass; it must be ``bands_of_docs(batch_docs)``.
     """
-    if batch_bands is not None:
-        new_bands = batch_bands
-    else:
-        batch_sigs = scoped_persist(
-            signatures_of(batch_docs.withColumn("toks", tokens(F.col("text"))))
-        )
-        new_bands = scoped_persist(_bands(batch_sigs))
+    new_bands = (
+        batch_bands
+        if batch_bands is not None
+        else scoped_persist(bands_of_docs(batch_docs))
+    )
     drop_old = new_bands.join(
         old_bands.select("band_idx", "band_hash").distinct(),
         ["band_idx", "band_hash"],
@@ -750,10 +750,7 @@ def dedup_batch_against_stats_index(
     hashes — a batch that large touches essentially every file of any
     real index, so the metadata pass would be pure overhead.
     """
-    batch_sigs = scoped_persist(
-        signatures_of(batch_docs.withColumn("toks", tokens(F.col("text"))))
-    )
-    new_bands = scoped_persist(_bands(batch_sigs))
+    new_bands = scoped_persist(bands_of_docs(batch_docs))
     # one bounded driver job (r15, guide §5): the former count() + collect
     # pair charged two full passes for one probe-key set; limit(K+1) caps
     # driver memory and the length test replaces the count
@@ -766,47 +763,8 @@ def dedup_batch_against_stats_index(
         )
     else:
         old = tbl.read(spark)
-    drop_old = new_bands.join(
-        old.select("band_idx", "band_hash").distinct(),
-        ["band_idx", "band_hash"],
-        "left_semi",
-    ).select("doc_id")
-    a, b = new_bands.alias("a"), new_bands.alias("b")
-    drop_new = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("b.doc_id").alias("doc_id"))
-    )
-    return (
-        batch_docs.select("doc_id")
-        .join(drop_old.union(drop_new).distinct(), "doc_id", "left_anti")
-        .select("doc_id")
-    )
+    return dedup_batch_against_bands(batch_docs, old, batch_bands=new_bands)
 
-
-# Per-process home for durable band indexes. ``mkdtemp`` makes the path
-# unique per interpreter, so two concurrent sessions on the same sf can
-# never race on an overwrite, and a testdata regeneration can never be
-# shadowed by a stale index from an earlier process; the whole tree is
-# removed at interpreter exit. The lock serializes memo population across
-# threads (check-then-act on the dict would let two threads build into the
-# same directory); it is shared with similarity.py's IVF memo.
-import threading
-
-# The latch/home/memo machinery moved to sources/artifacts.py (r10 — it
-# is the shared lifecycle of EVERY served artifact, not a dedup detail);
-# these re-exports keep the long-standing names importable from here.
-from ..sources.artifacts import (  # noqa: E402
-    ARTIFACT_LOCK as INDEX_MEMO_LOCK,
-    artifact_home as band_index_home,
-    memo as _artifact_memo,
-    memoized_build,
-    served_artifact,
-)
 
 _CORPUS_INDEXES = _artifact_memo("corpus")  # introspected by tests
 
@@ -854,38 +812,55 @@ def append_to_band_index(docs: DataFrame, index_path: str) -> None:
     build_band_index(docs, index_path, mode="append")
 
 
+def _two_batch(spark: SparkSession, sf_dir: str, bootstrap, probe, append) -> DataFrame:
+    """The day-2 sequence every two-batch twin runs over its own storage.
+
+    Documents split by ``doc_id mod 3`` into the standing corpus (0), batch
+    1 and batch 2. ``bootstrap(corpus)`` builds the index, ``probe(batch)``
+    returns a batch's surviving doc_ids against the index as it stands, and
+    ``append(kept)`` adds batch 1's surviving documents to it. Returns
+    ``(batch, doc_id)`` survivors of both batches; batch 2's rows prove the
+    append path — a batch-2 doc is dropped on collision with the corpus
+    *or* a batch-1 survivor, which only the appended rows can cause.
+    Batch 1's survivors are checkpointed eagerly before the append so
+    their probe finishes before the index changes underneath the plan.
+    """
+    docs = load_table(spark, sf_dir, "documents")
+    corpus, batch1, batch2 = (
+        docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == r) for r in range(3)
+    )
+    bootstrap(corpus)
+    surv1 = probe(batch1).localCheckpoint(eager=True)
+    append(batch1.join(surv1, "doc_id", "left_semi"))
+    surv2 = probe(batch2)
+    return surv1.select(F.lit(1).cast("int").alias("batch"), "doc_id").unionAll(
+        surv2.select(F.lit(2).cast("int").alias("batch"), "doc_id")
+    )
+
+
+def _index_dir(prefix: str) -> str:
+    """A fresh ``bands`` path under this process's artifact home."""
+    return os.path.join(tempfile.mkdtemp(prefix=prefix, dir=band_index_home()), "bands")
+
+
 def dedup_incremental_two_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-2 incremental dedup: two batches against a *growing* band index.
 
-    The daily-crawl sequence end-to-end: build the standing corpus's index
-    (doc_id ≡ 0 mod 3) → dedup batch 1 (≡ 1) against it → append batch 1's
-    *surviving* bands → dedup batch 2 (≡ 2) against the grown index. Returns
-    ``(batch, doc_id)`` survivors of both batches; batch 2's rows prove the
-    parquet ``append`` path — a batch-2 doc is dropped on collision with the
-    corpus *or* a batch-1 survivor, which only the appended files can cause.
+    The daily-crawl sequence end-to-end (:func:`_two_batch`) over a plain
+    parquet band index: build the standing corpus's index → dedup batch 1
+    against it → append batch 1's *surviving* bands → dedup batch 2 against
+    the grown index.
 
     The reference re-reads every input file on every run (main.go:130); the
-    index makes each increment's cost scale with the batch instead. Batch 1's
-    survivors are checkpointed eagerly before the append so their scan of the
-    index finishes before the index's file set changes underneath the plan.
+    index makes each increment's cost scale with the batch instead.
     """
-    import tempfile
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    batch1 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1)
-    batch2 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2)
-    index_path = os.path.join(
-        tempfile.mkdtemp(prefix="two_batch_", dir=band_index_home()), "bands"
-    )
-    build_band_index(corpus, index_path)
-    surv1 = dedup_batch_against_index(spark, batch1, index_path).localCheckpoint(
-        eager=True
-    )
-    append_to_band_index(batch1.join(surv1, "doc_id", "left_semi"), index_path)
-    surv2 = dedup_batch_against_index(spark, batch2, index_path)
-    return surv1.select(F.lit(1).cast("int").alias("batch"), "doc_id").unionAll(
-        surv2.select(F.lit(2).cast("int").alias("batch"), "doc_id")
+    index_path = _index_dir("two_batch_")
+    return _two_batch(
+        spark,
+        sf_dir,
+        bootstrap=lambda corpus: build_band_index(corpus, index_path),
+        probe=lambda batch: dedup_batch_against_index(spark, batch, index_path),
+        append=lambda kept: append_to_band_index(kept, index_path),
     )
 
 
@@ -901,28 +876,22 @@ def dedup_incremental_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
     read again. The driver hash-checking this row proves the commit protocol
     changes no surviving row vs the plain-parquet twin.
     """
-    import tempfile
-
     from ..sources.manifest_table import ManifestTable
 
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    batch1 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1)
-    batch2 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2)
-    tbl = ManifestTable(
-        os.path.join(tempfile.mkdtemp(prefix="acid_", dir=band_index_home()), "bands")
-    )
-    tbl.overwrite(bands_of_docs(corpus))
-    surv1 = dedup_batch_against_bands(batch1, tbl.read(spark)).localCheckpoint(
-        eager=True
-    )
-    tbl.append(bands_of_docs(batch1.join(surv1, "doc_id", "left_semi")))
-    # compaction mid-sequence: rewrites + dedups the live rows, swaps the
-    # file list atomically — batch 2 must see identical content after it
-    tbl.compact(spark, dedup_cols=["doc_id", "band_idx", "band_hash"])
-    surv2 = dedup_batch_against_bands(batch2, tbl.read(spark))
-    return surv1.select(F.lit(1).cast("int").alias("batch"), "doc_id").unionAll(
-        surv2.select(F.lit(2).cast("int").alias("batch"), "doc_id")
+    tbl = ManifestTable(_index_dir("acid_"))
+
+    def append(kept: DataFrame) -> None:
+        tbl.append(bands_of_docs(kept))
+        # compaction mid-sequence: rewrites + dedups the live rows, swaps the
+        # file list atomically — batch 2 must see identical content after it
+        tbl.compact(spark, dedup_cols=["doc_id", "band_idx", "band_hash"])
+
+    return _two_batch(
+        spark,
+        sf_dir,
+        bootstrap=lambda corpus: tbl.overwrite(bands_of_docs(corpus)),
+        probe=lambda batch: dedup_batch_against_bands(batch, tbl.read(spark)),
+        append=append,
     )
 
 
@@ -939,37 +908,31 @@ def dedup_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hit (the daily-small-delta serving shape; pruning strictness itself is
     pinned by tests/test_data_skipping.py).
     """
-    import tempfile
-
     from ..sources.manifest_table import ManifestTable
 
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    batch1 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1)
-    batch2 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2)
-    tbl = ManifestTable(
-        os.path.join(
-            tempfile.mkdtemp(prefix="stats_", dir=band_index_home()), "bands"
-        ),
-        stats_cols=["band_hash"],
-    )
-    tbl.overwrite(bands_of_docs(corpus))
-    tbl.compact(spark, num_files=8, zorder_cols=["band_hash"])
-    surv1 = dedup_batch_against_stats_index(spark, batch1, tbl).localCheckpoint(
-        eager=True
-    )
-    tbl.append(bands_of_docs(batch1.join(surv1, "doc_id", "left_semi")))
-    # restore the sorted layout so batch 2's probe prunes again (appends
-    # land in arrival order and erode range tightness — the OPTIMIZE loop)
-    tbl.compact(
+    tbl = ManifestTable(_index_dir("stats_"), stats_cols=["band_hash"])
+
+    def bootstrap(corpus: DataFrame) -> None:
+        tbl.overwrite(bands_of_docs(corpus))
+        tbl.compact(spark, num_files=8, zorder_cols=["band_hash"])
+
+    def append(kept: DataFrame) -> None:
+        tbl.append(bands_of_docs(kept))
+        # restore the sorted layout so batch 2's probe prunes again (appends
+        # land in arrival order and erode range tightness — the OPTIMIZE loop)
+        tbl.compact(
+            spark,
+            dedup_cols=["doc_id", "band_idx", "band_hash"],
+            num_files=8,
+            zorder_cols=["band_hash"],
+        )
+
+    return _two_batch(
         spark,
-        dedup_cols=["doc_id", "band_idx", "band_hash"],
-        num_files=8,
-        zorder_cols=["band_hash"],
-    )
-    surv2 = dedup_batch_against_stats_index(spark, batch2, tbl)
-    return surv1.select(F.lit(1).cast("int").alias("batch"), "doc_id").unionAll(
-        surv2.select(F.lit(2).cast("int").alias("batch"), "doc_id")
+        sf_dir,
+        bootstrap=bootstrap,
+        probe=lambda batch: dedup_batch_against_stats_index(spark, batch, tbl),
+        append=append,
     )
 
 
@@ -990,38 +953,26 @@ def dedup_incremental_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plain-parquet and manifest-table twins — the shared oracle proves
     the transactional layering changes no surviving row.
     """
-    import tempfile
-
     from ..sources.catalog import TableCatalog
 
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
-    batch1 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 1)
-    batch2 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 2)
-    cat = TableCatalog(
-        tempfile.mkdtemp(prefix="txn_ingest_", dir=band_index_home())
-    )
-    # Bootstrap: corpus docs + their band index appear in one commit.
-    txn0 = cat.transaction(spark)
-    txn0.overwrite("corpus", corpus.select("doc_id", "text"))
-    txn0.overwrite("band_index", bands_of_docs(corpus))
-    txn0.commit(op="ingest-bootstrap")
-    # Ingest batch 1: probe the snapshot's bands, then append surviving
-    # docs AND their bands in one transaction (checkpoint the survivors so
-    # their probe plan finishes before the tables change underneath it).
-    surv1 = dedup_batch_against_bands(
-        batch1, cat.read(spark, "band_index")
-    ).localCheckpoint(eager=True)
-    kept1 = batch1.join(surv1, "doc_id", "left_semi")
-    txn1 = cat.transaction(spark)
-    txn1.append("corpus", kept1.select("doc_id", "text"))
-    txn1.append("band_index", bands_of_docs(kept1))
-    txn1.commit(op="ingest-batch-1")
-    # Ingest batch 2 against the new snapshot — collisions with the corpus
-    # OR batch-1 survivors, which only txn1's atomic publication provides.
-    surv2 = dedup_batch_against_bands(batch2, cat.read(spark, "band_index"))
-    return surv1.select(F.lit(1).cast("int").alias("batch"), "doc_id").unionAll(
-        surv2.select(F.lit(2).cast("int").alias("batch"), "doc_id")
+    cat = TableCatalog(tempfile.mkdtemp(prefix="txn_ingest_", dir=band_index_home()))
+
+    def commit(docs: DataFrame, op: str, overwrite: bool = False) -> None:
+        # the documents and their bands appear in one catalog commit
+        txn = cat.transaction(spark)
+        write = txn.overwrite if overwrite else txn.append
+        write("corpus", docs.select("doc_id", "text"))
+        write("band_index", bands_of_docs(docs))
+        txn.commit(op=op)
+
+    return _two_batch(
+        spark,
+        sf_dir,
+        bootstrap=lambda corpus: commit(corpus, "ingest-bootstrap", overwrite=True),
+        probe=lambda batch: dedup_batch_against_bands(
+            batch, cat.read(spark, "band_index")
+        ),
+        append=lambda kept: commit(kept, "ingest-batch-1"),
     )
 
 
@@ -1889,32 +1840,6 @@ ORACLES["dedup_substring_apply"] = (
 )
 
 
-def _signatures_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures on JVM xxhash64 — the no-oracle fast path.
-
-    Same explode → 32-way min-aggregate plan as :func:`_signatures`, but
-    each permutation hashes with ``xxhash64(seed, shingle)`` (codegen'd
-    native long math) instead of md5 hex strings: ~2× cheaper per shingle
-    and the shuffle carries 32 longs/doc instead of 32 hex strings. DuckDB
-    has no xxhash64, so this variant is pytest-verified by containment
-    against the portable md5 family instead of an oracle — use it when
-    throughput matters more than cross-engine replay.
-    """
-    docs = load_documents_parallel(spark, sf_dir, full_width=True)
-    sh = docs.select(
-        "doc_id", F.explode(shingles(F.col("text"), SHINGLE_N)).alias("shingle")
-    )
-    mins = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"s{s}")
-            for s in range(NUM_PERM)
-        ]
-    )
-    return mins.select(
-        "doc_id", F.array(*[F.col(f"s{s}") for s in range(NUM_PERM)]).alias("sig")
-    )
-
-
 def minhash_fast_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 MinHash-LSH candidate pairs (production fast path).
 
@@ -1925,22 +1850,7 @@ def minhash_fast_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughput matters more than cross-engine replay; the registered
     :func:`dedup_minhash_fast` wraps it with a hash-checkable verdict.
     """
-    sigs = scoped_persist(_signatures_fast(spark, sf_dir))
-    pairs = _band_pairs(sigs)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(
-                f"size(filter(sequence(1, {NUM_PERM}), "
-                "i -> element_at(sig_a, i) = element_at(sig_b, i)))"
-            ).alias("n_match"),
-        )
-    )
+    return verified_pairs(_signatures(spark, sf_dir, "xxhash64"))
 
 
 # Agreement floor for the fast-family PYTEST check: on the pinned test

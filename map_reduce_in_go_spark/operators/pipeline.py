@@ -15,7 +15,7 @@ Scale: stages are filters and one window over md5(text) plus the LSH
 pair join — nothing here adds a shuffle beyond what the parts already
 cost; at 100 TB you materialize the pair list once and reuse it, which
 is exactly how the plan composes (the pairs subtree is the shared
-``_band_pairs`` plan).
+``verified_pairs`` plan).
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, spread_partitions
+from ..sources.tables import load_table
 from .dedup import NUM_PERM
 from .dedup import ORACLES as _DEDUP_ORACLES
 from .dedup import dedup_minhash
@@ -96,7 +96,7 @@ def corpus_clean_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.caching import scoped_persist
     from ..functions.text import tokens
-    from .dedup import _band_pairs, signatures_of
+    from .dedup import signatures_of, verified_pairs
     from .text_analysis import langid_columns, quality_columns
 
     base = scoped_persist(
@@ -133,20 +133,9 @@ def corpus_clean_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality",
         F.min("doc_id").over(W.partitionBy(F.md5("text"))).alias("kid"),
     ).filter(F.col("doc_id") == F.col("kid"))
-    sigs = scoped_persist(signatures_of(base))
-    pairs = _band_pairs(sigs)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     near_b = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            F.expr(
-                f"size(filter(sequence(1, {NUM_PERM}), "
-                "i -> element_at(sig_a, i) = element_at(sig_b, i))) "
-                f">= {NEAR_DUP_MIN_MATCH}"
-            )
-        )
+        verified_pairs(scoped_persist(signatures_of(base)))
+        .filter(F.col("n_match") >= NEAR_DUP_MIN_MATCH)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

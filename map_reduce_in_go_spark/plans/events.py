@@ -1,5 +1,4 @@
-"""Event-stream analytics (batch form; streaming twins live in
-``streaming/events.py``).
+"""Event-stream analytics.
 
 Determinism notes:
 - orderings always break ties on ``event_id`` (unique);
@@ -145,12 +144,7 @@ def events_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded, making the z-scores deterministic too. Emits events
     with |z| ≥ 2.
     """
-    return zscore_flags(load_table(spark, sf_dir, "events"))
-
-
-def zscore_flags(ev: DataFrame) -> DataFrame:
-    """Core per-user z-score flagger over any events-shaped frame (split out
-    so the streaming micro-batch twin replays the identical plan)."""
+    ev = load_table(spark, sf_dir, "events")
     vd = money("value")
     stats = ev.groupBy("user_id").agg(
         F.count("*").alias("n"),

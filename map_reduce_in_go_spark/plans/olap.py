@@ -121,16 +121,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Two window passes + two broadcast joins; the fact shuffles
     once per pass on event_type and the stats frames are 5 rows.
     """
-    return mad_fences(load_table(spark, sf_dir, "events"))
-
-
-def mad_fences(ev: DataFrame) -> DataFrame:
-    """Core median/MAD fence detector over any events-shaped frame.
-
-    Split from :func:`events_anomaly_mad` so the streaming micro-batch twin
-    (streaming/anomaly.py) runs the *same* plan over each snapshot — parity
-    by construction, not by reimplementation.
-    """
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     r = ev.select(
         "event_type",

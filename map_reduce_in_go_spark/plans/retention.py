@@ -170,8 +170,7 @@ def events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window aggregates: 1-hour windows sliding every 30 minutes.
 
     Each event lands in exactly window/slide = 2 windows; Spark's
-    ``F.window(slideDuration=...)`` expands then aggregates — the same plan
-    the streaming twin runs incrementally."""
+    ``F.window(slideDuration=...)`` expands then aggregates."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(

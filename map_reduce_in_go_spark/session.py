@@ -9,9 +9,10 @@ Spark ships all of that; we only set the knobs so the behavior matches:
 - ``spark.speculation=true, multiplier=1.5`` <-> straggler replication @ 1.5x
 - executor heartbeats are built in         <-> worker heartbeat loop
 
-Scale posture (100 TB / 1000 executors): AQE on (partition coalescing + skew
-join splitting), Arrow for every Python exchange, broadcast threshold sized
-for dimension tables, shuffle partitions overridable per deployment.
+Scale posture (100 TB / 1000 executors): Spark's default AQE (partition
+coalescing + skew join splitting, left unset here), Arrow for every Python
+exchange, broadcast threshold sized for dimension tables, shuffle partitions
+overridable per deployment.
 """
 
 from __future__ import annotations
@@ -73,22 +74,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Coalesce post-shuffle partitions toward the advisory byte size
-        # instead of stopping at defaultParallelism (the Spark-documented
-        # production recommendation, guide §2.2 "fewer, larger reduce
-        # partitions"). Conf-able per deployment; the local default is
-        # measured in OPTIMIZATION_r16.md.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"),
-        )
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

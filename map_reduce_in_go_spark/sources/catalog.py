@@ -1,11 +1,10 @@
 """Multi-table ACID transactions over the manifest-log catalog pattern.
 
-:class:`~.manifest_table.ManifestTable` gives single-table ACID commits,
-and the evolvable IVF index (operators/ivf_index.py) hand-rolls a
-two-level layering on top of it: per-cell tables plus one *catalog* table
-whose snapshot pins exact member versions. This module generalizes that
-layering into reusable **multi-table transactions** — the thing a real
-training-data pipeline needs whenever two tables must move together
+:class:`~.manifest_table.ManifestTable` gives single-table ACID commits.
+This module layers reusable **multi-table transactions** on top of it —
+member tables plus one *catalog* table whose snapshot pins exact member
+versions. A real training-data pipeline needs them whenever two tables
+must move together
 (corpus + its band index, documents + their drop-list, inverted file +
 centroids): a reader must never observe the corpus from commit N next to
 an index from commit N-1.

@@ -10,7 +10,7 @@ repo's existing per-artifact streaming pieces into ONE
 
 - ``corpus``        — accepted (near-dup-filtered) documents;
 - ``band_index``    — their MinHash bands (what the NEXT batch dedups
-  against — the ``ingest_batch_txn`` core);
+  against);
 - ``gram_index``    — their token-K-gram counts (additive rows: the
   served substring-dedup structure, sources/substring_index.py);
 - ``token_cms``     — one Count-Min sketch row (streaming/heavy.py's
@@ -43,8 +43,7 @@ proven in tests/test_corpus_pipeline.py by wiping and replaying.
 
 On a CAS conflict (a racing backfill writer) the batch re-plans against
 the new snapshot with a full re-probe — survivors were derived from the
-old snapshot, so this is the serializable behavior (the
-``ingest_batch_txn`` discipline).
+old snapshot, so this is the serializable behavior.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Rollup LATTICE with subsumption-based query answering (r11).
 
-``streaming/rollup.py`` maintains ONE additive GROUP BY as a ledgered
-materialized view. Real serving layers keep a *lattice* of them — the
+One additive GROUP BY kept as a ledgered materialized view answers one
+granularity. Real serving layers keep a *lattice* of them — the
 same stream pre-aggregated at several granularities — and route each
 query to the cheapest view that can still answer it exactly. This module
 adds both halves:

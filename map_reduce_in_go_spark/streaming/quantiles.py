@@ -1,7 +1,7 @@
 """Streaming quantiles: durable mergeable rank-sample rollup.
 
 The quantile member of the sketch-rollup family (HLL:
-``streaming/rollup.py`` + ``sketch_rollup_users``; CMS:
+``sketch_rollup_users``; CMS:
 ``streaming/heavy.py`` + ``heavy_hitters_cms``) — the streaming twin of
 :func:`~..operators.approx.events_quantiles_approx` (r9 verdict
 "missing" #3). Each micro-batch lands, per event_type, ONE bounded

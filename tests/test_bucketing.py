@@ -77,46 +77,6 @@ def test_bucketed_matches_unbucketed(spark, sf_dir, bucketed):
     assert a == b
 
 
-def test_date_partitioned_sink_prunes(spark, sf_dir, tmp_path):
-    """A date filter on the partitioned layout must prune at the SCAN
-    (PartitionFilters), not as a post-scan Filter."""
-    from map_reduce_in_go_spark.sources.sinks import (
-        read_events_partitioned,
-        write_events_partitioned,
-    )
-    from map_reduce_in_go_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_by_date")
-    write_events_partitioned(ev, path)
-
-    back = read_events_partitioned(spark, path)
-    assert back.count() == ev.count()  # lossless round-trip
-
-    one_day = back.filter(F.col("event_date") == back.select(
-        F.min("event_date")).first()[0])
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    # the date predicate must appear inside PartitionFilters
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "event_date" in pf, pf
-    assert one_day.count() > 0
-
-
-def test_multiformat_round_trip(spark, sf_dir, tmp_path):
-    """customer survives parquet→{orc,csv,json}→DataFrame bit-identically."""
-    from map_reduce_in_go_spark.sources.sinks import read_table_as, write_table_as
-    from map_reduce_in_go_spark.sources.tables import load_table
-
-    src = load_table(spark, sf_dir, "customer")
-    want = sorted(map(tuple, src.collect()))
-    for fmt in ("orc", "csv", "json"):
-        path = str(tmp_path / fmt)
-        write_table_as(src, path, fmt)
-        got = read_table_as(spark, path, fmt, schema=src.schema)
-        assert sorted(map(tuple, got.collect())) == want, fmt
-
-
 def test_runtime_bloom_filter_semijoin_reduction(spark, sf_dir):
     """Catalyst injects a runtime bloom filter on the fact side of a
     selective dim⋈fact join — the semi-join reduction that keeps a 100 TB

@@ -1,4 +1,4 @@
-"""Mergeable HLL sketch family: rollup-union invariance + streaming twin."""
+"""Mergeable HLL sketch family: rollup-union invariance."""
 
 from __future__ import annotations
 
@@ -43,88 +43,3 @@ def test_rollup_union_equals_single_pass_sketch(spark, sf_dir):
         # HLL_4 lgK=12 default: relative error well under 5% at this scale
         assert abs(got[t][0] - exact[t][0]) <= max(2, 0.05 * exact[t][0])
 
-
-def test_streaming_sketch_matches_batch_estimate(spark, sf_dir, tmp_path):
-    """After the stream drains, each type's final streaming estimate equals
-    the batch single-pass sketch over the same events (merge invariance
-    across micro-batch state updates)."""
-    from map_reduce_in_go_spark.streaming.sketches import (
-        distinct_users_sketch_stream,
-    )
-    from tests.test_streaming_anomaly import _dump_events_json, _stream
-
-    drops = tmp_path / "drops"
-    _dump_events_json(spark, sf_dir, drops, n_files=3)
-    q = (
-        distinct_users_sketch_stream(_stream(spark, drops))
-        .writeStream.format("memory")
-        .queryName("hll_stream")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    try:
-        emitted = spark.sql("SELECT * FROM hll_stream").collect()
-    finally:
-        q.stop()
-    final: dict[str, tuple] = {}
-    for r in emitted:  # keep the last (largest n_events) emission per type
-        cur = final.get(r["event_type"])
-        if cur is None or r["n_events"] > cur[1]:
-            final[r["event_type"]] = (r["approx_users"], r["n_events"])
-    want = {
-        r["event_type"]: (r["u"], r["n"])
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("u"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    }
-    assert final == want
-
-
-def test_windowed_sketch_stream_produces_day_rollup(spark, sf_dir, tmp_path):
-    """The tumbling-window streaming form emits the same per-(day, type)
-    estimates a batch day-rollup computes."""
-    from map_reduce_in_go_spark.streaming.sketches import (
-        windowed_distinct_users_sketch,
-    )
-    from tests.test_streaming_anomaly import _dump_events_json, _stream
-
-    drops = tmp_path / "drops"
-    _dump_events_json(spark, sf_dir, drops, n_files=2)
-    q = (
-        windowed_distinct_users_sketch(_stream(spark, drops))
-        .writeStream.format("memory")
-        .queryName("hll_win")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    try:
-        emitted = spark.sql("SELECT * FROM hll_win").collect()
-    finally:
-        q.stop()
-    final: dict[tuple, tuple] = {}
-    for r in emitted:
-        key = (str(r["window_start"]), r["event_type"])
-        cur = final.get(key)
-        if cur is None or r["n_events"] > cur[1]:
-            final[key] = (r["approx_users"], r["n_events"])
-    want = {
-        (str(r["day"]), r["event_type"]): (r["u"], r["n"])
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.date_trunc("day", "ts").alias("day"), "event_type"
-        )
-        .agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("user_id")).alias("u"),
-            F.count("*").alias("n"),
-        )
-        .collect()
-    }
-    assert final == want
