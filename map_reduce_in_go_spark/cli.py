@@ -20,9 +20,18 @@ owns scheduling, retries, heartbeats and shuffle):
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 from pyspark.sql import functions as F
+
+
+def positive_int(text: str) -> int:
+    """argparse type: an int >= 1, rejected before any session starts."""
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be a positive integer, got {n}")
+    return n
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -32,8 +41,8 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--input", help="comma-separated files/globs (MR apps)")
     p.add_argument("--output", help="output directory")
-    p.add_argument("--reduce", type=int, default=5, help="number of output buckets")
-    p.add_argument("--workers", type=int, default=None, help="local cores to use")
+    p.add_argument("--reduce", type=positive_int, default=5, help="number of output buckets")
+    p.add_argument("--workers", type=positive_int, default=None, help="local cores to use")
     p.add_argument(
         "--master",
         default=None,
@@ -125,8 +134,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.run_query:
-        import os as _os
-
         from . import registry
 
         qs = registry.queries()
@@ -134,25 +141,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"unknown query {args.run_query!r}; see --list-queries",
                   file=sys.stderr)
             return 2
-        sf_dir = args.sf_dir or _os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"
-        )
-        from pyspark.sql import SparkSession
-
-        owned = SparkSession.getActiveSession() is None
-        spark = get_spark("mr-cli", cpus=args.workers, master=args.master)
-        spark.sparkContext.setLogLevel("WARN")
-        install_signal_handlers(spark, owned)
-        df = qs[args.run_query](spark, sf_dir)
-        if args.output:
-            df.write.mode("overwrite").parquet(args.output)
-            print(f"wrote {args.run_query} to {args.output}")
-        else:
-            for row in df.limit(20).collect():
-                print("\t".join(str(v) for v in row))
-        return 0
-
-    if not args.input or not args.output:
+    elif not args.input or not args.output:
         print("--input and --output are required for MR apps", file=sys.stderr)
         return 2
 
@@ -162,6 +151,20 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("mr-cli", cpus=args.workers, master=args.master)
     spark.sparkContext.setLogLevel("WARN")
     install_signal_handlers(spark, owned)
+
+    if args.run_query:
+        sf_dir = args.sf_dir or os.environ.get(
+            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"
+        )
+        df = qs[args.run_query](spark, sf_dir)
+        if args.output:
+            df.write.mode("overwrite").parquet(args.output)
+            print(f"wrote {args.run_query} to {args.output}")
+        else:
+            for row in df.limit(20).collect():
+                print("\t".join(str(v) for v in row))
+        return 0
+
     paths = args.input.split(",")
 
     if args.app == "grep":

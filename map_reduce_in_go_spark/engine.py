@@ -12,8 +12,9 @@ shuffle (FNV-1a mod nReduce — worker.go:154), group, sorted output
 - map phase    → ``mapInPandas`` (Arrow-batched; one Python call per batch,
   not per row — the 10-100x rule for Python on Spark)
 - shuffle      → Catalyst hash exchange on ``key`` (Tungsten, spill-aware)
-- reduce phase → ``groupBy(key).applyInPandas`` (the reducer sees every value
-  for its key, exactly like the reference's grouped reduce)
+- reduce phase → ``sortWithinPartitions(key).mapInPandas``: one pass walks the
+  sorted key runs and calls the reducer once per run with every value of its
+  key, exactly like the reference's sorted reduce loop (worker.go:217-243)
 - output       → :func:`write_output` re-creates the ``mr-out-<bucket>``
   layout: FNV-1a bucket column + ``partitionBy``, keys sorted within files.
 
@@ -23,22 +24,20 @@ Well-known apps (WordCount) additionally get a native all-JVM plan in
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
-from typing import Optional, Protocol, runtime_checkable
+from collections.abc import Iterable, Iterator
+from itertools import groupby
+from operator import itemgetter
+from typing import Protocol, runtime_checkable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.hashing import reduce_bucket
 
-# key column + n_reduce → bucket column in [0, n_reduce). The reference made
-# this pluggable in principle (distributed/worker.go:170-174 routes every key
-# through ihash(key) % nReduce); FNV-1a is the default here too.
-Partitioner = Callable[[Column, int], Column]
-
 MAP_OUTPUT_SCHEMA = "key string, value string"
 REDUCE_OUTPUT_SCHEMA = "key string, value string"
+_NO_KEY = object()  # "no open run yet" in the reduce walk; None is a valid key
 
 
 @runtime_checkable
@@ -80,21 +79,12 @@ def run_mapreduce(
     reducer: Reducer,
     filename_col: str = "filename",
     contents_col: str = "contents",
-    partitioner: Optional[Partitioner] = None,
-    n_reduce: int = 5,
 ) -> DataFrame:
     """Run an arbitrary Mapper/Reducer over a (filename, contents) DataFrame.
 
-    Returns a (key, value) DataFrame. Lazily planned; the shuffle between the
-    two Pandas stages is a single Catalyst exchange.
-
-    Without a ``partitioner`` the exchange hashes ``key`` (Catalyst's choice —
-    best skew behavior, one reducer group per key). Passing one mirrors the
-    reference's pluggable routing (distributed/worker.go:170-174): keys are
-    bucketed by ``partitioner(key, n_reduce)``, the single shuffle is on the
-    bucket, and one reduce task folds every key in its bucket in sorted order
-    — the exact execution shape of a reference reduce worker, so tests can
-    assert co-location (e.g. all keys of one bucket in one output partition).
+    Returns a (key, value) DataFrame. Lazily planned: map batches, one hash
+    exchange on ``key``, a sort within each partition, then one reduce pass
+    over the sorted key runs of every partition.
     """
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -107,47 +97,45 @@ def run_mapreduce(
                     vals.append(v)
             yield pd.DataFrame({"key": keys, "value": vals})
 
-    def _reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [key], "value": [reducer.reduce(key, list(pdf["value"]))]})
-
-    def _reduce_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one reference reduce task: every key of the bucket, sorted
-        # (worker.go:217-243 sorts before emitting mr-out-<bucket>)
-        out_k: list[str] = []
-        out_v: list[str] = []
-        for key, grp in sorted(pdf.groupby("key", sort=False), key=lambda kv: kv[0]):
-            out_k.append(key)
-            out_v.append(reducer.reduce(key, list(grp["value"])))
-        return pd.DataFrame({"key": out_k, "value": out_v})
+    def _reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # worker.go:217-243: one reducer call per run of equal sorted keys. A
+        # run may span Arrow batches, so the open run is carried into the next
+        # batch and reduced only once a new key or the partition's end closes it
+        key, values = _NO_KEY, []
+        for pdf in batches:
+            out_k: list[str] = []
+            out_v: list[str] = []
+            for k, run in groupby(zip(pdf["key"], pdf["value"]), key=itemgetter(0)):
+                if k != key:
+                    if key is not _NO_KEY:
+                        out_k.append(key)
+                        out_v.append(reducer.reduce(key, values))
+                    key, values = k, []
+                values.extend(v for _, v in run)
+            if out_k:
+                yield pd.DataFrame({"key": out_k, "value": out_v})
+        if key is not _NO_KEY:
+            yield pd.DataFrame({"key": [key], "value": [reducer.reduce(key, values)]})
 
     mapped = files_df.select(filename_col, contents_col).mapInPandas(
         _map, schema=MAP_OUTPUT_SCHEMA
     )
-    if partitioner is None:
-        return mapped.groupBy("key").applyInPandas(_reduce, schema=REDUCE_OUTPUT_SCHEMA)
-    bucketed = mapped.withColumn("bucket", partitioner(F.col("key"), n_reduce))
-    return bucketed.groupBy("bucket").applyInPandas(
-        lambda pdf: _reduce_bucket(pdf), schema=REDUCE_OUTPUT_SCHEMA
+    return (
+        mapped.repartition("key")
+        .sortWithinPartitions("key")
+        .mapInPandas(_reduce, schema=REDUCE_OUTPUT_SCHEMA)
     )
 
 
-def write_output(
-    result: DataFrame,
-    path: str,
-    n_reduce: int = 5,
-    partitioner: Optional[Partitioner] = None,
-) -> None:
+def write_output(result: DataFrame, path: str, n_reduce: int = 5) -> None:
     """Reference-parity output layout: one dir per bucket, sorted keys.
 
     Mirrors worker.go:217-243 (``mr-out-<n>``, keys sorted) while staying a
-    distributed write: bucket is a column, files are written by executors.
-    ``partitioner`` overrides the FNV-1a default, same contract as
-    :func:`run_mapreduce`.
+    distributed write: the FNV-1a bucket is a column, files are written by
+    executors.
     """
-    bucket_of = partitioner or reduce_bucket
     (
-        result.withColumn("bucket", bucket_of(F.col("key"), n_reduce))
+        result.withColumn("bucket", reduce_bucket(F.col("key"), n_reduce))
         .repartition(n_reduce, F.col("bucket"))
         # bucket first: the partitionBy("bucket") writer requires that
         # ordering and re-sorts by bucket alone unless it is already met

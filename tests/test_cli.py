@@ -5,6 +5,8 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+
 from map_reduce_in_go_spark.cli import main
 
 
@@ -77,6 +79,18 @@ def test_cli_run_query_unknown():
     from map_reduce_in_go_spark.cli import main
 
     assert main(["--run-query", "nope"]) == 2
+
+
+@pytest.mark.parametrize("value", ["0", "-2"])
+@pytest.mark.parametrize("flag", ["--reduce", "--workers"])
+def test_cli_rejects_non_positive_counts(tmp_path, flag, value):
+    """A bucket or core count below 1 is a usage error (exit 2) raised by
+    argument parsing, before a Spark session is started."""
+    src = tmp_path / "in.txt"
+    src.write_text("a b\n")
+    with pytest.raises(SystemExit) as exc:
+        main(["--input", str(src), "--output", str(tmp_path / "out"), flag, value])
+    assert exc.value.code == 2
 
 
 def test_cli_signal_handler_drains_and_exits(spark):

@@ -1,11 +1,12 @@
 """Generic Mapper/Reducer engine: end-to-end parity with native wordcount,
-FNV-1a partitioner bit-parity with the Go implementation, output layout."""
+FNV-1a bucket bit-parity with the Go implementation, output layout."""
 
 from __future__ import annotations
 
 import glob
 import os
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -56,16 +57,27 @@ def test_generic_mapreduce_matches_native(spark, sf_dir):
     assert generic == native
 
 
-def test_run_mapreduce_small(spark):
-    files = spark.createDataFrame(
-        [
-            Row(filename="a.txt", contents="The fox. THE FOX!"),
-            Row(filename="b.txt", contents="fox?"),
-        ]
-    )
-    out = run_mapreduce(files, WordCountMapper(), WordCountReducer())
-    got = {(r["key"], r["value"]) for r in out.collect()}
-    assert got == {("the", "2"), ("fox", "3")}
+@pytest.mark.parametrize("batch_rows", ["1", "2", None], ids=["1", "2", "default"])
+def test_run_mapreduce_small(spark, batch_rows):
+    """The reducer sees every value of its key exactly once, also when the
+    key's sorted run spans Arrow batches ("fox" has 4 values, more than a
+    1- or 2-row batch holds)."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    if batch_rows is not None:
+        spark.conf.set(conf, batch_rows)
+    try:
+        files = spark.createDataFrame(
+            [
+                Row(filename="a.txt", contents="The fox. THE FOX!"),
+                Row(filename="b.txt", contents="fox? fox"),
+            ]
+        )
+        out = run_mapreduce(files, WordCountMapper(), WordCountReducer())
+        got = sorted((r["key"], r["value"]) for r in out.collect())
+    finally:
+        spark.conf.set(conf, saved)
+    assert got == [("fox", "4"), ("the", "2")]
 
 
 def test_write_output_layout(spark, tmp_path):
@@ -92,50 +104,6 @@ def test_write_output_layout(spark, tmp_path):
                 if any(line.split("\t")[0] == word for line in fh):
                     hits.append(os.path.basename(os.path.dirname(f)))
         assert hits == [f"bucket={bucket}"], (word, hits)
-
-
-def test_custom_partitioner_end_to_end(spark):
-    """Pluggable routing (distributed/worker.go:170-174 made ihash % nReduce
-    the seam): a user partitioner replaces FNV-1a, results stay identical to
-    the default path, and co-location is real — every key of one bucket is
-    folded by one reduce task."""
-    files = spark.createDataFrame(
-        [
-            Row(filename="a.txt", contents="The fox. THE FOX! dog dog bird"),
-            Row(filename="b.txt", contents="fox? dog emu"),
-        ]
-    )
-    # route by first letter mod n_reduce — deliberately not a hash
-    first_letter = lambda key, n: (F.ascii(F.substring(key, 1, 1)) % n).cast("int")
-
-    out = run_mapreduce(
-        files, WordCountMapper(), WordCountReducer(),
-        partitioner=first_letter, n_reduce=2,
-    )
-    got = {(r["key"], r["value"]) for r in out.collect()}
-    assert got == {("the", "2"), ("fox", "3"), ("dog", "3"), ("bird", "1"), ("emu", "1")}
-
-    # co-location: keys sharing a bucket land in the same output partition
-    with_pid = out.withColumn("pid", F.spark_partition_id())
-    pid_of = {r["key"]: r["pid"] for r in with_pid.collect()}
-    bucket_of = {k: ord(k[0]) % 2 for k in pid_of}
-    for a in pid_of:
-        for b in pid_of:
-            if bucket_of[a] == bucket_of[b]:
-                assert pid_of[a] == pid_of[b], (a, b)
-
-    # write path honors the same partitioner
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        path = os.path.join(td, "mr-out")
-        write_output(out, path, n_reduce=2, partitioner=first_letter)
-        for f in glob.glob(os.path.join(path, "bucket=*", "*.csv")):
-            bucket = int(os.path.basename(os.path.dirname(f)).split("=")[1])
-            with open(f) as fh:
-                for line in fh:
-                    word = line.split("\t")[0]
-                    assert ord(word[0]) % 2 == bucket, (word, bucket)
 
 
 def test_fault_tolerance_confs(spark):
