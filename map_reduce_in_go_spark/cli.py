@@ -10,7 +10,7 @@ owns scheduling, retries, heartbeats and shuffle):
 
     python -m map_reduce_in_go_spark --input a.txt,b.txt --reduce 5 \
         --output /tmp/mr-out [--app wordcount|grep] [--pattern RE] \
-        [--workers 8]
+        [--workers 8] [--generic]
 
 ``--workers`` maps to local parallelism (executor count on a cluster);
 ``--reduce`` maps to the FNV-1a output bucketing (mr-out-<n> parity);
@@ -77,8 +77,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--generic",
         action="store_true",
-        help="run via the generic Arrow Mapper/Reducer path instead of the "
-        "native Catalyst plan (same results, reference-parity execution)",
+        help="run wordcount via the generic Arrow Mapper/Reducer path instead "
+        "of the native Catalyst plan (same results, reference-parity execution)",
     )
     return p
 
@@ -144,6 +144,10 @@ def main(argv: list[str] | None = None) -> int:
     elif not args.input or not args.output:
         print("--input and --output are required for MR apps", file=sys.stderr)
         return 2
+    elif args.generic and args.app == "grep":
+        print("--generic runs wordcount only; it cannot be used with --app grep",
+              file=sys.stderr)
+        return 2
 
     from pyspark.sql import SparkSession
 
@@ -186,14 +190,14 @@ def main(argv: list[str] | None = None) -> int:
             .agg(F.count("*").cast("string").alias("value"))
         )
 
-    # persist so the write action populates the cache and the key count
-    # reads it back — the job computes once, not twice
-    result = result.persist()
-    try:
-        write_output(result, args.output, n_reduce=args.reduce)
-        n = result.count()
-    finally:
-        result.unpersist()
+    # one pass, like the reference's reduce tasks (worker.go:217-243): no
+    # cache, so AQE sizes each stage of the write (a cached plan keeps the
+    # static shuffle width). The key count reads the output back with
+    # write_output's CSV options; multiLine keeps a quoted value holding a
+    # newline one record, and the schema makes an empty output count 0
+    write_output(result, args.output, n_reduce=args.reduce)
+    reader = spark.read.schema("key string, value string")
+    n = reader.csv(args.output, sep="\t", multiLine=True).count()
     print(f"wrote {n} keys to {args.output} in {args.reduce} buckets")
     # no spark.stop(): getOrCreate may have joined a caller's session
     # (tests, notebooks); process exit tears down a CLI-owned one anyway

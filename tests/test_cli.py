@@ -93,6 +93,24 @@ def test_cli_rejects_non_positive_counts(tmp_path, flag, value):
     assert exc.value.code == 2
 
 
+def test_cli_rejects_generic_grep(tmp_path, monkeypatch, capsys):
+    """--generic runs wordcount only: pairing it with --app grep is a usage
+    error (exit 2) found before a Spark session is started, not a flag that
+    grep silently ignores."""
+    from map_reduce_in_go_spark import session
+
+    def _no_session(*_a, **_k):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session, "get_spark", _no_session)
+    src = tmp_path / "in.txt"
+    src.write_text("a b\n")
+    rc = main(["--input", str(src), "--output", str(tmp_path / "out"),
+               "--app", "grep", "--generic"])
+    assert rc == 2
+    assert "--generic" in capsys.readouterr().err
+
+
 def test_cli_signal_handler_drains_and_exits(spark):
     """main.go:32-66 parity: the installed SIGTERM handler stops active
     streaming queries, stops the session only when CLI-owned, and exits
