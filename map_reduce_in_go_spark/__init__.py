@@ -14,7 +14,7 @@ Layout:
 - ``functions``  reusable column expressions (tokenize, portable hashing, vectors)
 - ``operators``  wordcount / dedup / similarity / text-analysis / multimodal
 - ``plans``      relational analytical queries (TPC-H-ish)
-- ``streaming``  Structured Streaming queries over the events stream
+- ``streaming``  incremental corpus pipeline, sketch rollups and the events lattice
 """
 
 __version__ = "0.1.0"

@@ -87,29 +87,22 @@ def install_signal_handlers(spark, owned: bool) -> None:
     """SIGINT/SIGTERM → drain and exit (main.go:32-66 parity).
 
     The reference traps both signals and drains in-flight work before
-    exiting. Here: stop every active streaming query (flushes their last
-    committed micro-batch), then stop the session — but only if this CLI
-    created it (``owned``): getOrCreate may have joined a caller's session
-    (tests, notebooks) whose lifecycle isn't ours to end. Exits with the
-    conventional 128+signum code either way.
+    exiting. Here: stop the session — but only if this CLI created it
+    (``owned``): getOrCreate may have joined a caller's session (tests,
+    notebooks) whose lifecycle, streaming queries included, isn't ours to
+    end. Exits with the conventional 128+signum code either way.
     """
     import signal
 
     def _drain(signum, frame):  # noqa: ARG001 — signal handler signature
-        # the JVM gateway may already be dead when the signal lands (the
-        # r15 driver killed it mid-suite and the drain itself raised a
-        # Py4JNetworkError from spark.streams) — a drain must never be
-        # the thing that crashes shutdown
-        try:
-            for q in list(spark.streams.active):
-                try:
-                    q.stop()
-                except Exception:  # noqa: BLE001 — already-stopped races are fine
-                    pass
-            if owned:
+        # the JVM gateway may already be dead when the signal lands (then
+        # spark.stop() raises Py4JNetworkError) — a drain must never be the
+        # thing that crashes shutdown
+        if owned:
+            try:
                 spark.stop()
-        except Exception:  # noqa: BLE001 — dead gateway: nothing left to drain
-            pass
+            except Exception:  # noqa: BLE001 — dead gateway: nothing left to drain
+                pass
         raise SystemExit(128 + signum)
 
     try:

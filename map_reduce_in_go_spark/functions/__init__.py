@@ -1,14 +1,11 @@
-from .hashing import fnv1a_32, md5_seeded, minhash_signature
+from .hashing import fnv1a_32
 from .text import normalize_token, tokens
-from .vectors import cosine_similarity, dot, l2_norm, to_double_array
+from .vectors import dot, l2_norm, to_double_array
 
 __all__ = [
     "fnv1a_32",
-    "md5_seeded",
-    "minhash_signature",
     "normalize_token",
     "tokens",
-    "cosine_similarity",
     "dot",
     "l2_norm",
     "to_double_array",

@@ -54,32 +54,11 @@ def reduce_bucket(col: Column, n_reduce: int) -> Column:
     return F.pmod(fnv1a_32(col).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")), F.lit(n_reduce))
 
 
-def md5_seeded(col: Column, seed: Column | int) -> Column:
-    """md5 hex of ``"<seed>:<value>"`` — one member of a seeded hash family."""
-    seed_str = seed.cast("string") if isinstance(seed, Column) else F.lit(str(seed))
-    return F.md5(F.concat(seed_str, F.lit(":"), col))
-
-
-def minhash_signature(items: Column, num_perm: int = 32) -> Column:
-    """array<string> MinHash signature: per seed, min md5 over the item set.
-
-    ``array_min`` over hex strings = uniform min-hash per seed. Cost is
-    num_perm × |items| md5 evaluations, all JVM-side inside codegen; at
-    100 TB this is embarrassingly parallel (no shuffle until the LSH band
-    grouping).
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda s: F.array_min(
-            F.transform(items, lambda it: F.md5(F.concat(s.cast("string"), F.lit(":"), it)))
-        ),
-    )
-
-
 # --- matching DuckDB SQL fragments ---------------------------------------
 
 def sql_minhash_signature(items: str, num_perm: int = 32) -> str:
-    """DuckDB rendering of :func:`minhash_signature` (list of min-md5 strings)."""
+    """DuckDB MinHash signature: per seed ``s`` in ``0..num_perm-1``, the
+    min over the items of ``md5("<s>:<item>")`` (list of min-md5 strings)."""
     return (
         f"list_transform(range(0, {num_perm}), "
         f"s -> list_min(list_transform({items}, it -> md5(s || ':' || it))))"

@@ -59,14 +59,6 @@ SQL_DISC_PRICE = (
 )
 
 
-def sql_money(c: str) -> str:
-    return f"CAST({c} AS DECIMAL(12,2))"
-
-
-def sql_rate(c: str) -> str:
-    return f"CAST({c} AS DECIMAL(4,2))"
-
-
 def sql_sum_exact(expr: str, nd: int = 2) -> str:
     return f"CAST(round(sum({expr}), {nd}) AS DOUBLE)"
 

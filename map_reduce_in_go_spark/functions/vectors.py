@@ -29,11 +29,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """cos(a, b) on double arrays; callers round before comparing."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 # --- matching DuckDB SQL fragments ---------------------------------------
 
 def sql_double_array(col: str) -> str:

@@ -868,28 +868,13 @@ def _dsir_bucket_counts(docs: DataFrame) -> DataFrame:
 def train_dsir_model(spark: SparkSession, sf_dir: str, root: str) -> None:
     """One corpus pass → the persisted per-bucket (b, r, t) count table.
 
-    Counts are additive, so :func:`dsir_model_append` maintains the
-    model with ledgered exactly-once batches; :func:`_dsir_lambda`
-    folds current totals into the λ table at read (512 rows — a
-    near-free derivation).
+    Counts are additive; :func:`_dsir_lambda` folds current totals into
+    the λ table at read (512 rows — a near-free derivation).
     """
     from ..sources.manifest_table import ManifestTable
 
     docs = load_documents_parallel(spark, sf_dir).select("text", "lang")
     ManifestTable(root).append(_dsir_bucket_counts(docs), op="dsir-train")
-
-
-def dsir_model_append(root: str, docs: DataFrame, op: str) -> bool:
-    """Ledgered incremental maintenance: a (text, lang) batch appends its
-    own bucket counts exactly-once; the folded model is IDENTICAL to a
-    retrain over the union (pinned by test). False on a replayed op."""
-    from ..sources.manifest_table import ManifestTable
-
-    tbl = ManifestTable(root)
-    if op in tbl.committed_ops():
-        return False
-    tbl.append(_dsir_bucket_counts(docs.select("text", "lang")), op=op)
-    return True
 
 
 def _dsir_lambda(spark: SparkSession, root: str) -> DataFrame:
@@ -961,9 +946,8 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Train-once/score-many (r10, declared r11 landed early): the model
     persists as ADDITIVE per-bucket (r, t) counts
-    (:func:`train_dsir_model`, per-corpus build latch;
-    :func:`dsir_model_append` maintains it incrementally with ledgered
-    batches) and :func:`_dsir_lambda` folds them into the TOTAL B-row λ
+    (:func:`train_dsir_model`, per-corpus build latch) and
+    :func:`_dsir_lambda` folds them into the TOTAL B-row λ
     table at read; scoring is ZERO-shuffle: each doc's
     gram-bucket ARRAY is computed by whole-stage codegen (tokenize +
     hash stay JVM-side) and one vectorized Arrow pass sums

@@ -104,8 +104,8 @@ _PERM_HASH = {
 def _signatures(spark: SparkSession, sf_dir: str, family: str = "md5") -> DataFrame:
     """MinHash signatures of the documents table, persisted.
 
-    The closed-form nested-HOF variant (``functions.hashing.minhash_signature``)
-    computes the same values but higher-order functions are *interpreted*
+    A closed-form variant built from nested higher-order functions would
+    compute the same values, but higher-order functions are *interpreted*
     expressions in Spark — and every self-join reference re-evaluates them.
     :func:`signatures_of` keeps everything in whole-stage codegen with
     map-side combine. The result is persisted because the LSH pipeline

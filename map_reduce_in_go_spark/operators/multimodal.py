@@ -28,9 +28,6 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, spread_partitions
 
-FEATURE_DIM = 8
-FEATURE_SCHEMA = "doc_id long, n_bytes long, features array<double>"
-
 # Synthesized image dims: derived from the document's byte length so the
 # oracle can replay them; small and co-prime-ish moduli give a spread of
 # shapes including non-square ones.
@@ -909,14 +906,13 @@ def banded_index_batch_pairs(
     """A new batch's banded hashes probed against a standing banded
     index: (doc_a = index doc, doc_b = batch doc, hamming ≤ threshold).
 
-    The storage-agnostic core under :func:`image_batch_near_dups` and
-    :func:`audio_batch_near_dups`: the batch's band strings are
-    collected as probe keys and the index is read through point-set
-    file skipping (``files_pruned_in`` on the per-file band [min,max]
-    stats the build records and OPTIMIZE tightens), falling back to the
-    full snapshot past ``MAX_PROBE_KEYS``; then band-equijoin + packed-
-    popcount Hamming verify. Cost scales with the BATCH — the standing
-    corpus is never re-hashed."""
+    The storage-agnostic core under :func:`image_batch_near_dups`: the
+    batch's band strings are collected as probe keys and the index is
+    read through point-set file skipping (``files_pruned_in`` on the
+    per-file band [min,max] stats the build records and OPTIMIZE
+    tightens), falling back to the full snapshot past ``MAX_PROBE_KEYS``;
+    then band-equijoin + packed-popcount Hamming verify. Cost scales with
+    the BATCH — the standing corpus is never re-hashed."""
     from ..sources.manifest_table import ManifestTable
     from .dedup import MAX_PROBE_KEYS, scoped_persist
 
@@ -1003,290 +999,6 @@ def audio_fp_bands_of(docs: DataFrame) -> DataFrame:
     return bands_of_hashes(audio_fingerprints(docs))
 
 
-def build_audio_fp_index(
-    docs: DataFrame, root: str, op: str = "audiofp-build"
-) -> bool:
-    """The audio instance of :func:`build_banded_index` (r15): persist a
-    corpus's banded spectral fingerprints as the standing audio
-    near-dup index — exactly the lifecycle the image index has (ledgered
-    exactly-once appends, band stats, OPTIMIZE via
-    :func:`optimize_banded_index`)."""
-    return build_banded_index(audio_fp_bands_of(docs), root, op)
-
-
-def audio_batch_near_dups(
-    spark: SparkSession, batch_docs: DataFrame, root: str
-) -> DataFrame:
-    """A new audio batch probed against the standing fingerprint index:
-    (doc_a = index clip, doc_b = batch clip, hamming ≤ threshold) via
-    the shared :func:`banded_index_batch_pairs` probe. r16 registration
-    candidate (the ``dedup_image_incremental`` two-sided recipe at the
-    audio modality; the oracle is the parity-split form of the
-    ``dedup_audio_fingerprint`` replay)."""
-    return banded_index_batch_pairs(
-        spark, audio_fp_bands_of(batch_docs), root, AUDIO_FP_HAMMING_MAX
-    )
-
-
-def dedup_audio_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-dup CLUSTERS: connected components over the
-    :func:`dedup_audio_fingerprint` pair graph through the shared
-    star-contraction engine (``star_components``, operators/dedup.py),
-    labels = component-minimum doc_id — the keep-one-per-cluster step,
-    same as :func:`dedup_image_clusters` for images. r16 registration
-    candidate (recursive-CTE oracle over the replayable fingerprint
-    pairs — the #48/#255 pattern on the audio CTEs)."""
-    from .dedup import star_components
-
-    pairs = dedup_audio_fingerprint(spark, sf_dir)
-    return star_components(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    )
-
-
-# --- video family (r15): YUV4MPEG2 codec + spatio-temporal fingerprint ---
-# Synthesized video params: dims and frame count from the byte length
-# (oracle-replayable arithmetic, same discipline as the image/audio
-# moduli), frames = the bytes tiled cyclically with a per-frame PHASE
-# offset — a deterministic "scrolling" clip. The container is REAL
-# YUV4MPEG2 (the uncompressed interchange format ffmpeg/mpv/x264 read
-# natively: a plain-text stream header, then `FRAME\n` + planar YUV per
-# frame); C444 keeps every pixel's three planes byte-addressable.
-VID_W_MOD, VID_W_MIN = 13, 8
-VID_H_MOD, VID_H_MIN = 7, 6
-VID_NF_MOD, VID_NF_MIN = 4, 9  # 9..12 frames; fingerprint uses the first 9
-VID_FPS = 25
-VID_PHASE = 7  # per-frame start offset into the tiled bytes
-VID_FP_FRAMES = 9  # 9 frames → 8 transitions × 8 cells = 64 bits
-VID_FP_HAMMING_MAX = 8  # same verify threshold as the image/audio hashes
-# Anchor region: fingerprint each frame's HEAD — the first
-# VID_FP_CELLS × VID_FP_CELL_W = 48 Y-plane bytes (48 ≤ min w·h, so the
-# region exists at every synthesized dimension). A near-dup clip differs
-# by a few appended seconds, which shifts the container dims and every
-# whole-frame cell boundary with them; anchoring the cell grid at the
-# frame START makes shared-prefix clips hash identically regardless of
-# length — the same subfingerprint-anchor trick AUDIO_FP_WINDOW uses
-# (and real video retrieval's fixed-duration-window matching).
-VID_FP_CELLS = 8
-VID_FP_CELL_W = 6
-
-
-def encode_y4m(text_bytes: bytes) -> bytes:
-    """Deterministically synthesize a valid YUV4MPEG2 (y4m) clip from a
-    document's bytes: dims and frame count from the length, frame k's
-    planar YUV444 payload = the bytes tiled cyclically starting at offset
-    ``k·VID_PHASE mod n`` (a scrolling clip — consecutive frames share
-    most content, like real video). The output is a real video file any
-    y4m reader plays; determinism makes it oracle-replayable, exactly
-    like :func:`encode_ppm` and :func:`encode_wav`."""
-    if not text_bytes:
-        raise ValueError("encode_y4m: empty payload")
-    n = len(text_bytes)
-    w = n % VID_W_MOD + VID_W_MIN
-    h = n % VID_H_MOD + VID_H_MIN
-    nf = n % VID_NF_MOD + VID_NF_MIN
-    frame_bytes = 3 * w * h
-    tiled = text_bytes * (frame_bytes // n + 2)
-    out = [b"YUV4MPEG2 W%d H%d F%d:1 Ip A1:1 C444\n" % (w, h, VID_FPS)]
-    for k in range(nf):
-        off = (k * VID_PHASE) % n
-        out.append(b"FRAME\n" + tiled[off : off + frame_bytes])
-    return b"".join(out)
-
-
-def decode_y4m(payload: bytes) -> dict:
-    """REAL decode of a YUV4MPEG2 stream: parse the stream header's
-    parameter tokens (W/H/F/C), validate the colourspace, walk the FRAME
-    markers checking each planar payload is complete, and return header
-    metadata + luma statistics. Raises ``ValueError`` on anything
-    malformed — no silent fallbacks."""
-    if not payload.startswith(b"YUV4MPEG2"):
-        raise ValueError("decode_y4m: not a YUV4MPEG2 stream")
-    try:
-        hdr_end = payload.index(b"\n")
-    except ValueError:
-        raise ValueError("decode_y4m: unterminated stream header") from None
-    w = h = fn = fd = None
-    csp = b"420"  # the y4m default when no C tag is present
-    for tok in payload[9:hdr_end].split():
-        if tok[:1] == b"W":
-            w = int(tok[1:])
-        elif tok[:1] == b"H":
-            h = int(tok[1:])
-        elif tok[:1] == b"F":
-            fn, fd = (int(t) for t in tok[1:].split(b":"))
-        elif tok[:1] == b"C":
-            csp = tok[1:]
-    if not w or not h or not fn or not fd:
-        raise ValueError("decode_y4m: missing W/H/F header tokens")
-    if csp != b"444":
-        raise ValueError(f"decode_y4m: only C444 supported, got C{csp.decode()}")
-    import numpy as np
-
-    frame_bytes = 3 * w * h
-    off = hdr_end + 1
-    n_frames = 0
-    luma_sum = 0
-    while off < len(payload):
-        if payload[off : off + 5] != b"FRAME":
-            raise ValueError(f"decode_y4m: bad FRAME marker at offset {off}")
-        try:
-            fhdr_end = payload.index(b"\n", off)
-        except ValueError:
-            raise ValueError("decode_y4m: unterminated FRAME header") from None
-        body = payload[fhdr_end + 1 : fhdr_end + 1 + frame_bytes]
-        if len(body) != frame_bytes:
-            raise ValueError(
-                f"decode_y4m: frame {n_frames} is {len(body)} bytes, "
-                f"expected {frame_bytes}"
-            )
-        # vectorized byte sum (r16, guide §4.2 — the same fix decode_ppm
-        # got in r15): identical integer to sum(body[: w * h]).
-        # Y plane leads in planar 444.
-        luma_sum += int(
-            np.frombuffer(body, dtype=np.uint8, count=w * h).sum(dtype=np.int64)
-        )
-        n_frames += 1
-        off = fhdr_end + 1 + frame_bytes
-    if n_frames == 0:
-        raise ValueError("decode_y4m: stream has no frames")
-    return {
-        "width": w,
-        "height": h,
-        "fps_num": fn,
-        "fps_den": fd,
-        "n_frames": n_frames,
-        "luma_sum": luma_sum,
-    }
-
-
-def video_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, dhash: 64-char bit string) spatio-temporal fingerprint per
-    video doc through the REAL y4m codec: encode → container parse →
-    per-frame luma cell sums in ONE fused Arrow pass, zero shuffles.
-
-    The temporal analogue of the image dHash (whose bits are SPATIAL
-    gradients within one frame): cut each of the first
-    ``VID_FP_FRAMES`` frames' ANCHOR region — the leading
-    ``VID_FP_CELLS × VID_FP_CELL_W`` = 48 bytes of its decoded Y plane
-    (see the constants' note on why anchoring at the frame start beats
-    a whole-frame grid) — into 8 fixed-width cells, take each cell's
-    exact integer luma sum, and emit bit (k, c) = 1 iff cell c's sum
-    strictly increases from frame k to k+1 — 8 transitions × 8 cells =
-    64 bits of MOTION signature. All-integer over genuinely parsed
-    planes, hence SQL-replayable from the synthesis arithmetic (the
-    anchor byte i of frame k is text[(k·VID_PHASE + i) mod n] — the
-    r16 registration recipe, like the image/audio oracles). At 100 TB
-    a real codec (ffmpeg frame decode) swaps into the kernel; batch
-    shape, anchor grid, banding and verify are unchanged."""
-    import numpy as np
-
-    nfp = VID_FP_FRAMES
-    anchor = VID_FP_CELLS * VID_FP_CELL_W
-
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not text.isascii():  # same contract as the image/audio kernels
-                    raise ValueError(
-                        f"video_fingerprints: doc {int(doc_id)} is "
-                        "non-ASCII; the oracle's codepoint replay matches "
-                        "encode_y4m only for ASCII input"
-                    )
-                payload = encode_y4m(text.encode("utf-8"))
-                meta = decode_y4m(payload)  # genuine container validation
-                w, h = meta["width"], meta["height"]
-                frame_bytes = 3 * w * h
-                hdr = payload.index(b"\n") + 1
-                # one gather for all nfp anchor regions (r16, guide §4.2 —
-                # was nfp frombuffer+reshape+sum calls per doc)
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                bases = hdr + np.arange(nfp, dtype=np.int64) * (6 + frame_bytes) + 6
-                cs = (
-                    arr[bases[:, None] + np.arange(anchor, dtype=np.int64)]
-                    .reshape(nfp, VID_FP_CELLS, VID_FP_CELL_W)
-                    .sum(axis=2, dtype=np.int64)
-                )
-                bits = (cs[1:] > cs[:-1]).ravel()
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "dhash": "".join("1" if b else "0" for b in bits),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "dhash"])
-
-    return (
-        docs.select("doc_id", "text")
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-        .mapInPandas(_fp, schema="doc_id long, dhash string")
-    )
-
-
-def video_fp_bands_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, chunk, band, dhash, dh_hi, dh_lo) banded video
-    fingerprints straight from a (doc_id, text) frame — the video
-    analogue of :func:`phash_bands_of` / :func:`audio_fp_bands_of`,
-    one chained Arrow stage through the shared banding geometry."""
-    return bands_of_hashes(video_fingerprints(docs))
-
-
-def dedup_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-dup pairs: spatio-temporal motion fingerprints through
-    the y4m codec, 16-bit band collision blocking, packed-popcount
-    Hamming verify — the video twin of :func:`dedup_image_phash` and
-    :func:`dedup_audio_fingerprint`, completing the third modality on
-    the SAME shared engine (:func:`bands_of_hashes` →
-    :func:`banded_hamming_pairs`: band self-equijoin, never all-pairs;
-    pigeonhole guarantees pairs within ≤3 bits). r16 registration
-    candidate: the DuckDB oracle replays tiling arithmetic → per-cell
-    integer luma sums → transition bits → banding → Hamming, the
-    full-replay recipe the image family registered in r14."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spread_partitions(spark, sf_dir, "documents"), "doc_id")
-    )
-    return banded_hamming_pairs(video_fp_bands_of(docs), VID_FP_HAMMING_MAX)
-
-
-def build_video_fp_index(
-    docs: DataFrame, root: str, op: str = "videofp-build"
-) -> bool:
-    """The video instance of :func:`build_banded_index`: persist a
-    corpus's banded motion fingerprints as the standing video near-dup
-    index (ledgered exactly-once appends, band stats, OPTIMIZE via
-    :func:`optimize_banded_index` — one lifecycle, three modalities)."""
-    return build_banded_index(video_fp_bands_of(docs), root, op)
-
-
-def video_batch_near_dups(
-    spark: SparkSession, batch_docs: DataFrame, root: str
-) -> DataFrame:
-    """A new video batch probed against the standing fingerprint index:
-    (doc_a = index clip, doc_b = batch clip, hamming ≤ threshold) via
-    the shared :func:`banded_index_batch_pairs` probe — point-set file
-    skipping on the band stats, cost scales with the batch."""
-    return banded_index_batch_pairs(
-        spark, video_fp_bands_of(batch_docs), root, VID_FP_HAMMING_MAX
-    )
-
-
-def dedup_video_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-dup CLUSTERS: connected components over the
-    :func:`dedup_video_fingerprint` pair graph through the shared
-    star-contraction engine (``star_components``, operators/dedup.py —
-    now serving FOUR pair families), labels = component-minimum
-    doc_id."""
-    from .dedup import star_components
-
-    pairs = dedup_video_fingerprint(spark, sf_dir)
-    return star_components(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    )
-
-
 def _phash_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Even-doc corpus phash index for ``sf_dir``, built once per process
     behind the shared served-artifact latch (sources/artifacts.py) —
@@ -1333,42 +1045,6 @@ def dedup_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return image_batch_near_dups(
         spark, batch, _phash_index_path(spark, sf_dir)
-    )
-
-
-def extract_features(docs_with_ppm: DataFrame) -> DataFrame:
-    """Feature extraction over REAL decoded rasters: per-channel means,
-    image shape, and raster moments — the fixed-dim vector an embedding
-    model would replace, computed from genuinely parsed pixels."""
-    import numpy as np
-
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(payload)
-                meta = decode_ppm(payload)
-                w, h = meta["width"], meta["height"]
-                px = np.frombuffer(
-                    payload[len(payload) - w * h * 3 :], dtype=np.uint8
-                ).reshape(h, w, 3)
-                feats = [
-                    float(w),
-                    float(h),
-                    float(px[:, :, 0].mean()),
-                    float(px[:, :, 1].mean()),
-                    float(px[:, :, 2].mean()),
-                    float(px.std()),
-                    float(px.min()),
-                    float(px.max()),
-                ]
-                out.append(
-                    {"doc_id": int(doc_id), "n_bytes": len(payload), "features": feats}
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_bytes", "features"])
-
-    return docs_with_ppm.select("doc_id", "payload").mapInPandas(
-        _feat, schema=FEATURE_SCHEMA
     )
 
 

@@ -1032,35 +1032,6 @@ def knn_graph(spark: SparkSession, sf_dir: str, bits: int = LSH_BITS) -> DataFra
     )
 
 
-# Corpus size at which LSH_BITS is the calibrated per-cell sweet spot:
-# the sf0.1 embeddings table (5k vectors / 2^5 buckets ≈ 156 members/cell,
-# where the per-cell GEMM amortizes without quadratic blowup). The
-# self-sizing rule anchors here.
-KNN_N0 = 5_000
-
-
-def auto_lsh_bits(n: int, n0: int = KNN_N0, base: int = LSH_BITS) -> int:
-    """B ∝ log n: add one sign bit per corpus doubling past the anchor, so
-    expected per-cell membership stays ≈ n0 / 2^base at any scale — the
-    sizing rule every LSH deployment applies, as executable code."""
-    import math
-
-    if n <= n0:
-        return base
-    return base + math.ceil(math.log2(n / n0))
-
-
-def knn_graph_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-sizing kNN graph: no caller-passed knob — ``bits`` comes from
-    one cheap corpus count through :func:`auto_lsh_bits`. The registered
-    :func:`knn_graph` keeps the fixed oracle-pinned default (DuckDB must
-    replay the identical blocking); this is the production entry point
-    for corpora that outgrow the anchor. Per-cell candidate volume pinned
-    flat on a grown corpus in tests/test_similarity.py."""
-    n = _vectors(spark, sf_dir).count()
-    return knn_graph(spark, sf_dir, bits=auto_lsh_bits(n))
-
-
 # ann_lsh's probe replay without the query-subset filter: every vector
 # contributes its base bucket + MULTIPROBE nearest-boundary flips.
 ORACLES["knn_graph"] = sql_bucket_ctes() + f"""

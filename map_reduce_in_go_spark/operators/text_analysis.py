@@ -455,12 +455,10 @@ def train_langid_model(spark: SparkSession, sf_dir: str, root: str) -> None:
     """One corpus pass → the persisted (lang, g, c) count table.
 
     The model IS the artifact: per-(language, trigram) counts under a
-    ManifestTable. Counts are ADDITIVE, so :func:`langid_model_append`
-    maintains the model incrementally (one ledgered commit per labeled
-    batch) and readers fold base + batches by summation; totals and
-    vocabulary derive from the folded table at load (vocab-sized scans),
-    so there is exactly one source of truth and an append can never
-    leave totals stale.
+    ManifestTable. Counts are ADDITIVE, so readers fold the committed
+    rows by summation; totals and vocabulary derive from the folded table
+    at load (vocab-sized scans), so there is exactly one source of truth
+    and the totals can never go stale.
     """
     from ..sources.manifest_table import ManifestTable
 
@@ -473,26 +471,6 @@ def train_langid_model(spark: SparkSession, sf_dir: str, root: str) -> None:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     ManifestTable(root).append(model, op="langid-train")
-
-
-def langid_model_append(root: str, docs: DataFrame, op: str) -> bool:
-    """Ledgered incremental maintenance: a labeled (lang, text) batch
-    appends its own trigram counts exactly-once; the served model after
-    appends is IDENTICAL to a retrain over the union (pinned by test).
-    False on a replayed op."""
-    from ..sources.manifest_table import ManifestTable
-
-    tbl = ManifestTable(root)
-    if op in tbl.committed_ops():
-        return False
-    batch = docs.select("lang", F.lower(F.col("text")).alias("t"))
-    counts = (
-        batch.select("lang", F.explode(F.expr(_gram_expr())).alias("g"))
-        .groupBy("lang", "g")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    tbl.append(counts, op=op)
-    return True
 
 
 def _langid_model_path(spark: SparkSession, sf_dir: str) -> str:

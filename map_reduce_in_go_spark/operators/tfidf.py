@@ -367,9 +367,8 @@ def train_kn_model(spark: SparkSession, sf_dir: str, root: str) -> None:
 
     Counts at rest, scores at read (r10 second half): Kneser-Ney scores
     are a NONLINEAR function of global counts (c(v), N1+(v·), N1+(·w),
-    N1+(··)), so a score table could never absorb an incremental batch —
-    raw bigram counts are ADDITIVE, so :func:`kn_model_append` is one
-    ledgered append and :func:`_kn_scores` folds the current totals into
+    N1+(··)), so the table stores raw bigram counts, which are ADDITIVE,
+    and :func:`_kn_scores` folds the current totals into
     −ln P_KN at bigram-vocabulary grain on read (vocab-sized
     aggregations — far cheaper than the corpus-grain explode they
     replace, and exactly the gram-index discipline). The model is NOT
@@ -384,23 +383,6 @@ def train_kn_model(spark: SparkSession, sf_dir: str, root: str) -> None:
         F.count(F.lit(1)).alias("cvw")
     )
     ManifestTable(root).append(cvw, op="kn-train")
-
-
-def kn_model_append(root: str, docs: DataFrame, op: str) -> bool:
-    """Ledgered incremental maintenance: a document batch appends its own
-    bigram counts exactly-once; reads fold base + batches by summation
-    before scoring, so the served model after appends is IDENTICAL to a
-    retrain over the union (pinned by test). False on a replayed op."""
-    from ..sources.manifest_table import ManifestTable
-
-    tbl = ManifestTable(root)
-    if op in tbl.committed_ops():
-        return False
-    counts = _doc_bigrams(docs.select("doc_id", "text")).groupBy("v", "w").agg(
-        F.count(F.lit(1)).alias("cvw")
-    )
-    tbl.append(counts, op=op)
-    return True
 
 
 def _kn_scores(spark: SparkSession, root: str) -> DataFrame:
@@ -460,12 +442,10 @@ def ngram_lm_kn(spark: SparkSession, sf_dir: str) -> DataFrame:
     / boilerplate-explosion candidates, now context-sensitive).
 
     Train-once/score-many (r10, declared r11 landed early): the bigram
-    COUNT table persists via :func:`train_kn_model` (counts are additive
-    → :func:`kn_model_append` maintains the model incrementally with
-    ledgered exactly-once batches); scoring folds the current counts
-    into scores at bigram-vocabulary grain (:func:`_kn_scores`) and
-    joins once — the corpus-grain explode runs only at build/append,
-    over the batch alone. The model is bigram-vocabulary-sized, so the
+    COUNT table persists via :func:`train_kn_model`; scoring folds the
+    current counts into scores at bigram-vocabulary grain
+    (:func:`_kn_scores`) and joins once — the corpus-grain explode runs
+    only at build. The model is bigram-vocabulary-sized, so the
     join (not a broadcast) is the correct 100 TB shape. Every doc bigram
     occurs in the model by construction (the corpus is its own training
     data) — no OOV branch.

@@ -1,11 +1,9 @@
-from .tables import TABLES, load_table, load_tables, register_views
+from .tables import TABLES, load_table
 from .text import read_lines, read_text_files
 
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
-    "register_views",
     "read_lines",
     "read_text_files",
 ]

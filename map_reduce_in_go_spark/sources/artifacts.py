@@ -117,46 +117,3 @@ def served_artifact(kind: str, sf_dir: str, build_fn) -> str:
         return path
 
     return memoized_build(memo(kind), _pending(kind), key, _build)
-
-
-def refresh_artifact(kind: str, sf_dir: str, build_fn) -> str:
-    """Re-train/rebuild verb: drop the memoized path and build anew.
-
-    The OLD artifact directory is left on disk untouched — a reader that
-    already resolved its path keeps a fully consistent snapshot (the
-    ManifestTable/catalog layer inside it is immutable-append anyway);
-    the new build lands in a fresh uuid directory and later calls serve
-    it. If another thread is mid-build for the same key when refresh
-    runs, refresh joins THAT build (its result is at least as new as the
-    refresh request) rather than stacking a second one.
-    """
-    key = os.path.realpath(sf_dir)
-    with ARTIFACT_LOCK:
-        _MEMOS.setdefault(kind, {}).pop(key, None)
-    return served_artifact(kind, sf_dir, build_fn)
-
-
-def vacuum_artifacts(kinds: list[str] | None = None) -> int:
-    """Drop every memoized artifact and DELETE its directory; returns the
-    number of directories removed.
-
-    Maintenance-window verb: the caller asserts no in-flight readers
-    (directories are deleted out from under any that remain). Builds in
-    progress are left alone — only published memo entries are dropped,
-    so a concurrent first build publishes normally afterwards. The
-    per-process home itself stays (atexit removes it).
-    """
-    import shutil
-
-    with ARTIFACT_LOCK:
-        target = list(_MEMOS) if kinds is None else list(kinds)
-        dropped: list[str] = []
-        for kind in target:
-            m = _MEMOS.get(kind, {})
-            dropped.extend(m.values())
-            m.clear()
-    n = 0
-    for path in dropped:
-        shutil.rmtree(path, ignore_errors=True)
-        n += 1
-    return n

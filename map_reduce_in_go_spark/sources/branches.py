@@ -16,9 +16,7 @@ fork point, one CAS republishes the branch's pins onto main; if main
 moved, :func:`merge_branch` refuses with the per-member divergence
 (which members each side touched) rather than inventing a 3-way member
 merge — for additive members a union-merge is plausible future work, but
-a wrong merge is worse than a loud refusal. ``drop_branch`` deletes the
-ledger; the branch's member versions become unreferenced and age out of
-branch-aware vacuum.
+a wrong merge is worse than a loud refusal.
 
 Writer identity: ``acquire_app_id`` leases are ROOT-scoped on purpose.
 Op labels cross timelines (a branch inherits main's committed ops; a
@@ -41,7 +39,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 
 from pyspark.sql import SparkSession
 
@@ -51,10 +48,7 @@ __all__ = [
     "branch",
     "branch_divergence",
     "create_branch",
-    "describe_history",
-    "drop_branch",
     "fork_point",
-    "list_branches",
     "merge_branch",
 ]
 
@@ -262,60 +256,3 @@ def merge_branch(
     op = f"merge-{name}-v{br.version()}-from-v{fork_v}"
     cat.publish_gated_ops(op, br.committed_ops())
     return cat._publish(spark, pins, expected_version=fork_v, op=op)
-
-
-def list_branches(spark: SparkSession, cat: TableCatalog):
-    """(branch, fork_version, version, n_commits) rows for every branch
-    of ``cat``'s root — the timeline inventory, from metadata alone.
-
-    A branch whose fork point cannot be resolved (conflicting witnesses
-    from racing creators, or a half-created ledger) is REPORTED with
-    ``fork_version = -2`` rather than failing the whole listing: the
-    inventory verb's job is to surface the wedged branch next to the
-    healthy ones, not to become unusable because one exists."""
-    rows = []
-    for led in cat.branch_ledgers():
-        name = led.split("@", 1)[1]
-        br = branch(cat, name)
-        try:
-            fork_v = fork_point(br)
-        except (RuntimeError, ValueError):
-            fork_v = -2  # wedged/unresolvable — inspect with fork_point
-        # n_commits from the manifest LISTING (one listdir), not from
-        # history() — which opens every surviving manifest file and
-        # makes the inventory verb O(total commits) in file opens
-        rows.append(
-            (name, fork_v, br.version(), len(br._catalog._versions()))
-        )
-    return spark.createDataFrame(
-        rows or [("", -1, -1, -1)],
-        "branch string, fork_version long, version long, n_commits long",
-    ).filter("fork_version >= -2 AND branch != ''")
-
-
-def describe_history(spark: SparkSession, cat: TableCatalog):
-    """(version, op, n_members) per catalog commit, ascending — the
-    DESCRIBE HISTORY verb. Versions below the catalog ledger's own
-    checkpoint horizon are omitted (their op labels survive only in the
-    consolidated replay set), same retention trade as the time-travel
-    reads."""
-    rows = []
-    for v, op in cat.history():
-        try:
-            n = len(cat.snapshot(spark, v))
-        except FileNotFoundError:
-            continue
-        rows.append((v, op, n))
-    return spark.createDataFrame(
-        rows or [(-1, "", -1)], "version long, op string, n_members long"
-    ).filter("version >= 0")
-
-
-def drop_branch(cat: TableCatalog, name: str) -> None:
-    """Delete branch ``name``'s ledger. Its unreferenced member versions
-    age out of the (branch-aware) vacuum; shared files stay owned by the
-    remaining ledgers' pins."""
-    path = os.path.join(cat.root, _ledger(name))
-    if not os.path.isdir(path):
-        raise ValueError(f"no branch {name!r} at {cat.root}")
-    shutil.rmtree(path)

@@ -43,10 +43,8 @@ Because the replica's ledger carries the primary's op labels verbatim,
 replication CHAINS: a replica is itself a valid primary for a second
 hop (fan-out topologies), and :func:`catalog_divergence` is the health
 check — a distributed member-content fingerprint comparison that names
-exactly which member drifted. :func:`start_replication_follower` wires
-the verb into Structured Streaming as a continuously-tailing follower;
-the stream checkpoint only schedules passes, the ledger decides them,
-so a wiped checkpoint or duplicate follower converges identically.
+exactly which member drifted. The ledger decides which commits a pass
+applies, so a repeated or duplicate pass converges identically.
 
 Out of scope, honestly: the replica is a FOLLOWER (replication is its
 only writer). Active-active catalogs need op-label namespacing across
@@ -71,8 +69,6 @@ __all__ = [
     "replicate_catalog",
     "catalog_divergence",
     "clone_catalog",
-    "replication_status",
-    "start_replication_follower",
 ]
 
 
@@ -731,46 +727,6 @@ def replicate_catalog(
     return applied
 
 
-def replication_status(
-    spark: SparkSession,
-    src: TableCatalog,
-    dst: TableCatalog,
-    members: set[str] | None = None,
-    check_content: bool = False,
-) -> dict:
-    """Operational lag/health report for one replica (r12 (b)).
-
-    Metadata-only by default — O(ledger) driver work, no Spark jobs:
-    how many primary commits the replica is behind, which op labels are
-    pending (in ledger order, the replay plan), and the most recent
-    primary op the replica has applied. ``check_content=True`` adds the
-    :func:`catalog_divergence` fingerprint sweep (one scan per member) —
-    the deep check a monitoring page runs hourly, not per poll.
-
-    ``lag_commits`` counts only commits still visible in the primary's
-    ledger walk; commits behind a checkpoint-truncation horizon surface
-    through ``pending_ops`` anyway when their op label is missing from
-    the replica (the base-sync path will catch them up).
-    """
-    hist = src.history()
-    done = dst.committed_ops()
-    pending = [op for _, op in hist if op not in done]
-    applied = [op for _, op in hist if op in done]
-    status = {
-        "primary_version": src.version(),
-        "replica_version": dst.version(),
-        "lag_commits": len(pending),
-        "pending_ops": pending,
-        "last_applied_op": applied[-1] if applied else None,
-        "current": not pending,
-    }
-    if check_content:
-        status["divergence"] = catalog_divergence(
-            spark, src, dst, members=members
-        )
-    return status
-
-
 def clone_catalog(
     spark: SparkSession,
     src: TableCatalog,
@@ -849,41 +805,3 @@ def clone_catalog(
             stats_cols=_member_stats_cols(man),
         )
     return txn.commit(op=op)
-
-
-def start_replication_follower(
-    spark: SparkSession,
-    src_root: str,
-    dst_root: str,
-    checkpoint_dir: str,
-    interval: str = "5 seconds",
-    verbatim: bool = False,
-):
-    """Continuously tail the primary's ledger into a replica (r12 (c)).
-
-    A rate stream is the trigger clock — the ledger itself is the real
-    source of work; each micro-batch runs one :func:`replicate_catalog`
-    pass, which ships whatever committed since the last pass and no-ops
-    otherwise. Correctness therefore never depends on the STREAM's
-    checkpoint: exactly-once lives in the catalog ledgers, so a wiped
-    checkpoint, a restarted follower, or an accidental second follower
-    all converge to the same replica (pinned in tests/test_replication.
-    py). The checkpoint only schedules passes; the ledger decides them.
-
-    ``verbatim=True`` (r13) makes this a continuously-tailing BACKUP:
-    every pass ships byte-copies with the delete vector as metadata
-    (see :func:`replicate_catalog`); like the batch verb, the mode is a
-    lifetime property of the destination.
-    """
-    src, dst = TableCatalog(src_root), TableCatalog(dst_root)
-    ticks = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-
-    def _one(_df: DataFrame, _bid: int) -> None:
-        replicate_catalog(spark, src, dst, verbatim=verbatim)
-
-    return (
-        ticks.writeStream.foreachBatch(_one)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=interval)
-        .start()
-    )

@@ -3,9 +3,9 @@
 `dedup_containment_exact` (operators/dedup.py) answers "which docs occur
 inside other docs" with an IN-FLIGHT anchor-gram scan. This module makes
 the same structure a SERVED artifact: build once, persist under a
-ManifestTable with a hash-clustered layout, then answer arbitrary
-multi-pattern exact-substring lookups by point-set file pruning — the
-text-index sibling of the durable MinHash band index and the
+ManifestTable with a hash-clustered layout, and let
+`dedup_containment_indexed` read it instead of re-exploding every gram —
+the text-index sibling of the durable MinHash band index and the
 parquet-partitioned IVF inverted file.
 
 Index row: ``(h, doc_id, pos)`` — xxhash64 of the ``ANCHOR_W``-char gram
@@ -14,17 +14,13 @@ three longs; the ``compact(zorder_cols=["h"])`` rewrite hash-sorts the
 layout so each file's [min,max] stats admit only its own hash range and
 a point probe touches O(1) files (`files_pruned_in`).
 
-Query: a pattern's first ``ANCHOR_W`` chars hash to its anchor; every
-true occurrence shares that anchor at the same offset (completeness —
-the dedup_containment_exact argument), so probe → pruned scan →
+A pattern's first ``ANCHOR_W`` chars hash to its anchor; every true
+occurrence shares that anchor at the same offset (completeness — the
+dedup_containment_exact argument), so an anchor join followed by an
 offset-exact ``substr`` verify against the document text yields every
-occurrence with zero false positives. Patterns shorter than the anchor
-raise loudly: they would need a smaller-gram index, not a silent partial
-answer.
+occurrence with zero false positives.
 
-At 100 TB: the build is one corpus scan + one clustered rewrite; a
-k-pattern lookup reads O(k) index files plus the candidate docs' texts —
-never the corpus.
+At 100 TB: the build is one corpus scan + one clustered rewrite.
 """
 
 from __future__ import annotations
@@ -35,7 +31,7 @@ from pyspark.sql import functions as F
 from ..sources.manifest_table import ManifestTable
 from ..sources.tables import load_documents_parallel
 
-ANCHOR_W = 32  # anchor width (chars) = minimum searchable pattern length
+ANCHOR_W = 32  # anchor width (chars) = minimum matchable pattern length
 INDEX_FILES = 16  # clustered data files per index (the prune granularity)
 
 
@@ -69,32 +65,6 @@ def build_substring_index(
     return tbl
 
 
-def index_append(root: str, docs: DataFrame, op: str) -> bool:
-    """Incremental maintenance: a new document batch appends its grams in
-    ONE ledgered commit — exactly-once per ``op`` id across retries and
-    stream replays (the band-index/rollup discipline applied to the text
-    index). The index answers queries immediately; appended files span
-    wider hash ranges than the clustered base, so pruning degrades
-    gracefully until :func:`optimize_index` restores the tight layout.
-    Returns False (no recompute) on a replayed op."""
-    tbl = ManifestTable(root, stats_cols=["h"])
-    if op in tbl.committed_ops():
-        return False
-    tbl.append(_gram_rows(docs.select("doc_id", "text")), op=op)
-    return True
-
-
-def optimize_index(
-    spark: SparkSession, root: str, num_files: int = INDEX_FILES
-) -> int:
-    """Re-cluster the whole index on the hash (the OPTIMIZE-ZORDER verb):
-    one atomic CAS rewrite restores point-probe pruning for every file
-    after a run of incremental appends."""
-    return ManifestTable(root, stats_cols=["h"]).compact(
-        spark, num_files=num_files, zorder_cols=["h"]
-    )
-
-
 # --------------------------------------------------------------------------
 # Served token-K-gram FREQUENCY index — the serving artifact behind
 # substring dedup (declared r10; r9 verdict "missing" #1).
@@ -109,13 +79,9 @@ def optimize_index(
 #
 # - a FULL dedup run replaces the corpus-wide occurrence aggregation with
 #   a scan of pre-aggregated counts (distinct-gram rows, already combined);
-# - an INCREMENTAL batch probes only the files its own grams can live in
-#   (point-set pruning — same discipline as the anchor-gram index above),
-#   so a small arriving batch reads O(its grams) index files, never the
-#   corpus;
-# - maintenance is the ledgered-append + re-cluster pattern shared with
-#   the anchor index: counts are ADDITIVE rows, so readers aggregate
-#   sum(n) by digest and appends never rewrite history.
+# - a point probe opens only the files its grams can live in (point-set
+#   pruning — same discipline as the anchor-gram index above);
+# - counts are ADDITIVE rows, so readers aggregate sum(n) by digest.
 
 
 def _token_gram_counts(docs: DataFrame) -> DataFrame:
@@ -145,29 +111,6 @@ def build_gram_index(
     return tbl
 
 
-def gram_index_append(root: str, docs: DataFrame, op: str) -> bool:
-    """Ledgered incremental maintenance: a new batch appends its OWN gram
-    counts in one exactly-once commit (rows are additive — a gram seen
-    once in the base and once in the batch sums to a corpus duplicate,
-    which a duplicated-grams-only index could never express). Returns
-    False (no recompute) on a replayed ``op``."""
-    tbl = ManifestTable(root, stats_cols=["g"])
-    if op in tbl.committed_ops():
-        return False
-    tbl.append(_token_gram_counts(docs.select("doc_id", "text")), op=op)
-    return True
-
-
-def optimize_gram_index(
-    spark: SparkSession, root: str, num_files: int = INDEX_FILES
-) -> int:
-    """Re-cluster on the digest after a run of appends (OPTIMIZE-ZORDER):
-    restores tight per-file hash ranges so point probes prune again."""
-    return ManifestTable(root, stats_cols=["g"]).compact(
-        spark, num_files=num_files, zorder_cols=["g"]
-    )
-
-
 def duplicated_grams(spark: SparkSession, root: str) -> DataFrame:
     """One-column (g) frame of corpus-duplicated gram digests.
 
@@ -184,99 +127,4 @@ def duplicated_grams(spark: SparkSession, root: str) -> DataFrame:
         .agg(F.sum("n").alias("n"))
         .filter(F.col("n") >= 2)
         .select("g")
-    )
-
-
-def batch_duplicated_spans(
-    spark: SparkSession, root: str, docs: DataFrame
-) -> DataFrame:
-    """Duplicated spans of an ARRIVING batch against corpus ∪ batch,
-    reading only the index files the batch's own grams can live in.
-
-    The incremental-arrival form of substring dedup: the batch's gram
-    digests become a point-probe set (collected to the driver — bounded
-    by ``MAX_PROBE_KEYS``, same guard as the band-index probe path in
-    operators/dedup.py), pruned-scan the index for those digests'
-    counts, add the batch's own counts (a gram twice in the batch is a
-    duplicate even if the corpus never saw it), and run-merge the batch
-    positions whose gram total ≥ 2. Past the guard the index side falls
-    back to a full snapshot read joined distributively — a batch that
-    large touches essentially every index file anyway, and the driver
-    must never materialize a corpus-sized digest set (r10 verdict #1).
-    """
-    from ..functions.text import shingles_of, tokens
-    from ..operators.dedup import MAX_PROBE_KEYS, SUBSTR_K, substring_spans
-
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
-    grams = toks.select(
-        "doc_id",
-        F.posexplode(shingles_of(F.col("toks"), SUBSTR_K)).alias("pos", "gram"),
-    ).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.md5("gram").alias("g"),
-    )
-    from ..functions.caching import scoped_persist
-
-    grams = scoped_persist(grams)
-    batch_counts = scoped_persist(
-        grams.groupBy("g").agg(F.count("*").alias("bn"))
-    )
-    tbl = ManifestTable(root, stats_cols=["g"])
-    # one bounded driver job (r15): batch_counts is already g-unique, so
-    # limit(K+1) both replaces the count() gate and caps driver memory
-    probe_rows = batch_counts.select("g").limit(MAX_PROBE_KEYS + 1).collect()
-    if len(probe_rows) <= MAX_PROBE_KEYS:
-        idx = tbl.read_pruned_in(spark, "g", [r["g"] for r in probe_rows])
-    else:
-        idx = tbl.read(spark)
-    idx_counts = idx.groupBy("g").agg(F.sum("n").alias("inn"))
-    dup = (
-        batch_counts.join(idx_counts, "g", "left")
-        .filter(F.col("bn") + F.coalesce(F.col("inn"), F.lit(0)) >= 2)
-        .select("g")
-    )
-    return substring_spans(docs, dup_grams=dup, gram_rows=grams)
-
-
-def substring_search(
-    spark: SparkSession, sf_dir: str, root: str, patterns: list[str]
-) -> DataFrame:
-    """(pattern, doc_id, pos) for EVERY exact occurrence of each pattern.
-
-    Probe hashes are computed by the same JVM ``xxhash64`` expression the
-    build used (a k-row driver job — the recipe must match bit-for-bit),
-    the index is read through ``read_pruned_in`` (files that cannot hold
-    a probe are never opened), and candidates are verified offset-exactly
-    against the document text, so hash collisions cannot leak through.
-    """
-    # dedupe (order-preserving): duplicate patterns would duplicate probe
-    # rows and therefore duplicate every output row (r9 advice)
-    patterns = list(dict.fromkeys(patterns))
-    short = [p for p in patterns if len(p) < ANCHOR_W]
-    if short:
-        raise ValueError(
-            f"substring_search: patterns shorter than ANCHOR_W={ANCHOR_W} "
-            f"chars need a finer-grained index: {short[:3]!r}"
-        )
-    pats = spark.createDataFrame(
-        [(p,) for p in patterns], "pattern string"
-    ).select(
-        "pattern",
-        F.xxhash64(F.substring("pattern", 1, ANCHOR_W)).alias("h"),
-        F.length("pattern").alias("plen"),
-    )
-    probe_rows = pats.collect()  # k rows — the pattern set is caller-bounded
-    probes = [r["h"] for r in probe_rows]
-
-    tbl = ManifestTable(root, stats_cols=["h"])
-    cand = tbl.read_pruned_in(spark, "h", probes)
-    docs = load_documents_parallel(spark, sf_dir).select(
-        F.col("doc_id"), F.col("text")
-    )
-    return (
-        cand.join(F.broadcast(pats), "h")
-        .join(docs, "doc_id")
-        .filter(F.expr("substr(text, pos, plen) = pattern"))
-        .select("pattern", "doc_id", F.col("pos").cast("long").alias("pos"))
     )

@@ -77,16 +77,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in (names or TABLES))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works too."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # Target rows per spread task (r16, r15 verdict #4). The r15 spreads used
 # defaultParallelism unconditionally, which anti-scaled at low data volume:
 # five bench keys ran FASTER at 8 cores than 32 (dedup_image_phash 8v32

@@ -37,9 +37,9 @@ member appends together, and any crash before it leaves only orphan
 member versions (invisible; vacuumed). Exactly-once falls out of the
 catalog ledger: the commit is tagged ``<app_id>-batch-<id>`` and a
 replayed batch is detected from PUBLISHED commits before any recompute,
-so Spark's at-least-once foreachBatch (or a checkpoint-wiped restart)
-re-running a batch is a no-op across ALL seven artifacts at once —
-proven in tests/test_corpus_pipeline.py by wiping and replaying.
+so an at-least-once caller re-running a batch is a no-op across ALL
+seven artifacts at once — proven in tests/test_corpus_pipeline.py by
+replaying.
 
 On a CAS conflict (a racing backfill writer) the batch re-plans against
 the new snapshot with a full re-probe — survivors were derived from the
@@ -151,16 +151,6 @@ def _media_gate_threshold(cat: TableCatalog, marker: str) -> int | None:
             return int(json.load(fh)["hamming"])
     except FileNotFoundError:
         return None
-
-
-def image_gate_threshold(cat: TableCatalog) -> int | None:
-    """The catalog's armed image-gate Hamming threshold, or None."""
-    return _media_gate_threshold(cat, _IMAGE_GATE_MARKER)
-
-
-def audio_gate_threshold(cat: TableCatalog) -> int | None:
-    """The catalog's armed audio-gate Hamming threshold, or None."""
-    return _media_gate_threshold(cat, _AUDIO_GATE_MARKER)
 
 
 def _resolve_media_gate(
@@ -346,9 +336,8 @@ def _txn_live_read(txn, name: str, merge_schema: bool = False) -> DataFrame:
 
 class NothingToRetract(ValueError):
     """No requested id exists anywhere in the catalog — raised as a TYPE
-    so programmatic callers (the erasure follower) can distinguish the
-    goal-state case from genuine argument errors without string-matching
-    an error message."""
+    so programmatic callers can distinguish the goal-state case from
+    genuine argument errors without string-matching an error message."""
 
 
 def _gram_rows_of(docs: DataFrame) -> DataFrame:
@@ -746,194 +735,6 @@ def corpus_batch_txn(
         f"batch {batch_id} lost the catalog race 10 times at {cat.root}; "
         "Spark will retry the batch"
     )
-
-
-def bootstrap_pipeline(
-    spark: SparkSession,
-    cat: TableCatalog,
-    docs: DataFrame,
-    bands: DataFrame | None = None,
-    grams: DataFrame | None = None,
-    app_id: str = "corpus",
-    writer_token: str | None = None,
-    expectations: list[tuple[str, str]] | None = None,
-) -> bool:
-    """Seed an EMPTY pipeline catalog from a static corpus, then stream.
-
-    ``expectations`` mirrors :func:`corpus_batch_txn`'s constraint gate
-    (full verb parity, r11): violating rows are diverted to the
-    ``quarantine`` member (batch_id −2) BEFORE admission — they never
-    reach bands/corpus/rejects, so a constraint-armed bootstrap followed
-    by constraint-armed streaming is member-identical to streaming
-    everything constrained. REFUSED (loudly) on the adoption path: with
-    precomputed ``bands`` the caller vouches ``docs`` is already curated,
-    and silently skipping the gate would make the two claims ambiguous.
-
-    The backfill posture: a corpus already exists (and often its band
-    index and gram index exist as standalone batch artifacts — e.g.
-    ``build_band_index`` / ``build_gram_index`` output); adopting it
-    must not force a from-scratch re-stream. This verb publishes all
-    seven members in ONE transaction from the static input, after which
-    ``corpus_batch_txn`` continues incrementally — bootstrapping on a
-    prefix and streaming the rest lands member-identical state to
-    streaming everything (pinned in tests/test_corpus_pipeline.py).
-
-    ``bands``/``grams`` let the caller pass the PRECOMPUTED artifacts
-    verbatim; ``docs`` is then trusted as already near-dup-free (they
-    describe it). Without them, ``docs`` is treated exactly like a first
-    micro-batch: in-batch near-dup filtering against the empty index,
-    bands/grams derived from the survivors — so the bootstrap-vs-stream
-    equivalence holds by construction, not by luck.
-
-    Returns False (no recompute, nothing moves) if this ``app_id`` was
-    already bootstrapped — the same ledger replay discipline as batches.
-    Refuses a NON-empty catalog loudly: adopting into live state would
-    silently double-count every additive member.
-    """
-    from pyspark.sql import functions as F
-
-    from ..functions.caching import (
-        free_local_checkpoint,
-        persisted_count,
-        release_persisted_since,
-        scoped_persist,
-    )
-    from ..functions.text import tokens
-    from ..sources.substring_index import _token_gram_counts
-    from .heavy import _batch_sketch
-    from .quantiles import summaries_for
-
-    op = f"{app_id}-bootstrap"
-    if op in cat.committed_ops():
-        return False
-    if writer_token is not None:
-        cat.check_app_id(app_id, writer_token)
-    if cat.snapshot(spark):
-        raise ValueError(
-            f"catalog at {cat.root} already has members; bootstrap only "
-            "seeds an empty pipeline (additive members would double-count)"
-        )
-    mark = persisted_count()
-    kept = None
-    survivors = None
-    try:
-        quar_rows = None
-        if bands is None:
-            src = docs
-            if expectations:
-                viol = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(
-                                ~F.coalesce(F.expr(expr), F.lit(False)),
-                                F.lit(name),
-                            )
-                            for name, expr in expectations
-                        ]
-                    )
-                )
-                tagged = scoped_persist(docs.withColumn("_viol", viol))
-                quar_rows = (
-                    tagged.filter(F.size("_viol") > 0)
-                    .select("doc_id", F.explode("_viol").alias("rule"))
-                    .withColumn("batch_id", F.lit(-2))
-                )
-                src = tagged.filter(F.size("_viol") == 0).drop("_viol")
-            empty = spark.createDataFrame(
-                [], "band_idx int, band_hash string"
-            )
-            batch_bands = scoped_persist(bands_of_docs(src))
-            survivors = dedup_batch_against_bands(
-                src, empty, batch_bands=batch_bands
-            ).localCheckpoint(eager=True)
-            kept = src.join(survivors, "doc_id", "left_semi").localCheckpoint(
-                eager=True
-            )
-            bands = batch_bands.join(survivors, "doc_id", "left_semi")
-            rejected = src.join(survivors, "doc_id", "left_anti")
-        else:
-            if expectations:
-                raise ValueError(
-                    "bootstrap_pipeline: expectations cannot be combined "
-                    "with precomputed bands/grams — the adoption path "
-                    "trusts docs as already curated; filter upstream or "
-                    "drop the precomputed artifacts"
-                )
-            kept = docs.localCheckpoint(eager=True)
-            # adoption path: docs are described as already near-dup-free,
-            # so the rejection report starts empty (still created — every
-            # snapshot carries the full member set)
-            rejected = spark.createDataFrame(
-                [], "doc_id long, text string, lang string"
-            )
-        if grams is None:
-            grams = _token_gram_counts(kept)
-        txn = cat.transaction(spark)
-        extras = [
-            c for c in docs.columns if c not in ("doc_id", "text", "lang")
-        ]
-        # same concurrent-submit shape as corpus_batch_txn: six independent
-        # member appends pay max(member), not sum(member), in job latency
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _cms():
-            total, agg = _batch_sketch(kept)
-            txn.append(
-                CMS,
-                spark.createDataFrame(
-                    [Row(batch_id=-1, n=total, sketch=agg.tolist())],
-                    schema="batch_id long, n long, sketch array<long>",
-                ).coalesce(1),
-                op=op,
-            )
-
-        def _quants():
-            lens = kept.select(
-                "lang",
-                F.size(tokens(F.col("text"))).cast("double").alias("n_tok"),
-            )
-            txn.append(
-                QUANTS,
-                summaries_for(lens, "lang", "n_tok", -1).coalesce(1),
-                op=op,
-            )
-
-        appends = (
-            lambda: txn.append(
-                CORPUS,
-                kept.select("doc_id", "text", "lang", *extras),
-                op=op,
-                stats_cols=["doc_id"],
-            ),
-            lambda: txn.append(
-                BANDS, bands, op=op, stats_cols=["band_hash", "doc_id"]
-            ),
-            lambda: txn.append(GRAMS, grams, op=op, stats_cols=["g"]),
-            lambda: txn.append(
-                TOKENS, _token_count_rows(kept), op=op, stats_cols=["word"]
-            ),
-            lambda: txn.append(
-                REJECTS, _gram_rows_of(rejected), op=op, stats_cols=["doc_id"]
-            ),
-            _cms,
-            _quants,
-        )
-        if quar_rows is not None:
-            appends = appends + (
-                lambda: txn.append(
-                    QUAR, quar_rows, op=op, stats_cols=["doc_id"]
-                ),
-            )
-        with ThreadPoolExecutor(max_workers=len(appends)) as pool:
-            for fut in [pool.submit(f) for f in appends]:
-                fut.result()
-        txn.commit(op=op)
-        return True
-    finally:
-        release_persisted_since(mark)
-        for df in (kept, survivors):
-            if df is not None:
-                free_local_checkpoint(df)
 
 
 # past this many affected ids, per-file [min,max] pruning buys nothing
@@ -1350,71 +1151,6 @@ def retract_docs_mor(
     return retract_docs(spark, cat, doc_ids, op, max_retries, mode="mor")
 
 
-def retract_where(
-    spark: SparkSession,
-    cat: TableCatalog,
-    predicate: str,
-    op: str,
-    max_retries: int = 10,
-    mode: str = "cow",
-    max_ids: int = 5_000_000,
-) -> bool:
-    """Predicate erasure: retract every LIVE document matching a SQL
-    predicate over the corpus member's columns (``"lang = 'de'"``,
-    ``"source = 'badcrawl' AND doc_id < 1000"``) — the DELETE-WHERE verb
-    a takedown or bad-crawl rollback actually issues, composed from
-    :func:`retract_docs` so both erasure modes, the member algebra, and
-    exactly-once come along unchanged.
-
-    Resolution happens on the transaction-free LIVE view (MOR deletes
-    applied — an already-erased doc must not resolve), then the id set
-    goes through the ordinary retraction CAS loop; a batch landing
-    between resolution and commit conflicts there and the retry
-    RE-RESOLVES, so a matching doc admitted mid-verb is either fully
-    covered or untouched-and-matchable-again, never half-erased.
-
-    ``max_ids`` bounds the driver-held id list (the same probe-set
-    posture as ``MERGE_MAX_IDS``); past it, refuse loudly — an erasure
-    that big should run as a sequence of narrower predicates (or a
-    full-member rewrite a human signs off on), not an accidental
-    corpus wipe.
-    """
-    from pyspark.sql import functions as F
-
-    if op in cat.committed_ops():
-        return False
-    for _ in range(max_retries):
-        txn = cat.transaction(spark)
-        ids_df = (
-            _txn_live_read(txn, CORPUS, merge_schema=True)
-            .filter(F.expr(predicate))
-            .select("doc_id")
-        )
-        # one job resolves the bound check AND the id list (the live-view
-        # scan — corpus + vector anti-join + predicate — is paid once)
-        rows = ids_df.limit(max_ids + 1).collect()
-        if len(rows) > max_ids:
-            raise ValueError(
-                f"retract_where: predicate {predicate!r} matches more than "
-                f"max_ids={max_ids} live documents at {cat.root}; split the "
-                "erasure or raise the bound explicitly"
-            )
-        ids = sorted(int(r["doc_id"]) for r in rows)
-        if not ids:
-            raise NothingToRetract(
-                f"retract_where: predicate {predicate!r} matches no live "
-                f"document at {cat.root}; nothing to retract"
-            )
-        try:
-            return retract_docs(spark, cat, ids, op, max_retries=1, mode=mode)
-        except CommitConflict:
-            continue  # re-resolve against the moved snapshot
-    raise CommitConflict(
-        f"retract_where {op!r} lost the catalog race {max_retries} times "
-        f"at {cat.root}"
-    )
-
-
 def apply_deletes(
     spark: SparkSession,
     cat: TableCatalog,
@@ -1494,253 +1230,6 @@ def apply_deletes(
             continue  # a batch landed mid-fold; re-plan on the new base
     raise CommitConflict(
         f"apply-deletes lost the catalog race {max_retries} times at {cat.root}"
-    )
-
-
-def deletes_status(spark: SparkSession, cat: TableCatalog) -> dict:
-    """Pending-delete-vector report — what an operator reads before
-    scheduling :func:`apply_deletes` against an erasure SLA.
-
-    Metadata + one tiny member scan (the vector is bounded by
-    retractions since the last fold): per member, the pending pair
-    count, the distinct files a fold would rewrite (inert entries for
-    already-replaced files excluded — those cost nothing), and that
-    member's total live file count for the rewrite fraction.
-    Returns ``{}`` when no vector member exists (nothing pending).
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    # one transaction = one consistent base version for the vector AND
-    # the live-file sets (the same resolution apply_deletes uses): a
-    # concurrent fold dropping the member mid-report, or pair counts and
-    # file sets read from different snapshots, can't skew the numbers
-    txn = cat.transaction(spark)
-    try:
-        dels = txn.read(DELETES)
-    except KeyError:
-        return {}
-    counts = {
-        (r["member"], r["file"]): r["n"]
-        for r in dels.groupBy("member", "file")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    out: dict = {}
-    for name in _MOR_MEMBERS:
-        try:
-            live = {os.path.basename(p) for p in txn.files(name)}
-        except KeyError:
-            continue  # member absent (e.g. image gate never armed)
-        mine = {f: n for (m, f), n in counts.items() if m == name}
-        fold_files = [f for f in mine if f in live]
-        out[name] = {
-            "pending_pairs": int(sum(mine.values())),
-            "files_to_rewrite": len(fold_files),
-            "inert_entries": int(
-                sum(n for f, n in mine.items() if f not in live)
-            ),
-            "member_files": len(live),
-        }
-    return out
-
-
-def _vector_age_commits(spark: SparkSession, cat: TableCatalog) -> int:
-    """How many catalog commits the CURRENT delete-vector streak has been
-    pending: walks back from the newest version while the vector member
-    is present. A truncated (checkpointed-away) snapshot means the
-    streak extends past the ledger's horizon — the walk cannot see how
-    much further — so the CONSERVATIVE answer for an age-based SLA is
-    ``sys.maxsize`` (older than any finite threshold: the fold TRIPS).
-    Returning the partial count instead would cap measurable age at the
-    ledger checkpoint interval (default 16) and a threshold above it
-    could never trip (r13 self-review).
-    O(streak) driver-side manifest reads, no jobs."""
-    import sys
-
-    cur = cat.version()
-    first = None
-    v = cur
-    while v >= 0:
-        try:
-            snap = cat.snapshot(spark, v)
-        except FileNotFoundError:
-            return sys.maxsize  # streak crosses the truncation horizon
-        if DELETES not in snap:
-            break
-        first = v
-        v -= 1
-    return 0 if first is None else cur - first + 1
-
-
-def maintain_deletes(
-    spark: SparkSession,
-    cat: TableCatalog,
-    max_pending_pairs: int | None = None,
-    max_rewrite_files: int | None = None,
-    max_age_commits: int | None = None,
-) -> int:
-    """Erasure-SLA maintenance policy (r13, r12 verdict #5): fold the MOR
-    delete vector (:func:`apply_deletes`) when any threshold trips, no-op
-    otherwise. Returns files rewritten (0 = nothing pending or no trip).
-
-    The operator's contract made concrete: ``retract_docs(mode="mor")``
-    is O(metadata) at request time BECAUSE the physical erasure batches
-    into a maintenance window — this verb IS that window's trigger, so a
-    follower can run unattended while the vector stays bounded by policy
-    instead of by an operator watching :func:`deletes_status`:
-
-    - ``max_pending_pairs`` — bound on total vector rows (serve-side
-      anti-join cost is ∝ pending pairs);
-    - ``max_rewrite_files`` — bound on the files a fold would rewrite
-      (fold cost; also the knob that keeps each fold's window small);
-    - ``max_age_commits`` — bound on how many catalog commits the current
-      vector streak has been pending (the GDPR wall-clock proxy in ledger
-      time: every erasure request is at most that many commits from
-      physical erasure).
-
-    Thresholds are AND-of-None / OR-of-tripped: pass only the ones your
-    SLA names. Cost when nothing trips: the ``deletes_status`` metadata
-    scan (+ the O(streak) age walk if requested) — cheap enough for every
-    follower batch.
-    """
-    st = deletes_status(spark, cat)
-    if not st:
-        return 0
-    pend = sum(m["pending_pairs"] for m in st.values())
-    files = sum(m["files_to_rewrite"] for m in st.values())
-    trip = (
-        max_pending_pairs is not None and pend > max_pending_pairs
-    ) or (max_rewrite_files is not None and files > max_rewrite_files)
-    if not trip and max_age_commits is not None:
-        trip = _vector_age_commits(spark, cat) > max_age_commits
-    if not trip:
-        return 0
-    return apply_deletes(spark, cat)
-
-
-def start_erasure_follower(
-    stream_requests: DataFrame,
-    catalog_root: str,
-    checkpoint_dir: str,
-    app_id: str = "erasure",
-    mode: str = "mor",
-    ledger: str = "_catalog",
-    writer_token: str | None = None,
-    maintain: dict | None = None,
-):
-    """Erasure-request stream → one retraction transaction per micro-batch.
-
-    The GDPR shape a production pipeline actually runs: deletion requests
-    arrive CONTINUOUSLY (a ``doc_id`` column is all the stream needs),
-    and each micro-batch applies one :func:`retract_docs` transaction —
-    ``mode="mor"`` by default, so steady-state erasure is O(metadata) per
-    batch (one delete-vector append + the additive negatives) and the
-    file rewrites batch into whatever :func:`apply_deletes` /
-    :func:`compact_pipeline` cadence the erasure SLA dictates.
-
-    Exactly-once mirrors :func:`start_corpus_pipeline`: the op label is
-    ``<app_id>-batch-<id>``, so Spark's at-least-once ``foreachBatch``
-    (or a checkpoint-wiped restart) re-delivering a batch is a ledger
-    no-op — negatives can never double-subtract. One follower semantics
-    difference from the interactive verb: a batch whose ids are ALL
-    absent from the catalog completes as a no-op instead of raising —
-    erasure is a final-state goal, and for a stream "never ingested or
-    already erased" IS the goal state (the interactive verb keeps its
-    loud :class:`NothingToRetract`, where a typo'd id means a human is
-    watching). The goal-state batch still COMMITS an empty marker
-    transaction under its op label: an un-ledgered batch would not be a
-    batch at all — a checkpoint-wiped replay of it after the requested
-    id finally got ingested would erase a document the original
-    execution did not (at-least-once must replay EFFECTS, not re-decide
-    them). Requests for ids that were only ever REJECTED still purge
-    their stored traces, exactly like the verb. NULL ids (a malformed
-    request record under the PERMISSIVE reader) are dropped rather than
-    wedging the query.
-
-    ``writer_token`` carries an :meth:`~..sources.catalog.TableCatalog.
-    acquire_app_id` lease into every batch, mirroring the ingest
-    follower: two erasure followers accidentally sharing an ``app_id``
-    would silently alias each other's batch ids as replays and SKIP
-    erasures — with a token, the expropriated follower fails loudly
-    before minting an op label.
-
-    Driver work per batch is the distinct-id collect — erasure batches
-    are request-sized, not corpus-sized.
-
-    ``maintain`` (r13, r12 verdict #5) arms the in-loop erasure-SLA
-    policy: a dict of :func:`maintain_deletes` thresholds (e.g.
-    ``{"max_pending_pairs": 10_000, "max_age_commits": 32}``) checked
-    after every batch, so the follower keeps the vector bounded WITHOUT
-    an operator scheduling folds. The fold is its own ledgered commit —
-    a crash between retraction and fold re-trips the policy on the next
-    batch, and a replayed batch (retraction no-op) still folds if the
-    thresholds say so.
-    """
-    from pyspark.sql import functions as F
-
-    spark = stream_requests.sparkSession
-    cat = TableCatalog(catalog_root, ledger=ledger)
-
-    def _one(df: DataFrame, bid: int) -> None:
-        ids = [
-            int(r["doc_id"])
-            for r in df.select("doc_id")
-            .filter(F.col("doc_id").isNotNull())
-            .distinct()
-            .collect()
-        ]
-        if not ids:
-            if maintain:
-                # r14 (r13 advice): maintenance folds COMMIT rewritten
-                # members — a fenced-out zombie follower must fail the
-                # lease check before it can fold, same as before a
-                # retraction. The empty-batch path previously skipped
-                # the fence entirely.
-                if writer_token is not None:
-                    cat.check_app_id(app_id, writer_token)
-                maintain_deletes(spark, cat, **maintain)
-            return
-        op = f"{app_id}-batch-{bid}"
-        if writer_token is not None:
-            cat.check_app_id(app_id, writer_token)
-        try:
-            retract_docs(spark, cat, ids, op=op, mode=mode)
-            if maintain:
-                maintain_deletes(spark, cat, **maintain)
-        except NothingToRetract:
-            # all ids already absent everywhere: the erasure is complete
-            # by definition — but the DECISION must still be ledgered, or
-            # a checkpoint-wiped replay after one of these ids finally
-            # got ingested would erase what this execution did not
-            for _ in range(10):
-                if op in cat.committed_ops():
-                    break
-                txn = cat.transaction(spark)
-                if op in cat.committed_ops():  # linearizable recheck
-                    break
-                try:
-                    txn.commit(op=op, force=True)  # content-no-op marker
-                    break
-                except CommitConflict:
-                    continue
-            else:
-                raise CommitConflict(
-                    f"erasure marker {op!r} lost the catalog race at {cat.root}"
-                )
-            # the policy runs on EVERY batch outcome (r13 self-review):
-            # a goal-state batch adds nothing, but an age threshold can
-            # trip on it — the final availableNow batch must not strand
-            # a tripping vector unfolded
-            if maintain:
-                maintain_deletes(spark, cat, **maintain)
-
-    return (
-        stream_requests.writeStream.foreachBatch(_one)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 
@@ -2519,55 +2008,3 @@ def rebase_merge_branch(
     finally:
         release_persisted_since(mark)
     return cat.version()
-
-
-def start_corpus_pipeline(
-    stream_docs: DataFrame,
-    catalog_root: str,
-    checkpoint_dir: str,
-    app_id: str = "corpus",
-    emb_lookup: DataFrame | None = None,
-    writer_token: str | None = None,
-    semantic_threshold: float | None = None,
-    ledger: str = "_catalog",
-):
-    """(doc_id, text, lang) stream → one multi-member txn per micro-batch.
-
-    ``emb_lookup`` is a STATIC (doc_id, e) side table (the stream-static
-    pattern — embeddings computed upstream of ingestion); each batch's
-    accepted docs pull their vectors from it and the codes commit in the
-    same transaction. ``writer_token`` carries the ``acquire_app_id``
-    lease into every batch commit (multi-writer namespacing); a restarted
-    driver passes the SAME token it persisted alongside its checkpoint.
-
-    ``ledger`` targets a TIMELINE (r12): pass a branch ledger name
-    (``_catalog@<name>`` — or just use ``branch(cat, name).ledger``) to
-    run a streaming experiment against a zero-copy branch. Branch
-    batches WAL their inputs (see :data:`WAL`), so the whole streamed
-    experiment stays mergeable — fast-forward if main never moved,
-    :func:`rebase_merge_branch` otherwise. Exactly-once is unchanged:
-    the branch ledger inherits main's op labels at the fork, so a
-    checkpoint-replayed batch that predates the fork is still a no-op.
-    Give each experiment its own ``app_id`` (root-scoped leases).
-    """
-    spark = stream_docs.sparkSession
-    cat = TableCatalog(catalog_root, ledger=ledger)
-
-    def _one(df: DataFrame, bid: int) -> None:
-        emb = (
-            None
-            if emb_lookup is None
-            else emb_lookup.join(df.select("doc_id"), "doc_id", "left_semi")
-        )
-        corpus_batch_txn(
-            spark, df, cat, bid, app_id, emb_batch=emb,
-            writer_token=writer_token,
-            semantic_threshold=semantic_threshold,
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(_one)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

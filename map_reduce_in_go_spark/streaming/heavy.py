@@ -1,30 +1,25 @@
-"""Streaming heavy hitters: durable mergeable Count-Min rollup.
+"""Streaming heavy hitters: mergeable Count-Min sketch kernels.
 
 The streaming form of :func:`~..operators.approx.heavy_hitters_cms` —
 "trending tokens over an unbounded document stream". The property doing
 the work is CMS MERGEABILITY BY ADDITION: each micro-batch lands ONE
-fixed-size sketch row (batch token count + its D×W Count-Min array) in a
-:class:`ManifestTable`, ledgered like every ingest append so replays are
-detected before recompute. Any later question folds the stored rows —
-sum of per-batch sketches ≡ the sketch of the concatenated stream, in
-any arrival order — screens candidates, and exact-recounts them against
-the landed documents, so the answer is EXACT over everything ingested so
-far while per-batch state stays ~128 KB regardless of stream length.
-
-``compact_sketches`` is the log-structured-sketch maintenance verb: it
-replaces all committed sketch rows by their elementwise sum in one
-atomic overwrite — the table stays O(1) rows over years of batches, and
-the answer is unchanged (mergeability again, proven in test).
+fixed-size sketch row (batch token count + its D×W Count-Min array) in
+the corpus pipeline's ``token_cms`` catalog member
+(streaming/corpus_pipeline.py). Any later question folds the stored
+rows — sum of per-batch sketches ≡ the sketch of the concatenated
+stream, in any arrival order — screens candidates, and exact-recounts
+them against the landed documents, so the answer is EXACT over
+everything ingested so far while per-batch state stays ~128 KB
+regardless of stream length.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.approx import CMS_D, CMS_W, HH_K, _cms_hashes
-from ..sources.manifest_table import ManifestTable
 
 
 def _batch_sketch(docs: DataFrame):
@@ -58,88 +53,12 @@ def _batch_sketch(docs: DataFrame):
     return total, agg
 
 
-def heavy_batch(
-    spark: SparkSession,
-    batch_docs: DataFrame,
-    tbl: ManifestTable,
-    batch_id: int,
-    app_id: str = "trend",
-) -> bool:
-    """Land one micro-batch's sketch row; False if replayed (ledger hit)."""
-    op = f"{app_id}-batch-{batch_id}"
-    if op in tbl.committed_ops():
-        return False
-    total, agg = _batch_sketch(batch_docs)
-    row = spark.createDataFrame(
-        [Row(batch_id=batch_id, n=total, sketch=agg.tolist())],
-        schema="batch_id long, n long, sketch array<long>",
-    )
-    tbl.append(row.coalesce(1), op=op)
-    return True
-
-
-def _merged_state(spark: SparkSession, tbl: ManifestTable, version: int | None = None):
-    # bounded: one row per (un-compacted) batch
-    rows = tbl.read(spark, version).collect()
-    total = int(sum(r["n"] for r in rows))
-    agg = np.zeros(CMS_D * CMS_W, dtype=np.int64)
-    for r in rows:
-        agg += np.asarray(r["sketch"], dtype=np.int64)
-    return total, agg.reshape(CMS_D, CMS_W)
-
-
-def compact_sketches(
-    spark: SparkSession, tbl: ManifestTable, max_retries: int = 20
-) -> int:
-    """Fold all sketch rows into one (mergeability) — atomic CAS overwrite.
-
-    The fold is a read-modify-write, so it races with concurrent
-    ``heavy_batch`` appends: a batch landing between the read and the
-    swap would be silently discarded — and since its op is already in
-    ``committed_ops()``, the ledger would mark any replay as a duplicate,
-    losing those tokens from every later :func:`trending_exact` answer
-    permanently. Same remedy as :meth:`ManifestTable.compact`: pin the
-    base version, CAS the overwrite on it, and redo the fold on conflict.
-    """
-    from ..sources.manifest_table import CommitConflict
-
-    for _ in range(max_retries):
-        base = tbl.version()
-        total, agg = _merged_state(spark, tbl, base)
-        one = spark.createDataFrame(
-            [Row(batch_id=-1, n=total, sketch=agg.ravel().tolist())],
-            schema="batch_id long, n long, sketch array<long>",
-        )
-        try:
-            return tbl.overwrite(one.coalesce(1), op="sketch-compact",
-                                 expected_version=base)
-        except CommitConflict:
-            continue  # an append landed mid-fold; redo on the new base
-    raise CommitConflict(
-        f"sketch-compact lost the commit race {max_retries} times at {tbl.root}"
-    )
-
-
-def trending_exact(
-    spark: SparkSession, tbl: ManifestTable, landed_docs: DataFrame
-) -> DataFrame:
-    """EXACT heavy hitters over everything ingested, from the sketch store.
-
-    Screen with the folded sketches (superset guarantee — CMS never
-    underestimates), exact-recount only candidates against the landed
-    corpus: the same one-scan screen+count pass as the batch twin.
-    """
-    total, cms = _merged_state(spark, tbl)
-    return trending_from_state(spark, total, cms, landed_docs)
-
-
 def trending_from_state(
     spark: SparkSession, total: int, cms, landed_docs: DataFrame
 ) -> DataFrame:
-    """The screen+recount half of :func:`trending_exact`, parametrized by
-    an already-folded (total, D×W sketch) state — the seam that lets any
-    sketch store (the standalone ManifestTable here, or the corpus
-    pipeline's ``token_cms`` catalog member) serve the same exact answer.
+    """Screen candidates against an already-folded (total, D×W sketch)
+    state — the corpus pipeline's ``token_cms`` catalog member — and
+    exact-recount them over ``landed_docs``.
     """
     from ..functions.text import tokens
 

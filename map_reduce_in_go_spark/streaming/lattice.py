@@ -625,34 +625,6 @@ class RollupLattice:
             )
         return out
 
-    def start_stream(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str,
-        app_id: str = "lattice",
-    ):
-        """Structured-Streaming ingestion: one atomic lattice advance per
-        micro-batch (``foreachBatch`` → :meth:`ingest_batch`).
-
-        Exactly-once end-to-end WITHOUT relying on the checkpoint alone:
-        the batch id keys the catalog ledger, so a replayed micro-batch
-        (restart from an older checkpoint, at-least-once source) is
-        detected by op label and contributes nothing twice — the same
-        contract as ``start_corpus_pipeline``. ``availableNow`` drains
-        the backlog and stops; long-lived streams restart cheaply because
-        replays are ledger no-ops.
-        """
-
-        def _one(df: DataFrame, bid: int) -> None:
-            self.ingest_batch(df.sparkSession, df, bid, app_id=app_id)
-
-        return (
-            stream_df.writeStream.foreachBatch(_one)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-
     # ------------------------------------------------------------ maintenance
 
     def compact(self, spark: SparkSession) -> None:

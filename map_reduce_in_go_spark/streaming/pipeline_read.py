@@ -692,12 +692,11 @@ def pipeline_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vacuous question); the report a pipeline operator actually reads
     is where the dropped documents' text overlaps what was kept. A
     rejected gram is duplicated when its report count plus the member's
-    additive count reaches 2 — the ``batch_duplicated_spans`` predicate,
-    but with the index side joined distributively (digest-key equijoin
-    against the pre-combined count table) instead of driver point-probes,
-    because the "batch" here is corpus-sized. The (doc_id, pos, g) rows
-    come from the ``rejected_grams`` member stored at ingest, so only
-    gram digests shuffle and nothing re-tokenizes.
+    additive count reaches 2, with the index side joined distributively
+    (digest-key equijoin against the pre-combined count table) instead of
+    driver point-probes, because the "batch" here is corpus-sized. The
+    (doc_id, pos, g) rows come from the ``rejected_grams`` member stored
+    at ingest, so only gram digests shuffle and nothing re-tokenizes.
     """
     from ..functions.caching import scoped_persist
 

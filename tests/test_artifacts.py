@@ -1,18 +1,12 @@
-"""Served-artifact registry: memoized identity, one build under
-concurrency, refresh rebuilds into a fresh dir, vacuum deletes and a
-later call rebuilds. No Spark needed — the registry is pure lifecycle."""
+"""Served-artifact registry: memoized identity and one build under
+concurrency. No Spark needed — the registry is pure lifecycle."""
 
 from __future__ import annotations
 
 import os
 import threading
 
-from map_reduce_in_go_spark.sources.artifacts import (
-    memo,
-    refresh_artifact,
-    served_artifact,
-    vacuum_artifacts,
-)
+from map_reduce_in_go_spark.sources.artifacts import memo, served_artifact
 
 
 def _builder(calls):
@@ -51,28 +45,3 @@ def test_concurrent_first_calls_build_once(tmp_path):
     for t in threads:
         t.join()
     assert len(calls) == 1 and len(set(paths)) == 1
-
-
-def test_refresh_rebuilds_fresh_dir_old_left_intact(tmp_path):
-    calls = []
-    sf = str(tmp_path)
-    old = served_artifact("t-refresh", sf, _builder(calls))
-    new = refresh_artifact("t-refresh", sf, _builder(calls))
-    assert new != old and len(calls) == 2
-    # the old snapshot stays readable for in-flight readers
-    assert open(os.path.join(old, "model.txt")).read() == "build-1"
-    assert open(os.path.join(new, "model.txt")).read() == "build-2"
-    # later calls serve the refreshed artifact
-    assert served_artifact("t-refresh", sf, _builder(calls)) == new
-    assert len(calls) == 2
-
-
-def test_vacuum_deletes_and_later_call_rebuilds(tmp_path):
-    calls = []
-    sf = str(tmp_path)
-    p = served_artifact("t-vac", sf, _builder(calls))
-    assert os.path.exists(p)
-    assert vacuum_artifacts(["t-vac"]) == 1
-    assert not os.path.exists(p)
-    p2 = served_artifact("t-vac", sf, _builder(calls))
-    assert p2 != p and len(calls) == 2 and os.path.exists(p2)

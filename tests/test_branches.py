@@ -12,7 +12,6 @@ from map_reduce_in_go_spark.sources.branches import (
     branch,
     branch_divergence,
     create_branch,
-    drop_branch,
     fork_point,
     merge_branch,
 )
@@ -117,11 +116,6 @@ def test_branch_divergence_refusal_and_gc(spark, sf_dir, tmp_path):
     cat.checkpoint_members(spark)
     assert _corpus_ids(spark, br) == br_ids
 
-    # dropped branch → its exclusive files become reclaimable
-    drop_branch(cat, "exp")
-    cat.vacuum(spark, retain_seconds=0.0)
-    assert _corpus_ids(spark, cat)  # main intact
-
     # validation
     with pytest.raises(ValueError, match="invalid branch name"):
         create_branch(spark, cat, "bad/name")
@@ -130,8 +124,6 @@ def test_branch_divergence_refusal_and_gc(spark, sf_dir, tmp_path):
         create_branch(spark, cat, "exp2")
     with pytest.raises(ValueError, match="main timeline"):
         create_branch(spark, b2, "nested")
-    with pytest.raises(ValueError, match="no branch"):
-        drop_branch(cat, "ghost")
 
 
 def test_replication_ignores_branches(spark, sf_dir, tmp_path):
@@ -666,39 +658,12 @@ def test_rebase_refuses_zero_wal_row_batch_even_with_intact_ledger(
     assert "corpus-batch-5" not in cat.committed_ops()
 
 
-def test_wedged_branch_does_not_break_listing(spark, sf_dir, tmp_path):
-    """list_branches reports an unresolvable branch as fork_version -2
-    instead of raising and hiding every healthy branch."""
-    import json
-
-    docs = _docs(spark, sf_dir)
-    cat = TableCatalog(str(tmp_path / "cat"))
-    assert corpus_batch_txn(
-        spark, docs.filter(F.pmod("doc_id", F.lit(3)) == 0), cat, 0
-    )
-    from map_reduce_in_go_spark.sources.branches import list_branches
-
-    create_branch(spark, cat, "good")
-    bad = create_branch(spark, cat, "bad")
-    with open(os.path.join(cat.root, bad.ledger, "fork.json"), "w") as f:
-        json.dump({"fork_version": 99}, f)  # conflicting witnesses
-    rows = {r["branch"]: r["fork_version"] for r in list_branches(spark, cat).collect()}
-    assert rows["good"] >= 0, "healthy branch hidden by the wedged one"
-    assert rows["bad"] == -2
-
-
 def test_streaming_ingest_into_branch(spark, tmp_path):
-    """Structured-Streaming experiments on a timeline (r12): the stream's
-    foreachBatch transactions target a BRANCH ledger, WAL their inputs,
-    stay invisible to main, and fast-forward merge with exactly-once
-    intact — the streamed batch replays as a no-op on main afterwards."""
-    import json
-    import time
-
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        WAL,
-        start_corpus_pipeline,
-    )
+    """Ingest experiments on a timeline (r12): micro-batch transactions
+    target a BRANCH ledger, WAL their inputs, stay invisible to main, and
+    fast-forward merge with exactly-once intact — the branch batch
+    replays as a no-op on main afterwards."""
+    from map_reduce_in_go_spark.streaming.corpus_pipeline import WAL
 
     cat = TableCatalog(str(tmp_path / "cat"))
     seed = spark.createDataFrame(
@@ -709,32 +674,17 @@ def test_streaming_ingest_into_branch(spark, tmp_path):
     main_ids = _corpus_ids(spark, cat)
     br = create_branch(spark, cat, "exp")
 
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    (drop / "b1.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": d, "text": t, "lang": "en"})
-            for d, t in [
-                (2, "one two three four five six seven eight"),
-                (3, "alpha beta gamma delta epsilon zeta eta theta"),  # dup
-            ]
-        )
+    b1 = spark.createDataFrame(
+        [
+            (2, "one two three four five six seven eight", "en"),
+            (3, "alpha beta gamma delta epsilon zeta eta theta", "en"),  # dup
+        ],
+        "doc_id long, text string, lang string",
     )
-    time.sleep(0.2)
-    stream = spark.readStream.schema(
-        "doc_id long, text string, lang string"
-    ).json(str(drop))
-    q = start_corpus_pipeline(
-        stream,
-        str(tmp_path / "cat"),
-        str(tmp_path / "ckpt"),
-        app_id="exp",
-        ledger=br.ledger,
-    )
-    q.awaitTermination(120)
+    assert corpus_batch_txn(spark, b1, br, 0, app_id="exp")
 
-    # streamed experiment landed on the branch (dup 3 rejected), WAL'd,
-    # and main never saw it
+    # the experiment landed on the branch (dup 3 rejected), WAL'd, and
+    # main never saw it
     assert _corpus_ids(spark, br) == {1, 2}
     assert _corpus_ids(spark, cat) == main_ids
     assert WAL in br.snapshot(spark)
@@ -742,7 +692,7 @@ def test_streaming_ingest_into_branch(spark, tmp_path):
 
     merge_branch(spark, cat, "exp")
     assert _corpus_ids(spark, cat) == {1, 2}
-    # the streamed batch is exactly-once across the merge
+    # the branch batch is exactly-once across the merge
     replay = spark.createDataFrame(
         [(2, "one two three four five six seven eight", "en")],
         "doc_id long, text string, lang string",
@@ -750,15 +700,10 @@ def test_streaming_ingest_into_branch(spark, tmp_path):
     assert not corpus_batch_txn(spark, replay, cat, 0, app_id="exp")
 
 
-def test_introspection_and_racing_mergers(spark, sf_dir, tmp_path):
-    """list_branches / describe_history read pure metadata; two racing
-    fast-forward mergers: exactly one wins the CAS, the loser refuses."""
+def test_racing_mergers(spark, sf_dir, tmp_path):
+    """Two racing fast-forward mergers: exactly one wins the CAS, the
+    loser refuses."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from map_reduce_in_go_spark.sources.branches import (
-        describe_history,
-        list_branches,
-    )
 
     docs = _docs(spark, sf_dir)
     cat = TableCatalog(str(tmp_path / "cat"))
@@ -769,12 +714,6 @@ def test_introspection_and_racing_mergers(spark, sf_dir, tmp_path):
     assert corpus_batch_txn(
         spark, docs.filter(F.pmod("doc_id", F.lit(3)) == 1), br, 1
     )
-
-    bl = {r["branch"]: (r["fork_version"], r["version"]) for r in list_branches(spark, cat).collect()}
-    assert "exp" in bl and bl["exp"][0] == 0
-    hist = describe_history(spark, cat).collect()
-    assert [r["version"] for r in hist] == sorted(r["version"] for r in hist)
-    assert all(r["n_members"] > 0 for r in hist)
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [pool.submit(merge_branch, spark, cat, "exp") for _ in range(2)]

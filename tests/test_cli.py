@@ -112,59 +112,53 @@ def test_cli_rejects_generic_grep(tmp_path, monkeypatch, capsys):
 
 
 def test_cli_signal_handler_drains_and_exits(spark):
-    """main.go:32-66 parity: the installed SIGTERM handler stops active
-    streaming queries, stops the session only when CLI-owned, and exits
-    with 128+signum. Simulated: install against a stub session, retrieve
-    the registered handler, and invoke it."""
+    """main.go:32-66 parity: the installed SIGTERM handler stops the
+    session only when CLI-owned, never touches the session's streaming
+    queries (a joined session's streams belong to its caller), survives a
+    dead gateway, and exits with 128+signum. Simulated: install against a
+    stub session, retrieve the registered handler, and invoke it."""
     import signal
 
     from map_reduce_in_go_spark.cli import install_signal_handlers
 
-    class StubQuery:
-        def __init__(self):
-            self.stopped = False
-
-        def stop(self):
-            self.stopped = True
-
-    class StubStreams:
-        def __init__(self, qs):
-            self.active = qs
-
     class StubSession:
-        def __init__(self):
-            self.queries = [StubQuery(), StubQuery()]
-            self.streams = StubStreams(self.queries)
+        def __init__(self, dead=False):
+            self.dead = dead
             self.stopped = False
+            self.streams_read = False
+
+        @property
+        def streams(self):
+            self.streams_read = True
+            return None
 
         def stop(self):
+            if self.dead:
+                raise ConnectionError("gateway gone")
             self.stopped = True
+
+    def fire(stub, owned, signum):
+        install_signal_handlers(stub, owned=owned)
+        try:
+            signal.getsignal(signum)(signum, None)
+        except SystemExit as e:
+            assert e.code == 128 + signum
+        else:
+            raise AssertionError("handler must exit")
+        assert not stub.streams_read
 
     saved = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
     try:
-        # not CLI-owned: queries drain, session left running
+        # not CLI-owned: session left running
         stub = StubSession()
-        install_signal_handlers(stub, owned=False)
-        handler = signal.getsignal(signal.SIGTERM)
-        try:
-            handler(signal.SIGTERM, None)
-        except SystemExit as e:
-            assert e.code == 128 + signal.SIGTERM
-        else:
-            raise AssertionError("handler must exit")
-        assert all(q.stopped for q in stub.queries)
+        fire(stub, False, signal.SIGTERM)
         assert not stub.stopped
-
-        # CLI-owned: session stopped too
-        stub2 = StubSession()
-        install_signal_handlers(stub2, owned=True)
-        handler2 = signal.getsignal(signal.SIGINT)
-        try:
-            handler2(signal.SIGINT, None)
-        except SystemExit as e:
-            assert e.code == 128 + signal.SIGINT
-        assert all(q.stopped for q in stub2.queries)
-        assert stub2.stopped
+        # CLI-owned: session stopped
+        stub = StubSession()
+        fire(stub, True, signal.SIGINT)
+        assert stub.stopped
+        # CLI-owned with a dead gateway: still exits cleanly
+        fire(StubSession(dead=True), True, signal.SIGTERM)
     finally:
         for s, h in saved.items():
             signal.signal(s, h)

@@ -1,12 +1,9 @@
 """End-to-end incremental-corpus pipeline: one batch advances corpus,
 band index, gram index, CMS, exact token counts, and quantile rollup
 in ONE transaction —
-cross-artifact consistency, joint replay no-op, real stream wiring."""
+cross-artifact consistency, joint replay no-op, micro-batch chaining."""
 
 from __future__ import annotations
-
-import json
-import time
 
 import numpy as np
 import pytest
@@ -24,7 +21,6 @@ from map_reduce_in_go_spark.streaming.corpus_pipeline import (
     TOKENS,
     corpus_batch_txn,
     member,
-    start_corpus_pipeline,
 )
 
 
@@ -150,10 +146,8 @@ def test_joint_replay_noop(spark, sf_dir, tmp_path):
 
 
 def test_stream_end_to_end(spark, tmp_path):
-    """Real foreachBatch wiring: two file-source micro-batches publish
-    one five-member transaction each; in-batch and cross-batch dups drop."""
-    drop = tmp_path / "drop"
-    drop.mkdir()
+    """Two micro-batches publish one seven-member transaction each;
+    in-batch and cross-batch dups drop."""
     texts1 = [
         (1, "alpha beta gamma delta epsilon zeta eta theta", "en"),
         (2, "alpha beta gamma delta epsilon zeta eta theta", "en"),  # dup of 1
@@ -163,24 +157,11 @@ def test_stream_end_to_end(spark, tmp_path):
         (4, "alpha beta gamma delta epsilon zeta eta theta", "en"),  # corpus dup
         (5, "nine ten eleven twelve thirteen fourteen fifteen", "de"),
     ]
-    for name, batch in (("b1.json", texts1), ("b2.json", texts2)):
-        (drop / name).write_text(
-            "\n".join(
-                json.dumps({"doc_id": d, "text": t, "lang": lang})
-                for d, t, lang in batch
-            )
-        )
-        time.sleep(1.1)  # file-source orders batches by mod time
-    stream = (
-        spark.readStream.schema("doc_id long, text string, lang string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(drop))
-    )
-    cat_root = str(tmp_path / "cat")
-    q = start_corpus_pipeline(stream, cat_root, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    cat = TableCatalog(str(tmp_path / "cat"))
+    for bid, batch in enumerate((texts1, texts2)):
+        df = spark.createDataFrame(batch, "doc_id long, text string, lang string")
+        assert corpus_batch_txn(spark, df, cat, bid)
 
-    cat = TableCatalog(cat_root)
     got = {r["doc_id"] for r in member(spark, cat, CORPUS).select("doc_id").collect()}
     assert got == {1, 3, 5}
     assert set(cat.snapshot(spark)) == {CORPUS, BANDS, GRAMS, CMS, TOKENS, QUANTS, REJECTS}
@@ -351,126 +332,6 @@ def test_compact_pipeline(spark, sf_dir, tmp_path):
     )
     assert corpus_batch_txn(spark, fresh, cat, 7)
     assert member(spark, cat, CORPUS).count() == len(before_corpus) + 1
-
-
-@pytest.mark.slow
-def test_bootstrap_then_stream_equals_full_stream(spark, sf_dir, tmp_path):
-    """r11 (c): seeding the catalog from a static prefix and streaming
-    the rest lands member-identical state to streaming everything."""
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import bootstrap_pipeline
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-    full = TableCatalog(str(tmp_path / "full"))
-    _feed(spark, sf_dir, full)
-
-    boot = TableCatalog(str(tmp_path / "boot"))
-    assert bootstrap_pipeline(
-        spark, boot, docs.filter(F.pmod("doc_id", F.lit(3)) == 0)
-    )
-    for i in (1, 2):
-        assert corpus_batch_txn(
-            spark, docs.filter(F.pmod("doc_id", F.lit(3)) == i), boot, i
-        )
-
-    def folds(cat):
-        corpus = {tuple(r) for r in member(spark, cat, CORPUS).collect()}
-        bands = {tuple(r) for r in member(spark, cat, BANDS).collect()}
-        grams = {
-            (r["g"], r["n"])
-            for r in member(spark, cat, GRAMS)
-            .groupBy("g")
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        }
-        cms_rows = member(spark, cat, CMS).collect()
-        cms = (
-            sum(r["n"] for r in cms_rows),
-            np.sum([np.asarray(r["sketch"]) for r in cms_rows], axis=0).tolist(),
-        )
-        toks = {
-            (r["word"], r["n"])
-            for r in member(spark, cat, TOKENS)
-            .groupBy("word")
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        }
-        rej = {tuple(r) for r in member(spark, cat, REJECTS).collect()}
-        qn = {}
-        for r in member(spark, cat, QUANTS).collect():
-            qn[r["event_type"]] = qn.get(r["event_type"], 0) + r["n"]
-        return corpus, bands, grams, toks, rej, cms, qn
-
-    assert folds(boot) == folds(full)
-
-    # bootstrap replays are no-ops; re-seeding a live catalog refuses
-    snap = boot.snapshot(spark)
-    assert bootstrap_pipeline(spark, boot, docs) is False
-    assert boot.snapshot(spark) == snap
-    live = TableCatalog(str(tmp_path / "full"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="already has members"):
-        # a DIFFERENT app_id is not in the ledger, so the emptiness guard
-        # is what must refuse the double-count
-        bootstrap_pipeline(spark, live, docs, app_id="other")
-
-
-@pytest.mark.slow
-def test_bootstrap_adopts_precomputed_artifacts(spark, sf_dir, tmp_path):
-    """The adoption path takes an existing deduped corpus + its band and
-    gram artifacts VERBATIM — no signature recompute (spy-pinned) — and
-    subsequent streaming continues identically."""
-    from map_reduce_in_go_spark.streaming import corpus_pipeline as cp
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-    # the "existing batch artifacts": a streamed reference catalog's members
-    ref = TableCatalog(str(tmp_path / "ref"))
-    assert cp.corpus_batch_txn(
-        spark, docs.filter(F.pmod("doc_id", F.lit(3)) == 0), ref, 0
-    )
-    corpus0 = member(spark, ref, CORPUS).localCheckpoint(eager=True)
-    bands0 = member(spark, ref, BANDS).localCheckpoint(eager=True)
-    grams0 = member(spark, ref, GRAMS).localCheckpoint(eager=True)
-
-    adopt = TableCatalog(str(tmp_path / "adopt"))
-    orig = cp.bands_of_docs
-
-    def _boom(*a, **k):
-        raise AssertionError("adoption path must not recompute signatures")
-
-    cp.bands_of_docs = _boom
-    try:
-        assert cp.bootstrap_pipeline(
-            spark, adopt, corpus0, bands=bands0, grams=grams0
-        )
-    finally:
-        cp.bands_of_docs = orig
-
-    for i in (1, 2):
-        assert cp.corpus_batch_txn(
-            spark, docs.filter(F.pmod("doc_id", F.lit(3)) == i), adopt, i
-        )
-        assert cp.corpus_batch_txn(
-            spark, docs.filter(F.pmod("doc_id", F.lit(3)) == i), ref, i
-        )
-    assert {tuple(r) for r in member(spark, adopt, CORPUS).collect()} == {
-        tuple(r) for r in member(spark, ref, CORPUS).collect()
-    }
-    assert {
-        (r["g"], r["n"])
-        for r in member(spark, adopt, GRAMS)
-        .groupBy("g")
-        .agg(F.sum("n").alias("n"))
-        .collect()
-    } == {
-        (r["g"], r["n"])
-        for r in member(spark, ref, GRAMS)
-        .groupBy("g")
-        .agg(F.sum("n").alias("n"))
-        .collect()
-    }
 
 
 @pytest.mark.slow
@@ -1576,69 +1437,6 @@ def test_update_docs_expectations(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_bootstrap_expectations_parity(spark, sf_dir, tmp_path):
-    """Constraint-armed bootstrap + constrained streaming is member-
-    identical to streaming everything constrained (quarantine included,
-    modulo the bootstrap batch marker); expectations on the adoption
-    path refuse loudly."""
-    import pytest as _pytest
-
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        QUAR,
-        bootstrap_pipeline,
-    )
-    from map_reduce_in_go_spark.streaming.pipeline_read import EXPECTATIONS
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-
-    cat_full = TableCatalog(str(tmp_path / "full"))
-    for i in range(3):
-        assert corpus_batch_txn(
-            spark,
-            docs.filter(F.pmod("doc_id", F.lit(3)) == i),
-            cat_full,
-            i,
-            expectations=EXPECTATIONS,
-        )
-
-    cat_boot = TableCatalog(str(tmp_path / "boot"))
-    assert bootstrap_pipeline(
-        spark,
-        cat_boot,
-        docs.filter(F.pmod("doc_id", F.lit(3)) == 0),
-        expectations=EXPECTATIONS,
-    )
-    for i in (1, 2):
-        assert corpus_batch_txn(
-            spark,
-            docs.filter(F.pmod("doc_id", F.lit(3)) == i),
-            cat_boot,
-            i,
-            expectations=EXPECTATIONS,
-        )
-
-    for name in (CORPUS, BANDS, QUAR):
-        cols = ["doc_id", "rule"] if name == QUAR else None
-        a = member(spark, cat_full, name, merge_schema=True)
-        b = member(spark, cat_boot, name, merge_schema=True)
-        cols = cols or sorted(a.columns)
-        assert sorted(map(tuple, a.select(*cols).collect())) == sorted(
-            map(tuple, b.select(*cols).collect())
-        ), name
-
-    # adoption path + expectations: ambiguous claims, loud refusal
-    pre_bands = member(spark, cat_full, BANDS)
-    with _pytest.raises(ValueError, match="expectations"):
-        bootstrap_pipeline(
-            spark,
-            TableCatalog(str(tmp_path / "adopt")),
-            docs,
-            bands=pre_bands,
-            expectations=EXPECTATIONS,
-        )
-
-
-@pytest.mark.slow
 def test_cow_retraction_preserves_time_travel(spark, sf_dir, tmp_path):
     """A copy-on-write retraction must not break history: the files it
     removes from the NEW snapshot are still pinned by older catalog
@@ -1924,8 +1722,9 @@ def test_image_gate_arming_is_sticky_and_backfills(spark, tmp_path):
       near-dup of a pre-gate doc is rejected.
     """
     from map_reduce_in_go_spark.streaming.corpus_pipeline import (
+        _IMAGE_GATE_MARKER,
         PHASH,
-        image_gate_threshold,
+        _media_gate_threshold,
     )
 
     K = 8
@@ -1942,7 +1741,7 @@ def test_image_gate_arming_is_sticky_and_backfills(spark, tmp_path):
     assert corpus_batch_txn(
         spark, mk([(1, _IMG_A, "en")]), cat, 0, image_hamming=K
     )
-    assert image_gate_threshold(cat) == K
+    assert _media_gate_threshold(cat, _IMAGE_GATE_MARKER) == K
     assert corpus_batch_txn(spark, mk([(3, _IMG_X, "en")]), cat, 1)
     assert {r["doc_id"] for r in member(spark, cat, CORPUS).collect()} == {1}
     # a different threshold is mode-mixing → loud
@@ -1979,8 +1778,9 @@ def test_pipeline_trending_gated_catalog_shape(spark, sf_dir):
     import os
 
     from map_reduce_in_go_spark.streaming.corpus_pipeline import (
+        _IMAGE_GATE_MARKER,
         PHASH,
-        image_gate_threshold,
+        _media_gate_threshold,
     )
     from map_reduce_in_go_spark.operators.multimodal import PHASH_HAMMING_MAX
     from map_reduce_in_go_spark.streaming.pipeline_read import (
@@ -1990,7 +1790,9 @@ def test_pipeline_trending_gated_catalog_shape(spark, sf_dir):
     )
 
     gated = _pipeline_gated_catalog(spark, sf_dir)
-    assert image_gate_threshold(gated) == PHASH_HAMMING_MAX
+    assert (
+        _media_gate_threshold(gated, _IMAGE_GATE_MARKER) == PHASH_HAMMING_MAX
+    )
     assert os.path.exists(os.path.join(gated.root, "image_gate.json"))
     snap = gated.snapshot(spark)
     assert PHASH in snap
@@ -2034,8 +1836,9 @@ def test_audio_admission_gate(spark, tmp_path):
         audio_fingerprints,
     )
     from map_reduce_in_go_spark.streaming.corpus_pipeline import (
+        _AUDIO_GATE_MARKER,
         AUDIOFP,
-        audio_gate_threshold,
+        _media_gate_threshold,
         compact_pipeline,
         retract_docs,
     )
@@ -2074,7 +1877,7 @@ def test_audio_admission_gate(spark, tmp_path):
         spark, mk([(1, _AUD_A, "en"), (2, other.strip(), "en")]), cat, 0,
         audio_hamming=K,
     )
-    assert audio_gate_threshold(cat) == K
+    assert _media_gate_threshold(cat, _AUDIO_GATE_MARKER) == K
     assert AUDIOFP in cat.snapshot(spark)
     assert {
         r["doc_id"] for r in member(spark, cat, AUDIOFP).collect()

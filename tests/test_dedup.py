@@ -29,8 +29,7 @@ def test_exact_dedup_groups_identical_texts(spark):
 def test_minhash_identical_docs_collide(spark, sf_dir):
     """Two identical shingle sets must produce identical signatures and be
     paired by every band."""
-    from map_reduce_in_go_spark.functions.hashing import minhash_signature
-    from map_reduce_in_go_spark.functions.text import shingles
+    from map_reduce_in_go_spark.functions.text import tokens
 
     df = spark.createDataFrame(
         [
@@ -39,14 +38,12 @@ def test_minhash_identical_docs_collide(spark, sf_dir):
             Row(doc_id=3, text="one two three four five six"),
         ]
     )
-    sigs = df.select(
-        "doc_id", minhash_signature(shingles(F.col("text")), 32).alias("sig")
-    ).collect()
-    by_id = {r["doc_id"]: r["sig"] for r in sigs}
+    sigs = dedup.signatures_of(df.withColumn("toks", tokens(F.col("text"))))
+    by_id = {r["doc_id"]: r["sig"] for r in sigs.collect()}
     assert by_id[1] == by_id[2]
     assert by_id[1] != by_id[3]
     for v in by_id.values():
-        assert len(v) == 32 and all(len(h) == 32 for h in v)
+        assert len(v) == dedup.NUM_PERM and all(len(h) == 32 for h in v)
 
 
 def test_minhash_pairs_symmetric_bounds(spark, sf_dir):

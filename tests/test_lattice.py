@@ -191,67 +191,44 @@ def test_lattice_atomic_advance_and_replay(spark, sf_dir, tmp_path):
 
 
 def test_lattice_stream_equals_batch(spark, sf_dir, tmp_path):
-    """foreachBatch lattice ingestion: two file-source micro-batches land
-    one atomic lattice advance each; every answer equals the batch-built
-    twin's, and a restarted stream (same checkpoint wiped → source
-    replays) contributes nothing twice."""
-    import json
-    import time
-
+    """Micro-batch lattice ingestion: two batches land one atomic lattice
+    advance each; every answer equals the batch-built twin's, and
+    replaying the same batch ids contributes nothing twice."""
     from pyspark.sql import functions as SF
 
-    drop = tmp_path / "drop"
-    drop.mkdir()
     rows1 = [("2024-01-01", "click", 1.0), ("2024-01-01", "view", 2.0),
              ("2024-01-02", "click", 3.0)]
     rows2 = [("2024-01-02", "view", 4.0), ("2024-01-03", "click", 5.0)]
-    for name, rows in (("b1.json", rows1), ("b2.json", rows2)):
-        (drop / name).write_text(
-            "\n".join(
-                json.dumps({"day": d, "event_type": t, "value": v})
-                for d, t, v in rows
-            )
-        )
-        time.sleep(1.1)
 
-    def _stream():
-        return (
-            spark.readStream.schema("day string, event_type string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(drop))
-            .withColumn("day", SF.to_date("day"))
-        )
+    def _df(rows):
+        return spark.createDataFrame(
+            rows, "day string, event_type string, value double"
+        ).withColumn("day", SF.to_date("day"))
 
     lat = RollupLattice(
         TableCatalog(str(tmp_path / "lat")),
         {"td": ("event_type", "day"), "t": ("event_type",)},
         SUMS,
     )
-    q = lat.start_stream(_stream(), str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    for bid, rows in enumerate((rows1, rows2)):
+        assert lat.ingest_batch(spark, _df(rows), bid)
 
     batch_lat = RollupLattice(
         TableCatalog(str(tmp_path / "batch")),
         {"td": ("event_type", "day"), "t": ("event_type",)},
         SUMS,
     )
-    all_rows = spark.createDataFrame(
-        [(d, t, v) for d, t, v in rows1 + rows2],
-        "day string, event_type string, value double",
-    ).withColumn("day", SF.to_date("day"))
-    batch_lat.ingest_batch(spark, all_rows, 0)
+    batch_lat.ingest_batch(spark, _df(rows1 + rows2), 0)
 
     for dims in (("event_type", "day"), ("event_type",)):
         s = _rows(lat.answer(spark, dims, {"cnt": "cnt", "val": "val"}), dims)
         b = _rows(batch_lat.answer(spark, dims, {"cnt": "cnt", "val": "val"}), dims)
         assert s == b, dims
 
-    # checkpoint wiped → the source REPLAYS both files as new batch ids
-    # from the fresh checkpoint's numbering; the ledger keys on batch id,
-    # so only genuinely-new ids would apply. Re-running the SAME stream
-    # with the same checkpoint is the true restart: a no-op.
-    q2 = lat.start_stream(_stream(), str(tmp_path / "ckpt"))
-    q2.awaitTermination(120)
+    # an at-least-once source re-delivering both batches: the ledger keys
+    # on batch id, so the replays are no-ops
+    for bid, rows in enumerate((rows1, rows2)):
+        assert not lat.ingest_batch(spark, _df(rows), bid)
     s = {
         r["event_type"]: r["cnt"]
         for r in lat.answer(spark, ("event_type",), {"cnt": "cnt"}).collect()

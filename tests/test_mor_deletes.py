@@ -239,44 +239,6 @@ def test_mor_nothing_to_retract_raises(spark, sf_dir, tmp_path):
         retract_docs_mor(spark, cat, [999_999_999], op="erase-nothing")
 
 
-def test_retract_where_predicate_erasure(spark, sf_dir, tmp_path):
-    """DELETE WHERE over the live view: resolves matching LIVE ids, then
-    rides the ordinary retraction (either mode); refuses on no match and
-    past the driver id bound."""
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import retract_where
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    langs = {r["lang"] for r in member(spark, cat, CORPUS).select("lang").collect()}
-    target = sorted(langs)[0]
-    n_target = (
-        member(spark, cat, CORPUS).filter(F.col("lang") == target).count()
-    )
-    assert n_target > 0
-    assert retract_where(
-        spark, cat, f"lang = '{target}'", op="erase-lang", mode="mor"
-    )
-    assert (
-        member(spark, cat, CORPUS).filter(F.col("lang") == target).count() == 0
-    )
-    # replay no-op; and the predicate now matches nothing under a new op
-    assert (
-        retract_where(spark, cat, f"lang = '{target}'", op="erase-lang")
-        is False
-    )
-    with pytest.raises(ValueError, match="matches no live"):
-        retract_where(spark, cat, f"lang = '{target}'", op="erase-lang-2")
-    with pytest.raises(ValueError, match="more than max_ids"):
-        retract_where(
-            spark, cat, "doc_id >= 0", op="erase-all", max_ids=3
-        )
-    # the folded state carries no physical trace of the erased language
-    apply_deletes(spark, cat, op="fold-lang")
-    assert (
-        _raw_member(spark, cat, CORPUS).filter(F.col("lang") == target).count()
-        == 0
-    )
-
-
 @pytest.mark.slow
 def test_large_upsert_does_not_resurrect_mor_hidden_rows(
     spark, tmp_path, monkeypatch
@@ -342,116 +304,6 @@ def test_large_upsert_does_not_resurrect_mor_hidden_rows(
         _raw_member(spark, cat, CORPUS).filter(F.col("doc_id") == 1).count()
         == 0
     )
-
-
-@pytest.mark.slow
-def test_streaming_erasure_follower(spark, sf_dir, tmp_path):
-    """Erasure requests as a stream: each micro-batch is one MOR
-    retraction transaction, exactly-once across a checkpoint wipe, and a
-    batch of never-ingested ids completes instead of wedging the query."""
-    import json
-    import shutil
-    import time
-
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        start_erasure_follower,
-    )
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    victims = sorted(
-        r["doc_id"]
-        for r in member(spark, cat, CORPUS).select("doc_id").limit(4).collect()
-    )
-    drop = tmp_path / "requests"
-    drop.mkdir()
-    (drop / "r1.json").write_text(
-        "\n".join(json.dumps({"doc_id": d}) for d in victims[:2])
-    )
-    time.sleep(1.1)  # file-source orders batches by mod time
-    (drop / "r2.json").write_text(
-        "\n".join(
-            json.dumps({"doc_id": d}) for d in victims[2:] + [987_654_321]
-        )
-    )
-
-    def run():
-        stream = (
-            spark.readStream.schema("doc_id long")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(drop))
-        )
-        q = start_erasure_follower(
-            stream, cat.root, str(tmp_path / "ckpt"), mode="mor"
-        )
-        q.awaitTermination(120)
-
-    run()
-    live = {r["doc_id"] for r in member(spark, cat, CORPUS).select("doc_id").collect()}
-    assert not (set(victims) & live)
-    assert {"erasure-batch-0", "erasure-batch-1"} <= cat.committed_ops()
-    state = _folds(spark, cat)
-
-    # at-least-once redelivery: wipe the checkpoint, replay everything —
-    # ledger no-ops, no double-subtraction in any additive member
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    run()
-    assert _folds(spark, cat) == state
-
-    # a batch of only never-ingested ids completes (no wedge) AND is
-    # LEDGERED as an empty marker: an un-ledgered decision would replay
-    # differently once the id exists
-    (drop / "r3.json").write_text(json.dumps({"doc_id": 111_222_333}))
-    run()
-    assert _folds(spark, cat) == state
-    assert "erasure-batch-2" in cat.committed_ops()
-
-    # the marker's whole point: ingest that id NOW, wipe the checkpoint,
-    # replay everything — batch 2 must no-op from the ledger, not
-    # re-decide and erase the newly ingested document
-    late = spark.createDataFrame(
-        [
-            (
-                111_222_333,
-                "late-arriving document about lighthouse keepers logging "
-                "the intervals of their own beam through winter nights",
-                "en",
-            )
-        ],
-        "doc_id long, text string, lang string",
-    )
-    assert corpus_batch_txn(spark, late, cat, 99)
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    run()
-    assert (
-        member(spark, cat, CORPUS)
-        .filter(F.col("doc_id") == 111_222_333)
-        .count()
-        == 1
-    )
-
-
-def test_deletes_status_report(spark, sf_dir, tmp_path):
-    """The operator-facing pending-vector report: pair counts, fold-file
-    counts vs member totals, inert entries excluded; {} when nothing
-    pending; empty again after the fold drops the member."""
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import deletes_status
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    assert deletes_status(spark, cat) == {}
-    victims = sorted(
-        r["doc_id"]
-        for r in member(spark, cat, CORPUS).select("doc_id").limit(3).collect()
-    )
-    assert retract_docs_mor(spark, cat, victims, op="erase-v")
-    st = deletes_status(spark, cat)
-    assert set(st) == {CORPUS, BANDS}
-    assert st[CORPUS]["pending_pairs"] == len(victims)
-    assert 0 < st[CORPUS]["files_to_rewrite"] <= st[CORPUS]["member_files"]
-    assert st[CORPUS]["inert_entries"] == 0
-    assert st[BANDS]["pending_pairs"] >= len(victims)  # ≥1 band row per doc
-    n = apply_deletes(spark, cat, op="fold")
-    assert n == st[CORPUS]["files_to_rewrite"] + st[BANDS]["files_to_rewrite"]
-    assert deletes_status(spark, cat) == {}
 
 
 @pytest.mark.slow
@@ -881,168 +733,6 @@ def test_mor_model_randomized_interleaving(spark, tmp_path):
         r["doc_id"]: r["text"] for r in _raw_member(spark, cat, CORPUS).collect()
     }
     assert raw == model
-
-
-@pytest.mark.slow
-def test_maintain_deletes_policy_and_follower_bound(spark, sf_dir, tmp_path):
-    """Erasure-SLA maintenance (r13, r12 verdict #5): maintain_deletes
-    folds only when a threshold trips (pairs / rewrite files / streak
-    age); a follower armed with `maintain` keeps the vector bounded under
-    a stream of requests WITHOUT an operator scheduling folds."""
-    import json
-    import time
-
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        deletes_status,
-        maintain_deletes,
-        start_erasure_follower,
-    )
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    ids = sorted(
-        r["doc_id"]
-        for r in member(spark, cat, CORPUS).select("doc_id").limit(9).collect()
-    )
-
-    # no vector at all → 0, no commit
-    v0 = cat.version()
-    assert maintain_deletes(spark, cat, max_pending_pairs=0) == 0
-    assert cat.version() == v0
-
-    # below thresholds → no fold; above → folds and truncates
-    assert retract_docs_mor(spark, cat, ids[:2], op="e-a")
-    assert maintain_deletes(spark, cat, max_pending_pairs=10_000) == 0
-    assert DELETES in cat.snapshot(spark)
-    assert maintain_deletes(spark, cat, max_pending_pairs=1) > 0
-    assert DELETES not in cat.snapshot(spark)
-
-    # age threshold: a streak older than N catalog commits trips even
-    # when the pair count is tiny
-    assert retract_docs_mor(spark, cat, ids[2:3], op="e-b")
-    assert maintain_deletes(spark, cat, max_age_commits=5) == 0
-    for i in (7, 8):  # unrelated commits age the streak
-        assert corpus_batch_txn(
-            spark,
-            spark.createDataFrame(
-                [(10_000 + i, f"aging filler document number {i} with "
-                  "enough words to shingle cleanly", "en")],
-                "doc_id long, text string, lang string",
-            ),
-            cat,
-            i,
-        )
-    assert maintain_deletes(spark, cat, max_age_commits=2) > 0
-    assert DELETES not in cat.snapshot(spark)
-
-    # follower keeps the vector bounded hands-free
-    drop = tmp_path / "req"
-    drop.mkdir()
-    (drop / "r1.json").write_text(
-        "\n".join(json.dumps({"doc_id": d}) for d in ids[3:6])
-    )
-    time.sleep(1.1)
-    (drop / "r2.json").write_text(
-        "\n".join(json.dumps({"doc_id": d}) for d in ids[6:9])
-    )
-    stream = (
-        spark.readStream.schema("doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(drop))
-    )
-    q = start_erasure_follower(
-        stream,
-        cat.root,
-        str(tmp_path / "ckpt"),
-        mode="mor",
-        maintain={"max_pending_pairs": 1},
-    )
-    q.awaitTermination(120)
-    live = {
-        r["doc_id"]
-        for r in member(spark, cat, CORPUS).select("doc_id").collect()
-    }
-    assert not (set(ids[3:9]) & live)
-    # every batch tripped the 1-pair bound → the vector never outlives
-    # its batch; the report agrees nothing is pending
-    assert DELETES not in cat.snapshot(spark)
-    assert deletes_status(spark, cat) == {}
-    folds = [op for op in cat.committed_ops() if op.startswith("apply-deletes")]
-    assert len(folds) >= 2  # one per follower batch, plus the manual ones
-
-
-@pytest.mark.slow
-def test_vector_age_crosses_truncation_horizon(spark, sf_dir, tmp_path):
-    """A delete-vector streak older than the ledger's checkpoint horizon
-    must read as 'older than any finite threshold' (so an age SLA TRIPS),
-    not as the capped partial count — the cap would silently disable
-    max_age_commits thresholds above the checkpoint interval (r13
-    self-review)."""
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        _vector_age_commits,
-        maintain_deletes,
-    )
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    victim = member(spark, cat, CORPUS).select("doc_id").first()["doc_id"]
-    assert retract_docs_mor(spark, cat, [int(victim)], op="e-h")
-    age = _vector_age_commits(spark, cat)
-    assert 1 <= age <= cat.version()  # intact ledger: the true streak
-
-    # truncate the ledger below its newest version: the streak now
-    # crosses the horizon, so age must exceed any finite threshold
-    import sys
-
-    cat._catalog.checkpoint()
-    assert _vector_age_commits(spark, cat) == sys.maxsize
-    assert maintain_deletes(spark, cat, max_age_commits=10_000) > 0
-    assert DELETES not in cat.snapshot(spark)
-
-
-def test_fenced_follower_cannot_fold_on_empty_batch(spark, sf_dir, tmp_path):
-    """r14 (r13 advice): maintenance folds COMMIT rewritten members, so
-    the writer_token fence must cover them on EVERY path — including the
-    empty-batch path (no non-null ids), which previously ran
-    maintain_deletes before any check_app_id. A fenced-out zombie
-    follower must fail the lease check; the pending vector stays put."""
-    import json
-
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import (
-        start_erasure_follower,
-    )
-
-    cat = _feed2(spark, sf_dir, str(tmp_path / "cat"))
-    victim = member(spark, cat, CORPUS).select("doc_id").first()["doc_id"]
-    assert retract_docs_mor(spark, cat, [int(victim)], op="e-z")
-    assert DELETES in cat.snapshot(spark)  # a fold would trip on 1 pair
-
-    stale = cat.acquire_app_id("eraser")
-    cat.release_app_id("eraser", stale)
-    cat.acquire_app_id("eraser")  # a new follower took the name
-
-    drop = tmp_path / "req"
-    drop.mkdir()
-    # a malformed request record: doc_id NULL → the batch's id list is
-    # empty, exercising exactly the previously-unfenced path
-    (drop / "r1.json").write_text(json.dumps({"doc_id": None}))
-    stream = spark.readStream.schema("doc_id long").json(str(drop))
-    q = start_erasure_follower(
-        stream,
-        cat.root,
-        str(tmp_path / "ckpt"),
-        mode="mor",
-        app_id="eraser",
-        writer_token=stale,
-        maintain={"max_pending_pairs": 1},
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="leased by another"):
-        q.awaitTermination(120)
-    # the zombie committed nothing: the vector is still pending
-    assert DELETES in cat.snapshot(spark)
-    assert not any(
-        op.startswith("apply-deletes") for op in cat.committed_ops()
-    )
 
 
 def test_fold_keeps_member_keyed_stats_on_image_gated_catalog(

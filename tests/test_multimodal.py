@@ -7,10 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_in_go_spark.operators.multimodal import (
-    FEATURE_DIM,
     decode_ppm,
     encode_ppm,
-    extract_features,
     multimodal_meta,
     sample_frames,
     with_payload,
@@ -102,26 +100,6 @@ def test_frame_sampling_fanout(spark, sf_dir):
         assert len(rows) == math.ceil(len(payload) / 64)
         first = min(rows, key=lambda r: r["frame_idx"])
         assert first["frame_digest"] == hashlib.md5(payload[:32]).hexdigest()
-
-
-def test_feature_extraction_from_decoded_pixels(spark, sf_dir):
-    import numpy as np
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    out = extract_features(with_ppm_payload(docs)).collect()
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert len(out) == 20
-    for r in out:
-        assert len(r["features"]) == FEATURE_DIM
-        payload = encode_ppm(texts[r["doc_id"]].encode())
-        meta = decode_ppm(payload)
-        w, h = meta["width"], meta["height"]
-        px = np.frombuffer(payload[-w * h * 3 :], dtype=np.uint8).reshape(
-            h, w, 3
-        )
-        assert r["features"][0] == float(w)
-        assert r["features"][1] == float(h)
-        assert r["features"][2] == pytest.approx(px[:, :, 0].mean())
 
 
 def test_empty_and_null_docs_are_excluded(spark):
@@ -641,294 +619,3 @@ def test_audio_fingerprint_banding_recall(spark, sf_dir):
         assert true_pairs.get((a, b)) == d
     close = {p for p, d in true_pairs.items() if d <= 3}
     assert close <= banded_pairs
-
-
-def test_audio_fp_index_incremental_probe(spark, sf_dir, tmp_path):
-    """Standing audio-fingerprint index (r15): the generic banded-index
-    lifecycle at the audio modality — batch probe finds exactly the
-    cross pairs of the full in-flight query, appends are exactly-once
-    per op, OPTIMIZE changes no probe answer."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        audio_batch_near_dups,
-        build_audio_fp_index,
-        dedup_audio_fingerprint,
-        optimize_banded_index,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
-    batch = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
-    root = str(tmp_path / "audiofp_idx")
-
-    assert build_audio_fp_index(corpus, root) is True
-    assert build_audio_fp_index(corpus, root) is False  # replay no-op
-
-    got = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in audio_batch_near_dups(spark, batch, root).collect()
-    }
-    full = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in dedup_audio_fingerprint(spark, sf_dir).collect()
-    }
-    c_ids = {r["doc_id"] for r in corpus.select("doc_id").collect()}
-    b_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
-    want = {
-        p: h
-        for p, h in full.items()
-        if len(p & c_ids) == 1 and len(p & b_ids) == 1
-    }
-    assert got == want
-
-    optimize_banded_index(spark, root, num_files=4)
-    got2 = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in audio_batch_near_dups(spark, batch, root).collect()
-    }
-    assert got2 == got
-
-
-def test_audio_clusters_match_union_find(spark, sf_dir):
-    """Star-contraction clusters over the audio fingerprint pair graph
-    equal a driver-side union-find (labels = component min)."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        dedup_audio_clusters,
-        dedup_audio_fingerprint,
-    )
-
-    pairs = [
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_audio_fingerprint(spark, sf_dir).collect()
-    ]
-    assert pairs  # the fixture corpus has near-dup clips
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in parent}
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_audio_clusters(spark, sf_dir).collect()
-    }
-    assert got == want
-
-
-def test_y4m_roundtrip_is_a_real_video_stream():
-    """encode_y4m emits a valid YUV4MPEG2 stream (the uncompressed
-    interchange format ffmpeg/mpv read natively); decode_y4m parses the
-    dims and frame rate out of the HEADER TOKENS, walks the FRAME
-    markers validating every planar payload, and reports luma stats."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        VID_FPS,
-        decode_y4m,
-        encode_y4m,
-    )
-
-    t = b"hello world, twelve bytes plus"
-    payload = encode_y4m(t)
-    assert payload.startswith(b"YUV4MPEG2 W")
-    meta = decode_y4m(payload)
-    n = len(t)
-    assert meta["width"] == n % 13 + 8
-    assert meta["height"] == n % 7 + 6
-    assert meta["n_frames"] == n % 4 + 9
-    assert (meta["fps_num"], meta["fps_den"]) == (VID_FPS, 1)
-    # luma_sum equals the tiled-byte sum over every frame's Y plane
-    w, h, nf = meta["width"], meta["height"], meta["n_frames"]
-    tiled = t * (3 * w * h // n + 2)
-    want = sum(
-        sum(tiled[(k * 7) % n : (k * 7) % n + w * h]) for k in range(nf)
-    )
-    assert meta["luma_sum"] == want
-    assert encode_y4m(t) == payload  # deterministic
-
-
-def test_decode_y4m_rejects_malformed():
-    from map_reduce_in_go_spark.operators.multimodal import (
-        decode_y4m,
-        encode_y4m,
-    )
-
-    payload = encode_y4m(b"some video content for the codec test")
-    with pytest.raises(ValueError):
-        decode_y4m(b"RIFF not a y4m stream")
-    with pytest.raises(ValueError):
-        decode_y4m(payload[:20])  # truncated inside the first frame
-    with pytest.raises(ValueError):
-        decode_y4m(payload[:-5])  # truncated final frame
-    with pytest.raises(ValueError):
-        decode_y4m(payload.replace(b"FRAME", b"FRAMX", 1))  # bad marker
-    with pytest.raises(ValueError):
-        decode_y4m(payload.replace(b"C444", b"C420", 1))  # subsampled
-
-
-def _ref_video_fp(text: str) -> str:
-    """Independent pure-Python reference: the anchor byte i of frame k is
-    text[(k*VID_PHASE + i) mod n] — computed straight from the tiling
-    arithmetic, never through the codec or numpy."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        VID_FP_CELL_W,
-        VID_FP_CELLS,
-        VID_FP_FRAMES,
-        VID_PHASE,
-    )
-
-    b = text.encode("utf-8")
-    n = len(b)
-    cs = [
-        [
-            sum(
-                b[(k * VID_PHASE + c * VID_FP_CELL_W + i) % n]
-                for i in range(VID_FP_CELL_W)
-            )
-            for c in range(VID_FP_CELLS)
-        ]
-        for k in range(VID_FP_FRAMES)
-    ]
-    return "".join(
-        "1" if cs[k + 1][c] > cs[k][c] else "0"
-        for k in range(VID_FP_FRAMES - 1)
-        for c in range(VID_FP_CELLS)
-    )
-
-
-def test_video_fingerprint_matches_reference(spark, sf_dir):
-    """The decode-path fingerprints equal the pure tiling-arithmetic
-    reference: the kernel really reads the anchor cells out of genuinely
-    parsed frames, and those bytes are exactly the oracle's modular
-    codepoint arithmetic."""
-    from map_reduce_in_go_spark.operators.multimodal import video_fingerprints
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    want = {r["doc_id"]: _ref_video_fp(r["text"]) for r in docs.collect()}
-    got = {
-        r["doc_id"]: r["dhash"]
-        for r in video_fingerprints(docs.select("doc_id", "text")).collect()
-    }
-    assert got == want
-    assert all(len(h) == 64 and set(h) <= {"0", "1"} for h in got.values())
-
-
-def test_video_fingerprint_banding_recall(spark, sf_dir):
-    """Banding recall pins for the video fingerprint:
-
-    - every emitted pair is a true pair with the exact Hamming distance;
-    - pairs within Hamming ≤ 3 are caught with recall EXACTLY 1.0
-      (pigeonhole over 4 bands — structural, not statistical);
-    - the fixture corpus genuinely yields near-dup clips (the
-      frame-anchor design catches shared-prefix videos).
-    """
-    import itertools
-
-    from map_reduce_in_go_spark.operators.multimodal import (
-        VID_FP_HAMMING_MAX,
-        dedup_video_fingerprint,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    hashes = {r["doc_id"]: _ref_video_fp(r["text"]) for r in docs.collect()}
-    banded = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in dedup_video_fingerprint(spark, sf_dir).collect()
-    }
-    assert banded  # the corpus has near-dup clips
-    banded_pairs = {(a, b) for a, b, _ in banded}
-    true_pairs = {}
-    for a, b in itertools.combinations(sorted(hashes), 2):
-        d = sum(x != y for x, y in zip(hashes[a], hashes[b]))
-        if d <= VID_FP_HAMMING_MAX:
-            true_pairs[(a, b)] = d
-    for a, b, d in banded:
-        assert true_pairs.get((a, b)) == d
-    close = {p for p, d in true_pairs.items() if d <= 3}
-    assert close <= banded_pairs
-
-
-def test_video_fp_index_incremental_probe(spark, sf_dir, tmp_path):
-    """Standing video-fingerprint index: the generic banded-index
-    lifecycle at the THIRD modality — batch probe finds exactly the
-    cross pairs of the full in-flight query, appends are exactly-once
-    per op, OPTIMIZE changes no probe answer."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        build_video_fp_index,
-        dedup_video_fingerprint,
-        optimize_banded_index,
-        video_batch_near_dups,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
-    batch = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
-    root = str(tmp_path / "videofp_idx")
-
-    assert build_video_fp_index(corpus, root) is True
-    assert build_video_fp_index(corpus, root) is False  # replay no-op
-
-    got = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in video_batch_near_dups(spark, batch, root).collect()
-    }
-    full = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in dedup_video_fingerprint(spark, sf_dir).collect()
-    }
-    c_ids = {r["doc_id"] for r in corpus.select("doc_id").collect()}
-    b_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
-    want = {
-        p: h
-        for p, h in full.items()
-        if len(p & c_ids) == 1 and len(p & b_ids) == 1
-    }
-    assert got == want
-
-    optimize_banded_index(spark, root, num_files=4)
-    got2 = {
-        frozenset((r["doc_a"], r["doc_b"])): r["hamming"]
-        for r in video_batch_near_dups(spark, batch, root).collect()
-    }
-    assert got2 == got
-
-
-def test_video_clusters_match_union_find(spark, sf_dir):
-    """Star-contraction clusters over the video fingerprint pair graph
-    equal a driver-side union-find (labels = component min)."""
-    from map_reduce_in_go_spark.operators.multimodal import (
-        dedup_video_clusters,
-        dedup_video_fingerprint,
-    )
-
-    pairs = [
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_video_fingerprint(spark, sf_dir).collect()
-    ]
-    assert pairs  # the fixture corpus has near-dup clips
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {x: find(x) for x in parent}
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_video_clusters(spark, sf_dir).collect()
-    }
-    assert got == want

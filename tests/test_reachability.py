@@ -1,0 +1,95 @@
+"""Every top-level def/class in the package is reachable from a real entry
+point: the CLI, the registry, ``__spark_entry__``, the benchmarks or the
+tools. The walk is name-based over ``ast`` (no imports, no Spark): a
+reached definition makes every name it mentions reachable. Docstrings
+do not count as mentions; other string literals do, so a name built
+from a string stays live. Names listed in ``__all__`` and bare imports
+are not callers."""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "map_reduce_in_go_spark"
+ENTRY_MODULES = {"cli.py", "registry.py", "__main__.py"}
+EXTRA_ROOTS = ["__spark_entry__.py", "bench.py", "perfbench/*.py", "tools/*.py"]
+
+# Reached only from tests, kept on purpose: each is a reference or a check.
+ALLOWED_UNREACHED = {
+    "operators/pq.py::ann_ivf_pq": "in-flight reference for the served PqIvfIndex probe",
+    "operators/pipeline.py::corpus_clean_composed": "unfused reference for corpus_clean",
+    "sources/replicate.py::catalog_divergence": "replica/branch/MOR content check",
+    "sources/replicate.py::_content_fingerprint": "helper of catalog_divergence",
+    "functions/caching.py::n_persistent_rdds": "check that release_persisted frees caches",
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _docstrings(tree: ast.Module) -> set[int]:
+    return {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, *_DEFS))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+
+
+def _mentions(node: ast.AST, docs: set[int]) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+            out.update(re.findall(r"\w+", n.value))
+    return out
+
+
+def _is_all(st: ast.stmt) -> bool:
+    return isinstance(st, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in st.targets
+    )
+
+
+def unreached() -> set[str]:
+    defs: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
+    live: set[str] = set()
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        docs = _docstrings(tree)
+        rel = path.relative_to(PKG).as_posix()
+        if rel in ENTRY_MODULES:
+            live |= _mentions(tree, docs)
+            continue
+        for st in tree.body:
+            if isinstance(st, _DEFS):
+                defs.setdefault(st.name, []).append((rel, st, docs))
+            elif not isinstance(st, (ast.Import, ast.ImportFrom)) and not _is_all(st):
+                live |= _mentions(st, docs)
+    for pattern in EXTRA_ROOTS:
+        for path in REPO.glob(pattern):
+            tree = ast.parse(path.read_text())
+            live |= _mentions(tree, _docstrings(tree))
+    todo = list(live & defs.keys())
+    while todo:
+        for _rel, node, docs in defs[todo.pop()]:
+            new = (_mentions(node, docs) & defs.keys()) - live
+            live |= new
+            todo.extend(new)
+    return {
+        f"{rel}::{name}"
+        for name, ds in defs.items()
+        if name not in live
+        for rel, *_ in ds
+    }
+
+
+def test_only_allowlisted_definitions_are_unreached():
+    assert unreached() == set(ALLOWED_UNREACHED)

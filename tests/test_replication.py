@@ -226,63 +226,6 @@ def test_chaining_and_divergence_detector(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.slow
-def test_streaming_follower_tails_ledger(spark, sf_dir, tmp_path):
-    """r12 (c): the foreachBatch follower converges the replica, and its
-    correctness never depends on the stream checkpoint — a follower
-    restarted with a WIPED checkpoint moves nothing (the ledger, not the
-    checkpoint, decides work)."""
-    import time
-
-    from map_reduce_in_go_spark.sources.replicate import (
-        start_replication_follower,
-    )
-
-    src = TableCatalog(str(tmp_path / "primary"))
-    _feed(spark, sf_dir, src, batches=(0, 1))
-    dst_root = str(tmp_path / "replica")
-
-    q = start_replication_follower(
-        spark, src.root, dst_root, str(tmp_path / "ckpt1"), interval="1 seconds"
-    )
-    try:
-        dst = TableCatalog(dst_root)
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if {op for _, op in src.history()} <= dst.committed_ops():
-                break
-            time.sleep(1)
-        assert _state(spark, dst) == _state(spark, src)
-
-        # a commit landing while the follower runs flows through
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang"
-        )
-        assert corpus_batch_txn(
-            spark, docs.filter(F.pmod("doc_id", F.lit(3)) == 2), src, 2
-        )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if "corpus-batch-2" in dst.committed_ops():
-                break
-            time.sleep(1)
-        assert _state(spark, dst) == _state(spark, src)
-    finally:
-        q.stop()
-
-    # wiped checkpoint: a fresh follower instance converges to the SAME
-    # replica without re-shipping anything — no member version moves
-    before = dst.snapshot(spark)
-    q2 = start_replication_follower(
-        spark, src.root, dst_root, str(tmp_path / "ckpt2"), interval="1 seconds"
-    )
-    try:
-        time.sleep(5)  # several passes fire; all must no-op
-    finally:
-        q2.stop()
-    assert dst.snapshot(spark) == before
-
-
-@pytest.mark.slow
 def test_clone_catalog_pitr(spark, sf_dir, tmp_path):
     """r12 (b): clone_catalog materializes one historical catalog version
     into a new catalog — restore-to-before-a-bad-batch — equal to the
@@ -381,35 +324,6 @@ def test_selective_member_replication(spark, sf_dir, tmp_path):
     )
     assert replicate_catalog(spark, src, serving, members=subset) == 1
     assert catalog_divergence(spark, src, serving, members=subset) == {}
-
-
-def test_replication_status_report(spark, sf_dir, tmp_path):
-    """r12 (b) follow-on: the lag report counts exactly the unapplied
-    ledger suffix, names pending ops in replay order, and the content
-    check surfaces divergence only when asked."""
-    from map_reduce_in_go_spark.sources.replicate import replication_status
-
-    src = TableCatalog(str(tmp_path / "primary"))
-    _feed(spark, sf_dir, src, batches=(0, 1))
-    dst = TableCatalog(str(tmp_path / "replica"))
-
-    st = replication_status(spark, src, dst)
-    assert st["lag_commits"] == 2 and not st["current"]
-    assert st["pending_ops"] == ["corpus-batch-0", "corpus-batch-1"]
-    assert st["last_applied_op"] is None and st["replica_version"] == -1
-
-    assert replicate_catalog(spark, src, dst) == 2
-    st = replication_status(spark, src, dst, check_content=True)
-    assert st["current"] and st["lag_commits"] == 0
-    assert st["last_applied_op"] == "corpus-batch-1"
-    assert st["divergence"] == {}
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
-    assert corpus_batch_txn(
-        spark, docs.filter(F.pmod("doc_id", F.lit(3)) == 2), src, 2
-    )
-    st = replication_status(spark, src, dst)
-    assert st["lag_commits"] == 1 and st["pending_ops"] == ["corpus-batch-2"]
 
 
 def test_racing_replicators_converge(spark, sf_dir, tmp_path):

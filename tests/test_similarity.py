@@ -281,61 +281,3 @@ def test_knn_graph_bits_knob_executes_cell_bound(
     per_query = out.groupBy("vec_id").count().collect()
     assert len(per_query) == 20 * n  # every vector gets neighbors
     assert all(r["count"] == KNN_K for r in per_query)
-
-
-def test_knn_graph_auto_sizes_bits_without_knob(spark, sf_dir, grown_embeddings_dir):
-    """Self-sizing (r9): no caller-passed bits — `auto_lsh_bits` derives
-    B from one corpus count (anchor: LSH_BITS at KNN_N0 vectors, +1 bit
-    per doubling), and through the real bucketing path that choice keeps
-    per-vector candidate work on the 20× corpus in the 1× ballpark. The
-    end-to-end `knn_graph_auto` returns a full graph on the grown corpus."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_in_go_spark.operators.similarity import (
-        KNN_K,
-        KNN_N0,
-        LSH_BITS,
-        _vectors,
-        _with_buckets,
-        auto_lsh_bits,
-        knn_graph_auto,
-    )
-
-    grown, n = grown_embeddings_dir
-    # unit pins: anchor and doubling behavior
-    assert auto_lsh_bits(KNN_N0) == LSH_BITS
-    assert auto_lsh_bits(KNN_N0 // 10) == LSH_BITS
-    assert auto_lsh_bits(2 * KNN_N0) == LSH_BITS + 1
-    assert auto_lsh_bits(20 * KNN_N0) == LSH_BITS + 5
-
-    n_grown = _vectors(spark, grown).count()
-    chosen = auto_lsh_bits(n_grown)
-    assert chosen > LSH_BITS  # the 20× corpus must trigger growth
-    # the rule's guarantee, as arithmetic: expected per-cell membership
-    # never exceeds the anchor density (2^ceil(log2 x) ≥ x)
-    assert n_grown / 2**chosen <= KNN_N0 / 2**LSH_BITS
-
-    def work_per_vec(path, bits):
-        cells = (
-            _with_buckets(_vectors(spark, path), bits=bits)
-            .groupBy("tbl", "bucket")
-            .agg(F.count("*").alias("m"))
-            .agg(F.sum(F.col("m") * F.col("m")).alias("sq"))
-            .collect()[0]["sq"]
-        )
-        return cells / _vectors(spark, path).count()
-
-    # measured per-vector candidate work stays at the anchor-density
-    # ballpark (LSH_TABLES cells of ≈ N0/2^LSH_BITS members each; 2.5×
-    # covers skew + multiprobe) — corpora below the anchor can only sit
-    # BELOW this bound, so the pin is scale-independent
-    anchor_work = similarity.LSH_TABLES * (KNN_N0 / 2**LSH_BITS)
-    w_auto = work_per_vec(grown, chosen)
-    assert w_auto <= 2.5 * anchor_work
-    # and fixed bits on the same corpus do strictly worse per vector
-    assert work_per_vec(grown, LSH_BITS) > w_auto
-
-    out = knn_graph_auto(spark, grown)
-    per_query = out.groupBy("vec_id").count().collect()
-    assert len(per_query) == 20 * n
-    assert all(r["count"] == KNN_K for r in per_query)

@@ -4,17 +4,22 @@ DataFrame plans do (Catalyst converges both to the same physical plan)."""
 from __future__ import annotations
 
 from map_reduce_in_go_spark.plans.tpch import q6_forecast_revenue
-from map_reduce_in_go_spark.sources.tables import TABLES, register_views
+from map_reduce_in_go_spark.sources.tables import TABLES, load_table
+
+
+def _register_views(spark, sf_dir):
+    for name in TABLES:
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def test_register_views_and_sql(spark, sf_dir):
-    register_views(spark, sf_dir)
+    _register_views(spark, sf_dir)
     for t in TABLES:
         assert spark.sql(f"SELECT count(*) AS n FROM {t}").first()["n"] > 0
 
 
 def test_sql_equals_dataframe_plan(spark, sf_dir):
-    register_views(spark, sf_dir)
+    _register_views(spark, sf_dir)
     via_sql = spark.sql(
         """
         SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))

@@ -1,6 +1,6 @@
-"""Streaming quantile rollup: ledgered batches, exact-when-small,
-pinned rank error when sampled, order-invariant merge, budget-honest
-compaction, CAS race safety."""
+"""Quantile summaries behind the corpus pipeline's ``len_quantiles``
+member: exact-when-small, pinned rank error when sampled, order-invariant
+merge, budget-honest recompression."""
 
 from __future__ import annotations
 
@@ -9,13 +9,13 @@ import math
 import numpy as np
 from pyspark.sql import functions as F
 
-from map_reduce_in_go_spark.sources.manifest_table import ManifestTable
 from map_reduce_in_go_spark.sources.tables import load_table
 from map_reduce_in_go_spark.streaming.quantiles import (
     QS_B,
-    compact_quantiles,
-    quantile_batch,
-    quantiles_from_store,
+    _weighted_value_at_rank,
+    merged_from_rows,
+    recompressed_rows,
+    summaries_for,
 )
 
 
@@ -32,18 +32,33 @@ def _order_stat(sorted_vals: np.ndarray, rank: float) -> float:
     return float(sorted_vals[i])
 
 
-def test_small_batches_fold_exactly(spark, sf_dir, tmp_path):
+def _summaries(batches):
+    """Summary rows for ``(batch_id, events)`` pairs, as the pipeline
+    lands them."""
+    rows = []
+    for bid, ev in batches:
+        rows += summaries_for(ev, "event_type", "value", bid).collect()
+    return rows
+
+
+def _answers(rows, qs=(0.5, 0.95)):
+    """Per type: {"n", "rank_err", "q50", "q95"} from folded summary rows."""
+    out = {}
+    for t, (pts, ws, n, err) in merged_from_rows(rows).items():
+        out[t] = {"n": n, "rank_err": err}
+        for q in qs:
+            out[t][f"q{int(q * 100)}"] = _weighted_value_at_rank(pts, ws, q * n)
+    return out
+
+
+def test_small_batches_fold_exactly(spark, sf_dir):
     """Batches under QS_B per type store exact multisets: the fold IS the
-    exact order statistic, err 0 — and a replayed op is a no-op."""
+    exact order statistic, err 0."""
     ev = load_table(spark, sf_dir, "events")
-    tbl = ManifestTable(str(tmp_path / "q"))
-    for i in range(3):
-        assert quantile_batch(
-            spark, ev.filter(F.pmod("event_id", F.lit(3)) == i), tbl, i
-        )
-    assert quantile_batch(spark, ev.limit(5), tbl, 1) is False  # ledger
+    got = _answers(
+        _summaries((i, ev.filter(F.pmod("event_id", F.lit(3)) == i)) for i in range(3))
+    )
     exact = _exact_by_type(spark, ev)
-    got = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
     assert set(got) == set(exact)
     for t, v in exact.items():
         n = len(v)
@@ -68,17 +83,15 @@ def test_small_batches_fold_exactly(spark, sf_dir, tmp_path):
         assert batch[t]["approx_ok"]
 
 
-def test_sampled_fold_within_pinned_rank_error(spark, sf_dir, tmp_path):
+def test_sampled_fold_within_pinned_rank_error(spark, sf_dir):
     """A batch big enough to sample answers within its own stated rank
     budget — the bound travels WITH the data and the test holds it to it."""
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
     big = ev
     for _ in range(4):
         big = big.unionAll(big)  # 16×: per-type size ≫ QS_B
-    tbl = ManifestTable(str(tmp_path / "q"))
-    assert quantile_batch(spark, big, tbl, 0)
+    got = _answers(_summaries([(0, big)]))
     exact = _exact_by_type(spark, big)
-    got = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
     for t, v in exact.items():
         n = len(v)
         assert n > QS_B  # the sampling path actually ran
@@ -90,45 +103,32 @@ def test_sampled_fold_within_pinned_rank_error(spark, sf_dir, tmp_path):
             assert lo <= got[t][col] <= hi, (t, col)
 
 
-def test_merge_is_order_invariant(spark, sf_dir, tmp_path):
+def test_merge_is_order_invariant(spark, sf_dir):
     """Landing the same batches in a different order folds to IDENTICAL
     answers — the mergeability property that makes the rollup a rollup."""
     ev = load_table(spark, sf_dir, "events")
-    a = ManifestTable(str(tmp_path / "qa"))
-    b = ManifestTable(str(tmp_path / "qb"))
-    for i in (0, 1, 2):
-        quantile_batch(spark, ev.filter(F.pmod("event_id", F.lit(3)) == i), a, i)
-    for i in (2, 0, 1):
-        quantile_batch(spark, ev.filter(F.pmod("event_id", F.lit(3)) == i), b, i)
-    ra = {tuple(r) for r in quantiles_from_store(spark, a).collect()}
-    rb = {tuple(r) for r in quantiles_from_store(spark, b).collect()}
+    rows = _summaries((i, ev.filter(F.pmod("event_id", F.lit(3)) == i)) for i in range(3))
+    qs = (0.05, 0.25, 0.5, 0.75, 0.95)
+    ra = _answers(rows, qs)
+    rb = _answers([rows[i] for i in np.random.RandomState(0).permutation(len(rows))], qs)
     assert ra == rb and ra
 
 
-def test_compaction_budget_honest_and_appendable(spark, sf_dir, tmp_path):
-    """Compaction folds to one row per type, adds its recompression cost
-    to the stored budget, keeps answers within the widened bound, and a
-    post-compaction batch still folds in."""
+def test_compaction_budget_honest_and_appendable(spark, sf_dir):
+    """Recompression folds to one row per type, adds its cost to the
+    stored budget, keeps answers within the widened bound, and a later
+    batch still folds in."""
     ev = load_table(spark, sf_dir, "events")
     big = ev.select("event_type", "value")
     for _ in range(4):
         big = big.unionAll(big)
-    tbl = ManifestTable(str(tmp_path / "q"))
-    for i in range(2):
-        # split 16× replica into two interleaved halves via a synthetic id
-        quantile_batch(
-            spark,
-            big.withColumn("rid", F.monotonically_increasing_id()).filter(
-                F.pmod("rid", F.lit(2)) == i
-            ),
-            tbl,
-            i,
-        )
-    before = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
-    n_types = len(before)
-    compact_quantiles(spark, tbl)
-    assert tbl.read(spark).count() == n_types  # one row per type
-    after = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
+    # split 16× replica into two interleaved halves via a synthetic id
+    rid = big.withColumn("rid", F.monotonically_increasing_id())
+    rows = _summaries((i, rid.filter(F.pmod("rid", F.lit(2)) == i)) for i in range(2))
+    before = _answers(rows)
+    compacted = recompressed_rows(merged_from_rows(rows))
+    assert len(compacted) == len(before)  # one row per type
+    after = _answers(compacted)
     exact = _exact_by_type(spark, big)
     for t, v in exact.items():
         n = len(v)
@@ -141,45 +141,10 @@ def test_compaction_budget_honest_and_appendable(spark, sf_dir, tmp_path):
             hi = _order_stat(v, q * n + err)
             assert lo <= after[t][col] <= hi, (t, col)
 
-    # post-compaction append: totals advance, answers still bracketed
+    # post-compaction append: totals advance
     small = load_table(spark, sf_dir, "events")
-    quantile_batch(spark, small, tbl, 7)
-    final = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
+    final = _answers(compacted + _summaries([(7, small)]))
     for t in exact:
         assert final[t]["n"] == len(exact[t]) + np.sum(
             [1 for r in small.select("event_type").collect() if r["event_type"] == t]
         )
-
-
-def test_compact_cas_retries_on_concurrent_append(spark, sf_dir, tmp_path):
-    """A quantile_batch landing between compaction's fold and its
-    overwrite must not be silently discarded (its op is ledgered — a
-    replay would be refused, losing the rows forever)."""
-    from map_reduce_in_go_spark.streaming import quantiles as mod
-
-    ev = load_table(spark, sf_dir, "events")
-    tbl = ManifestTable(str(tmp_path / "q"))
-    quantile_batch(spark, ev.filter(F.pmod("event_id", F.lit(2)) == 0), tbl, 0)
-    late = ev.filter(F.pmod("event_id", F.lit(2)) == 1)
-
-    real = mod._merged_cdfs
-    fired = {"n": 0}
-
-    def race(sp, t, version=None):
-        state = real(sp, t, version)
-        if fired["n"] == 0:
-            fired["n"] += 1
-            quantile_batch(sp, late, t, 1)
-        return state
-
-    mod._merged_cdfs = race
-    try:
-        compact_quantiles(spark, tbl)
-    finally:
-        mod._merged_cdfs = real
-
-    assert fired["n"] == 1
-    exact = _exact_by_type(spark, ev)
-    got = {r["event_type"]: r for r in quantiles_from_store(spark, tbl).collect()}
-    for t, v in exact.items():
-        assert got[t]["n"] == len(v)  # the late batch's rows survived

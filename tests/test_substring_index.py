@@ -1,5 +1,5 @@
-"""Served substring index: every occurrence found, none invented, files
-actually pruned, short patterns rejected loudly."""
+"""Served substring and gram indexes: point probes actually prune files,
+and served gram counts answer exactly what the in-flight path answers."""
 
 from __future__ import annotations
 
@@ -9,20 +9,8 @@ from map_reduce_in_go_spark.sources.manifest_table import ManifestTable
 from map_reduce_in_go_spark.sources.substring_index import (
     ANCHOR_W,
     build_substring_index,
-    substring_search,
 )
 from map_reduce_in_go_spark.sources.tables import load_table
-
-
-def _all_occurrences(text: str, pattern: str):
-    """Brute force incl. overlapping matches, 1-based offsets."""
-    out, start = [], 0
-    while True:
-        i = text.find(pattern, start)
-        if i < 0:
-            return out
-        out.append(i + 1)
-        start = i + 1
 
 
 @pytest.fixture(scope="module")
@@ -30,37 +18,6 @@ def index_dir(spark, sf_dir, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("ssidx") / "index")
     build_substring_index(spark, sf_dir, root)
     return root
-
-
-def test_substring_search_matches_bruteforce(spark, sf_dir, index_dir):
-    texts = {
-        r["doc_id"]: r["text"]
-        for r in load_table(spark, sf_dir, "documents").collect()
-    }
-    docs = sorted(texts)
-    # patterns cut from real docs: a doc prefix, a mid-doc slice, a slice
-    # from a duplicated doc (many occurrences), and one absent string
-    t0 = texts[docs[0]]
-    t_mid = texts[docs[len(docs) // 2]]
-    patterns = [
-        t0[:ANCHOR_W],
-        t_mid[10 : 10 + ANCHOR_W + 17],
-        max(texts.values(), key=len)[: ANCHOR_W + 5],
-        "z" * ANCHOR_W,  # tokens are lowercase words; 32 z's occur nowhere
-    ]
-    got: dict[str, set] = {p: set() for p in patterns}
-    for r in substring_search(spark, sf_dir, index_dir, patterns).collect():
-        got[r["pattern"]].add((r["doc_id"], r["pos"]))
-    for p in patterns:
-        want = {
-            (d, pos)
-            for d, text in texts.items()
-            for pos in _all_occurrences(text, p)
-        }
-        assert got[p] == want, p
-    assert got["z" * ANCHOR_W] == set()
-    # at least one pattern matched somewhere (real slices always do)
-    assert any(got[p] for p in patterns[:3])
 
 
 def test_substring_search_prunes_files(spark, sf_dir, index_dir):
@@ -77,72 +34,6 @@ def test_substring_search_prunes_files(spark, sf_dir, index_dir):
     files, total = tbl.files_pruned_in("h", [probe], tbl.version())
     assert total > 1  # the index really is multi-file
     assert len(files) < total
-
-
-def test_substring_search_rejects_short_patterns(spark, sf_dir, index_dir):
-    with pytest.raises(ValueError, match="ANCHOR_W"):
-        substring_search(spark, sf_dir, index_dir, ["tiny"])
-
-
-def test_incremental_append_and_optimize(spark, sf_dir, tmp_path):
-    """Maintenance path: an index built from half the corpus, extended by
-    a ledgered append of the other half, answers searches over BOTH
-    halves; a replayed op contributes nothing; re-clustering restores
-    point-probe pruning after the append widened file ranges."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_in_go_spark.sources.substring_index import (
-        INDEX_FILES,
-        index_append,
-        optimize_index,
-        substring_search,
-    )
-    from map_reduce_in_go_spark.sources.tables import load_table
-
-    root = str(tmp_path / "index")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    half1 = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
-    half2 = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
-
-    tbl = ManifestTable(root, stats_cols=["h"])
-    from map_reduce_in_go_spark.sources.substring_index import _gram_rows
-
-    tbl.append(_gram_rows(half1), op="build-half1")
-    tbl.compact(spark, num_files=INDEX_FILES, zorder_cols=["h"])
-
-    assert index_append(root, half2, op="batch-2")
-    assert index_append(root, half2, op="batch-2") is False  # ledger
-
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    odd = next(d for d in sorted(texts) if d % 2 == 1)
-    pattern = texts[odd][5 : 5 + ANCHOR_W]
-    got = {
-        (r["doc_id"], r["pos"])
-        for r in substring_search(spark, sf_dir, root, [pattern]).collect()
-    }
-    want = {
-        (d, pos)
-        for d, text in texts.items()
-        for pos in _all_occurrences(text, pattern)
-    }
-    assert got == want and (odd, 6) in got
-
-    # appended files widen ranges; one optimize restores tight pruning
-    optimize_index(spark, root)
-    probe = (
-        spark.createDataFrame([(pattern,)], "p string")
-        .select(F.xxhash64(F.substring("p", 1, ANCHOR_W)).alias("h"))
-        .collect()[0]["h"]
-    )
-    tbl2 = ManifestTable(root, stats_cols=["h"])
-    files, total = tbl2.files_pruned_in("h", [probe], tbl2.version())
-    assert total > 1 and len(files) < total
-    # and the re-clustered index still answers identically
-    again = {
-        (r["doc_id"], r["pos"])
-        for r in substring_search(spark, sf_dir, root, [pattern]).collect()
-    }
-    assert again == want
 
 
 # ---------------------------------------------------------------- gram index
@@ -173,63 +64,6 @@ def test_gram_index_full_path_equals_inflight(spark, sf_dir, tmp_path):
     assert served == inflight and inflight  # non-vacuous: spans exist
 
 
-def test_gram_index_incremental_batch(spark, sf_dir, tmp_path):
-    """Standing index over half the corpus + an arriving batch: the
-    batch-probe path finds exactly the spans the full in-flight run finds
-    for the batch docs (corpus ∪ batch counts); a ledgered append is
-    exactly-once; post-append the served full path equals in-flight."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_in_go_spark.operators.dedup import substring_spans
-    from map_reduce_in_go_spark.sources.substring_index import (
-        batch_duplicated_spans,
-        build_gram_index,
-        duplicated_grams,
-        gram_index_append,
-        optimize_gram_index,
-    )
-    from map_reduce_in_go_spark.sources.tables import load_documents_parallel
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    half1 = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
-    half2 = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
-
-    root = str(tmp_path / "gram")
-    # build over half1 only: stand-in for yesterday's corpus
-    from map_reduce_in_go_spark.sources.manifest_table import ManifestTable
-    from map_reduce_in_go_spark.sources.substring_index import (
-        INDEX_FILES,
-        _token_gram_counts,
-    )
-
-    tbl = ManifestTable(root, stats_cols=["g"])
-    tbl.append(_token_gram_counts(half1), op="gram-build-half1")
-    tbl.compact(spark, num_files=INDEX_FILES, zorder_cols=["g"])
-
-    got = {
-        tuple(r) for r in batch_duplicated_spans(spark, root, half2).collect()
-    }
-    odd_ids = {r["doc_id"] for r in half2.select("doc_id").collect()}
-    want = {
-        tuple(r)
-        for r in substring_spans(docs).collect()
-        if r["doc_id"] in odd_ids
-    }
-    assert got == want and want  # batch spans exist on this corpus
-
-    assert gram_index_append(root, half2, op="gram-batch-2")
-    assert gram_index_append(root, half2, op="gram-batch-2") is False
-    optimize_gram_index(spark, root)
-    served = {
-        tuple(r)
-        for r in substring_spans(
-            docs, dup_grams=duplicated_grams(spark, root)
-        ).collect()
-    }
-    full = {tuple(r) for r in substring_spans(docs).collect()}
-    assert served == full
-
-
 def test_gram_index_batch_probe_prunes_files(spark, sf_dir, tmp_path):
     """A small arriving batch must open fewer index files than the index
     holds — the point-set pruning that makes incremental substring dedup
@@ -255,52 +89,3 @@ def test_gram_index_batch_probe_prunes_files(spark, sf_dir, tmp_path):
     files, total = tbl.files_pruned_in("g", probes, tbl.version())
     assert total > len(probes)  # non-vacuous: more files than probes
     assert len(files) <= len(probes) < total
-
-
-def test_batch_spans_guard_falls_back_past_probe_cap(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """r10 verdict #1: a corpus-sized 'batch' must take the full-snapshot
-    fallback (no corpus-sized driver collect) and return exactly the
-    rows the probed path returns."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_in_go_spark import sources
-    from map_reduce_in_go_spark.sources import substring_index as si
-    from map_reduce_in_go_spark.sources.manifest_table import ManifestTable
-    from map_reduce_in_go_spark.sources.substring_index import (
-        INDEX_FILES,
-        _token_gram_counts,
-        batch_duplicated_spans,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    half1 = docs.filter(F.pmod("doc_id", F.lit(2)) == 0)
-    half2 = docs.filter(F.pmod("doc_id", F.lit(2)) == 1)
-
-    root = str(tmp_path / "gram")
-    tbl = ManifestTable(root, stats_cols=["g"])
-    tbl.append(_token_gram_counts(half1), op="gram-build-half1")
-    tbl.compact(spark, num_files=INDEX_FILES, zorder_cols=["g"])
-
-    probed = {
-        tuple(r) for r in batch_duplicated_spans(spark, root, half2).collect()
-    }
-
-    # shrink the cap so this same batch is "corpus-sized": the fallback
-    # must kick in (pin it by poisoning the pruned-read path) and the
-    # answer must not change
-    import map_reduce_in_go_spark.operators.dedup as dedup_mod
-
-    monkeypatch.setattr(dedup_mod, "MAX_PROBE_KEYS", 1)
-
-    def _refuse(*a, **k):
-        raise AssertionError(
-            "read_pruned_in must not run past MAX_PROBE_KEYS"
-        )
-
-    monkeypatch.setattr(ManifestTable, "read_pruned_in", _refuse)
-    fallback = {
-        tuple(r) for r in batch_duplicated_spans(spark, root, half2).collect()
-    }
-    assert fallback == probed and probed
