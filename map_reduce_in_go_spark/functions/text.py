@@ -15,7 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # Reference trim set: wordcount.go:15
-TRIM_CHARS = ".,!?\"':;()"
 _TRIM_RE = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
 _WS_RE = r"\s+"
 

@@ -38,7 +38,6 @@ from ..sources.tables import spread_partitions
 from .similarity import (
     QUERY_MOD,
     TOP_K,
-    _duck_round6_np,
     _exact_pair_scores,
     _vectors,
 )

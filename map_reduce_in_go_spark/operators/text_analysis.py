@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.caching import scoped_persist
 from ..functions.text import shingles_of, sql_shingles, sql_tokens, tokens
-from ..sources.tables import load_documents_parallel, load_table
+from ..sources.tables import load_documents_parallel
 
 # Tiny per-language stopword lists for the n-gram/stopword langid heuristic.
 STOPWORDS = {

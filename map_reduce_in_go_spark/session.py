@@ -12,29 +12,54 @@ Spark ships all of that; we only set the knobs so the behavior matches:
 Scale posture (100 TB / 1000 executors): Spark's default AQE (partition
 coalescing + skew join splitting, left unset here), Arrow for every Python
 exchange, broadcast threshold sized for dimension tables, shuffle partitions
-overridable per deployment.
+overridable per deployment. Cluster masters get dynamic allocation. A local
+master's driver JVM is instead sized for one short job: two JIT compiler
+threads and the serial collector, because a local driver is a short-lived
+process whose fixed cost is compile threads and G1's footprint.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def cluster_dynamic_allocation_conf(master: str) -> dict[str, str]:
-    """Dynamic worker pool parity (distributed/coordinator.go:149
+# HotSpot's collector selectors: two in one command line abort start-up
+# ("Multiple garbage collectors selected").
+_GC_SELECTOR = re.compile(r"-XX:\+Use(?:Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
+
+
+def dynamic_allocation_or_local_jvm_conf(
+    master: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The per-master conf: dynamic allocation on a cluster, JVM flags
+    for a local driver.
+
+    Cluster masters: dynamic worker pool parity (distributed/coordinator.go:149
     ``Register``; reference README "Dynamic Worker Pool"): the reference
     lets workers join/leave at runtime. Spark's equivalent is dynamic
     allocation — executors are requested under load and released when
-    idle. Gated to cluster masters: local[N] has no executor pool to
-    grow, so the block is empty (inert) there. Unit-tested in
-    tests/test_cli.py without needing a cluster.
+    idle. local[N] has no executor pool to grow, so it gets none of that.
+
+    Local masters: a local driver is a short-lived process (one batch job,
+    then exit) whose fixed cost is compile threads and G1's footprint, so
+    it gets two JIT compiler threads and the serial collector. They go in
+    ``spark.driver.defaultJavaOptions``, which the launcher puts before
+    ``extraJavaOptions``: HotSpot takes a repeated flag's last value, so a
+    caller's own options win, and a caller that picks a collector keeps
+    only the compiler cap.
+    Unit-tested in tests/test_cli.py without needing a cluster.
     """
     if master.startswith("local"):
-        return {}
+        flags = ["-XX:CICompilerCount=2"]
+        caller = (extra_conf or {}).get("spark.driver.extraJavaOptions", "")
+        if not _GC_SELECTOR.search(caller):
+            flags.append("-XX:+UseSerialGC")
+        return {"spark.driver.defaultJavaOptions": " ".join(flags)}
     return {
         "spark.dynamicAllocation.enabled": "true",
         "spark.dynamicAllocation.shuffleTracking.enabled": "true",
@@ -88,8 +113,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in cluster_dynamic_allocation_conf(master).items():
+    for k, v in dynamic_allocation_or_local_jvm_conf(master, extra_conf).items():
         builder = builder.config(k, v)
+    # last, so a caller's own spark.driver.defaultJavaOptions replaces the block
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

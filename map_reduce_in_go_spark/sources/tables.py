@@ -29,9 +29,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough (at any TPC-H scale proportion) to broadcast.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":

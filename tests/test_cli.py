@@ -164,14 +164,29 @@ def test_cli_signal_handler_drains_and_exits(spark):
             signal.signal(s, h)
 
 
-def test_dynamic_allocation_gated_to_cluster_masters():
+def test_dynamic_allocation_gated_to_cluster_masters(spark):
     """Reference dynamic-worker-pool parity: the dynamicAllocation block
-    is empty under every local master and populated for cluster URLs."""
-    from map_reduce_in_go_spark.session import cluster_dynamic_allocation_conf
+    is populated for cluster URLs only; a local master gets the two
+    driver-JVM flags instead, minus the collector when the caller picks
+    one. The live session's driver JVM must carry them."""
+    from map_reduce_in_go_spark.session import dynamic_allocation_or_local_jvm_conf as gate
 
-    assert cluster_dynamic_allocation_conf("local[32]") == {}
-    assert cluster_dynamic_allocation_conf("local[*]") == {}
+    local_jvm = {"spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2 -XX:+UseSerialGC"}
+    assert gate("local[32]") == local_jvm
+    assert gate("local[*]") == local_jvm
+    assert gate("local[4,3]", {"spark.sql.shuffle.partitions": "8"}) == local_jvm
+    own_gc = {"spark.driver.extraJavaOptions": "-Xss4m -XX:+UseG1GC"}
+    assert gate("local[4]", own_gc) == {
+        "spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2"
+    }
     for master in ("spark://host:7077", "yarn", "k8s://https://api:6443"):
-        conf = cluster_dynamic_allocation_conf(master)
+        conf = gate(master)
         assert conf["spark.dynamicAllocation.enabled"] == "true"
         assert conf["spark.dynamicAllocation.shuffleTracking.enabled"] == "true"
+        assert not any("JavaOptions" in k for k in conf)
+        assert gate(master, own_gc) == conf
+
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    assert "-XX:CICompilerCount=2" in list(mgmt.getRuntimeMXBean().getInputArguments())
+    collectors = {b.getName() for b in mgmt.getGarbageCollectorMXBeans()}
+    assert collectors == {"Copy", "MarkSweepCompact"}
