@@ -17,6 +17,7 @@ that want the sketch without the exact twin.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -244,40 +245,30 @@ def _cms_hashes(word: str) -> list[int]:
     return [int(h[8 * d : 8 * d + 8], 16) % CMS_W for d in range(CMS_D)]
 
 
-def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT heavy hitters via a Count-Min candidate screen (Cormode &
-    Muthukrishnan 2005) — the sketch-comparison twin of
-    :func:`heavy_hitters` (Misra-Gries).
+def cms_fold(rows) -> tuple[int, np.ndarray]:
+    """(total, flat D×W sketch) merged from ``(n, sketch)`` rows.
 
-    Same two-pass exact-output contract, different sketch trade:
-
-    1. **Sketch pass**: each partition folds its tokens into a D×W
-       Count-Min array (exact value_counts per Arrow batch, one md5 per
-       distinct word, vectorized scatter-add). Partition sketches MERGE BY
-       PLAIN ADDITION — the property Misra-Gries lacks (its merge must
-       re-shrink and loses mass), and why CMS is the one you pre-aggregate
-       per shard and union later at 100 TB. Driver folds P sketches of
-       fixed size (D·W·8 B ≈ 128 KB) — bounded state, no key universe.
-    2. **Candidate + exact count pass**: re-scan tokens; each partition
-       counts locally (exact), queries the broadcast global sketch for its
-       distinct words, and emits local counts ONLY for words whose CMS
-       estimate clears the n/K support. CMS never underestimates, so the
-       candidate set is a superset of the true heavy hitters regardless of
-       partitioning; summing the per-partition exact local counts then
-       gives exact global counts for every candidate with NO third scan.
-       The final ``cnt·K > n`` filter kills false candidates.
-
-    Output is identical to :func:`heavy_hitters` (same support threshold),
-    so the same plain-SQL oracle hash-checks it; the pytest twin compares
-    the two sketches' candidate-set sizes — the measurable cost difference
-    between an overestimate screen (CMS) and a summary screen (MG).
+    Count-Min sketches MERGE BY PLAIN ADDITION — the sum of per-part
+    sketches is the sketch of the concatenated input, in any order — the
+    property Misra-Gries lacks (its merge must re-shrink and loses mass),
+    and why CMS is the one you pre-aggregate per shard and union later.
     """
-    import numpy as np
+    total = 0
+    cms = np.zeros(CMS_D * CMS_W, dtype=np.int64)
+    for n, sketch in rows:
+        total += int(n)
+        cms += np.asarray(sketch, dtype=np.int64)
+    return total, cms
 
-    from ..functions.caching import scoped_persist
-    from .wordcount import _doc_words
 
-    words = scoped_persist(_doc_words(spark, sf_dir).select("word"))
+def cms_sketch(words: DataFrame) -> tuple[int, np.ndarray]:
+    """(n_tokens, flat D×W sketch) of a one-column ``word`` frame.
+
+    Each partition folds its tokens into a D×W Count-Min array (exact
+    value_counts per Arrow batch, one md5 per distinct word); the driver
+    folds the ≤ #partitions fixed-size rows (D·W·8 B ≈ 128 KB each) with
+    :func:`cms_fold` — bounded state, no key universe.
+    """
 
     def sketch_pass(batches):
         import pandas as pd
@@ -294,20 +285,31 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cms[d, h] += c
         yield pd.DataFrame({"part_n": [n], "sketch": [cms.ravel().tolist()]})
 
-    parts = words.mapInPandas(
-        sketch_pass, "part_n long, sketch array<long>"
-    ).collect()  # ≤ #partitions rows × 128 KB — bounded driver state
-    total = int(sum(r["part_n"] for r in parts))
-    global_cms = np.zeros(CMS_D * CMS_W, dtype=np.int64)
-    for r in parts:
-        global_cms += np.asarray(r["sketch"], dtype=np.int64)  # sketch merge
-    global_cms = global_cms.reshape(CMS_D, CMS_W)
-    bc = spark.sparkContext.broadcast(global_cms)
+    return cms_fold(
+        words.mapInPandas(sketch_pass, "part_n long, sketch array<long>").collect()
+    )
+
+
+def cms_heavy_hitters(
+    spark: SparkSession, words: DataFrame, total: int, cms: np.ndarray
+) -> DataFrame:
+    """(word, cnt): the exact heavy hitters of a one-column ``word`` frame,
+    screened by a folded sketch ``cms`` of ``total`` tokens.
+
+    Each partition counts locally (exact), queries the broadcast sketch
+    for its distinct words, and emits local counts ONLY for words whose
+    CMS estimate clears the n/K support. CMS never underestimates, so the
+    candidate set is a superset of the true heavy hitters regardless of
+    partitioning; summing the per-partition exact local counts gives
+    exact global counts for every candidate with NO further scan. The
+    final ``cnt·K > n`` filter kills false candidates.
+    """
+    bc = spark.sparkContext.broadcast(cms.reshape(CMS_D, CMS_W))
 
     def count_pass(batches):
         import pandas as pd
 
-        cms = bc.value
+        sk = bc.value
         counts: dict[str, int] = {}
         for pdf in batches:
             for w, c in pdf["word"].value_counts().items():
@@ -316,7 +318,7 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             return
         ws = list(counts)
         est = np.array(
-            [min(cms[d, h] for d, h in enumerate(_cms_hashes(w))) for w in ws],
+            [min(sk[d, h] for d, h in enumerate(_cms_hashes(w))) for w in ws],
             dtype=np.int64,
         )
         keep = est * HH_K > total
@@ -333,6 +335,28 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").alias("cnt"))
         .filter(F.col("cnt") * HH_K > F.lit(total))
     )
+
+
+def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT heavy hitters via a Count-Min candidate screen (Cormode &
+    Muthukrishnan 2005) — the sketch-comparison twin of
+    :func:`heavy_hitters` (Misra-Gries).
+
+    Same two-pass exact-output contract, different sketch trade: a
+    sketch pass (:func:`cms_sketch`) and a candidate + exact count pass
+    (:func:`cms_heavy_hitters`), both over one tokenization of the
+    corpus, persisted between them.
+
+    Output is identical to :func:`heavy_hitters` (same support threshold),
+    so the same plain-SQL oracle hash-checks it; the pytest twin compares
+    the two sketches' candidate-set sizes — the measurable cost difference
+    between an overestimate screen (CMS) and a summary screen (MG).
+    """
+    from ..functions.caching import scoped_persist
+
+    words = scoped_persist(_doc_words(spark, sf_dir).select("word"))
+    total, cms = cms_sketch(words)
+    return cms_heavy_hitters(spark, words, total, cms)
 
 
 # identical output contract → identical oracle

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import sql_shingles, sql_tokens, tokens
+from ..functions.text import shingles_of, sql_shingles, sql_tokens, tokens
 from ..sources.tables import load_documents_parallel, load_table
 
 # -- portable deterministic bucket ------------------------------------------
@@ -106,10 +106,11 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Singletons (docs in no candidate pair) hash by their own id, so on a
     dup-free corpus this degrades to exactly ``split_train_test``.
 
-    Plan: the cluster labeling (bounded label-propagation rounds over the
-    LSH pair graph — never all-pairs) plus ONE left join at doc grain and
-    a map-stage bucket; the join's cluster side is duplicate-pairs-sized,
-    tiny relative to the corpus, so AQE broadcasts it at scale.
+    Plan: the cluster labeling (connected components of the LSH pair
+    graph, :func:`~..operators.dedup.star_components` — never all-pairs)
+    plus ONE left join at doc grain and a map-stage bucket; the join's
+    cluster side is duplicate-pairs-sized, tiny relative to the corpus,
+    so AQE broadcasts it at scale.
     Leakage-freedom is pinned in tests/test_curation.py: every MinHash
     candidate pair ends up split-together.
     """
@@ -163,7 +164,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents_parallel(spark, sf_dir).withColumn(
         "toks", tokens(F.col("text"))
     )
-    grams = F.array_distinct(_ngrams(F.col("toks"), CONTAM_N))
+    grams = F.array_distinct(shingles_of(F.col("toks"), CONTAM_N))
     is_bench = F.col("doc_id") % BENCH_MOD == 0
     bench = (
         docs.filter(is_bench)
@@ -219,8 +220,8 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in total, 1 corpus scan instead of 3 and 2 exchanges instead of 6.
     kinds = F.concat(
         F.transform(F.col("toks"), lambda g: F.struct(F.lit(0).alias("k"), g.alias("g"))),
-        F.transform(_ngrams(F.col("toks"), 2), lambda g: F.struct(F.lit(1).alias("k"), g.alias("g"))),
-        F.transform(_ngrams(F.col("toks"), 3), lambda g: F.struct(F.lit(2).alias("k"), g.alias("g"))),
+        F.transform(shingles_of(F.col("toks"), 2), lambda g: F.struct(F.lit(1).alias("k"), g.alias("g"))),
+        F.transform(shingles_of(F.col("toks"), 3), lambda g: F.struct(F.lit(2).alias("k"), g.alias("g"))),
     )
     per_gram = (
         docs.select("doc_id", F.explode(kinds).alias("kg"))
@@ -351,14 +352,6 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("bucket") < F.least(F.col("weight"), F.lit(1.0)) * 100)
         .select("doc_id", "lang", "source", "bucket", "weight")
     )
-
-
-def _ngrams(toks: Column, n: int) -> Column:
-    """n-word shingles of a token array (pure Catalyst, document order)."""
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
 
 # --- DuckDB oracles --------------------------------------------------------
@@ -857,7 +850,7 @@ def _dsir_bucket_counts(docs: DataFrame) -> DataFrame:
     d = docs.withColumn("toks", tokens(F.col("text")))
     grams = d.select(
         "lang",
-        F.explode(F.concat(F.col("toks"), _ngrams(F.col("toks"), 2))).alias("g"),
+        F.explode(F.concat(F.col("toks"), shingles_of(F.col("toks"), 2))).alias("g"),
     ).select("lang", _dsir_bucket(F.col("g")).alias("b"))
     return grams.groupBy("b").agg(
         F.count(F.lit(1)).alias("r"),
@@ -983,7 +976,7 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents_parallel(spark, sf_dir).withColumn(
         "toks", tokens(F.col("text"))
     )
-    grams = F.concat(F.col("toks"), _ngrams(F.col("toks"), 2))
+    grams = F.concat(F.col("toks"), shingles_of(F.col("toks"), 2))
     buckets = F.transform(grams, lambda g: _dsir_bucket(g))
 
     def score(batches):

@@ -1,11 +1,22 @@
 """Deduplication operators for training-data pipelines.
 
-Five dedup families, all as single declarative plans:
+Dedup families, each a declarative plan over the documents or
+embeddings table, with one kernel per algorithm:
 
 - exact          md5(text) groupBy — one shuffle on the digest
-- minhash        word-shingle MinHash (32 perms) → 8-band LSH → candidate pairs
+- minhash        word-shingle MinHash (32 perms) → 8-band LSH → candidate
+                 pairs (``signatures_of`` → ``verified_pairs``), verified by
+                 signature agreement, shingle Jaccard/containment or edit
+                 distance
+- clusters       connected components of the MinHash pair graph
+                 (``star_components``) and the surviving representatives
+- incremental    a batch probed against a standing band index (plain
+                 parquet, manifest-log, stats-pruned or catalog storage)
 - simhash        64-bit SimHash over word hashes → 16-bit band buckets → pairs
-- ngram_jaccard  exact Jaccard verification of the MinHash candidates
+- sentence       per-doc duplicated-sentence ratio
+- substring      duplicated K-token spans (``token_grams`` → ``substring_spans``)
+                 and exact full-doc containment (``anchor_grams`` →
+                 ``containment_pairs``)
 - embedding      cosine near-dup pairs over the embeddings table
 
 Portability design: every probabilistic primitive is built from ``md5`` over
@@ -33,7 +44,7 @@ from ..functions.caching import free_local_checkpoint, scoped_persist
 from ..functions.hashing import sql_minhash_signature
 from ..functions.text import shingles, shingles_of, sql_shingles, sql_tokens, tokens
 from ..functions.vectors import sql_cosine, sql_double_array
-from .similarity import CENTROID_MOD, CENTROID_OFF
+from .similarity import CENTROID_MOD, CENTROID_OFF, _duck_round6
 from ..sources.artifacts import artifact_home as band_index_home
 from ..sources.artifacts import memo as _artifact_memo
 from ..sources.artifacts import served_artifact
@@ -404,103 +415,21 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_MAX_ITERS = 25
 # star_components: edge sets at or below this size are solved with one
 # bounded driver pass (union-find) instead of distributed contraction
-# rounds — ~16 bytes/edge ⇒ ≤ ~16 MB of driver transfer at the default,
-# the same order as broadcast relations this engine already builds. At
-# 100 TB near-dup pair graphs exceed this and take the distributed path.
-LOCAL_CC_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_LOCAL_CC_MAX_EDGES", str(1 << 20)))
+# rounds — ~16 bytes/edge ⇒ ≤ ~16 MB of driver transfer, the same order
+# as broadcast relations this engine already builds. At 100 TB near-dup
+# pair graphs exceed this and take the distributed path.
+LOCAL_CC_MAX_EDGES = 1 << 20
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over MinHash candidate pairs → cluster ids.
 
     The "pick one representative per duplicate group" step: each doc in a
-    candidate pair gets the minimum doc_id reachable through the pair graph.
-    Spark side: iterative min-label propagation (the Pregel pattern on
-    DataFrames; iterations ≤ graph diameter, and LSH duplicate clusters are
-    shallow). Oracle side: a recursive CTE computing the same transitive
-    closure.
-
-    Iteration discipline (this is what survives 100×): every loop round
-    ``localCheckpoint``\\ s the new labels — the physical plan stays one
-    ``LogicalRDD`` scan deep instead of growing geometrically, and a lost
-    executor replays one round, not the whole chain — then explicitly frees
-    the superseded round's blocks. Edges are checkpointed once up front so
-    the signature/band lineage is released before the loop starts. A graph
-    whose diameter exceeds ``CLUSTER_MAX_ITERS`` raises instead of silently
-    returning half-propagated labels.
-
-    At 100 TB the iteration count drops further with alternating
-    large-star/small-star rounds — implemented as
-    :func:`dedup_clusters_star`, oracle-proven to produce the identical
-    labeling; the join shape per round is the same.
-    """
-    pairs = scoped_persist(_band_pairs(_signatures(spark, sf_dir)))
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = fwd.union(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    changed = 0
-    for _ in range(CLUSTER_MAX_ITERS):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("nmin"), F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        free_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {CLUSTER_MAX_ITERS} iterations "
-            f"({changed} labels still moving) — raise CLUSTER_MAX_ITERS or use "
-            "large-star/small-star for this graph"
-        )
-    free_local_checkpoint(edges)
-    return labels.select("doc_id", "cluster_id")
-
-
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds.
-
-    The O(log² n)-round algorithm from "Connected Components in MapReduce
-    and Beyond" (Kiveris et al., SoCC 2014) — the scale path
-    :func:`dedup_clusters`' label propagation alludes to: propagation needs
-    O(diameter) rounds, star contraction collapses long chains
-    exponentially, which is what survives a 100 TB graph with stringy
-    components. Per round each node attaches its neighborhood to the
-    neighborhood minimum (large-star: strictly-larger neighbors;
-    small-star: smaller-or-equal ones), each round one groupBy + one join
-    keyed on the node — same shuffle shape as a propagation round, far
-    fewer rounds. Converges to per-component stars centered at the
-    component minimum, so the output (doc_id → component-min label) is
-    bit-identical to label propagation and shares its oracle.
-
-    r14: the contraction loop is factored into :func:`star_components`
-    so any pair family (MinHash text pairs here, perceptual-hash image
-    pairs in operators/multimodal.py) clusters through one engine.
+    candidate pair gets the minimum doc_id reachable through the pair
+    graph. Spark side: :func:`star_components` over the persisted band
+    pairs. Oracle side: a recursive CTE computing the same transitive
+    closure. Registered twice, as ``dedup_clusters`` and
+    ``dedup_clusters_star``, with one oracle.
     """
     pairs = scoped_persist(_band_pairs(_signatures(spark, sf_dir)))
     return star_components(
@@ -508,10 +437,31 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+dedup_clusters_star = dedup_clusters
+
+
 def star_components(pair_edges: DataFrame) -> DataFrame:
     """(doc_id, cluster_id=component min) for an undirected edge frame
-    ``(u, v)`` — the Kiveris et al. star-contraction engine behind
-    :func:`dedup_clusters_star`, reusable by any near-dup pair family."""
+    ``(u, v)``: the one connected-components kernel, used by MinHash text
+    pairs (:func:`dedup_clusters`) and perceptual-hash image pairs
+    (operators/multimodal.py) alike.
+
+    Alternating large-star / small-star rounds, the O(log² n)-round
+    algorithm from "Connected Components in MapReduce and Beyond"
+    (Kiveris et al., SoCC 2014): per round each node attaches its
+    neighborhood to the neighborhood minimum (large-star: strictly-larger
+    neighbors; small-star: smaller-or-equal ones), one groupBy + one join
+    keyed on the node. Label propagation needs O(diameter) rounds; star
+    contraction collapses long chains exponentially, which is what
+    survives a 100 TB graph with stringy components. Converges to
+    per-component stars centered at the component minimum.
+
+    Iteration discipline: every round ``localCheckpoint``\\ s its edges, so
+    the physical plan stays one ``LogicalRDD`` scan deep instead of
+    growing with the round count, then frees the superseded round's
+    blocks. A graph that does not converge in ``CLUSTER_MAX_ITERS``
+    rounds raises instead of returning half-contracted labels.
+    """
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -557,13 +507,12 @@ def star_components(pair_edges: DataFrame) -> DataFrame:
     # handful of shuffle stages + one checkpoint job, so on a small edge
     # set the loop is pure scheduling overhead (measured 4.4-9.4 s for a
     # 2,866-edge graph at sf0.1 — vs ~0.1 s of actual union-find work).
-    # Below the bound the edges come to the driver ONCE (≤ ~16 MB at the
-    # 2^20 default — the same order as broadcast relations already used)
+    # Below the bound the edges come to the driver ONCE (≤ ~16 MB at
+    # 2^20 edges — the same order as broadcast relations already used)
     # and path-compressed union-find produces the identical
     # component-minimum labeling; past it the distributed contraction
-    # runs exactly as before. The bound is conf-able for deployments
-    # (SPARK_GRAFT_LOCAL_CC_MAX_EDGES); correctness is pinned by the
-    # union-find pytest twins and the recursive-CTE oracles either way.
+    # runs exactly as before. Correctness is pinned by the union-find
+    # pytest twins and the recursive-CTE oracles either way.
     if n_edges <= LOCAL_CC_MAX_EDGES:
         parent: dict[int, int] = {}
 
@@ -729,9 +678,6 @@ def dedup_batch_against_bands(
     )
 
 
-MAX_PROBE_KEYS = 100_000  # past this, point-set pruning buys nothing
-
-
 def dedup_batch_against_stats_index(
     spark: SparkSession, batch_docs: DataFrame, tbl
 ) -> DataFrame:
@@ -740,29 +686,15 @@ def dedup_batch_against_stats_index(
     The stats-aware point-lookup path: the batch's band hashes are a
     bounded probe-key set (32 per doc); with the index compacted into a
     ``band_hash``-sorted layout (``compact(zorder_cols=["band_hash"])``,
-    stats in the manifest), :meth:`ManifestTable.files_pruned_in` keeps
+    stats in the manifest), :meth:`ManifestTable.read_probed` keeps
     only files whose [min, max] hash range contains a probe key — the
-    point-lookup half of Delta-style data skipping. Results are identical
-    to probing the full snapshot (file-granularity superset guarantee,
+    point-lookup half of Delta-style data skipping — and reads the full
+    snapshot past ``MAX_PROBE_KEYS`` keys. Results are identical to
+    probing the full snapshot (file-granularity superset guarantee,
     proven in tests/test_data_skipping.py); only scan volume changes.
-
-    Falls back to the full snapshot read past ``MAX_PROBE_KEYS`` probe
-    hashes — a batch that large touches essentially every file of any
-    real index, so the metadata pass would be pure overhead.
     """
     new_bands = scoped_persist(bands_of_docs(batch_docs))
-    # one bounded driver job (r15, guide §5): the former count() + collect
-    # pair charged two full passes for one probe-key set; limit(K+1) caps
-    # driver memory and the length test replaces the count
-    probe_rows = (
-        new_bands.select("band_hash").distinct().limit(MAX_PROBE_KEYS + 1).collect()
-    )
-    if len(probe_rows) <= MAX_PROBE_KEYS:
-        old = tbl.read_pruned_in(
-            spark, "band_hash", [r["band_hash"] for r in probe_rows]
-        )
-    else:
-        old = tbl.read(spark)
+    old = tbl.read_probed(spark, "band_hash", new_bands)
     return dedup_batch_against_bands(batch_docs, old, batch_bands=new_bands)
 
 
@@ -1025,6 +957,24 @@ SUBSTR_K = 8  # detection granularity: K-token shingles
 SUBSTR_MIN_TOKENS = 15  # report merged spans at least this many tokens long
 
 
+def token_grams(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos, g) K-token gram digests of a (doc_id, text) frame.
+
+    ``g`` is the md5 of each ``SUBSTR_K``-token shingle (a fixed 32-byte
+    key instead of the ~50-byte gram text) and ``pos`` its 0-based token
+    start. The one recipe behind in-flight substring dedup, the served
+    gram-frequency index and the pipeline's rejected-gram member, so
+    their digests agree bit-for-bit.
+    """
+    toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
+    return toks.select(
+        "doc_id",
+        F.posexplode(shingles_of(F.col("toks"), SUBSTR_K)).alias("pos", "gram"),
+    ).select(
+        "doc_id", F.col("pos").cast("long").alias("pos"), F.md5("gram").alias("g")
+    )
+
+
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal duplicated token spans (≥ ``SUBSTR_MIN_TOKENS``) per document.
 
@@ -1066,18 +1016,7 @@ def substring_spans(
     reuses an already-built (doc_id, pos, g) frame (the batch-probe path
     computes it anyway).
     """
-    if gram_rows is None:
-        toks = docs.select("doc_id", tokens(F.col("text")).alias("toks"))
-        from ..functions.text import shingles_of
-
-        grams = toks.select(
-            "doc_id",
-            F.posexplode(shingles_of(F.col("toks"), SUBSTR_K)).alias("pos", "gram"),
-        ).select(
-            "doc_id", F.col("pos").cast("long").alias("pos"), F.md5("gram").alias("g")
-        )
-    else:
-        grams = gram_rows
+    grams = token_grams(docs) if gram_rows is None else gram_rows
     if dup_grams is None:
         grams = scoped_persist(grams)
         dup = grams.groupBy("g").agg(F.count("*").alias("n")).filter(F.col("n") >= 2)
@@ -1278,17 +1217,6 @@ def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matrix; 2M 64-dim float64 rows ≈ 1 GB — beyond that the guard points at
 # the distributed variant instead of letting the driver OOM mid-job.
 EMBED_EXACT_MAX_ROWS = 2_000_000
-
-
-def _duck_round6(x):
-    """DuckDB ``round(x, 6)`` (half-away on x*1e6), vectorized.
-
-    Verified element-identical to DuckDB over 200k random doubles; numpy's
-    own ``np.round`` is half-even and disagrees on boundary values.
-    """
-    import numpy as np
-
-    return np.trunc(x * 1e6 + np.copysign(0.5, x)) / 1e6
 
 
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1919,56 +1847,55 @@ ORACLES["dedup_minhash_fast"] = _MINHASH_CTES + f"""
 CONTAIN_MIN_CHARS = 64
 
 
-def dedup_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT cross-document containment: doc_a's full text occurs verbatim
-    inside doc_b. Generalizes :func:`dedup_containment` (3-gram Jaccard
-    containment over LSH candidates — approximate, fixed-K resolution) to
-    arbitrary-length exact substring semantics.
+def anchor_grams(docs: DataFrame, width: int) -> DataFrame:
+    """(h, doc_id, pos) rows of a (doc_id, text) frame: ``xxhash64`` of
+    every ``width``-char window with its 1-based offset — the rolling scan
+    of a suffix-structure build, kept as codegen'd expressions.
 
-    Spark-first plan — candidates from anchor-gram hashing, NEVER all-pairs
-    (a distributed suffix array answers the same membership query; the
-    anchor form is the shape that maps onto Catalyst joins):
-
-    1. **Anchor**: each eligible doc (len ≥ CONTAIN_MIN_CHARS) is keyed by
-       ``xxhash64`` of its FIRST ``CONTAIN_MIN_CHARS`` chars. One row/doc.
-    2. **Gram scan**: every doc emits the hash of each
-       ``CONTAIN_MIN_CHARS``-gram with its offset — the rolling scan of a
-       suffix-structure build, kept as codegen'd expressions. If a occurs
-       in b at offset p, b's gram at p hashes equal to a's anchor, so the
-       hash equijoin yields every true occurrence (completeness); the
-       shuffle carries (hash, doc, pos) — O(corpus chars) like
-       `dedup_substring`, and Spark's runtime bloom filter on the anchor
-       side prunes non-candidate grams before the exchange.
-    3. **Offset-exact verify**: for each candidate (a, b, pos), check
-       ``substr(b.text, pos, len_a) = a.text`` — no scan, no false
-       positives from hash collisions. First occurrence = min(pos),
-       matching the oracle's ``strpos``.
-
-    At 100 TB: stages are one corpus scan + one hash-keyed shuffle + one
-    candidate-only text join; the quadratic verify of the shingle variant
-    is replaced by O(1)-per-candidate offset comparison.
+    Docs shorter than ``width`` emit nothing: ``sequence(1, 0)`` is the
+    DESCENDING [1, 0] in Spark, so without the length filter every short
+    doc would emit two spurious prefix-hash rows.
     """
-    A = CONTAIN_MIN_CHARS
-    docs = load_documents_parallel(spark, sf_dir, full_width=True).select("doc_id", "text")
-    anchors = docs.filter(F.length("text") >= A).select(
+    return (
+        docs.filter(F.length("text") >= width)
+        .select(
+            F.col("doc_id"),
+            F.posexplode(
+                F.expr(
+                    f"transform(sequence(1, length(text) - {width} + 1),"
+                    f" i -> xxhash64(substr(text, i, {width})))"
+                )
+            ).alias("pos0", "h"),
+        )
+        .select("h", "doc_id", (F.col("pos0") + 1).alias("pos"))
+    )
+
+
+def containment_pairs(docs: DataFrame, grams: DataFrame, width: int) -> DataFrame:
+    """(doc_a, doc_b, len_a, first_pos): docs at least
+    ``CONTAIN_MIN_CHARS`` long whose full text occurs verbatim inside
+    another doc, from an :func:`anchor_grams` frame of ``width``-char
+    windows over the same corpus.
+
+    Each eligible doc is keyed by the hash of its first ``width`` chars.
+    If doc_a occurs in doc_b at offset p, doc_b's window at p hashes
+    equal to doc_a's anchor, so the hash equijoin yields every true
+    occurrence (completeness); Spark's runtime bloom filter on the
+    anchor side prunes non-candidate grams before the exchange. Each
+    candidate is then verified offset-exact,
+    ``substr(b.text, pos, len_a) = a.text`` — O(1) per candidate, no
+    false positives from hash collisions. First occurrence = min(pos),
+    matching the oracle's ``strpos``.
+    """
+    anchors = docs.filter(F.length("text") >= CONTAIN_MIN_CHARS).select(
         F.col("doc_id").alias("doc_a"),
         F.col("text").alias("ta"),
         F.length("text").alias("len_a"),
-        F.xxhash64(F.substring("text", 1, A)).alias("h"),
+        F.xxhash64(F.substring("text", 1, width)).alias("h"),
     )
-    # docs shorter than A can't contain an eligible doc_a, and sequence(1,0)
-    # is the DESCENDING [1, 0] in Spark — without the length filter every
-    # short doc would emit two spurious prefix-hash rows (r8 advice)
-    grams = docs.filter(F.length("text") >= A).select(
-        F.col("doc_id").alias("doc_b"),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, length(text) - {A} + 1),"
-                f" i -> xxhash64(substr(text, i, {A})))"
-            )
-        ).alias("pos0", "h"),
-    ).select("doc_b", (F.col("pos0") + 1).alias("pos"), "h")
-    cand = anchors.join(grams, "h").filter(F.col("doc_a") != F.col("doc_b"))
+    cand = anchors.join(
+        grams.select(F.col("doc_id").alias("doc_b"), "pos", "h"), "h"
+    ).filter(F.col("doc_a") != F.col("doc_b"))
     tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("tb"))
     verified = (
         cand.join(tb, "doc_b")
@@ -1979,6 +1906,31 @@ def dedup_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified.select(
         "doc_a", "doc_b", F.col("len_a").cast("long").alias("len_a"),
         F.col("first_pos").cast("long").alias("first_pos"),
+    )
+
+
+def dedup_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT cross-document containment: doc_a's full text occurs verbatim
+    inside doc_b. Generalizes :func:`dedup_containment` (3-gram Jaccard
+    containment over LSH candidates — approximate, fixed-K resolution) to
+    arbitrary-length exact substring semantics.
+
+    Spark-first plan — candidates from anchor-gram hashing, NEVER all-pairs
+    (a distributed suffix array answers the same membership query; the
+    anchor form is the shape that maps onto Catalyst joins): every
+    ``CONTAIN_MIN_CHARS``-char window of every doc is hashed in flight
+    (:func:`anchor_grams`) and :func:`containment_pairs` joins each
+    eligible doc's anchor against them and verifies offset-exact. The
+    shuffle carries (hash, doc, pos) — O(corpus chars) like
+    :func:`dedup_substring`.
+
+    At 100 TB: stages are one corpus scan + one hash-keyed shuffle + one
+    candidate-only text join; the quadratic verify of the shingle variant
+    is replaced by O(1)-per-candidate offset comparison.
+    """
+    docs = load_documents_parallel(spark, sf_dir, full_width=True).select("doc_id", "text")
+    return containment_pairs(
+        docs, anchor_grams(docs, CONTAIN_MIN_CHARS), CONTAIN_MIN_CHARS
     )
 
 
@@ -2028,32 +1980,10 @@ def dedup_containment_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.manifest_table import ManifestTable
     from ..sources.substring_index import ANCHOR_W
 
-    A = CONTAIN_MIN_CHARS
     root = _anchor_index_path(spark, sf_dir)
-    grams = (
-        ManifestTable(root, stats_cols=["h"])
-        .read(spark)
-        .select(F.col("doc_id").alias("doc_b"), "pos", "h")
-    )
+    grams = ManifestTable(root, stats_cols=["h"]).read(spark)
     docs = load_documents_parallel(spark, sf_dir, full_width=True).select("doc_id", "text")
-    anchors = docs.filter(F.length("text") >= A).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("text").alias("ta"),
-        F.length("text").alias("len_a"),
-        F.xxhash64(F.substring("text", 1, ANCHOR_W)).alias("h"),
-    )
-    cand = anchors.join(grams, "h").filter(F.col("doc_a") != F.col("doc_b"))
-    tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("tb"))
-    verified = (
-        cand.join(tb, "doc_b")
-        .filter(F.expr("substr(tb, pos, len_a) = ta"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.max("len_a").alias("len_a"), F.min("pos").alias("first_pos"))
-    )
-    return verified.select(
-        "doc_a", "doc_b", F.col("len_a").cast("long").alias("len_a"),
-        F.col("first_pos").cast("long").alias("first_pos"),
-    )
+    return containment_pairs(docs, grams, ANCHOR_W)
 
 
 # same answer, same oracle — the serve twin must hash identically

@@ -23,7 +23,7 @@ import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table, spread_partitions
@@ -746,6 +746,12 @@ def bands_of_hashes(hashes: DataFrame) -> DataFrame:
     )
 
 
+def packed_hamming(hi_a: str, lo_a: str, hi_b: str, lo_b: str) -> Column:
+    """Hamming distance of two 64-bit hashes held as the packed BIGINT
+    halves :func:`bands_of_hashes` emits: two XOR popcounts."""
+    return F.expr(f"bit_count({hi_a} ^ {hi_b}) + bit_count({lo_a} ^ {lo_b})")
+
+
 def phash_bands_of(docs: DataFrame) -> DataFrame:
     """(doc_id, chunk, band, dhash) banded dHash table straight from a
     (doc_id, text) frame — encode → decode+hash → band explode, one
@@ -804,7 +810,7 @@ def banded_hamming_pairs(bands: DataFrame, hamming_max: int) -> DataFrame:
     return (
         pairs.withColumn(
             "hamming",
-            F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"),
+            packed_hamming("hi_a", "lo_a", "hi_b", "lo_b"),
         )
         .filter(F.col("hamming") <= hamming_max)
         .select(
@@ -908,13 +914,13 @@ def banded_index_batch_pairs(
 
     The storage-agnostic core under :func:`image_batch_near_dups`: the
     batch's band strings are collected as probe keys and the index is
-    read through point-set file skipping (``files_pruned_in`` on the
-    per-file band [min,max] stats the build records and OPTIMIZE
-    tightens), falling back to the full snapshot past ``MAX_PROBE_KEYS``;
+    read through point-set file skipping (``ManifestTable.read_probed``
+    over the per-file band [min,max] stats the build records and OPTIMIZE
+    tightens, which reads the full snapshot past ``MAX_PROBE_KEYS``);
     then band-equijoin + packed-popcount Hamming verify. Cost scales with
     the BATCH — the standing corpus is never re-hashed."""
+    from ..functions.caching import scoped_persist
     from ..sources.manifest_table import ManifestTable
-    from .dedup import MAX_PROBE_KEYS, scoped_persist
 
     tbl = ManifestTable(root, stats_cols=["band"])
     nb = scoped_persist(
@@ -926,16 +932,7 @@ def banded_index_batch_pairs(
             F.col("dh_lo").alias("lo_b"),
         )
     )
-    # one bounded driver job (r15): limit(K+1) both replaces the count()
-    # gate and caps what the driver ever materializes
-    probe_rows = (
-        nb.select("band").distinct().limit(MAX_PROBE_KEYS + 1).collect()
-    )
-    if len(probe_rows) <= MAX_PROBE_KEYS:
-        snap = tbl.read_pruned_in(spark, "band", [r["band"] for r in probe_rows])
-    else:
-        snap = tbl.read(spark)
-    idx = snap.select(
+    idx = tbl.read_probed(spark, "band", nb).select(
         F.col("doc_id").alias("doc_a"),
         "chunk",
         "band",
@@ -951,7 +948,7 @@ def banded_index_batch_pairs(
     return (
         cand.withColumn(
             "hamming",
-            F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)"),
+            packed_hamming("hi_a", "lo_a", "hi_b", "lo_b"),
         )
         .filter(F.col("hamming") <= hamming_max)
         .select(

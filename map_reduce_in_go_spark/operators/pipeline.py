@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_documents_parallel, load_table
 from .dedup import NUM_PERM
 from .dedup import ORACLES as _DEDUP_ORACLES
 from .dedup import dedup_minhash
@@ -100,12 +100,7 @@ def corpus_clean_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_analysis import langid_columns, quality_columns
 
     base = scoped_persist(
-        load_table(spark, sf_dir, "documents")
-        # full width, not the row-adaptive spread: this frame feeds
-        # signatures_of — the md5-per-shingle kernel whose per-row CPU
-        # dwarfs task overhead even on a tiny corpus (the same measured
-        # reason _signatures uses full_width; r16)
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        load_documents_parallel(spark, sf_dir, full_width=True)
         .withColumn("toks", tokens(F.col("text")))
         .filter(F.size("toks") > 0)
     )

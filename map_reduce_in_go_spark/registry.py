@@ -388,6 +388,13 @@ _CHANGED_SINCE_VERIFIED: set[str] = {
     "domain_mix",
     "audio_spectral",
     "dedup_image_phash",
+    # dedup_clusters now runs star contraction (star_components) instead
+    # of its own label-propagation loop; values are pinned by the shared
+    # recursive-CTE oracle, but the plan its last driver rows validated
+    # (and that of the two queries built on it) no longer runs
+    "dedup_clusters",
+    "dedup_keep_representatives",
+    "split_leakage_safe",
 }
 # (r13's events_cube_nav entry cleared: a fresh hash-green r13 driver row
 # landed, validating the widened four-measure-family artifact.)

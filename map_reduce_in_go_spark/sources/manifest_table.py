@@ -43,6 +43,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+# Past this many distinct probe keys point-set pruning buys nothing: a
+# probe set that large touches essentially every file of any real table,
+# and the driver holds every key while it prunes.
+MAX_PROBE_KEYS = 100_000
+
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 _CHECKPOINT_RE = re.compile(r"^checkpoint-v(\d+)\.json$")
 
@@ -325,6 +330,21 @@ class ManifestTable:
         else:
             schema = spark.read.parquet(files[0]).schema
         return spark.read.schema(schema).parquet(*files)
+
+    def read_probed(
+        self, spark: SparkSession, col: str, probes: DataFrame
+    ) -> DataFrame:
+        """Snapshot read for the distinct ``col`` values of ``probes``.
+
+        One bounded driver job collects at most ``MAX_PROBE_KEYS + 1``
+        distinct keys (the length test replaces a count). Up to the cap
+        the read goes through :meth:`read_pruned_in`; past it the metadata
+        pass would be pure overhead, so the full snapshot is read.
+        """
+        rows = probes.select(col).distinct().limit(MAX_PROBE_KEYS + 1).collect()
+        if len(rows) <= MAX_PROBE_KEYS:
+            return self.read_pruned_in(spark, col, [r[0] for r in rows])
+        return self.read(spark)
 
     def read_pruned(
         self,

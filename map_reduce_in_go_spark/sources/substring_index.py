@@ -28,28 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import anchor_grams, token_grams
 from ..sources.manifest_table import ManifestTable
 from ..sources.tables import load_documents_parallel
 
 ANCHOR_W = 32  # anchor width (chars) = minimum matchable pattern length
 INDEX_FILES = 16  # clustered data files per index (the prune granularity)
-
-
-def _gram_rows(docs: DataFrame) -> DataFrame:
-    """(h, doc_id, pos) anchor-gram rows for a (doc_id, text) frame."""
-    return (
-        docs.filter(F.length("text") >= ANCHOR_W)
-        .select(
-            F.col("doc_id"),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, length(text) - {ANCHOR_W} + 1),"
-                    f" i -> xxhash64(substr(text, i, {ANCHOR_W})))"
-                )
-            ).alias("pos0", "h"),
-        )
-        .select("h", "doc_id", (F.col("pos0") + 1).alias("pos"))
-    )
 
 
 def build_substring_index(
@@ -58,7 +42,7 @@ def build_substring_index(
     """Scan the corpus once, persist the anchor-gram index hash-clustered."""
     docs = load_documents_parallel(spark, sf_dir).select("doc_id", "text")
     tbl = ManifestTable(root, stats_cols=["h"])
-    tbl.append(_gram_rows(docs), op="substring-index-build")
+    tbl.append(anchor_grams(docs, ANCHOR_W), op="substring-index-build")
     # hash-clustered rewrite: per-file [min,max] on h become disjoint-ish
     # ranges, so a point probe prunes to O(1) files
     tbl.compact(spark, num_files=num_files, zorder_cols=["h"])
@@ -85,19 +69,10 @@ def build_substring_index(
 
 
 def _token_gram_counts(docs: DataFrame) -> DataFrame:
-    """(g, n) batch gram counts for a (doc_id, text) frame — g is the md5
-    of the K-token shingle text, the exact digest ``substring_spans``
-    joins on (recipe must match bit-for-bit)."""
-    from ..functions.text import shingles_of, tokens
-    from ..operators.dedup import SUBSTR_K
-
-    toks = docs.select(tokens(F.col("text")).alias("toks"))
-    return (
-        toks.select(F.explode(shingles_of(F.col("toks"), SUBSTR_K)).alias("gram"))
-        .select(F.md5("gram").alias("g"))
-        .groupBy("g")
-        .agg(F.count("*").alias("n"))
-    )
+    """(g, n) batch gram counts for a (doc_id, text) frame, keyed by the
+    :func:`~..operators.dedup.token_grams` digest ``substring_spans``
+    joins on."""
+    return token_grams(docs).groupBy("g").agg(F.count("*").alias("n"))
 
 
 def build_gram_index(

@@ -81,15 +81,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pure per-task overhead. Sizing the spread by row count keeps kernels
 # parallel exactly when there is work to parallelize; production layouts
 # with splittable scans never reach this code's fallback anyway.
-SPREAD_ROWS_PER_TASK_DEFAULT = 512
-
-
-def _spread_rows_per_task() -> int:
-    return int(
-        os.environ.get(
-            "SPARK_GRAFT_SPREAD_ROWS_PER_TASK", str(SPREAD_ROWS_PER_TASK_DEFAULT)
-        )
-    )
+SPREAD_ROWS_PER_TASK = 512
 
 
 def _parquet_rows(path: str) -> int | None:
@@ -133,8 +125,8 @@ def spread_partitions(
     rows = _parquet_rows(os.path.join(sf_dir, f"{name}.parquet"))
     if rows is None:
         return p
-    per_task = max(1, _spread_rows_per_task())
-    return max(1, min(p, (rows + per_task - 1) // per_task))
+    tasks = (rows + SPREAD_ROWS_PER_TASK - 1) // SPREAD_ROWS_PER_TASK
+    return max(1, min(p, tasks))
 
 
 def load_documents_parallel(

@@ -13,8 +13,9 @@ repo's existing per-artifact streaming pieces into ONE
   against);
 - ``gram_index``    — their token-K-gram counts (additive rows: the
   served substring-dedup structure, sources/substring_index.py);
-- ``token_cms``     — one Count-Min sketch row (streaming/heavy.py's
-  mergeable rollup: exact trending tokens over everything accepted);
+- ``token_cms``     — one Count-Min sketch row (operators/approx.py's
+  mergeable ``cms_sketch``: exact trending tokens over everything
+  accepted);
 - ``token_counts``  — per-batch additive ``(word, n)`` rows (r11 (a)):
   the EXACT token-frequency view, vocabulary-sized and distributed, so
   steady-state trending is a pure member filter with ZERO corpus
@@ -57,8 +58,10 @@ from ..functions.caching import (
     persisted_count,
     release_persisted_since,
 )
-from ..operators.dedup import bands_of_docs, dedup_batch_against_bands
+from ..operators.approx import cms_fold, cms_sketch
+from ..operators.dedup import bands_of_docs, dedup_batch_against_bands, token_grams
 from ..sources.catalog import CommitConflict, TableCatalog
+from ..sources.manifest_table import MAX_PROBE_KEYS
 
 CORPUS = "corpus"
 BANDS = "band_index"
@@ -226,6 +229,7 @@ def _media_gate_screen(
     from pyspark.sql import functions as F
 
     from ..functions.caching import scoped_persist
+    from ..operators.multimodal import packed_hamming
 
     batch_mb = scoped_persist(
         bands_of_fn(src_df).join(band_surv, "doc_id", "left_semi")
@@ -250,7 +254,7 @@ def _media_gate_screen(
             backfill = scoped_persist(bands_of_fn(missing))
             cols = ["doc_id", "chunk", "band", "dh_hi", "dh_lo"]
             old_mb = old_mb.select(*cols).unionByName(backfill.select(*cols))
-    ham = F.expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)")
+    ham = packed_hamming("hi_a", "lo_a", "hi_b", "lo_b")
     drop_old = (
         batch_mb.select(
             "doc_id", "chunk", "band",
@@ -277,9 +281,7 @@ def _media_gate_screen(
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .filter(
-            F.expr(
-                "bit_count(a.dh_hi ^ b.dh_hi) + bit_count(a.dh_lo ^ b.dh_lo)"
-            )
+            packed_hamming("a.dh_hi", "a.dh_lo", "b.dh_hi", "b.dh_lo")
             <= hamming_max
         )
         .select(F.col("b.doc_id").alias("doc_id"))
@@ -340,24 +342,14 @@ class NothingToRetract(ValueError):
     genuine argument errors without string-matching an error message."""
 
 
-def _gram_rows_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, g) gram rows — the same shingle/digest recipe as
-    `substring_spans`'s in-flight path (operators/dedup.py)."""
+def _words(docs: DataFrame) -> DataFrame:
+    """One-column ``word`` frame of the documents' tokens — the input of
+    the token-count rows and the Count-Min sketch rows."""
     from pyspark.sql import functions as F
 
-    from ..functions.text import shingles_of, tokens
-    from ..operators.dedup import SUBSTR_K
+    from ..functions.text import tokens
 
-    return docs.select(
-        "doc_id",
-        F.posexplode(shingles_of(tokens(F.col("text")), SUBSTR_K)).alias(
-            "pos", "gram"
-        ),
-    ).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.md5("gram").alias("g"),
-    )
+    return docs.select(F.explode(tokens(F.col("text"))).alias("word"))
 
 
 def _token_count_rows(kept: DataFrame) -> DataFrame:
@@ -370,13 +362,7 @@ def _token_count_rows(kept: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from ..functions.text import tokens
-
-    return (
-        kept.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
+    return _words(kept).groupBy("word").agg(F.count("*").alias("n"))
 
 
 def corpus_batch_txn(
@@ -470,7 +456,6 @@ def corpus_batch_txn(
     from ..functions.text import tokens
     from ..operators.pq_index import PqIvfIndex
     from ..sources.substring_index import _token_gram_counts
-    from .heavy import _batch_sketch
     from .quantiles import summaries_for
 
     # sticky per-catalog arming: an armed catalog gates EVERY batch at
@@ -629,7 +614,7 @@ def corpus_batch_txn(
                 )
 
             def _cms():
-                total, agg = _batch_sketch(kept)
+                total, agg = cms_sketch(_words(kept))
                 txn.append(
                     CMS,
                     spark.createDataFrame(
@@ -652,7 +637,7 @@ def corpus_batch_txn(
 
             def _rejects():
                 txn.append(
-                    REJECTS, _gram_rows_of(rejected), op=op, stats_cols=["doc_id"]
+                    REJECTS, token_grams(rejected), op=op, stats_cols=["doc_id"]
                 )
 
             def _quar():
@@ -738,8 +723,7 @@ def corpus_batch_txn(
 
 
 # past this many affected ids, per-file [min,max] pruning buys nothing
-# (same bound + rationale as operators/dedup.py MAX_PROBE_KEYS)
-MERGE_MAX_IDS = 100_000
+MERGE_MAX_IDS = MAX_PROBE_KEYS
 
 
 def _touched_cells(
@@ -902,7 +886,6 @@ def retract_docs(
 
     from ..functions.text import tokens
     from ..sources.substring_index import _token_gram_counts
-    from .heavy import _batch_sketch
     from .quantiles import summaries_for
 
     if mode not in ("cow", "mor"):
@@ -1070,7 +1053,7 @@ def retract_docs(
                     "word", (-F.col("n")).alias("n")
                 )
                 txn.append(TOKENS, neg_tok, op=op, stats_cols=["word"])
-            total, agg = _batch_sketch(gone)
+            total, agg = cms_sketch(_words(gone))
             txn.append(
                 CMS,
                 spark.createDataFrame(
@@ -1288,7 +1271,6 @@ def update_docs(
     from ..functions.text import tokens
     from ..operators.pq_index import PqIvfIndex
     from ..sources.substring_index import _token_gram_counts
-    from .heavy import _batch_sketch
     from .quantiles import summaries_for
 
     if op in cat.committed_ops():
@@ -1464,8 +1446,8 @@ def update_docs(
                     op=op,
                     stats_cols=["word"],
                 )
-            old_total, old_agg = _batch_sketch(gone)
-            new_total, new_agg = _batch_sketch(kept)
+            old_total, old_agg = cms_sketch(_words(gone))
+            new_total, new_agg = cms_sketch(_words(kept))
             txn.append(
                 CMS,
                 spark.createDataFrame(
@@ -1527,7 +1509,7 @@ def update_docs(
                 _rm(REJECTS, ["doc_id"])
                 txn.append(
                     REJECTS,
-                    _gram_rows_of(rejected),
+                    token_grams(rejected),
                     op=op,
                     stats_cols=["doc_id"],
                 )
@@ -1632,8 +1614,6 @@ def compact_pipeline(
     _txn`` conflicts on the catalog CAS and one side re-plans (the same
     refold-on-conflict discipline as the standalone sketch compactors).
     """
-    import numpy as np
-
     from pyspark.sql import functions as F
 
     from ..sources.layout import zorder_layout
@@ -1726,13 +1706,9 @@ def compact_pipeline(
                 ),
                 stats_cols=["op", "doc_id"],
             )
-        cms_rows = txn.read(CMS).collect()
+        cms_rows = txn.read(CMS).select("n", "sketch").collect()
         if cms_rows:
-            total = int(sum(r["n"] for r in cms_rows))
-            agg = np.sum(
-                [np.asarray(r["sketch"], dtype=np.int64) for r in cms_rows],
-                axis=0,
-            )
+            total, agg = cms_fold(cms_rows)
             txn.overwrite(
                 CMS,
                 spark.createDataFrame(

@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.approx import CMS_D, CMS_W, HH_K
+from ..operators.approx import HH_K, cms_fold, cms_heavy_hitters
 from ..operators.dedup import (
     _MINHASH_CTES,
     SUBSTR_K,
@@ -60,6 +60,7 @@ from .corpus_pipeline import (
     QUAR,
     REJECTS,
     TOKENS,
+    _words,
     corpus_batch_txn,
     member,
 )
@@ -98,19 +99,11 @@ def _trending_from_cms(
     """CMS screen + exact corpus recount: the ``heavy_hitters_cms`` plan
     served from a pipeline catalog's at-rest state (one bounded driver
     fold of ~128 KB sketch rows, one corpus-member scan)."""
-    import numpy as np
-
-    from .heavy import trending_from_state
-
-    rows = member(spark, cat, CMS).collect()
-    total = int(sum(r["n"] for r in rows))
-    agg = np.zeros(CMS_D * CMS_W, dtype=np.int64)
-    for r in rows:
-        agg += np.asarray(r["sketch"], dtype=np.int64)
+    total, cms = cms_fold(member(spark, cat, CMS).select("n", "sketch").collect())
     corpus = member(spark, cat, CORPUS).repartition(
         spread_partitions(spark, sf_dir, "documents")
     )
-    return trending_from_state(spark, total, agg.reshape(CMS_D, CMS_W), corpus)
+    return cms_heavy_hitters(spark, _words(corpus), total, cms)
 
 
 def pipeline_trending(spark: SparkSession, sf_dir: str) -> DataFrame:

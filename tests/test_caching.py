@@ -1,5 +1,5 @@
-"""Persist hygiene: scoped caches release cleanly, and the iterative
-connected-components loop keeps a bounded physical plan (localCheckpoint
+"""Persist hygiene: scoped caches release cleanly, and the distributed
+connected-components rounds keep a bounded physical plan (localCheckpoint
 per round) instead of geometric lineage growth."""
 
 from __future__ import annotations
@@ -23,17 +23,19 @@ def test_release_persisted_clears_scoped_caches(spark, sf_dir):
     assert n_persistent_rdds(spark) == base  # and all of them came back
 
 
-def test_dedup_clusters_plan_is_bounded_and_blocks_freed(spark, sf_dir):
+def test_dedup_clusters_plan_is_bounded_and_blocks_freed(spark, sf_dir, monkeypatch):
+    # force star_components onto its distributed contraction rounds
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
     release_persisted()
     base = n_persistent_rdds(spark)
     labels = dedup.dedup_clusters(spark, sf_dir)
     # the returned frame reads one checkpointed RDD — lineage does not grow
-    # with iteration count (round-1 plan dump was ~20k lines; this is ~10)
+    # with the round count
     plan = labels._jdf.queryExecution().toString()
     assert "LogicalRDD" in plan or "Scan ExistingRDD" in plan
     assert len(plan) < 4000, len(plan)
     assert labels.count() > 0
     release_persisted()
     # everything except the single result checkpoint is freed: superseded
-    # label rounds and the edge table were unpersisted inside the loop
+    # edge rounds were unpersisted inside the loop
     assert n_persistent_rdds(spark) <= base + 1

@@ -109,13 +109,13 @@ def test_cross_artifact_consistency(spark, sf_dir, tmp_path):
 
     # rejection report: the stored (doc_id, pos, g) rows equal a fresh
     # recompute over exactly the docs the pipeline dropped
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import _gram_rows_of
+    from map_reduce_in_go_spark.operators.dedup import token_grams
 
     dropped = docs.filter(~F.col("doc_id").isin(list(accepted)))
     stored_rej = {
         tuple(r) for r in member(spark, cat, REJECTS).collect()
     }
-    recomputed_rej = {tuple(r) for r in _gram_rows_of(dropped).collect()}
+    recomputed_rej = {tuple(r) for r in token_grams(dropped).collect()}
     assert stored_rej == recomputed_rej and stored_rej
 
     # a batch that is a pure replay of CONTENT (new ids, same texts)

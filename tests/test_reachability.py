@@ -1,15 +1,20 @@
-"""Every top-level def/class in the package is reachable from a real entry
-point: the CLI, the registry, ``__spark_entry__``, the benchmarks or the
-tools. The walk is name-based over ``ast`` (no imports, no Spark): a
-reached definition makes every name it mentions reachable. Docstrings
-do not count as mentions; other string literals do, so a name built
-from a string stays live. Names listed in ``__all__`` and bare imports
-are not callers."""
+"""Two ``ast``-only guards over the package source (no imports, no Spark).
+
+Reachability: every top-level def/class in the package is reachable from
+a real entry point: the CLI, the registry, ``__spark_entry__``, the
+benchmarks or the tools. The walk is name-based: a reached definition
+makes every name it mentions reachable. Docstrings do not count as
+mentions; other string literals do, so a name built from a string stays
+live. Names listed in ``__all__`` and bare imports are not callers.
+
+One kernel per computation: no two function bodies in the package,
+nested functions included, are verbatim copies of each other."""
 
 from __future__ import annotations
 
 import ast
 import re
+from collections import defaultdict
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -93,3 +98,39 @@ def unreached() -> set[str]:
 
 def test_only_allowlisted_definitions_are_unreached():
     assert unreached() == set(ALLOWED_UNREACHED)
+
+
+# Bodies smaller than this are idioms (a one-line delegation, a guard),
+# not copied kernels.
+MIN_COPY_NODES = 25
+
+
+def _functions(node: ast.AST, prefix: str):
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, _DEFS):
+            name = f"{prefix}{child.name}"
+            if not isinstance(child, ast.ClassDef):
+                yield name, child
+            yield from _functions(child, f"{name}.")
+        else:
+            yield from _functions(child, prefix)
+
+
+def verbatim_copies() -> list[list[str]]:
+    """Groups of package functions whose bodies, docstring stripped, dump
+    to the same ``ast`` (names, literals and structure all equal)."""
+    by_body: dict[str, list[str]] = defaultdict(list)
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for name, fn in _functions(ast.parse(path.read_text()), ""):
+            body = fn.body
+            if ast.get_docstring(fn, clean=False) is not None:
+                body = body[1:]
+            if sum(1 for st in body for _ in ast.walk(st)) >= MIN_COPY_NODES:
+                dump = ast.dump(ast.Module(body=body, type_ignores=[]))
+                by_body[dump].append(f"{rel}::{name}")
+    return sorted(names for names in by_body.values() if len(names) > 1)
+
+
+def test_no_function_body_is_a_verbatim_copy():
+    assert verbatim_copies() == []

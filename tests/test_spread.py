@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 
+from map_reduce_in_go_spark.sources import tables
 from map_reduce_in_go_spark.sources.tables import (
     _parquet_rows,
     load_documents_parallel,
@@ -39,13 +40,13 @@ def test_spread_is_row_bounded_and_capped(spark, monkeypatch):
     p = spark.sparkContext.defaultParallelism
     rows = _parquet_rows(os.path.join(SF_DIR, "documents.parquet"))
     # tiny target -> every row its own task, capped at parallelism
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_ROWS_PER_TASK", "1")
+    monkeypatch.setattr(tables, "SPREAD_ROWS_PER_TASK", 1)
     assert spread_partitions(spark, SF_DIR, "documents") == min(p, rows)
     # huge target -> one partition, never zero
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_ROWS_PER_TASK", str(10 * rows))
+    monkeypatch.setattr(tables, "SPREAD_ROWS_PER_TASK", 10 * rows)
     assert spread_partitions(spark, SF_DIR, "documents") == 1
     # ceil division: rows-1 per task needs 2 tasks
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_ROWS_PER_TASK", str(rows - 1))
+    monkeypatch.setattr(tables, "SPREAD_ROWS_PER_TASK", rows - 1)
     assert spread_partitions(spark, SF_DIR, "documents") == min(p, 2)
 
 
