@@ -146,7 +146,8 @@ def main(argv: list[str] | None = None) -> int:
 
     owned = SparkSession.getActiveSession() is None
     spark = get_spark("mr-cli", cpus=args.workers, master=args.master)
-    spark.sparkContext.setLogLevel("WARN")
+    if owned:  # a joined session keeps its caller's log level
+        spark.sparkContext.setLogLevel("WARN")
     install_signal_handlers(spark, owned)
 
     if args.run_query:

@@ -299,8 +299,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------- ngram jaccard
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard over 3-gram shingle sets for the MinHash candidates."""
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) for each MinHash candidate pair:
+    the shared 3-gram shingle count and each side's set size, from one
+    equijoin on (pair, shingle)."""
     docs = load_documents_parallel(spark, sf_dir)
     # the shingle-set frame is referenced four times below (both join
     # sides + both size attaches); without a persist each reference
@@ -327,13 +329,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
         .join(na, "doc_a")
         .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
-            ).alias("jaccard"),
-        )
+        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b")
+    )
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact Jaccard over 3-gram shingle sets for the MinHash candidates."""
+    return _shingle_overlap(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        F.round(
+            F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6
+        ).alias("jaccard"),
     )
 
 
@@ -375,38 +382,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     it from either side. Same intersect machinery as the Jaccard verifier —
     one equijoin on (pair, shingle), integer counts, two exact divisions.
     """
-    docs = load_documents_parallel(spark, sf_dir)
-    # the shingle-set frame is referenced four times below (both join
-    # sides + both size attaches); without a persist each reference
-    # re-scans the corpus and re-pays the explode + distinct exchange —
-    # 4 corpus passes for one query (r15, guide §5: reuse > recompute)
-    shd = scoped_persist(
-        docs.select("doc_id", F.explode(shingles(F.col("text"), SHINGLE_N)).alias("sh"))
-        .distinct()
-    )
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    pairs = scoped_persist(_band_pairs(_signatures(spark, sf_dir)))
-    sa = shd.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = shd.select(F.col("doc_id").alias("doc_b2"), F.col("sh").alias("sh_b"))
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, (F.col("doc_b") == F.col("doc_b2")) & (F.col("sh_a") == F.col("sh_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("n_inter") / F.col("n_a"), 6).alias("containment_a"),
-            F.round(F.col("n_inter") / F.col("n_b"), 6).alias("containment_b"),
-        )
+    return _shingle_overlap(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        F.round(F.col("n_inter") / F.col("n_a"), 6).alias("containment_a"),
+        F.round(F.col("n_inter") / F.col("n_b"), 6).alias("containment_b"),
     )
 
 

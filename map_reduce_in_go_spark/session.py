@@ -14,8 +14,11 @@ coalescing + skew join splitting, left unset here), Arrow for every Python
 exchange, broadcast threshold sized for dimension tables, shuffle partitions
 overridable per deployment. Cluster masters get dynamic allocation. A local
 master's driver JVM is instead sized for one short job: two JIT compiler
-threads and the serial collector, because a local driver is a short-lived
-process whose fixed cost is compile threads and G1's footprint.
+threads, the serial collector, and C2 held back until a method has been
+called ten times more often than HotSpot's default asks. A local driver is a
+short-lived process whose fixed cost is compile threads and G1's footprint,
+and most of what C2 compiled during session set-up (jar lookup, Scala
+reflection, conf parsing) is hot for a moment and then never runs again.
 """
 
 from __future__ import annotations
@@ -47,16 +50,33 @@ def dynamic_allocation_or_local_jvm_conf(
 
     Local masters: a local driver is a short-lived process (one batch job,
     then exit) whose fixed cost is compile threads and G1's footprint, so
-    it gets two JIT compiler threads and the serial collector. They go in
-    ``spark.driver.defaultJavaOptions``, which the launcher puts before
-    ``extraJavaOptions``: HotSpot takes a repeated flag's last value, so a
-    caller's own options win, and a caller that picks a collector keeps
-    only the compiler cap.
+    it gets two JIT compiler threads and the serial collector. C2 is held
+    back: a method goes to tier 4 after 50,000 calls (150,000 calls plus
+    loop iterations) instead of 5,000 (15,000), so the set-up code that is
+    hot for a moment stays in C1, while per-row kernels on real inputs pass
+    50,000 calls within milliseconds and still get C2. The
+    minimum-invocation (600) and back-edge (40000) thresholds keep their
+    defaults, so a method with a hot loop and on-stack replacement reach C2
+    as early as before.
+
+    The flags go in ``spark.driver.defaultJavaOptions``, which the launcher
+    puts before ``extraJavaOptions``: HotSpot takes a repeated flag's last
+    value, so a caller's own options win. A caller that picks a collector,
+    in ``extraJavaOptions`` or through ``JAVA_TOOL_OPTIONS`` or
+    ``JDK_JAVA_OPTIONS``, keeps only the compiler flags.
     Unit-tested in tests/test_cli.py without needing a cluster.
     """
     if master.startswith("local"):
-        flags = ["-XX:CICompilerCount=2"]
-        caller = (extra_conf or {}).get("spark.driver.extraJavaOptions", "")
+        flags = [
+            "-XX:CICompilerCount=2",
+            "-XX:Tier4InvocationThreshold=50000",  # JDK 17 default 5000
+            "-XX:Tier4CompileThreshold=150000",  # JDK 17 default 15000
+        ]
+        caller = " ".join([
+            (extra_conf or {}).get("spark.driver.extraJavaOptions", ""),
+            os.environ.get("JAVA_TOOL_OPTIONS", ""),
+            os.environ.get("JDK_JAVA_OPTIONS", ""),
+        ])
         if not _GC_SELECTOR.search(caller):
             flags.append("-XX:+UseSerialGC")
         return {"spark.driver.defaultJavaOptions": " ".join(flags)}

@@ -164,21 +164,31 @@ def test_cli_signal_handler_drains_and_exits(spark):
             signal.signal(s, h)
 
 
-def test_dynamic_allocation_gated_to_cluster_masters(spark):
+def test_dynamic_allocation_gated_to_cluster_masters(spark, monkeypatch):
     """Reference dynamic-worker-pool parity: the dynamicAllocation block
-    is populated for cluster URLs only; a local master gets the two
-    driver-JVM flags instead, minus the collector when the caller picks
-    one. The live session's driver JVM must carry them."""
+    is populated for cluster URLs only; a local master gets the driver-JVM
+    flags instead, minus the collector when the caller picks one (in
+    extraJavaOptions or through the JVM's option env vars). The live
+    session's driver JVM must carry them."""
     from map_reduce_in_go_spark.session import dynamic_allocation_or_local_jvm_conf as gate
 
-    local_jvm = {"spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2 -XX:+UseSerialGC"}
+    for var in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
+        monkeypatch.delenv(var, raising=False)
+    jit = ("-XX:CICompilerCount=2 -XX:Tier4InvocationThreshold=50000 "
+           "-XX:Tier4CompileThreshold=150000")
+    local_jvm = {"spark.driver.defaultJavaOptions": jit + " -XX:+UseSerialGC"}
+    jit_only = {"spark.driver.defaultJavaOptions": jit}
     assert gate("local[32]") == local_jvm
     assert gate("local[*]") == local_jvm
     assert gate("local[4,3]", {"spark.sql.shuffle.partitions": "8"}) == local_jvm
     own_gc = {"spark.driver.extraJavaOptions": "-Xss4m -XX:+UseG1GC"}
-    assert gate("local[4]", own_gc) == {
-        "spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2"
-    }
+    assert gate("local[4]", own_gc) == jit_only
+    for var in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"):
+        monkeypatch.setenv(var, "-Xss4m")
+        assert gate("local[4]") == local_jvm
+        monkeypatch.setenv(var, "-XX:+UseG1GC")
+        assert gate("local[4]") == jit_only
+        monkeypatch.delenv(var)
     for master in ("spark://host:7077", "yarn", "k8s://https://api:6443"):
         conf = gate(master)
         assert conf["spark.dynamicAllocation.enabled"] == "true"
@@ -186,7 +196,27 @@ def test_dynamic_allocation_gated_to_cluster_masters(spark):
         assert not any("JavaOptions" in k for k in conf)
         assert gate(master, own_gc) == conf
 
-    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    jvm = spark.sparkContext._jvm
+    mgmt = jvm.java.lang.management.ManagementFactory
     assert "-XX:CICompilerCount=2" in list(mgmt.getRuntimeMXBean().getInputArguments())
     collectors = {b.getName() for b in mgmt.getGarbageCollectorMXBeans()}
     assert collectors == {"Copy", "MarkSweepCompact"}
+    hotspot = mgmt.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert hotspot.getVMOption("Tier4InvocationThreshold").getValue() == "50000"
+    assert hotspot.getVMOption("Tier4CompileThreshold").getValue() == "150000"
+
+
+def test_cli_keeps_log_level_of_joined_session(tmp_path, spark):
+    """A CLI run that joins a caller's session leaves its log level alone."""
+    root = spark.sparkContext._jvm.org.apache.logging.log4j.LogManager.getRootLogger
+    before = root().getLevel().toString()
+    src = tmp_path / "in.txt"
+    src.write_text("one two two\n")
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        assert main(["--input", str(src), "--output", str(tmp_path / "out")]) == 0
+        assert root().getLevel().toString() == "ERROR"
+    finally:
+        spark.sparkContext.setLogLevel(before)
