@@ -16,7 +16,8 @@ shuffle (FNV-1a mod nReduce — worker.go:154), group, sorted output
   sorted key runs and calls the reducer once per run with every value of its
   key, exactly like the reference's sorted reduce loop (worker.go:217-243)
 - output       → :func:`write_output` re-creates the ``mr-out-<bucket>``
-  layout: FNV-1a bucket column + ``partitionBy``, keys sorted within files.
+  layout: FNV-1a bucket column, bucket n written by task n via
+  ``repartitionById``, ``partitionBy``, keys sorted within files.
 
 Well-known apps (WordCount) additionally get a native all-JVM plan in
 ``operators/wordcount.py``; the generic path is for arbitrary user logic.
@@ -130,13 +131,14 @@ def run_mapreduce(
 def write_output(result: DataFrame, path: str, n_reduce: int = 5) -> None:
     """Reference-parity output layout: one dir per bucket, sorted keys.
 
-    Mirrors worker.go:217-243 (``mr-out-<n>``, keys sorted) while staying a
-    distributed write: the FNV-1a bucket is a column, files are written by
-    executors.
+    Mirrors worker.go:154,217-243 (reduce task n writes ``mr-out-<n>``, keys
+    sorted) while staying a distributed write: the FNV-1a bucket is a column,
+    and ``repartitionById`` sends bucket n straight to write partition n, so
+    each task writes exactly one bucket's ``part-0000n-*`` file.
     """
     (
         result.withColumn("bucket", reduce_bucket(F.col("key"), n_reduce))
-        .repartition(n_reduce, F.col("bucket"))
+        .repartitionById(n_reduce, "bucket")
         # bucket first: the partitionBy("bucket") writer requires that
         # ordering and re-sorts by bucket alone unless it is already met
         .sortWithinPartitions("bucket", "key")

@@ -50,8 +50,11 @@ def fnv1a_32(col: Column) -> Column:
 
 
 def reduce_bucket(col: Column, n_reduce: int) -> Column:
-    """Reference shuffle partition id: (fnv1a(key) & 0x7fffffff) % nReduce."""
-    return F.pmod(fnv1a_32(col).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")), F.lit(n_reduce))
+    """Reference shuffle partition id: (fnv1a(key) & 0x7fffffff) % nReduce,
+    as an INT (the type ``repartitionById`` takes; values are < nReduce)."""
+    return F.pmod(
+        fnv1a_32(col).bitwiseAND(F.lit(0x7FFFFFFF).cast("long")), F.lit(n_reduce)
+    ).cast("int")
 
 
 # --- matching DuckDB SQL fragments ---------------------------------------

@@ -1141,20 +1141,8 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cid = np.int64(pdf["cid"].iloc[0])
         m = len(pdf)
         n_dups = np.zeros(m, dtype=np.int64)
-        if m >= 2:
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-            sims = unit @ unit.T  # GEMM prefilter
-            ia, ib = np.nonzero(sims >= EMBED_COS_MIN - 1e-4)
-            lower = ids[ia] < ids[ib]
-            ia, ib = ia[lower], ib[lower]
-            if len(ia):
-                # exact sequential-fold rescore → engine-exact 6dp values
-                dots = np.cumsum(mat[ia] * mat[ib], axis=1)[:, -1]
-                cos = _duck_round6(dots / (norms[ia] * norms[ib]))
-                ib = ib[cos >= EMBED_COS_MIN]
-                np.add.at(n_dups, ib, 1)
+        _, ib, _ = _cosine_pairs(ids, *_unit_and_norms(pdf["e"]), np.arange(m))
+        np.add.at(n_dups, ib, 1)
         return pd.DataFrame(
             {
                 "vec_id": ids.astype(np.int64),
@@ -1199,6 +1187,41 @@ def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 EMBED_EXACT_MAX_ROWS = 2_000_000
 
 
+def _unit_and_norms(vectors):
+    """(float64 matrix, unit rows, exact norms) of a column of vectors;
+    the norms are sequential folds, as the oracle computes them."""
+    import numpy as np
+
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    return mat, unit, norms
+
+
+def _cosine_pairs(ids, mat, unit, norms, rows):
+    """(ia, ib, cos): matrix row pairs, ``ia`` from ``rows`` and ``ib``
+    from all rows, with ``ids[ia] < ids[ib]`` and cosine >= EMBED_COS_MIN.
+
+    The GEMM over unit rows is only a prefilter (threshold minus a 1e-4
+    margin, far wider than any BLAS-vs-sequential summation drift).
+    Survivors are re-scored with the oracle's exact float recipe —
+    sequential left-fold dots via ``np.cumsum`` (bit-identical to DuckDB
+    ``list_sum``), ``dot/(|a|·|b|)`` in the same association, half-away
+    rounding — so the 6dp values cannot flip on a rounding boundary.
+    """
+    import numpy as np
+
+    sims = unit[rows] @ unit.T
+    ia, ib = np.nonzero(sims >= EMBED_COS_MIN - 1e-4)
+    ia = rows[ia]
+    lower = ids[ia] < ids[ib]
+    ia, ib = ia[lower], ib[lower]
+    dots = np.cumsum(mat[ia] * mat[ib], axis=1)[:, -1]
+    cos = _duck_round6(dots / (norms[ia] * norms[ib]))
+    keep = cos >= EMBED_COS_MIN
+    return ia[keep], ib[keep], cos[keep]
+
+
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate vector pairs: cosine ≥ threshold (exact, all pairs).
 
@@ -1209,12 +1232,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     block × matrix GEMM via ``mapInPandas`` + NumPy, emitting only pairs
     over the threshold.
 
-    Determinism: the GEMM is only a *prefilter* (threshold minus a 1e-4
-    margin, far wider than any BLAS-vs-sequential summation drift).
-    Surviving pairs are re-scored with the oracle's exact float recipe —
-    sequential left-fold dots via ``np.cumsum`` (bit-identical to DuckDB
-    ``list_sum``), ``dot/(|a|·|b|)`` in the same association, half-away
-    rounding — so the 6dp values cannot flip on a rounding boundary.
+    Determinism: the GEMM is only a *prefilter*; surviving pairs are
+    re-scored with the oracle's exact float recipe (:func:`_cosine_pairs`),
+    so the 6dp values cannot flip on a rounding boundary.
 
     Scale: the broadcast side is guarded at ``EMBED_EXACT_MAX_ROWS``; past
     that the job refuses and points at :func:`dedup_embedding_blocked`,
@@ -1234,30 +1254,15 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one size-guarded toPandas of the two pruned columns (N×64 float64)
     local = emb.toPandas()
     ids = local["vec_id"].to_numpy()
-    mat = np.array([np.asarray(v, dtype=np.float64) for v in local["embedding"]])
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    # exact per-vector norms, sequential-fold like the oracle computes them
-    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-    bc = spark.sparkContext.broadcast((ids, unit, mat, norms))
+    bc = spark.sparkContext.broadcast((ids, *_unit_and_norms(local["embedding"])))
 
     def _block(batches):
-        b_ids, b_unit, b_raw, b_norm = bc.value
+        b_ids, b_raw, b_unit, b_norm = bc.value
         order = {int(v): i for i, v in enumerate(b_ids)}
         for pdf in batches:
             rows_idx = np.array([order[int(v)] for v in pdf["vec_id"]], dtype=np.int64)
-            sims = b_unit[rows_idx] @ b_unit.T  # m×N prefilter GEMM
-            cand_a, cand_b = np.nonzero(sims >= EMBED_COS_MIN - 1e-4)
-            ai = rows_idx[cand_a]
-            bi = cand_b.astype(np.int64)
-            lower = b_ids[ai] < b_ids[bi]
-            ai, bi = ai[lower], bi[lower]
-            if len(ai):
-                dots = np.cumsum(b_raw[ai] * b_raw[bi], axis=1)[:, -1]
-                cos = _duck_round6(dots / (b_norm[ai] * b_norm[bi]))
-                keep = cos >= EMBED_COS_MIN
-                ai, bi, cos = ai[keep], bi[keep], cos[keep]
-            else:
-                cos = np.empty(0, dtype=np.float64)
+            # m×N prefilter GEMM, then the exact rescore
+            ai, bi, cos = _cosine_pairs(b_ids, b_raw, b_unit, b_norm, rows_idx)
             yield pd.DataFrame(
                 {
                     "vec_a": b_ids[ai].astype(np.int64),
@@ -1302,26 +1307,10 @@ def dedup_embedding_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
-            )
         ids = pdf["vec_id"].to_numpy()
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        sims = unit @ unit.T
-        ia, ib = np.nonzero(sims >= EMBED_COS_MIN - 1e-4)
-        lower = ids[ia] < ids[ib]
-        ia, ib = ia[lower], ib[lower]
-        if len(ia):
-            dots = np.cumsum(mat[ia] * mat[ib], axis=1)[:, -1]
-            cos = _duck_round6(dots / (norms[ia] * norms[ib]))
-            keep = cos >= EMBED_COS_MIN
-            ia, ib, cos = ia[keep], ib[keep], cos[keep]
-        else:
-            cos = np.empty(0, dtype=np.float64)
+        ia, ib, cos = _cosine_pairs(
+            ids, *_unit_and_norms(pdf["e"]), np.arange(len(pdf))
+        )
         return pd.DataFrame(
             {
                 "vec_a": ids[ia].astype(np.int64),

@@ -87,8 +87,8 @@ class PqIvfIndex:
         ``include_codes=False`` publishes the MODEL with empty cells —
         the streaming-ingest posture: train on a bootstrap sample, then
         every arriving batch lands its codes through
-        :func:`~..streaming.corpus_pipeline.corpus_batch_txn` (or
-        :meth:`append_batch`) under the served model.
+        :func:`~..streaming.corpus_pipeline.corpus_batch_txn` under the
+        served model.
         """
         books = train_codebooks(spark, sf_dir)
         bc_cent = spark.sparkContext.broadcast(_centroids(spark, sf_dir))
@@ -430,13 +430,12 @@ class PqIvfIndex:
         return committed.select("doc_id").union(local).distinct()
 
     @staticmethod
-    def stage_append(txn, rows: DataFrame, cells, op: str = "txn-stage-append") -> int:
+    def stage_append(txn, rows: DataFrame, cells, op: str) -> int:
         """Stage (vec_id, codes, cid) rows onto their cells' member tables
         of an OPEN transaction — no commit here. This is the seam that
         lets a larger transaction (the incremental-corpus pipeline) carry
         PQ codes in the SAME commit as the corpus/band/gram/sketch
-        members; :meth:`append_batch` is the standalone composition.
-        Returns the number of cells touched.
+        members. Returns the number of cells touched.
         """
         by_cell = {int(cid): path for cid, _, path, _ in cells}
         touched = [r["cid"] for r in rows.select("cid").distinct().collect()]
@@ -447,20 +446,3 @@ class PqIvfIndex:
                 op=op,
             )
         return len(touched)
-
-    def append_batch(
-        self, spark: SparkSession, batch: DataFrame, op: str
-    ) -> bool:
-        """Encode an arriving (vec_id, e) batch WITH THE SERVED MODEL and
-        append each vector's codes to its cell table — one catalog CAS,
-        exactly-once per ``op`` across retries/replays (the ledger
-        discipline every served artifact here shares).
-        """
-        if op in self.catalog.committed_ops():
-            return False
-        books, cells = self.snapshot(spark)
-        rows = self.encode_with_model(spark, batch, books, cells)
-        txn = self.catalog.transaction(spark)
-        self.stage_append(txn, rows, cells)
-        txn.commit(op=op)
-        return True

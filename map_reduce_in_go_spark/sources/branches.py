@@ -7,9 +7,9 @@ metadata, zero data movement. Branch writers run ordinary transactions:
 member tables are shared append-only manifest logs, so branch commits
 mint new member versions that main simply never references (and vice
 versa); isolation falls out of version pinning, the same way racing
-transactions already isolate. GC and member-log truncation were taught
-to protect EVERY ledger's pins (catalog.py vacuum/checkpoint_members),
-which is what makes the zero-copy share safe.
+transactions already isolate. GC was taught to protect EVERY ledger's
+pins (catalog.py vacuum), and member logs are never truncated, which is
+what makes the zero-copy share safe.
 
 Merge is FAST-FORWARD ONLY and says so: if main has not moved past the
 fork point, one CAS republishes the branch's pins onto main; if main

@@ -153,9 +153,9 @@ class TableCatalog:
         member's newest chain entry (a racing transaction's staged commit,
         or orphans from conflict retries) — an auto-checkpoint landing on
         a member's 16th commit would delete the pinned manifest and break
-        every published-snapshot read (r10 advice, high). Member log
-        truncation happens only through :meth:`checkpoint_members`, which
-        protects the catalog-pinned versions explicitly.
+        every published-snapshot read (r10 advice, high). The package
+        never truncates a member log; :meth:`vacuum` skips a member whose
+        log was truncated below a ledger's pin.
         """
         return ManifestTable(os.path.join(self.root, name), checkpoint_interval=None)
 
@@ -356,9 +356,9 @@ class TableCatalog:
                 # set CANNOT be added to the live set — vacuuming anyway
                 # could delete data that branch still serves, breaking its
                 # reads with no warning (r11 advice, low). Skip this
-                # member and say so; checkpoint_members protects pins, so
-                # this state means the member log was truncated outside
-                # it — worth a human look, not a silent data loss.
+                # member and say so; the package never truncates member
+                # logs, so this state means one was truncated by hand —
+                # worth a human look, not a silent data loss.
                 import warnings
 
                 warnings.warn(
@@ -411,62 +411,6 @@ class TableCatalog:
                     except FileNotFoundError:
                         pass
         return removed
-
-    def checkpoint_members(self, spark: SparkSession) -> dict[str, int]:
-        """Truncate every member's manifest log, pinned versions protected.
-
-        The explicit member-log maintenance verb: members never
-        auto-checkpoint (see :meth:`table` — doing so on a staged commit
-        deletes the manifest the published catalog reads), so a
-        long-running pipeline calls this periodically to keep member log
-        listings O(1). Each member checkpoints at its newest chain entry
-        with the CURRENT published snapshot's pinned version exempted
-        from truncation, so published reads, pinned appends
-        (``base_version`` unions), and replication's delta walker keep
-        working across the checkpoint. Historical catalog versions'
-        pins may be truncated — the same time-travel retention trade the
-        catalog's own checkpoint makes. Returns member → checkpointed
-        version.
-        """
-        out: dict[str, int] = {}
-        # branch ledgers pin versions of these same member tables —
-        # truncating below THEIR pins would break every branch read
-        peer_pins: dict[str, set[int]] = {}
-        for led in self.branch_ledgers() + (
-            ["_catalog"] if self.ledger != "_catalog" else []
-        ):
-            if led == self.ledger:
-                continue
-            peer = TableCatalog(self.root, ledger=led)
-            for _n, (p, v) in peer.snapshot(spark).items():
-                peer_pins.setdefault(p, set()).add(v)
-        snap = self.snapshot(spark)
-        for name, (path, pinned) in snap.items():
-            tbl = ManifestTable(
-                os.path.join(self.root, path), checkpoint_interval=None
-            )
-            # re-resolve right before truncating: a transaction publishing
-            # mid-verb can move this member's pin to a version that is not
-            # the member's newest (a later stager's orphan may sit above
-            # it); protect both observations
-            protect = {pinned} | peer_pins.get(path, set())
-            fresh = self.snapshot(spark).get(name)
-            if fresh is not None and fresh[0] == path:
-                protect.add(fresh[1])
-            # race-free floor (r11 advice, medium): a racing transaction's
-            # staged member version can sit anywhere ABOVE the oldest
-            # published pin (two concurrent stagers on one member put the
-            # loser's version between the pin and the chain tip), and it
-            # can land while this verb runs — point-set protection cannot
-            # enumerate it. Every live pin and every possible in-flight
-            # staging is >= the oldest pin, so truncate strictly below it;
-            # staged/orphan history above the pin is bounded by in-flight
-            # transactions and is reclaimed by later checkpoints once the
-            # pins advance past it.
-            out[name] = tbl.checkpoint(
-                protect_versions=protect, protect_from=min(protect)
-            )
-        return out
 
     # ------------------------------------------------------- writer leases
 
@@ -539,11 +483,6 @@ class TableCatalog:
                 f"app_id {app_id!r} at {self.root} is leased by another "
                 f"writer; refusing to mint op labels under it"
             )
-
-    def release_app_id(self, app_id: str, token: str) -> None:
-        """Release a held lease (clean shutdown / planned handoff)."""
-        self.check_app_id(app_id, token)
-        os.unlink(os.path.join(self.root, "_writers", f"{app_id}.json"))
 
     # --------------------------------------------------------- transactions
 
@@ -628,8 +567,8 @@ class Transaction:
         # checkpoint_interval=None: a staged commit landing a member's
         # auto-checkpoint boundary would truncate the manifest the
         # PUBLISHED catalog pins (staged chain entries sit above the pin),
-        # breaking published reads — member logs truncate only through
-        # TableCatalog.checkpoint_members (r10 advice, high)
+        # breaking published reads — the package never truncates member
+        # logs (r10 advice, high)
         return (
             ManifestTable(
                 os.path.join(self._cat.root, path),

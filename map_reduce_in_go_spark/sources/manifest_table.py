@@ -76,8 +76,8 @@ class ManifestTable:
         # Data-skipping stats: per-file [min, max] recorded in the manifest
         # at commit time for these columns (Delta's per-file stats /
         # dataSkippingNumIndexedCols design — bounded so manifests stay KB).
-        # read_pruned() then skips whole files whose range can't match a
-        # predicate — the reader-side half of the lakehouse skipping story.
+        # read_pruned_in() then skips whole files whose range holds no
+        # probe key — the reader-side half of the lakehouse skipping story.
         self.stats_cols = list(stats_cols) if stats_cols else []
 
     # ------------------------------------------------------------- log I/O
@@ -239,40 +239,6 @@ class ManifestTable:
                 out[name] = carried[name]
         return out
 
-    def files_pruned(
-        self, ranges: dict[str, tuple], version: int | None = None
-    ) -> tuple[list[str], int]:
-        """(kept data files, total snapshot files) for conjunctive ranges.
-
-        ``ranges`` maps column → (lo, hi); either bound may be None. A
-        file is SKIPPED only when its recorded [min, max] for some column
-        provably cannot intersect — files with no stats are conservatively
-        kept, so pruning never changes query results, only work. Bounds
-        compare with python ordering, so use it for numeric and string
-        columns (the same caveat Delta's string stats carry).
-        """
-        v = self.version() if version is None else version
-        if v < 0:
-            return [], 0
-        man = self._manifest(v)
-        stats = man.get("stats", {})
-        kept = []
-        for name in man["files"]:
-            cols = stats.get(name, {})
-            skip = False
-            for col, (lo, hi) in ranges.items():
-                if col not in cols:
-                    continue
-                fmin, fmax = cols[col]
-                if (hi is not None and fmin > hi) or (
-                    lo is not None and fmax < lo
-                ):
-                    skip = True
-                    break
-            if not skip:
-                kept.append(os.path.join(self._data_dir, name))
-        return kept, len(man["files"])
-
     def files_pruned_in(
         self, col: str, values, version: int | None = None
     ) -> tuple[list[str], int]:
@@ -317,8 +283,9 @@ class ManifestTable:
     ) -> DataFrame:
         """Snapshot read scanning only files that can hold a probe value.
 
-        Same superset guarantee as :meth:`read_pruned` — the caller still
-        applies the real join/filter; skipping changes work, never results.
+        The caller still applies the real join/filter — pruning is a
+        strict superset guarantee (file granularity), exactly like
+        Delta/Iceberg data skipping: it changes work, never results.
         """
         v = self.version() if version is None else version
         files, _total = self.files_pruned_in(col, values, v)
@@ -345,32 +312,6 @@ class ManifestTable:
         if len(rows) <= MAX_PROBE_KEYS:
             return self.read_pruned_in(spark, col, [r[0] for r in rows])
         return self.read(spark)
-
-    def read_pruned(
-        self,
-        spark: SparkSession,
-        ranges: dict[str, tuple],
-        version: int | None = None,
-    ) -> DataFrame:
-        """Snapshot read that scans ONLY files surviving stats pruning.
-
-        The caller still applies the actual predicate — pruning is a
-        strict superset guarantee (file granularity), exactly like
-        Delta/Iceberg data skipping. Combine with a Z-order layout
-        (:func:`~.layout.zorder_layout`) to make multi-column boxes prune.
-        """
-        v = self.version() if version is None else version
-        files, _total = self.files_pruned(ranges, v)
-        if not files:
-            # empty selection: preserve schema via an empty frame
-            base = self.read(spark, v)
-            return base.limit(0)
-        schema_json = self._manifest(v).get("schema")
-        if schema_json is not None:
-            schema = StructType.fromJson(json.loads(schema_json))
-        else:
-            schema = spark.read.parquet(files[0]).schema
-        return spark.read.schema(schema).parquet(*files)
 
     # --------------------------------------------------------- data writes
 
@@ -717,11 +658,7 @@ class ManifestTable:
         ) as f:
             return vs[-1], json.load(f)
 
-    def checkpoint(
-        self,
-        protect_versions: set[int] | None = None,
-        protect_from: int | None = None,
-    ) -> int:
+    def checkpoint(self) -> int:
         """Consolidate op history ≤ newest version; truncate older manifests.
 
         Writes ``checkpoint-v<N>.json`` holding the full op list up to N
@@ -733,25 +670,10 @@ class ManifestTable:
         which is the documented retention trade. Returns N (or -1 on an
         empty table).
 
-        ``protect_versions`` exempts specific manifests from truncation —
-        a table serving as a :class:`~.catalog.TableCatalog` member is
-        checkpointed through ``TableCatalog.checkpoint_members``, which
-        passes the catalog-pinned version here: the member's newest chain
-        entry can be a racing transaction's staged (unpublished) commit,
-        so "newest manifest" and "version the published catalog reads"
-        are different files and an unprotected truncation would break
-        every published-snapshot read (r10 advice, high).
-
-        ``protect_from`` exempts EVERY version ``>= protect_from`` — the
-        race-free form of the same protection. A racing transaction can
-        stage a member version between the published pin and the chain
-        tip at any moment (even between the caller enumerating versions
-        and this truncation loop), so point-set protection alone cannot
-        cover it; all live pins and all possible in-flight stagings sit
-        at or above the OLDEST published pin, which is the floor
-        ``TableCatalog.checkpoint_members`` passes here (r11 advice,
-        medium). The floor is applied at unlink time, so versions staged
-        after the caller's observation are protected too.
+        A :class:`~.catalog.TableCatalog` member never checkpoints itself
+        (its handles carry ``checkpoint_interval=None``): its newest chain
+        entry can be a racing transaction's staged commit, so truncating
+        below it would delete the manifest the published catalog pins.
         """
         n = self.version()
         if n < 0:
@@ -761,10 +683,8 @@ class ManifestTable:
             f"checkpoint-v{n}.json",
             json.dumps({"version": n, "ops": sorted(ops)}, indent=1),
         )
-        protected = protect_versions or set()
-        floor = n if protect_from is None else protect_from
         for v in self._versions():
-            if v < n and v < floor and v not in protected:
+            if v < n:
                 try:
                     os.unlink(os.path.join(self._log_dir, f"v{v}.json"))
                 except FileNotFoundError:

@@ -79,13 +79,13 @@ class RollupLattice:
 
     Retraction honesty, pinned (r12 verdict #1): neither family is
     UN-mergeable — knowing a batch's min (or its sketch) does not let you
-    recompute the min without it. :meth:`retract_batch` therefore REFUSES
-    loudly when non-additive measures are maintained; :meth:`retract_keys`
-    (key-predicate erasure) stays exact by switching from negative appends
-    to a REBUILD: fold the apex, drop the matched keys, re-derive every
-    coarser level from the surviving apex partials — O(apex keys), one
-    CAS, correct for every measure family because each level is a pure
-    re-aggregation of the apex.
+    recompute the min without it. :meth:`retract_keys` (key-predicate
+    erasure) therefore stays exact by switching from negative appends to
+    a REBUILD when non-additive measures are maintained: fold the apex,
+    drop the matched keys, re-derive every coarser level from the
+    surviving apex partials — O(apex keys), one CAS, correct for every
+    measure family because each level is a pure re-aggregation of the
+    apex.
     """
 
     def __init__(
@@ -128,12 +128,10 @@ class RollupLattice:
     def _non_additive(self) -> bool:
         return bool(self.minmax_cols) or bool(self.distinct_cols)
 
-    def _batch_aggs(self, negate: bool = False) -> list[Column]:
-        """Raw rows → apex partial. ``negate`` sign-flips the additive
-        sums (retraction); callers must have refused non-additive first."""
-        sign = -1 if negate else 1
+    def _batch_aggs(self) -> list[Column]:
+        """Raw rows → apex partial."""
         aggs: list[Column] = [
-            (sign * F.sum(F.expr(e))).alias(n) for n, e in self.sum_cols.items()
+            F.sum(F.expr(e)).alias(n) for n, e in self.sum_cols.items()
         ]
         for n, spec in self.minmax_cols.items():
             kind, expr = spec.split(":", 1)
@@ -209,100 +207,6 @@ class RollupLattice:
             f"{max_retries} times at {self.cat.root}"
         )
 
-    def retract_batch(
-        self,
-        spark: SparkSession,
-        batch_df: DataFrame,
-        batch_id: int,
-        app_id: str = "lattice",
-        max_retries: int = 10,
-    ) -> bool:
-        """Erase one previously-ingested batch's contribution from EVERY
-        level in one catalog CAS — the bad-crawl rollback on the events
-        side. Additivity makes retraction just the ingest partials
-        sign-flipped, so cost and shape are identical to ingest (one
-        batch scan, k tiny folds); :meth:`answer` needs no awareness at
-        all, and :meth:`compact` drops keys whose measures folded to
-        all-zero. The caller re-supplies the batch's rows (the lattice
-        stores partials, not rows — re-resolution from the upstream
-        source is the same WAL posture the corpus pipeline's rebase
-        uses), so they must be the rows the original ingest saw.
-
-        Refuses loudly when the batch was never ingested (negating a
-        contribution that never landed would corrupt every level), and
-        is exactly-once per retraction label. A retracted batch id stays
-        BURNED in the ledger — re-submission needs a fresh batch id
-        (exactly-once and resurrection are the same mechanism).
-
-        EXACT cancellation (a fully-retracted key folding to zero and
-        being dropped by :meth:`compact`) requires exact measure types —
-        integer counts and DECIMAL sums, the discipline the registered
-        cube (:data:`CUBE_SUMS`) already follows. DOUBLE measures cancel
-        only to float epsilon; their answers stay correct to rounding
-        but their dead keys may survive compaction with ~1e-12 residue.
-
-        Non-additive refusal (pinned): MIN/MAX partials and HLL sketches
-        cannot be un-merged — sign-flipping has no analogue, and serving
-        after a partial "retraction" would silently report the retracted
-        batch's extremes/cardinalities forever. A lattice maintaining
-        either family refuses batch retraction loudly; the exact options
-        are :meth:`retract_keys` (whole-key erasure rebuilds from apex)
-        or rebuilding the lattice from the upstream source.
-        """
-        if self._non_additive:
-            raise ValueError(
-                "retract_batch is additive-only: min/max partials and HLL "
-                f"sketches ({sorted(self.minmax_cols) + sorted(self.distinct_cols)}) "
-                "cannot be un-merged; erase whole keys with retract_keys "
-                "or rebuild the lattice from the source"
-            )
-        ingest_op = f"{app_id}-batch-{batch_id}"
-        op = f"{app_id}-retract-{batch_id}"
-        committed = self.cat.committed_ops()
-        if op in committed:
-            return False
-        if ingest_op not in committed:
-            raise ValueError(
-                f"batch {batch_id} ({ingest_op!r}) was never ingested at "
-                f"{self.cat.root}; retracting it would corrupt every level"
-            )
-        from ..functions.caching import (
-            persisted_count,
-            release_persisted_since,
-            scoped_persist,
-        )
-
-        for _ in range(max_retries):
-            txn = self.cat.transaction(spark)
-            if op in self.cat.committed_ops():  # linearizable replay check
-                return False
-            mark = persisted_count()
-            try:
-                apex = scoped_persist(
-                    batch_df.groupBy(*self.apex_keys).agg(
-                        *self._batch_aggs(negate=True)
-                    )
-                )
-                for keys in sorted(set(self.levels.values())):
-                    part = apex.groupBy(*keys).agg(*self._fold_aggs())
-                    txn.append(
-                        _level_member(keys),
-                        part,
-                        op=op,
-                        stats_cols=list(keys) or None,
-                    )
-                try:
-                    txn.commit(op=op)
-                    return True
-                except CommitConflict:
-                    continue  # racing batch landed; re-plan on new base
-            finally:
-                release_persisted_since(mark)
-        raise CommitConflict(
-            f"lattice retraction of batch {batch_id} lost the catalog race "
-            f"{max_retries} times at {self.cat.root}"
-        )
-
     def retract_keys(
         self,
         spark: SparkSession,
@@ -316,8 +220,9 @@ class RollupLattice:
         predicate erasure is expressible exactly when it is a KEY
         predicate: the matched apex keys' FOLDED totals are negated and
         re-derived down every coarser level — the same shape as
-        :meth:`retract_batch` with the folded match standing in for the
-        batch partial, so all levels move consistently in the one commit.
+        :meth:`ingest_batch` with the sign-flipped folded match standing
+        in for the batch partial, so all levels move consistently in the
+        one commit.
         The predicate is validated against the apex key columns (the
         :meth:`answer` rule: a measure reference is a loud analysis
         error, not a silent wrong answer). Exactly-once per ``op``;
@@ -522,38 +427,6 @@ class RollupLattice:
                 )
         return df.groupBy(*dims).agg(*aggs)
 
-    def distinct_overlap(
-        self,
-        spark: SparkSession,
-        measure: str,
-        key_col: str,
-        group_a,
-        group_b,
-        version: int | None = None,
-    ) -> dict:
-        """Overlap of one HLL distinct measure between two key groups —
-        the "how many users did BOTH X and Y" dashboard question (r13,
-        declared r14 (a)), answered from stored sketches alone.
-
-        HLL sketches union exactly (register max) but do not intersect;
-        the standard estimator is inclusion-exclusion over three
-        DISTINCT-COUNT estimates: |A∩B| = |A| + |B| − |A∪B|, each term a
-        fold of the apex level's stored sketches for the matching keys
-        (one scan, three unions — raw data never read). Honesty is part
-        of the contract: the three absolute errors COMPOUND, so the
-        returned dict carries ``rel_err_bound`` = 3σ·(|A|+|B|+|A∪B|) /
-        max(|A∩B|, 1) — tight overlaps of large sets are where
-        sketch-based intersection goes bad, and a caller seeing a bound
-        near/over 1.0 should fall back to an exact distinct-pairs query.
-        ``group_a``/``group_b`` are values (or value lists) of
-        ``key_col``, which must be an apex key column; groups may
-        overlap arbitrarily. Negative inclusion-exclusion results clamp
-        to 0 (a pure noise regime the bound already flags).
-        """
-        return self.distinct_overlap_many(
-            spark, measure, key_col, [(group_a, group_b)], version=version
-        )[0]
-
     def distinct_overlap_many(
         self,
         spark: SparkSession,
@@ -562,14 +435,27 @@ class RollupLattice:
         pairs,
         version: int | None = None,
     ) -> list[dict]:
-        """Batched :meth:`distinct_overlap`: ALL pair estimates from ONE
-        apex scan (r15, guide §1.2/§2.4). A dashboard asking P overlap
-        questions previously paid P catalog reads + P scan jobs for
-        register folds over the same snapshot; here the conditional
-        register-unions for every pair stack into one aggregate over one
-        (version-pinned, so also mutually consistent) apex read. Returns
-        one result dict per input ``(group_a, group_b)`` pair, estimates
-        identical to the per-pair calls."""
+        """Overlap of one HLL distinct measure between key groups — the
+        "how many users did BOTH X and Y" dashboard question (r13,
+        declared r14 (a)), answered from stored sketches alone, for ALL
+        ``(group_a, group_b)`` pairs from ONE apex scan (r15).
+
+        HLL sketches union exactly (register max) but do not intersect;
+        the standard estimator is inclusion-exclusion over three
+        DISTINCT-COUNT estimates: |A∩B| = |A| + |B| − |A∪B|, each term a
+        conditional register-union of the apex level's stored sketches
+        for the matching keys; every pair's unions stack into one
+        aggregate over one (version-pinned, so mutually consistent) apex
+        read — raw data never read. Honesty is part of the contract: the
+        three absolute errors COMPOUND, so each returned dict carries
+        ``rel_err_bound`` = 3σ·(|A|+|B|+|A∪B|) / max(|A∩B|, 1) — tight
+        overlaps of large sets are where sketch-based intersection goes
+        bad, and a caller seeing a bound near/over 1.0 should fall back to
+        an exact distinct-pairs query. ``group_a``/``group_b`` are values
+        (or value lists) of ``key_col``, which must be an apex key
+        column; groups may overlap arbitrarily. Negative
+        inclusion-exclusion results clamp to 0 (a pure noise regime the
+        bound already flags). Returns one result dict per pair."""
         if measure not in self.distinct_cols:
             raise KeyError(
                 f"{measure!r} is not a maintained HLL distinct measure "
@@ -630,11 +516,11 @@ class RollupLattice:
     def compact(self, spark: SparkSession) -> None:
         """Fold every level's partial log to O(distinct keys) rows in one
         maintenance transaction (the ``compact_pipeline`` discipline).
-        Keys whose measures all folded to zero — fully retracted by
-        :meth:`retract_batch` — are dropped, the same dead-row rule the
-        gram/token members apply. The dead-key drop applies only to the
-        additive-only lattice: with min/max/HLL measures maintained,
-        batch retraction is refused (no dead keys can arise) and an
+        Keys whose measures all folded to zero — erased by the additive
+        :meth:`retract_keys` path — are dropped, the same dead-row rule
+        the gram/token members apply. The dead-key drop applies only to
+        the additive-only lattice: with min/max/HLL measures maintained,
+        key erasure rebuilds the levels (no dead keys can arise) and an
         all-zero-sums key can still carry a live extreme or sketch."""
         import functools
         import operator
@@ -949,7 +835,7 @@ def events_cube_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-served distinct-user OVERLAP between day groups under the
     driver's hash (r14, r13 verdict #2): "how many users were active on
     BOTH day X and day Y", answered by :meth:`RollupLattice.
-    distinct_overlap` from the SAME served cube artifact as
+    distinct_overlap_many` from the SAME served cube artifact as
     ``events_cube_nav`` — inclusion-exclusion over three conditional HLL
     register-unions in one apex scan; raw events are never read by the
     served answer.

@@ -112,9 +112,6 @@ def test_branch_divergence_refusal_and_gc(spark, sf_dir, tmp_path):
     compact_pipeline(spark, cat, num_files=4)
     cat.vacuum(spark, retain_seconds=0.0)
     assert _corpus_ids(spark, br) == br_ids, "vacuum ate branch-pinned files"
-    # member-log truncation protects branch pins too
-    cat.checkpoint_members(spark)
-    assert _corpus_ids(spark, br) == br_ids
 
     # validation
     with pytest.raises(ValueError, match="invalid branch name"):
@@ -231,34 +228,6 @@ def test_merge_crash_injection_exactly_once(spark, sf_dir, tmp_path, monkeypatch
     assert _corpus_ids(spark, cat) == br_ids
 
 
-def test_checkpoint_members_protects_racing_stager(spark, sf_dir, tmp_path):
-    """A staged member version BETWEEN the published pin and the chain tip
-    (two concurrent stagers on one member) must survive member-log
-    truncation: checkpoint_members truncates only below the oldest live
-    pin (r11 advice, medium)."""
-    docs = _docs(spark, sf_dir).limit(30)
-    cat = TableCatalog(str(tmp_path / "cat"))
-    txn0 = cat.transaction(spark)
-    txn0.append("m", docs)
-    txn0.commit(op="seed")
-
-    # two racing stagers: txn1's member version sits between the pin and
-    # txn2's (the chain tip) — the r11 advice's exact scenario
-    txn1 = cat.transaction(spark)
-    v1 = txn1.append("m", docs.withColumn("doc_id", F.col("doc_id") + 1_000_000))
-    txn2 = cat.transaction(spark)
-    v2 = txn2.append("m", docs.withColumn("doc_id", F.col("doc_id") + 2_000_000))
-    assert v1 < v2
-
-    cat.checkpoint_members(spark)
-
-    # the middle stager publishes and its snapshot must be readable: under
-    # point-set protection its manifest was truncated and the published
-    # catalog pinned a deleted manifest
-    txn1.commit(op="mid-stager")
-    assert cat.read(spark, "m").count() == 60
-
-
 def test_divergence_below_retention_horizon(spark, sf_dir, tmp_path):
     """A branch whose fork version fell below main's ledger checkpoint
     horizon refuses merge with CommitConflict (naming the horizon), not a
@@ -281,8 +250,8 @@ def test_divergence_below_retention_horizon(spark, sf_dir, tmp_path):
 
 
 def test_vacuum_skips_member_with_unresolvable_peer_pin(spark, sf_dir, tmp_path):
-    """If a peer ledger pins a member version whose manifest is gone (log
-    truncated outside checkpoint_members), vacuum must NOT silently treat
+    """If a peer ledger pins a member version whose manifest is gone (the
+    member log truncated by hand), vacuum must NOT silently treat
     that branch's files as dead — it skips the member and warns (r11
     advice, low)."""
     docs = _docs(spark, sf_dir).limit(30)
@@ -291,9 +260,9 @@ def test_vacuum_skips_member_with_unresolvable_peer_pin(spark, sf_dir, tmp_path)
     txn.append("m", docs)
     txn.commit(op="seed")
     create_branch(spark, cat, "exp")
-    # main rewrites the member, then the member log is truncated OUTSIDE
-    # checkpoint_members (simulating external/buggy maintenance) so the
-    # branch's pinned manifest is unenumerable
+    # main rewrites the member, then the member log is truncated by hand
+    # (simulating external/buggy maintenance) so the branch's pinned
+    # manifest is unenumerable
     txn2 = cat.transaction(spark)
     txn2.overwrite("m", docs.withColumn("doc_id", F.col("doc_id") + 1_000))
     txn2.commit(op="rewrite")

@@ -1075,9 +1075,8 @@ def test_writer_lease_guards_batch_commits(spark, sf_dir, tmp_path):
     # both writers' batch 0 landed — distinct namespaces, no aliasing
     assert {"crawl-a-batch-0", "crawl-b-batch-0"} <= ops
 
-    # a writer that lost its lease refuses loudly instead of committing
-    cat.release_app_id("crawl-a", tok_a)
-    cat.acquire_app_id("crawl-a")  # a new process took the name
+    # a writer whose token does not hold the lease refuses loudly
+    # instead of committing
     import pytest as _pytest
 
     with _pytest.raises(RuntimeError, match="leased by another"):
@@ -1087,7 +1086,7 @@ def test_writer_lease_guards_batch_commits(spark, sf_dir, tmp_path):
             cat,
             1,
             app_id="crawl-a",
-            writer_token=tok_a,
+            writer_token=tok_b,
         )
     assert "crawl-a-batch-1" not in cat.committed_ops()
 

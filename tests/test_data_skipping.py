@@ -2,10 +2,16 @@
 
 Properties under test:
 - stats are recorded at commit and survive append/compaction;
-- read_pruned is a strict superset (never loses a matching row);
+- read_pruned_in is a strict superset (never loses a matching row);
 - a Z-ordered layout actually PRUNES on both clustered dimensions,
   while a single-column sort prunes only its own column;
 - files without stats are conservatively kept.
+
+Pruning is read through the point-probe form the package serves
+(``files_pruned_in``/``read_pruned_in``): a probe set holding every
+stored value at or below a bound keeps exactly the files a one-sided
+range would keep, since a kept file's minimum is itself a probe. A
+conjunctive box keeps the files every one of its columns keeps.
 """
 
 from __future__ import annotations
@@ -28,8 +34,22 @@ def _li(spark, sf_dir):
     )
 
 
-def _box(df, ok_hi, pk_hi):
-    return df.filter((F.col("l_orderkey") <= ok_hi) & (F.col("l_partkey") <= pk_hi))
+def _values_upto(df, col, hi):
+    """Every stored ``col`` value <= ``hi``: the probe set of a range."""
+    return [
+        r[0] for r in df.filter(F.col(col) <= hi).select(col).distinct().collect()
+    ]
+
+
+def _box_kept(tbl, df, ok_hi, pk_hi, version=None):
+    """(kept files, total) for the box l_orderkey <= ok_hi, l_partkey <= pk_hi."""
+    ok, total = tbl.files_pruned_in(
+        "l_orderkey", _values_upto(df, "l_orderkey", ok_hi), version
+    )
+    pk, _ = tbl.files_pruned_in(
+        "l_partkey", _values_upto(df, "l_partkey", pk_hi), version
+    )
+    return set(ok) & set(pk), total
 
 
 def test_stats_recorded_and_pruning_is_lossless(spark, sf_dir, tmp_path):
@@ -47,20 +67,20 @@ def test_stats_recorded_and_pruning_is_lossless(spark, sf_dir, tmp_path):
     assert set(some) == {"l_orderkey", "l_partkey"}
 
     full = tbl.read(spark)
-    ok_hi = full.agg(F.expr("percentile(l_orderkey, 0.25)")).first()[0]
     pk_hi = full.agg(F.expr("percentile(l_partkey, 0.25)")).first()[0]
-    ranges = {"l_orderkey": (None, ok_hi), "l_partkey": (None, pk_hi)}
+    probes = _values_upto(full, "l_partkey", pk_hi)
 
-    pruned = tbl.read_pruned(spark, ranges)
-    want = sorted(map(tuple, _box(full, ok_hi, pk_hi).collect()))
-    got = sorted(map(tuple, _box(pruned, ok_hi, pk_hi).collect()))
+    pruned = tbl.read_pruned_in(spark, "l_partkey", probes)
+    hit = F.col("l_partkey").isin(probes)
+    want = sorted(map(tuple, full.filter(hit).collect()))
+    got = sorted(map(tuple, pruned.filter(hit).collect()))
     assert got == want  # pruning only skips files that cannot match
 
 
 def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
-    """The layout claim itself: a 2-D box predicate must skip files under
-    Z-order on BOTH columns, while a linear sort's secondary column
-    cannot prune."""
+    """The layout claim itself: each clustered column ALONE must skip
+    files under Z-order, while a linear sort's secondary column cannot
+    prune."""
     li = _li(spark, sf_dir)
     ok_hi = li.agg(F.expr("percentile(l_orderkey, 0.25)")).first()[0]
     pk_hi = li.agg(F.expr("percentile(l_partkey, 0.25)")).first()[0]
@@ -77,8 +97,11 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
         )
     )
 
-    # one-dimension predicates: both layouts prune their leading column
-    kept_ok, total = z.files_pruned({"l_orderkey": (None, ok_hi)})
+    # the leading column: z-order prunes it
+    kept_ok, total = z.files_pruned_in(
+        "l_orderkey", _values_upto(li, "l_orderkey", ok_hi)
+    )
+    assert total == N_FILES
     assert len(kept_ok) < total
 
     # the 2-D box: z-order must never prune WORSE than the linear sort.
@@ -88,20 +111,17 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir, tmp_path):
     # as z-order does — a tie is a property of the sampled control, not a
     # layout regression. The strict claim z-order actually makes is the
     # SECONDARY dimension, asserted strictly below.
-    zk, zt = z.files_pruned(
-        {"l_orderkey": (None, ok_hi), "l_partkey": (None, pk_hi)}
-    )
-    lk, lt = lin.files_pruned(
-        {"l_orderkey": (None, ok_hi), "l_partkey": (None, pk_hi)}
-    )
-    assert zt == lt == N_FILES
+    zk, _ = _box_kept(z, li, ok_hi, pk_hi)
+    lk, _ = _box_kept(lin, li, ok_hi, pk_hi)
     assert len(zk) <= len(lk), (len(zk), len(lk))
     # the actual claim, deterministically: partkey ALONE prunes under
     # z-order (secondary-dimension locality exists) and cannot prune
     # under the orderkey sort (every file's partkey range spans the
     # domain) — boundary sampling can't change either fact
-    zp, _ = z.files_pruned({"l_partkey": (None, pk_hi)})
-    lp, _ = lin.files_pruned({"l_partkey": (None, pk_hi)})
+    pk_probes = _values_upto(li, "l_partkey", pk_hi)
+    zp, _ = z.files_pruned_in("l_partkey", pk_probes)
+    lp, lt = lin.files_pruned_in("l_partkey", pk_probes)
+    assert lt == N_FILES
     assert len(zp) < N_FILES
     assert len(lp) == N_FILES
 
@@ -136,7 +156,7 @@ def test_files_without_stats_are_kept(spark, sf_dir, tmp_path):
     plain.overwrite(li.repartition(4))
 
     statted = ManifestTable(str(tmp_path / "t"), stats_cols=["l_orderkey"])
-    kept, total = statted.files_pruned({"l_orderkey": (None, 1)})
+    kept, total = statted.files_pruned_in("l_orderkey", [1])
     assert total > 0 and len(kept) == total  # nothing skipped blindly
     # ...and a later append records stats for ITS files only
     statted.append(li.limit(100))
@@ -159,15 +179,14 @@ def test_zorder_compaction_restores_skipping(spark, sf_dir, tmp_path):
 
     ok_hi = li.agg(F.expr("percentile(l_orderkey, 0.25)")).first()[0]
     pk_hi = li.agg(F.expr("percentile(l_partkey, 0.25)")).first()[0]
-    box = {"l_orderkey": (None, ok_hi), "l_partkey": (None, pk_hi)}
 
-    before_kept, before_total = tbl.files_pruned(box)
+    before_kept, before_total = _box_kept(tbl, li, ok_hi, pk_hi)
     assert len(before_kept) == before_total  # arrival order: nothing prunes
 
     v = tbl.compact(
         spark, num_files=N_FILES, zorder_cols=["l_orderkey", "l_partkey"]
     )
-    after_kept, after_total = tbl.files_pruned(box, version=v)
+    after_kept, after_total = _box_kept(tbl, li, ok_hi, pk_hi, version=v)
     assert after_total == N_FILES
     assert len(after_kept) < after_total // 2, (len(after_kept), after_total)
     # and the rewrite lost nothing

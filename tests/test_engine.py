@@ -106,6 +106,26 @@ def test_write_output_layout(spark, tmp_path):
         assert hits == [f"bucket={bucket}"], (word, hits)
 
 
+@pytest.mark.parametrize("n_reduce", [5, 8])
+def test_bucket_n_written_by_reduce_task_n(spark, tmp_path, n_reduce):
+    """Reference parity (worker.go:154,170-174): reduce task n writes
+    bucket n, so every file under ``bucket=b/`` is write partition b's
+    ``part-0000b-*`` and no two buckets share a task."""
+    from map_reduce_in_go_spark.cli import main
+
+    src = tmp_path / "in.txt"
+    src.write_text(" ".join(f"w{i}" for i in range(2000)))
+    out = str(tmp_path / "out")
+    assert main(["--input", str(src), "--output", out, "--reduce", str(n_reduce)]) == 0
+    buckets = sorted(glob.glob(os.path.join(out, "bucket=*")))
+    assert len(buckets) == n_reduce
+    for d in buckets:
+        b = int(os.path.basename(d).split("=")[1])
+        names = [os.path.basename(f) for f in glob.glob(os.path.join(d, "*.csv"))]
+        assert names, d
+        assert all(n.startswith(f"part-{b:05d}-") for n in names), (b, names)
+
+
 def test_fault_tolerance_confs(spark):
     """Reference parity (task.go:11,13,264-304): retry cap + straggler
     speculation must both be SET — a multiplier without the enable flag is

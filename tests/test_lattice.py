@@ -240,53 +240,6 @@ def test_lattice_stream_equals_batch(spark, sf_dir, tmp_path):
     assert s == b
 
 
-@pytest.mark.slow
-def test_lattice_retract_batch(spark, sf_dir, tmp_path):
-    """Batch retraction = negative partials on every level: answers
-    equal a lattice that never saw the batch, replays no-op, retracting
-    a never-ingested batch refuses, and compaction drops fully-zeroed
-    keys instead of keeping dead rows."""
-    lat, ev = _feed(spark, sf_dir, tmp_path)
-    bad = ev.filter(F.pmod("user_id", F.lit(3)) == 1)  # batch 1 was bad
-    assert lat.retract_batch(spark, bad, 1)
-    assert lat.retract_batch(spark, bad, 1) is False  # replay no-op
-
-    never = RollupLattice(
-        TableCatalog(str(tmp_path / "never")), LEVELS, SUMS
-    )
-    for i in (0, 2):
-        assert never.ingest_batch(
-            spark, ev.filter(F.pmod("user_id", F.lit(3)) == i), i
-        )
-    for dims in (("event_type",), ("day",), ("event_type", "day"), ()):
-        got = _rows(lat.answer(spark, dims, {"cnt": "cnt", "val": "val"}), dims)
-        want = _rows(never.answer(spark, dims, {"cnt": "cnt", "val": "val"}), dims)
-        # the retracted lattice may carry zero-sum keys until compaction;
-        # they are additive no-ops
-        got = {k: v for k, v in got.items() if v[0] != 0 or v[1] != 0}
-        assert got == want
-
-    with pytest.raises(ValueError, match="never ingested"):
-        lat.retract_batch(spark, bad, 77)
-
-    # full cancellation needs EXACT measure types (the registered cube's
-    # decimal discipline): build a decimal twin, ingest, retract all,
-    # compact — every level folds to zero rows and drops them
-    dsums = {"cnt": "1", "val": "CAST(value AS DECIMAL(18,2))"}
-    dlat = RollupLattice(TableCatalog(str(tmp_path / "dec")), LEVELS, dsums)
-    for i in range(3):
-        b = ev.filter(F.pmod("user_id", F.lit(3)) == i)
-        assert dlat.ingest_batch(spark, b, i)
-    for i in range(3):
-        b = ev.filter(F.pmod("user_id", F.lit(3)) == i)
-        assert dlat.retract_batch(spark, b, i)
-    dlat.compact(spark)
-    from map_reduce_in_go_spark.streaming.corpus_pipeline import member
-
-    for keys in sorted(set(dlat.levels.values())):
-        assert member(spark, dlat.cat, _level_member(keys)).count() == 0
-
-
 def test_lattice_retract_keys(spark, sf_dir, tmp_path):
     """Predicate erasure over the lattice: zeroing one event_type equals
     a lattice that never ingested those rows; measure-column predicates
@@ -462,14 +415,12 @@ def test_lattice_hll_distinct_matches_single_pass_sketch(
 
 
 def test_lattice_non_additive_retraction_posture(spark, sf_dir, tmp_path):
-    """Pinned honesty (r12 verdict #1): batch retraction REFUSES on a
-    min/max/HLL lattice (partials cannot be un-merged); key erasure stays
-    exact via the rebuild path — equal to a lattice that never ingested
-    the erased keys, for every measure family, with replay no-op and
-    unknown-measure specs refused."""
+    """Pinned honesty (r12 verdict #1): min/max/HLL partials cannot be
+    un-merged, so key erasure on such a lattice stays exact via the
+    rebuild path — equal to a lattice that never ingested the erased
+    keys, for every measure family, with replay no-op and unknown-measure
+    specs refused."""
     lat, ev = _feed_mm(spark, sf_dir, tmp_path)
-    with pytest.raises(ValueError, match="additive-only"):
-        lat.retract_batch(spark, ev, 1)
 
     target = ev.select("event_type").first()["event_type"]
     assert lat.retract_keys(spark, F.col("event_type") == target, op="drop-t")
@@ -714,7 +665,13 @@ def test_lattice_distinct_overlap(spark, sf_dir, tmp_path):
     error bound of the exact intersection; empty groups answer zero; bad
     measure/key refuse loudly."""
     lat, ev = _feed_mm(spark, sf_dir, tmp_path)
-    got = lat.distinct_overlap(spark, "users", "event_type", "click", "purchase")
+
+    def overlap(measure, key_col, group_a, group_b):
+        return lat.distinct_overlap_many(
+            spark, measure, key_col, [(group_a, group_b)]
+        )[0]
+
+    got = overlap("users", "event_type", "click", "purchase")
 
     def exact_users(pred):
         return {
@@ -737,36 +694,18 @@ def test_lattice_distinct_overlap(spark, sf_dir, tmp_path):
     )
 
     # group lists work; disjoint-with-itself sanity: A vs A intersects ≈ A
-    same = lat.distinct_overlap(
-        spark, "users", "event_type", ["click"], ["click"]
-    )
+    same = overlap("users", "event_type", ["click"], ["click"])
     assert same["distinct_intersection"] == same["distinct_a"]
 
     # empty group: zero everywhere, bound degenerate but finite
-    empty = lat.distinct_overlap(
-        spark, "users", "event_type", "no-such-type", "click"
-    )
+    empty = overlap("users", "event_type", "no-such-type", "click")
     assert empty["distinct_a"] == 0
     assert empty["distinct_intersection"] <= empty["distinct_b"]
 
     with pytest.raises(KeyError, match="HLL distinct measure"):
-        lat.distinct_overlap(spark, "cnt", "event_type", "click", "view")
+        overlap("cnt", "event_type", "click", "view")
     with pytest.raises(ValueError, match="apex key column"):
-        lat.distinct_overlap(spark, "users", "value", "click", "view")
-
-
-def test_distinct_overlap_many_matches_single_calls(spark, sf_dir, tmp_path):
-    """r15: the batched one-scan overlap API returns, pair for pair, the
-    identical dicts the per-pair calls produce (same snapshot, same
-    conditional register-unions — only the job count changes)."""
-    lat, _ev = _feed_mm(spark, sf_dir, tmp_path)
-    pairs = [("click", "purchase"), ("view", "click"), (["click"], ["click"])]
-    batched = lat.distinct_overlap_many(spark, "users", "event_type", pairs)
-    singles = [
-        lat.distinct_overlap(spark, "users", "event_type", a, b)
-        for a, b in pairs
-    ]
-    assert batched == singles
+        overlap("users", "value", "click", "view")
 
 
 def test_events_cube_overlap_registered_shape(spark, sf_dir):

@@ -1,12 +1,9 @@
 """Served IVF-PQ artifact: probe == in-flight ann_ivf_pq bit-for-bit,
-probing reads ONLY the probed cells' code tables, appends are
-exactly-once and served immediately."""
+and probing reads ONLY the probed cells' code tables."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from map_reduce_in_go_spark.functions.caching import release_persisted
 from map_reduce_in_go_spark.operators.pq import ann_ivf_pq
@@ -15,7 +12,6 @@ from map_reduce_in_go_spark.operators.pq_index import (
     CODEBOOKS,
     PqIvfIndex,
 )
-from map_reduce_in_go_spark.operators.similarity import QUERY_MOD, _vectors
 
 
 @pytest.fixture(scope="module")
@@ -84,46 +80,6 @@ def test_probe_reads_only_probed_cells(spark, sf_dir, built_index, monkeypatch):
     }
     assert read_cells  # some cells were read
     assert read_cells < all_cells, "probe scanned every cell — no pruning"
-
-
-def test_append_batch_exactly_once_and_served(spark, sf_dir, built_index):
-    """An appended copy of an existing vector lands in that vector's OWN
-    cell with BIT-IDENTICAL codes (encoded with the served model, not a
-    retrain) and is visible to the next snapshot; a replayed op is a
-    no-op. (Final-probe visibility additionally requires the batch in the
-    primary store for exact rescore — the production contract; the
-    artifact-level pin here is what this module owns.)"""
-    vecs = _vectors(spark, sf_dir)
-    q = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(1)
-        .collect()[0]
-    )
-    new_id = int(vecs.agg(F.max("vec_id")).collect()[0][0]) + 1
-    batch = spark.createDataFrame(
-        [(new_id, [float(x) for x in q["e"]])], "vec_id long, e array<double>"
-    )
-    assert built_index.append_batch(spark, batch, op="pq-batch-1")
-    assert built_index.append_batch(spark, batch, op="pq-batch-1") is False
-
-    from map_reduce_in_go_spark.sources.manifest_table import ManifestTable
-    import os
-
-    _, cells = built_index.snapshot(spark, None)
-    found = {}
-    for cid, _, path, version in cells:
-        rows = (
-            ManifestTable(os.path.join(built_index.root, path))
-            .read(spark, version)
-            .filter(F.col("vec_id").isin([int(q["vec_id"]), new_id]))
-            .collect()
-        )
-        for r in rows:
-            found[r["vec_id"]] = (cid, tuple(r["codes"]))
-    assert new_id in found and q["vec_id"] in found
-    # same vector → same argmax cell and identical served-model codes
-    assert found[new_id] == found[q["vec_id"]]
 
 
 def test_snapshot_consistency(spark, built_index):

@@ -1,11 +1,14 @@
 """Two ``ast``-only guards over the package source (no imports, no Spark).
 
-Reachability: every top-level def/class in the package is reachable from
-a real entry point: the CLI, the registry, ``__spark_entry__``, the
-benchmarks or the tools. The walk is name-based: a reached definition
-makes every name it mentions reachable. Docstrings do not count as
-mentions; other string literals do, so a name built from a string stays
-live. Names listed in ``__all__`` and bare imports are not callers.
+Reachability: every top-level def/class in the package, and every
+non-dunder method of a top-level class, is reachable from a real entry
+point: the CLI, the registry, ``__spark_entry__``, the benchmarks or the
+tools. The walk is name-based: a reached definition makes every name it
+mentions reachable, and a method is reached when live code names it
+(``obj.method`` or a string). Dunder methods are reached with their
+class. Docstrings do not count as mentions; other string literals do, so
+a name built from a string stays live. Names listed in ``__all__`` and
+bare imports are not callers.
 
 One kernel per computation: no two function bodies in the package,
 nested functions included, are verbatim copies of each other."""
@@ -63,8 +66,28 @@ def _is_all(st: ast.stmt) -> bool:
     )
 
 
+def _is_method(st: ast.stmt) -> bool:
+    return isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and not (
+        st.name.startswith("__") and st.name.endswith("__")
+    )
+
+
+def _definitions(st: ast.stmt):
+    """(name, label, nodes) for each definition a top-level statement makes.
+    A class's own nodes leave out its non-dunder methods, which are
+    definitions of their own."""
+    if isinstance(st, ast.ClassDef):
+        methods = [m for m in st.body if _is_method(m)]
+        for m in methods:
+            yield m.name, f"{st.name}.{m.name}", [m]
+        own = [b for b in st.body if b not in methods]
+        yield st.name, st.name, [*st.decorator_list, *st.bases, *st.keywords, *own]
+    elif isinstance(st, _DEFS):
+        yield st.name, st.name, [st]
+
+
 def unreached() -> set[str]:
-    defs: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
+    defs: dict[str, list[tuple[str, list[ast.AST], set[int]]]] = {}
     live: set[str] = set()
     for path in sorted(PKG.rglob("*.py")):
         tree = ast.parse(path.read_text())
@@ -75,7 +98,8 @@ def unreached() -> set[str]:
             continue
         for st in tree.body:
             if isinstance(st, _DEFS):
-                defs.setdefault(st.name, []).append((rel, st, docs))
+                for name, label, nodes in _definitions(st):
+                    defs.setdefault(name, []).append((f"{rel}::{label}", nodes, docs))
             elif not isinstance(st, (ast.Import, ast.ImportFrom)) and not _is_all(st):
                 live |= _mentions(st, docs)
     for pattern in EXTRA_ROOTS:
@@ -84,16 +108,12 @@ def unreached() -> set[str]:
             live |= _mentions(tree, _docstrings(tree))
     todo = list(live & defs.keys())
     while todo:
-        for _rel, node, docs in defs[todo.pop()]:
-            new = (_mentions(node, docs) & defs.keys()) - live
+        for _where, nodes, docs in defs[todo.pop()]:
+            mentioned = set().union(*(_mentions(n, docs) for n in nodes))
+            new = (mentioned & defs.keys()) - live
             live |= new
             todo.extend(new)
-    return {
-        f"{rel}::{name}"
-        for name, ds in defs.items()
-        if name not in live
-        for rel, *_ in ds
-    }
+    return {where for name, ds in defs.items() if name not in live for where, *_ in ds}
 
 
 def test_only_allowlisted_definitions_are_unreached():

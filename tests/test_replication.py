@@ -431,9 +431,10 @@ def test_member_log_truncation_falls_back_to_base_sync(spark, sf_dir, tmp_path):
 
     _feed(spark, sf_dir, src, batches=(2,))
     # maintenance truncates every member's log below its newest entry
-    # (current pins protected) — the predecessor pins batch 2's diff
-    # would read are now gone
-    src.checkpoint_members(spark)
+    # (the current pins) — the predecessor pins batch 2's diff would
+    # read are now gone
+    for name in src.snapshot(spark):
+        src.table(name).checkpoint()
     corpus_tbl = src.table(CORPUS)
     assert len(corpus_tbl._versions()) == 1  # history really truncated
 
@@ -867,7 +868,8 @@ def test_verbatim_truncated_pins_surface_actionable_error(
     # two more primary commits, then member-log maintenance: batch 1's
     # pinned member versions are now below the truncation horizon
     _feed(spark, sf_dir, src, batches=(1, 2))
-    src.checkpoint_members(spark)
+    for name in src.snapshot(spark):
+        src.table(name).checkpoint()
     assert len(src.table(CORPUS)._versions()) == 1
 
     with pytest.raises(FileNotFoundError, match="pins"):
