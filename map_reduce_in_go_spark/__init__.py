@@ -5,7 +5,8 @@ The reference (read-only at /root/reference) is a Go distributed MapReduce:
 coordinator + RPC workers, FNV-1a hash shuffle, WordCount application.
 Here the same semantics are declared as DataFrame plans and Catalyst/Tungsten
 pick the physical strategy; the generic Mapper/Reducer contract survives as an
-Arrow-batched `mapInPandas`/`applyInPandas` path (see `engine.py`).
+Arrow-batched `mapInPandas` map and sorted-run `mapInPandas` reduce (see
+`engine.py`).
 
 Layout:
 - ``session``    tuned SparkSession (fault-tolerance knobs mirror the reference)

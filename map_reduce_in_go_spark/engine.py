@@ -10,7 +10,8 @@ shuffle (FNV-1a mod nReduce — worker.go:154), group, sorted output
 (worker.go:217-243). Here the same user code runs on Spark:
 
 - map phase    → ``mapInPandas`` (Arrow-batched; one Python call per batch,
-  not per row — the 10-100x rule for Python on Spark)
+  not per row — the 10-100x rule for Python on Spark), one task per
+  partition of the input frame
 - shuffle      → Catalyst hash exchange on ``key`` (Tungsten, spill-aware)
 - reduce phase → ``sortWithinPartitions(key).mapInPandas``: one pass walks the
   sorted key runs and calls the reducer once per run with every value of its
@@ -86,6 +87,11 @@ def run_mapreduce(
     Returns a (key, value) DataFrame. Lazily planned: map batches, one hash
     exchange on ``key``, a sort within each partition, then one reduce pass
     over the sorted key runs of every partition.
+
+    The map stage is as wide as ``files_df``: one task, and so one Python
+    worker, per input partition (``sources.text.read_text_files`` sizes
+    them by input bytes). AQE sizes the reduce stage from the shuffle
+    bytes, and its tasks reuse the idle map workers.
     """
 
     def _map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -4,9 +4,11 @@ The reference mapper (map_reduce/wordcount.go:10-22) does:
 ``strings.Fields`` (split on whitespace runs) → ``strings.Trim`` with the
 char set ``.,!?"':;()`` → ``strings.ToLower`` → drop empties.
 
-Everything here is a pure Catalyst expression (whole-stage codegen, no
-Python), and every formula has a 1:1 ANSI-SQL rendering used by the DuckDB
-oracles — see the matching SQL fragments in the operator modules.
+Everything here is a pure Catalyst expression (no Python), and every
+formula has a 1:1 ANSI-SQL rendering used by the DuckDB oracles — see the
+matching SQL fragments in the operator modules. ``split`` and
+``regexp_replace`` are code-generated; the higher-order ``transform`` and
+``filter`` are interpreted (``CodegenFallback``).
 """
 
 from __future__ import annotations

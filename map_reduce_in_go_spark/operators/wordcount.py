@@ -4,7 +4,9 @@ These re-express the reference's application surface (WordCount —
 map_reduce/wordcount.go — plus the classic MapReduce companions: distributed
 grep, inverted index, top-k) as native DataFrame plans:
 
-- tokenize = ``split`` + ``transform`` + ``filter`` (whole-stage codegen)
+- tokenize = ``split`` + ``transform`` + ``filter``: no Python, but the two
+  higher-order functions are interpreted (``CodegenFallback``) inside the
+  whole-stage-codegen stage
 - count    = ``groupBy().count()`` → map-side partial aggregation, one
   shuffle keyed by word. At 100 TB word keys are near-uniform (Zipf head is
   handled by partial agg: each task pre-counts its own "the"s), so no salting

@@ -17,6 +17,8 @@ from map_reduce_in_go_spark.engine import (
     write_output,
 )
 from map_reduce_in_go_spark.functions.hashing import fnv1a_32, reduce_bucket
+from map_reduce_in_go_spark.sources.text import read_text_files
+from perfbench import gen
 
 
 def _fnv1a_py(s: str) -> int:
@@ -124,6 +126,34 @@ def test_bucket_n_written_by_reduce_task_n(spark, tmp_path, n_reduce):
         names = [os.path.basename(f) for f in glob.glob(os.path.join(d, "*.csv"))]
         assert names, d
         assert all(n.startswith(f"part-{b:05d}-") for n in names), (b, names)
+
+
+def test_small_text_files_read_as_one_partition(spark, tmp_path):
+    """The contract test's two seeded files (a few KB, under one open cost)
+    are one map task, so a small generic job starts one Python worker."""
+    gen.generate(7, str(tmp_path), size="tiny")
+    files = sorted(glob.glob(os.path.join(tmp_path, "text", "pg-*.txt")))
+    assert len(files) == 2
+    assert read_text_files(spark, files).rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize("kb", [1, 2, 3, 6])
+def test_text_file_partitions_follow_input_bytes(spark, tmp_path, kb):
+    """Files totalling ``kb`` open costs read as ``min(kb, defaultParallelism)``
+    partitions: 4 files of 256 bytes per KB, with the open cost at 1 KB."""
+    conf = "spark.sql.files.openCostInBytes"
+    saved = spark.conf.get(conf)
+    files = []
+    for i in range(4 * kb):
+        f = tmp_path / f"f{i}.txt"
+        f.write_text("x" * 255 + "\n")
+        files.append(str(f))
+    spark.conf.set(conf, "1024")
+    try:
+        n = read_text_files(spark, files).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(conf, saved)
+    assert n == min(kb, spark.sparkContext.defaultParallelism)
 
 
 def test_fault_tolerance_confs(spark):
