@@ -250,6 +250,25 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _token_offsets(d: DataFrame, name: str) -> DataFrame:
+    """``d`` (doc_id, n_tok, blk) with column ``name``: the tokens of all
+    earlier docs in doc_id order, a global prefix sum computed in two
+    levels (block totals, then a window inside each block)."""
+    blk = d.groupBy("blk").agg(F.sum("n_tok").alias("bsum"))
+    wblk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
+    blk_off = blk.select(
+        "blk", F.coalesce(F.sum("bsum").over(wblk), F.lit(0)).alias("boff")
+    )
+    win = (
+        Window.partitionBy("blk")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return d.join(F.broadcast(blk_off), "blk").withColumn(
+        name, F.col("boff") + F.coalesce(F.sum("n_tok").over(win), F.lit(0))
+    )
+
+
 def shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack docs (in doc_id order) into ~SHARD_TOKENS-token training shards.
 
@@ -269,20 +288,7 @@ def shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(tokens(F.col("text"))).alias("n_tok"),
         F.expr(f"doc_id DIV {SHARD_BLOCK}").alias("blk"),
     )
-    blk = d.groupBy("blk").agg(F.sum("n_tok").alias("bsum"))
-    wblk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    blk_off = blk.select(
-        "blk", F.coalesce(F.sum("bsum").over(wblk), F.lit(0)).alias("boff")
-    )
-    win = (
-        Window.partitionBy("blk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packed = d.join(F.broadcast(blk_off), "blk").withColumn(
-        "offset", F.col("boff") + F.coalesce(F.sum("n_tok").over(win), F.lit(0))
-    )
-    return packed.select(
+    return _token_offsets(d, "offset").select(
         "doc_id",
         "n_tok",
         "offset",
@@ -661,8 +667,8 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``head_doc``   — smallest doc_id overlapping (the resume cursor a
       restartable packer seeks to).
 
-    Plan: the global token prefix-sum is the same hierarchical two-level
-    construction as :func:`shard_pack` (per-block partial sums → tiny
+    Plan: the global token prefix-sum is :func:`shard_pack`'s hierarchical
+    two-level :func:`_token_offsets` (per-block partial sums → tiny
     block-level cumsum → within-block window) — no single-partition window
     over the corpus. Each document then fans out to the few sequences its
     token span covers (``explode(sequence(first_seq, last_seq))`` — a doc
@@ -680,22 +686,8 @@ def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_tok") > 0)
         .withColumn("blk", F.expr(f"doc_id DIV {SHARD_BLOCK}"))
     )
-    blk = d.groupBy("blk").agg(F.sum("n_tok").alias("bsum"))
-    wblk = Window.orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-    blk_off = blk.select(
-        "blk", F.coalesce(F.sum("bsum").over(wblk), F.lit(0)).alias("boff")
-    )
-    win = (
-        Window.partitionBy("blk")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    spans = (
-        d.join(F.broadcast(blk_off), "blk")
-        .withColumn(
-            "start", F.col("boff") + F.coalesce(F.sum("n_tok").over(win), F.lit(0))
-        )
-        .withColumn("end", F.col("start") + F.col("n_tok") - 1)
+    spans = _token_offsets(d, "start").withColumn(
+        "end", F.col("start") + F.col("n_tok") - 1
     )
     ctx = F.lit(CTX_TOKENS)
     fan = spans.select(

@@ -44,7 +44,7 @@ from ..functions.caching import free_local_checkpoint, scoped_persist
 from ..functions.hashing import sql_minhash_signature
 from ..functions.text import shingles, shingles_of, sql_shingles, sql_tokens, tokens
 from ..functions.vectors import sql_cosine, sql_double_array
-from .similarity import CENTROID_MOD, CENTROID_OFF, _duck_round6
+from .similarity import CENTROID_MOD, CENTROID_OFF, _duck_round6, _unit_and_norms
 from ..sources.artifacts import artifact_home as band_index_home
 from ..sources.artifacts import memo as _artifact_memo
 from ..sources.artifacts import served_artifact
@@ -1121,19 +1121,17 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .similarity import _assign_cells, _centroids, _vectors
+    from .similarity import _cells_of, _centroids, _vectors
 
     vecs = _vectors(spark, sf_dir)
     bc = spark.sparkContext.broadcast(_centroids(spark, sf_dir))
-    assigned = (
-        vecs.select("vec_id", "e")
-        .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-        .mapInPandas(
-            lambda it: _assign_cells(it, bc, top_n=1),
-            schema="vec_id long, rank int, cid long",
-        )
-        .select("vec_id", "cid")
-    )
+    assigned = _cells_of(
+        vecs.select("vec_id", "e").repartition(
+            spread_partitions(spark, sf_dir, "embeddings")
+        ),
+        bc,
+        1,
+    ).select("vec_id", "cid")
     vt = vecs.select("vec_id", "e").join(assigned, "vec_id")
 
     def _cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1185,17 +1183,6 @@ def dedup_keep_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matrix; 2M 64-dim float64 rows ≈ 1 GB — beyond that the guard points at
 # the distributed variant instead of letting the driver OOM mid-job.
 EMBED_EXACT_MAX_ROWS = 2_000_000
-
-
-def _unit_and_norms(vectors):
-    """(float64 matrix, unit rows, exact norms) of a column of vectors;
-    the norms are sequential folds, as the oracle computes them."""
-    import numpy as np
-
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-    return mat, unit, norms
 
 
 def _cosine_pairs(ids, mat, unit, norms, rows):

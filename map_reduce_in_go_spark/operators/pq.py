@@ -34,11 +34,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.caching import scoped_persist
 from ..sources.tables import spread_partitions
 from .similarity import (
+    NPROBE,
     QUERY_MOD,
-    TOP_K,
-    _exact_pair_scores,
+    _cells_of,
+    _centroids,
+    _rerank,
     _vectors,
 )
 
@@ -74,10 +77,11 @@ PQ_QUERY_MAX = 500_000  # same broadcast guard as ann_bruteforce
 
 
 def _collect_queries(vecs):
-    """Driver-collected query subset with the broadcast-size guard every
-    ANN query applies: the per-query LUTs broadcast is O(queries · M · K),
-    so an oversize query set must fail loudly and point at the scale path
-    rather than OOM the driver."""
+    """(ids, float64 matrix) of the query subset, collected in vec_id
+    order, with the broadcast-size guard every ANN query applies: the
+    per-query LUTs broadcast is O(queries · M · K), so an oversize query
+    set must fail loudly and point at the scale path rather than OOM the
+    driver."""
     q = vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
     n = q.count()
     if n > PQ_QUERY_MAX:
@@ -85,7 +89,19 @@ def _collect_queries(vecs):
             f"PQ probing broadcasts per-query LUTs ({n} queries > "
             f"{PQ_QUERY_MAX}); shrink the query subset or shard the probe"
         )
-    return q.select("vec_id", "e").orderBy("vec_id").collect()
+    rows = q.select("vec_id", "e").orderBy("vec_id").collect()
+    q_ids = np.array([r["vec_id"] for r in rows])
+    return q_ids, np.stack([np.asarray(r["e"], dtype=np.float64) for r in rows])
+
+
+def _luts(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(n, M, K) ADC tables: per row of ``mat``, the exact
+    sub-vector · code dot for every subspace and code."""
+    sub = books.shape[2]
+    return np.stack(
+        [mat[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)],
+        axis=1,
+    )
 
 
 def train_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
@@ -117,8 +133,19 @@ def train_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
 
 
 def encode(spark: SparkSession, sf_dir: str, books: np.ndarray) -> DataFrame:
-    """(vec_id, codes array<int>) — each vector as M nearest-code ids."""
-    bc = spark.sparkContext.broadcast(books)
+    """(vec_id, codes array<int>) — each corpus vector as M nearest-code ids."""
+    return _encode_rows(
+        _vectors(spark, sf_dir)
+        .select("vec_id", "e")
+        .repartition(spread_partitions(spark, sf_dir, "embeddings")),
+        books,
+    )
+
+
+def _encode_rows(vecs: DataFrame, books: np.ndarray) -> DataFrame:
+    """(vec_id, codes array<int>) for a (vec_id, e) frame: each vector's
+    nearest code per subspace, by squared distance."""
+    bc = vecs.sparkSession.sparkContext.broadcast(books)
 
     def enc(batches):
         import pandas as pd
@@ -138,12 +165,18 @@ def encode(spark: SparkSession, sf_dir: str, books: np.ndarray) -> DataFrame:
                 {"vec_id": pdf["vec_id"].to_numpy(), "codes": list(codes)}
             )
 
-    return (
-        _vectors(spark, sf_dir)
-        .select("vec_id", "e")
-        .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-        .mapInPandas(enc, schema="vec_id long, codes array<int>")
+    return vecs.mapInPandas(enc, schema="vec_id long, codes array<int>")
+
+
+def _coded_cells(codes: DataFrame, vecs: DataFrame, bc_cent) -> DataFrame:
+    """(vec_id, codes, cid): PQ ``codes`` joined to the top-1 cell of each
+    (vec_id, e) row of ``vecs`` under the broadcast quantizer."""
+    assign = (
+        _cells_of(vecs, bc_cent, 1)
+        .filter(F.col("rank") == 1)
+        .select("vec_id", "cid")
     )
+    return codes.join(assign, "vec_id")
 
 
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,28 +185,14 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per corpus partition: reconstruct each query's approximate dot from M
     LUT lookups, keep the partition-local top-``PQ_CAND`` per query, then
     one global candidate cut and an exact cosine rescore of only those
-    pairs (same `_exact_pair_scores` kernel and 6dp discipline as every
-    other ANN query — final scores are true cosines).
+    pairs (the `_rerank` tail every other ANN query ends in — final
+    scores are true cosines).
     """
-    from ..functions.caching import scoped_persist
-
     books = train_codebooks(spark, sf_dir)
     codes = encode(spark, sf_dir, books)
     vecs = _vectors(spark, sf_dir)
-    qdf = _collect_queries(vecs)
-    q_ids = np.array([r["vec_id"] for r in qdf])
-    q_mat = np.stack([np.asarray(r["e"], dtype=np.float64) for r in qdf])
-    sub = books.shape[2]
-    # per-query M×K LUT of exact query-subvector · code dots
-    luts = np.stack(
-        [
-            np.stack(
-                [q_mat[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)],
-                axis=1,
-            )
-        ]
-    )[0]  # (nq, M, K)
-    bc = spark.sparkContext.broadcast((q_ids, luts))
+    q_ids, q_mat = _collect_queries(vecs)
+    bc = spark.sparkContext.broadcast((q_ids, _luts(q_mat, books)))
 
     def adc(batches):
         import pandas as pd
@@ -209,25 +228,33 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(adc, schema="query_id long, vec_id long")
         .distinct()
     )
-    qv = vecs.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    scored = _exact_pair_scores(
-        cand.join(F.broadcast(qv), "query_id").join(
-            vecs.select("vec_id", "e"), "vec_id"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
+    return _rerank(vecs, cand)
+
+
+def _probe_cells(
+    spark: SparkSession, sf_dir: str, q_ids, q_mat, bc_cent, nprobe: int
+) -> DataFrame:
+    """(query_id, cid): the ``nprobe`` nearest cells of each collected
+    query (see :func:`_collect_queries`)."""
+    queries = spark.createDataFrame(
+        [(int(q), list(map(float, q_mat[i]))) for i, q in enumerate(q_ids)],
+        "vec_id long, e array<double>",
+    ).repartition(spread_partitions(spark, sf_dir, "embeddings"))
+    return _cells_of(queries, bc_cent, nprobe).select(
+        F.col("vec_id").alias("query_id"), "cid"
     )
 
 
-def _adc_pair_kernel(bc_lut):
-    """Arrow kernel: (query_id, vec_id, codes) pair rows → approx dots via
-    per-row lookups in the row's query LUT. Shared by the in-flight
-    ``ann_ivf_pq`` and the served :class:`~.pq_index.PqIvfIndex` probe so
-    the two paths cannot drift."""
+def _adc_candidates(members: DataFrame, probes: DataFrame, q_ids, luts) -> DataFrame:
+    """(query_id, vec_id): the top-``PQ_CAND`` code rows per query among
+    the ``members`` (vec_id, codes, cid) of its probed cells, ranked by
+    ADC approximate dot with ties to the smaller vec_id. The candidate
+    stage of the in-flight ``ann_ivf_pq`` and the served
+    :class:`~.pq_index.PqIvfIndex` probe, so the two paths cannot drift.
+    """
+    bc_lut = members.sparkSession.sparkContext.broadcast(
+        {int(q): luts[i] for i, q in enumerate(q_ids)}
+    )
 
     def adc(batches):
         import pandas as pd
@@ -252,7 +279,18 @@ def _adc_pair_kernel(bc_lut):
                 }
             )
 
-    return adc
+    pairs = members.join(F.broadcast(probes), "cid").filter(
+        F.col("vec_id") != F.col("query_id")
+    )
+    scored_approx = scoped_persist(
+        pairs.mapInPandas(adc, schema="query_id long, vec_id long, approx double")
+    )
+    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
+    return (
+        scored_approx.withColumn("r", F.row_number().over(wa))
+        .filter(F.col("r") <= PQ_CAND)
+        .select("query_id", "vec_id")
+    )
 
 
 def ann_ivf_pq(spark: SparkSession, sf_dir: str, nprobe: int | None = None) -> DataFrame:
@@ -268,76 +306,20 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str, nprobe: int | None = None) -> D
     ADC-ranked cell candidates are exact-rescored as always, so reported
     cosines are true cosines.
     """
-    from ..functions.caching import scoped_persist
-    from .similarity import NPROBE, _assign_cells, _centroids
-
     nprobe = NPROBE if nprobe is None else nprobe
     books = train_codebooks(spark, sf_dir)
-    codes = encode(spark, sf_dir, books)
     bc_cent = spark.sparkContext.broadcast(_centroids(spark, sf_dir))
     vecs = _vectors(spark, sf_dir)
-    assign = (
-        vecs.select("vec_id", "e")
-        .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-        .mapInPandas(
-            lambda it: _assign_cells(it, bc_cent, 1),
-            schema="vec_id long, rank int, cid long",
-        )
-        .filter(F.col("rank") == 1)
-        .select("vec_id", "cid")
+    coded = _coded_cells(
+        encode(spark, sf_dir, books),
+        vecs.select("vec_id", "e").repartition(
+            spread_partitions(spark, sf_dir, "embeddings")
+        ),
+        bc_cent,
     )
-    coded = codes.join(assign, "vec_id")  # (vec_id, codes, cid)
-
-    qdf = _collect_queries(vecs)
-    q_ids = np.array([r["vec_id"] for r in qdf])
-    q_mat = np.stack([np.asarray(r["e"], dtype=np.float64) for r in qdf])
-    sub = books.shape[2]
-    luts = np.stack(
-        [q_mat[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)],
-        axis=1,
-    )  # (nq, M, K)
-    lut_by_qid = {int(q): luts[i] for i, q in enumerate(q_ids)}
-    bc_lut = spark.sparkContext.broadcast(lut_by_qid)
-
-    probes = (
-        spark.createDataFrame(
-            [(int(q), list(map(float, q_mat[i]))) for i, q in enumerate(q_ids)],
-            "vec_id long, e array<double>",
-        )
-        .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-        .mapInPandas(
-            lambda it: _assign_cells(it, bc_cent, nprobe),
-            schema="vec_id long, rank int, cid long",
-        )
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    pairs = coded.join(F.broadcast(probes), "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored_approx = scoped_persist(
-        pairs.mapInPandas(
-            _adc_pair_kernel(bc_lut),
-            schema="query_id long, vec_id long, approx double",
-        )
-    )
-    wa = Window.partitionBy("query_id").orderBy(F.desc("approx"), F.asc("vec_id"))
-    cand = (
-        scored_approx.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= PQ_CAND)
-        .select("query_id", "vec_id")
-    )
-    qv = vecs.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    scored = _exact_pair_scores(
-        cand.join(F.broadcast(qv), "query_id").join(
-            vecs.select("vec_id", "e"), "vec_id"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    q_ids, q_mat = _collect_queries(vecs)
+    probes = _probe_cells(spark, sf_dir, q_ids, q_mat, bc_cent, nprobe)
+    return _rerank(vecs, _adc_candidates(coded, probes, q_ids, _luts(q_mat, books)))
 
 
 # ----------------------------------------------- registered verdict query
@@ -363,7 +345,6 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's value hash; the trained artifact itself stays pytest-pinned
     (determinism + the tighter 0.6/0.7 floors in tests/test_pq.py).
     """
-    from ..functions.caching import scoped_persist
     from .similarity import ann_bruteforce
 
     # persisted: consumed by THREE actions (the recall counts below and

@@ -17,8 +17,8 @@ uses (:class:`~..sources.catalog.TableCatalog`):
   centroid table are O(model) driver rows), routes to NPROBE cells, and
   scans ONLY those cells' code files — ADC over per-query LUTs, then
   exact rescore of the top candidates from the primary vector store.
-  The candidate pipeline is the SAME pair-join + shared ADC kernel +
-  deterministic cuts as ``ann_ivf_pq``, so a served probe returns
+  The candidate stage (pair-join, ADC kernel, deterministic cuts) is
+  ``ann_ivf_pq``'s own ``_adc_candidates``, so a served probe returns
   bit-identical rows to the in-flight computation (pinned by test,
   alongside a reads-only-probed-cells pin).
 
@@ -35,27 +35,31 @@ import os
 import uuid
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.caching import scoped_persist
 from ..sources.tables import spread_partitions
 
 from ..sources.catalog import TableCatalog
 from ..sources.manifest_table import ManifestTable
 from .pq import (
-    PQ_CAND,
     PQ_M,
-    _adc_pair_kernel,
+    _adc_candidates,
+    _coded_cells,
     _collect_queries,
+    _encode_rows,
+    _luts,
+    _probe_cells,
     encode,
     train_codebooks,
 )
 from .similarity import (
     NPROBE,
-    TOP_K,
-    _assign_cells,
+    _cells_of,
     _centroids,
-    _exact_pair_scores,
+    _rerank,
+    _unit_and_norms,
     _vectors,
 )
 
@@ -94,19 +98,13 @@ class PqIvfIndex:
         bc_cent = spark.sparkContext.broadcast(_centroids(spark, sf_dir))
         c_ids, c_mat, _, _ = bc_cent.value
         if include_codes:
-            codes = encode(spark, sf_dir, books)
-            assign = (
+            coded = _coded_cells(
+                encode(spark, sf_dir, books),
                 _vectors(spark, sf_dir)
                 .select("vec_id", "e")
-                .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-                .mapInPandas(
-                    lambda it: _assign_cells(it, bc_cent, 1),
-                    schema="vec_id long, rank int, cid long",
-                )
-                .filter(F.col("rank") == 1)
-                .select("vec_id", "cid")
+                .repartition(spread_partitions(spark, sf_dir, "embeddings")),
+                bc_cent,
             )
-            coded = codes.join(assign, "vec_id")  # (vec_id, codes, cid)
         else:
             coded = spark.createDataFrame([], "vec_id long, codes array<int>, cid long")
 
@@ -198,74 +196,23 @@ class PqIvfIndex:
         ADC kernel, same deterministic cuts), but training and encoding
         never run: the scan is the probed cells' code files only.
         """
-        from ..functions.caching import scoped_persist
-
         books, cells = self.snapshot(spark, catalog_version)
         bc_cent = spark.sparkContext.broadcast(self._centroid_pack(cells))
         vecs = _vectors(spark, sf_dir)
-        qdf = _collect_queries(vecs)
-        q_ids = np.array([r["vec_id"] for r in qdf])
-        q_mat = np.stack([np.asarray(r["e"], dtype=np.float64) for r in qdf])
-        sub = books.shape[2]
-        luts = np.stack(
-            [q_mat[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)],
-            axis=1,
-        )  # (nq, M, K)
-        bc_lut = spark.sparkContext.broadcast(
-            {int(q): luts[i] for i, q in enumerate(q_ids)}
+        q_ids, q_mat = _collect_queries(vecs)
+        probes = scoped_persist(
+            _probe_cells(spark, sf_dir, q_ids, q_mat, bc_cent, nprobe)
         )
-        probes = (
-            spark.createDataFrame(
-                [(int(q), list(map(float, q_mat[i]))) for i, q in enumerate(q_ids)],
-                "vec_id long, e array<double>",
-            )
-            .repartition(spread_partitions(spark, sf_dir, "embeddings"))
-            .mapInPandas(
-                lambda it: _assign_cells(it, bc_cent, nprobe),
-                schema="vec_id long, rank int, cid long",
-            )
-            .select(F.col("vec_id").alias("query_id"), "cid")
-        )
-        probes = scoped_persist(probes)
         probe_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
         members = self._read_cells(spark, cells, probe_cids)
-        pairs = members.join(F.broadcast(probes), "cid").filter(
-            F.col("vec_id") != F.col("query_id")
-        )
-        scored_approx = scoped_persist(
-            pairs.mapInPandas(
-                _adc_pair_kernel(bc_lut),
-                schema="query_id long, vec_id long, approx double",
-            )
-        )
-        wa = Window.partitionBy("query_id").orderBy(
-            F.desc("approx"), F.asc("vec_id")
-        )
-        cand = (
-            scored_approx.withColumn("r", F.row_number().over(wa))
-            .filter(F.col("r") <= PQ_CAND)
-            .select("query_id", "vec_id")
-        )
-        qv = vecs.select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-        scored = _exact_pair_scores(
-            cand.join(F.broadcast(qv), "query_id").join(
-                vecs.select("vec_id", "e"), "vec_id"
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
+        return _rerank(
+            vecs, _adc_candidates(members, probes, q_ids, _luts(q_mat, books))
         )
 
     @staticmethod
     def _centroid_pack(cells):
         c_ids = np.array([c for c, _, _, _ in cells], dtype=np.int64)
-        c_mat = np.stack([e for _, e, _, _ in cells])
-        c_unit = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-        c_norms = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
-        return c_ids, c_mat, c_unit, c_norms
+        return (c_ids, *_unit_and_norms([e for _, e, _, _ in cells]))
 
     # ---------------------------------------------------------- maintenance
 
@@ -278,42 +225,9 @@ class PqIvfIndex:
         controls which catalog version encodes (a transaction passes its
         base snapshot, keeping model and codes consistent on re-plan).
         """
-        bc_books = spark.sparkContext.broadcast(books)
         bc_cent = spark.sparkContext.broadcast(self._centroid_pack(cells))
-
-        def enc(batches):
-            import pandas as pd
-
-            bks = bc_books.value
-            sub = bks.shape[2]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["e"]]
-                )
-                codes = np.empty((len(pdf), PQ_M), dtype=np.int32)
-                for m in range(PQ_M):
-                    x = mat[:, m * sub : (m + 1) * sub]
-                    d2 = ((x[:, None, :] - bks[m][None, :, :]) ** 2).sum(axis=2)
-                    codes[:, m] = d2.argmin(axis=1)
-                yield pd.DataFrame(
-                    {"vec_id": pdf["vec_id"].to_numpy(), "codes": list(codes)}
-                )
-
-        coded = batch.select("vec_id", "e").mapInPandas(
-            enc, schema="vec_id long, codes array<int>"
-        )
-        assign = (
-            batch.select("vec_id", "e")
-            .mapInPandas(
-                lambda it: _assign_cells(it, bc_cent, 1),
-                schema="vec_id long, rank int, cid long",
-            )
-            .filter(F.col("rank") == 1)
-            .select("vec_id", "cid")
-        )
-        return coded.join(assign, "vec_id")
+        vecs = batch.select("vec_id", "e")
+        return _coded_cells(_encode_rows(vecs, books), vecs, bc_cent)
 
     def semantic_duplicates(
         self,
@@ -354,22 +268,17 @@ class PqIvfIndex:
         c_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
         c_mat = np.stack([np.asarray(r["e"], dtype=np.float64) for r in rows])
         c_norm = np.linalg.norm(c_mat, axis=1)
-        sub = books.shape[2]
-        luts = np.stack(
-            [c_mat[:, m * sub : (m + 1) * sub] @ books[m].T for m in range(PQ_M)],
-            axis=1,
-        )  # (nc, M, K)
+        luts = _luts(c_mat, books)  # (nc, M, K)
         center_norm2 = (books * books).sum(axis=2)  # (M, K)
         idx = {int(v): i for i, v in enumerate(c_ids)}
         bc = spark.sparkContext.broadcast((idx, luts, c_norm, center_norm2))
 
-        assigned = (
-            cand.select(F.col("doc_id").alias("vec_id"), "e")
-            .repartition(spark.sparkContext.defaultParallelism)
-            .mapInPandas(
-                lambda it: _assign_cells(it, bc_cent, nprobe),
-                schema="vec_id long, rank int, cid long",
-            )
+        assigned = _cells_of(
+            cand.select(F.col("doc_id").alias("vec_id"), "e").repartition(
+                spark.sparkContext.defaultParallelism
+            ),
+            bc_cent,
+            nprobe,
         )
         probes = assigned.select(F.col("vec_id").alias("doc_id"), "cid")
         probe_cids = [r["cid"] for r in probes.select("cid").distinct().collect()]

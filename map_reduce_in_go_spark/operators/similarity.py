@@ -55,6 +55,28 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _unit_and_norms(vectors):
+    """(float64 matrix, unit rows, exact norms) of a column of vectors;
+    the unit rows feed a GEMM prefilter, the norms are sequential folds,
+    as the oracle computes them."""
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    return mat, unit, norms
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The ``TOP_K`` best (query_id, vec_id, cos) rows per query, ranked by
+    cosine with ties to the smaller vec_id, as (query_id, neighbor_id,
+    cos, rank)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
+    )
+
+
 def _bruteforce_topk(
     spark: SparkSession, sf_dir: str, cross_label_only: bool = False
 ) -> DataFrame:
@@ -88,9 +110,7 @@ def _bruteforce_topk(
     )
     q_ids = qdf["vec_id"].to_numpy()
     q_labels = qdf["label"].to_numpy()
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qdf["e"]])
-    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    q_norms = np.sqrt(np.cumsum(q_mat * q_mat, axis=1)[:, -1])
+    q_mat, q_unit, q_norms = _unit_and_norms(qdf["e"])
     bc = spark.sparkContext.broadcast((q_ids, q_labels, q_mat, q_unit, q_norms))
 
     def _block(batches):
@@ -101,9 +121,7 @@ def _bruteforce_topk(
             if m == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-            unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+            mat, unit, norms = _unit_and_norms(pdf["e"])
             sims = b_qunit @ unit.T  # nq × m GEMM prefilter
             sims[b_qids[:, None] == ids[None, :]] = -np.inf  # self-pairs out
             if cross_label_only:
@@ -138,12 +156,7 @@ def _bruteforce_topk(
         .repartition(spread_partitions(spark, sf_dir, "embeddings"))
         .mapInPandas(_block, schema="query_id long, vec_id long, cos double")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _top_k(cands)
 
 
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,33 +356,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_spread = spread_partitions(spark, sf_dir, "embeddings")
     vt = _with_buckets(vecs, n_spread=n_spread).select("vec_id", "tbl", "bucket")
     probes = _query_probes(vecs, n_spread=n_spread)
-    # dedup collisions on the (query, candidate) id pair BEFORE re-attaching
-    # vectors — distinct over rows carrying two 64-float arrays is needless
-    # shuffle weight
-    pair_ids = (
-        vt.join(F.broadcast(probes), ["tbl", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    # broadcast only the query subset's vectors (r15): every probe
-    # query_id is % QUERY_MOD == 0 by construction, so filtering qv the
-    # same way is a semantic no-op that ships QUERY_MOD× fewer bytes
-    qv = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    cands = _exact_pair_scores(
-        pair_ids.join(F.broadcast(qv), "query_id").join(
-            vecs.select("vec_id", "e"), "vec_id"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _rerank(vecs, _probe_pairs(vt, probes, ["tbl", "bucket"]))
 
 
 CENTROID_MOD = 100  # vec_id % 100 == CENTROID_OFF → the coarse quantizer
@@ -386,16 +373,54 @@ def _duck_round6(x):
     return np.trunc(x * 1e6 + np.copysign(0.5, x)) / 1e6
 
 
+def _probe_pairs(
+    members: DataFrame, probes: DataFrame, on: str | list[str]
+) -> DataFrame:
+    """Distinct (query_id, vec_id) pairs of a member and a query that
+    share a probed cell (the ``on`` key), self-pairs out.
+
+    The pairs dedupe on ids BEFORE vectors are re-attached: a distinct
+    over rows carrying two 64-float arrays is needless shuffle weight.
+    """
+    return (
+        members.join(F.broadcast(probes), on)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id")
+        .distinct()
+    )
+
+
+def _rerank(vecs: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact top-``TOP_K`` re-rank of (query_id, vec_id) candidates: both
+    vectors re-attached, scored by :func:`_exact_pair_scores`, cut by
+    :func:`_top_k`. The one serve tail of every ANN query.
+
+    Only the query subset's vectors are broadcast (r15): every candidate
+    query_id is ``% QUERY_MOD == 0`` by construction, so the filter is a
+    semantic no-op that ships QUERY_MOD× fewer bytes.
+    """
+    qv = (
+        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
+        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
+    )
+    return _top_k(
+        _exact_pair_scores(
+            cand.join(F.broadcast(qv), "query_id").join(
+                vecs.select("vec_id", "e"), "vec_id"
+            )
+        )
+    )
+
+
 def _exact_pair_scores(pairs: DataFrame) -> DataFrame:
     """(query_id, vec_id, cos) for a pair frame carrying ``qe``/``e`` vectors.
 
     Arrow-batched exact scoring: dots and norms are the oracle's
     sequential-fold recipe (``cumsum`` last column), rounded half-away at
     6dp — bit-exact against DuckDB, ~10× the interpreted Catalyst
-    ``aggregate/zip_with`` cosine on the same pairs. Shared by
-    :func:`ann_lsh` and :func:`ann_ivf`.
+    ``aggregate/zip_with`` cosine on the same pairs. The scoring step of
+    :func:`_rerank`.
     """
-    import numpy as np
     import pandas as pd
 
     def _score(batches):
@@ -446,39 +471,12 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..functions.caching import scoped_persist
 
-    ranked = scoped_persist(
-        part.mapInPandas(
-            lambda it: _assign_cells(it, bc, NPROBE),
-            schema="vec_id long, rank int, cid long",
-        )
-    )
+    ranked = scoped_persist(_cells_of(part, bc, NPROBE))
     assign = ranked.filter(F.col("rank") == 1).select("vec_id", "cid")
     probes = ranked.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"), "cid"
     )
-    cand = (
-        assign.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    # broadcast only the query subset's vectors (r15): probe query_ids
-    # are % QUERY_MOD == 0 by construction — QUERY_MOD× fewer bytes
-    qv = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    scored = _exact_pair_scores(
-        cand.join(F.broadcast(qv), "query_id").join(
-            vecs.select("vec_id", "e"), "vec_id"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _rerank(vecs, _probe_pairs(assign, probes, "cid"))
 
 
 # ---------------------------------------------------- persisted IVF index
@@ -500,8 +498,6 @@ def _centroids(spark: SparkSession, sf_dir: str):
     loudly (grow CENTROID_MOD / retrain a smaller codebook) rather than
     OOM the driver at 100 TB.
     """
-    import numpy as np
-
     cand = _vectors(spark, sf_dir).filter(
         F.col("vec_id") % CENTROID_MOD == CENTROID_OFF
     )
@@ -513,11 +509,7 @@ def _centroids(spark: SparkSession, sf_dir: str):
             "broadcastable"
         )
     cdf = cand.select("vec_id", "e").toPandas()
-    c_ids = cdf["vec_id"].to_numpy()
-    c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in cdf["e"]])
-    c_unit = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-    c_norms = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
-    return c_ids, c_mat, c_unit, c_norms
+    return (cdf["vec_id"].to_numpy(), *_unit_and_norms(cdf["e"]))
 
 
 def build_ivf_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
@@ -533,9 +525,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     part = _vectors(spark, sf_dir).select("vec_id", "e").repartition(
         spread_partitions(spark, sf_dir, "embeddings")
     )
-    assign = part.mapInPandas(
-        lambda it: _assign_cells(it, bc, 1), schema="vec_id long, rank int, cid long"
-    ).filter(F.col("rank") == 1)
+    assign = _cells_of(part, bc, 1).filter(F.col("rank") == 1)
     (
         _vectors(spark, sf_dir)
         .select("vec_id", "e")
@@ -550,7 +540,6 @@ def _assign_cells(batches, bc, top_n: int, with_cos: bool = False):
     """Shared top-n centroid assignment kernel (GEMM prefilter + exact
     rescore with the oracle's sequential-fold recipe). With ``with_cos``
     the 6dp-rounded cosine rides along (for margin/quality metrics)."""
-    import numpy as np
     import pandas as pd
 
     b_cids, b_cmat, b_cunit, b_cnorms = bc.value
@@ -558,9 +547,7 @@ def _assign_cells(batches, bc, top_n: int, with_cos: bool = False):
         if not len(pdf):
             continue
         ids = pdf["vec_id"].to_numpy()
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["e"]])
-        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+        mat, unit, norms = _unit_and_norms(pdf["e"])
         sims = unit @ b_cunit.T
         out_v, out_r, out_c, out_s = [], [], [], []
         for i in range(len(ids)):
@@ -584,6 +571,15 @@ def _assign_cells(batches, bc, top_n: int, with_cos: bool = False):
         if with_cos:
             cols["cos"] = np.array(out_s, dtype=np.float64)
         yield pd.DataFrame(cols)
+
+
+def _cells_of(vecs: DataFrame, bc, top_n: int) -> DataFrame:
+    """(vec_id, rank, cid): the ``top_n`` nearest cells of every
+    (vec_id, e) row of ``vecs`` under the broadcast quantizer ``bc``."""
+    return vecs.mapInPandas(
+        lambda it: _assign_cells(it, bc, top_n),
+        schema="vec_id long, rank int, cid long",
+    )
 
 
 def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -614,12 +610,8 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") % QUERY_MOD == 0).select("vec_id", "e")
     queries = queries.repartition(spread_partitions(spark, sf_dir, "embeddings"))
-    probes = (
-        queries.mapInPandas(
-            lambda it: _assign_cells(it, bc, NPROBE),
-            schema="vec_id long, rank int, cid long",
-        )
-        .select(F.col("vec_id").alias("query_id"), "cid")
+    probes = _cells_of(queries, bc, NPROBE).select(
+        F.col("vec_id").alias("query_id"), "cid"
     )
     from ..functions.caching import scoped_persist
 
@@ -628,29 +620,7 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = spark.read.parquet(_ivf_index_path(spark, sf_dir)).filter(
         F.col("cid").isin(probe_cids)  # static partition pruning
     )
-    cand = (
-        index.join(F.broadcast(probes), "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    # broadcast only the query subset's vectors (r15): probe query_ids
-    # are % QUERY_MOD == 0 by construction — QUERY_MOD× fewer bytes
-    qv = (
-        vecs.filter(F.col("vec_id") % QUERY_MOD == 0)
-        .select(F.col("vec_id").alias("query_id"), F.col("e").alias("qe"))
-    )
-    scored = _exact_pair_scores(
-        cand.join(F.broadcast(qv), "query_id").join(
-            vecs.select("vec_id", "e"), "vec_id"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos", "rank")
-    )
+    return _rerank(vecs, _probe_pairs(index, probes, "cid"))
 
 
 def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -990,13 +960,9 @@ def knn_graph(spark: SparkSession, sf_dir: str, bits: int = LSH_BITS) -> DataFra
         if not len(mem) or not len(prb):
             return empty
         m_ids = mem["vec_id"].to_numpy()
-        m_mat = np.stack([np.asarray(v, dtype=np.float64) for v in mem["e"]])
-        m_unit = m_mat / np.linalg.norm(m_mat, axis=1, keepdims=True)
-        m_nrm = np.sqrt(np.cumsum(m_mat * m_mat, axis=1)[:, -1])
+        m_mat, m_unit, m_nrm = _unit_and_norms(mem["e"])
         p_ids = prb["vec_id"].to_numpy()
-        p_mat = np.stack([np.asarray(v, dtype=np.float64) for v in prb["e"]])
-        p_unit = p_mat / np.linalg.norm(p_mat, axis=1, keepdims=True)
-        p_nrm = np.sqrt(np.cumsum(p_mat * p_mat, axis=1)[:, -1])
+        p_mat, p_unit, p_nrm = _unit_and_norms(prb["e"])
         sims = p_unit @ m_unit.T
         sims[p_ids[:, None] == m_ids[None, :]] = -np.inf  # self-pairs out
         k = min(KNN_K, sims.shape[1])

@@ -12,7 +12,7 @@ the last ulp — far below the rounding grain).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.caching import scoped_persist
@@ -21,21 +21,23 @@ from .wordcount import _doc_words
 TOP_TERMS = 5
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 TF-IDF terms per document."""
+def _tf_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """(doc_id, word, tf, df) rows of the documents table, and the 6dp
+    tf-idf score ``round(tf · ln(N / df), 6)`` over them."""
     words = _doc_words(spark, sf_dir)
     # tf feeds three consumers (df, n_docs, scoring) — materialize once;
     # the host releases the handle via caching.release_persisted()
     tf = scoped_persist(words.groupBy("doc_id", "word").agg(F.count("*").alias("tf")))
     df = tf.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = tf.select("doc_id").distinct().count()
-    scored = (
-        tf.join(F.broadcast(df), "word")
-        .withColumn(
-            "score",
-            F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6),
-        )
-    )
+    score = F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
+    return tf.join(F.broadcast(df), "word"), score
+
+
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 TF-IDF terms per document."""
+    tf_df, score = _tf_df(spark, sf_dir)
+    scored = tf_df.withColumn("score", score)
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("word"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -91,20 +93,9 @@ def doc_similarity_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _band_pairs, _signatures
 
     pairs = _band_pairs(_signatures(spark, sf_dir))
-    words = _doc_words(spark, sf_dir)
-    tf = scoped_persist(
-        words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    )
-    df = tf.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
-    n_docs = tf.select("doc_id").distinct().count()
+    tf_df, score = _tf_df(spark, sf_dir)
     w = scoped_persist(
-        tf.join(F.broadcast(df), "word").select(
-            "doc_id",
-            "word",
-            F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
-            .cast("decimal(12,6)")
-            .alias("w"),
-        )
+        tf_df.select("doc_id", "word", score.cast("decimal(12,6)").alias("w"))
     )
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("norm")

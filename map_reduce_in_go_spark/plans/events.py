@@ -13,7 +13,7 @@ per-user state" shape (max per-user event counts are bounded).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.money import money, sql_sum_exact, sum_exact
@@ -442,6 +442,25 @@ ORACLES: dict[str, str] = {
 }
 
 
+def _clicks_and_purchases(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, Column]:
+    """The as-of family's input: clicks and purchases as one tagged
+    (user_id, ts_us, event_id, is_click) union, and the click's
+    (ts_us, event_id) struct, null on purchase rows."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "user_id", "ts_us", "event_id", F.lit(1).alias("is_click")
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id", "ts_us", "event_id", F.lit(0).alias("is_click")
+    )
+    click_info = F.when(
+        F.col("is_click") == 1, F.struct(F.col("ts_us"), F.col("event_id"))
+    )
+    return clicks.unionByName(purchases), click_info
+
+
 def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase gets the latest strictly-prior click.
 
@@ -456,21 +475,11 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "strictly prior" is exact; among equal-ts clicks the largest event_id
     wins (frame order), matching the oracle's max()-at-max-ts.
     """
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts_us", "event_id", F.lit(1).alias("is_click")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts_us", "event_id", F.lit(0).alias("is_click")
-    )
-    un = clicks.unionByName(purchases)
+    un, click_info = _clicks_and_purchases(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_us", "is_click", "event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    click_info = F.when(
-        F.col("is_click") == 1, F.struct(F.col("ts_us"), F.col("event_id"))
     )
     return (
         un.withColumn("prev_click", F.last(click_info, ignorenulls=True).over(w))
@@ -499,24 +508,14 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic without relying on frame row order, which RANGE frames
     don't define. One shuffle on user_id, state bounded by the window.
     """
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts_us", "event_id", F.lit(1).alias("is_click")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts_us", "event_id", F.lit(0).alias("is_click")
-    )
-    un = clicks.unionByName(purchases)
+    un, click_info = _clicks_and_purchases(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_us")
         .rangeBetween(-ATTR_LOOKBACK_US, -1)
     )
-    click_struct = F.when(
-        F.col("is_click") == 1, F.struct(F.col("ts_us"), F.col("event_id"))
-    )
     return (
-        un.withColumn("fc", F.min(click_struct).over(w))
+        un.withColumn("fc", F.min(click_info).over(w))
         .filter(F.col("is_click") == 0)
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -784,14 +783,7 @@ def events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap; exact ties prefer the PRIOR click (the pandas rule). Still one
     shuffle on user_id, no inequality self-join.
     """
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts_us", "event_id", F.lit(1).alias("is_click")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts_us", "event_id", F.lit(0).alias("is_click")
-    )
-    un = clicks.unionByName(purchases)
+    un, click_info = _clicks_and_purchases(spark, sf_dir)
     order = [F.col("ts_us"), F.col("is_click"), F.col("event_id")]
     w_prev = (
         Window.partitionBy("user_id")
@@ -802,9 +794,6 @@ def events_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.partitionBy("user_id")
         .orderBy(*order)
         .rowsBetween(1, Window.unboundedFollowing)
-    )
-    click_info = F.when(
-        F.col("is_click") == 1, F.struct(F.col("ts_us"), F.col("event_id"))
     )
     tagged = (
         un.withColumn("prev_c", F.last(click_info, ignorenulls=True).over(w_prev))

@@ -58,6 +58,19 @@ def events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ranked_per_type(df: DataFrame, col: str) -> DataFrame:
+    """(event_type, ``col``, rn, n): each row's rank in (``col``,
+    event_id) order within its event type, and the type's row count — the
+    input of a discrete quantile (the value at row ``ceil(q·n)``)."""
+    w = Window.partitionBy("event_type").orderBy(col, "event_id")
+    return df.select(
+        "event_type",
+        col,
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
+    )
+
+
 def events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IQR outlier counts per event type (Tukey fences, discrete quantiles).
 
@@ -70,13 +83,7 @@ def events_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg counting pass.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    r = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
-    )
+    r = _ranked_per_type(ev, "value")
     q = (
         r.filter(
             (F.col("rn") == F.ceil(F.lit(0.25) * F.col("n")))
@@ -122,13 +129,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per pass on event_type and the stats frames are 5 rows.
     """
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    r = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
-    )
+    r = _ranked_per_type(ev, "value")
     med = (
         r.filter(F.col("rn") == F.ceil(F.lit(0.5) * F.col("n")))
         .groupBy("event_type")
@@ -139,13 +140,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.abs(F.col("value") - F.col("med")).alias("adev"),
     )
-    w2 = Window.partitionBy("event_type").orderBy("adev", "event_id")
-    r2 = dev.select(
-        "event_type",
-        "adev",
-        F.row_number().over(w2).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
-    )
+    r2 = _ranked_per_type(dev, "adev")
     mad = (
         r2.filter(F.col("rn") == F.ceil(F.lit(0.5) * F.col("n")))
         .groupBy("event_type")

@@ -91,7 +91,6 @@ def dynamic_allocation_or_local_jvm_conf(
 def get_spark(
     app_name: str = "map-reduce-in-go-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
     master: str | None = None,
 ) -> SparkSession:
@@ -104,10 +103,6 @@ def get_spark(
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
     if master is None:
         # local[N, 3]: the second slot is the LOCAL-mode task-retry count —
         # bare local[N] hard-codes maxTaskFailures=1, silently ignoring
@@ -118,7 +113,7 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -146,12 +141,11 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
 
     The driver passes us its own SparkSession in ``__spark_entry__``; these
     are the settings that matter for determinism and Arrow transfer and are
-    safe to set post-launch.
+    safe to set post-launch. AQE and its partition coalescing are Spark's
+    defaults and stay as the session has them.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     # a vanilla session defaults to 200 shuffle partitions — far too many
     # for local mode; AQE coalesces, but the initial number still costs
     try:

@@ -416,26 +416,8 @@ class ManifestTable:
         os.makedirs(self._data_dir, exist_ok=True)
         name = f"{uuid.uuid4().hex}-00000.parquet"
         pq.write_table(table, os.path.join(self._data_dir, name))
-        new_names = [name]
-        new_stats = self._file_stats(new_names)
-        for _ in range(max_retries):
-            v = self.version()
-            if expected_version is not None and v != expected_version:
-                raise CommitConflict(
-                    f"expected to overwrite v{expected_version} but table is "
-                    f"at v{v} at {self.root}"
-                )
-            if self._try_commit(
-                v + 1,
-                new_names,
-                op=op,
-                schema_json=schema_json,
-                stats=new_stats or None,
-            ):
-                self._maybe_checkpoint(v + 1)
-                return v + 1
-        raise CommitConflict(
-            f"overwrite lost the commit race {max_retries} times at {self.root}"
+        return self._commit_overwrite(
+            [name], schema_json, max_retries, op, expected_version
         )
 
     def read_arrow_rows(self, version: int) -> list[dict]:
@@ -529,8 +511,24 @@ class ManifestTable:
         the version they planned against so a racing commit forces a
         replan instead of silently clobbering it.
         """
-        new_names = self._write_data_files(df)
-        schema_json = df.schema.json()
+        return self._commit_overwrite(
+            self._write_data_files(df),
+            df.schema.json(),
+            max_retries,
+            op,
+            expected_version,
+        )
+
+    def _commit_overwrite(
+        self,
+        new_names: list[str],
+        schema_json: str,
+        max_retries: int,
+        op: str,
+        expected_version: int | None,
+    ) -> int:
+        """Commit landed files ``new_names`` as the whole next version:
+        the CAS retry loop of :meth:`overwrite` and :meth:`overwrite_arrow`."""
         new_stats = self._file_stats(new_names)
         for _ in range(max_retries):
             v = self.version()

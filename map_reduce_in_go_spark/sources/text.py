@@ -27,10 +27,12 @@ from pyspark.sql import functions as F
 def read_text_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """One row per file: (filename, contents). Globs and dirs supported.
 
-    Partitions: the scan's splits, coalesced to ``min(defaultParallelism,
-    ceil(input bytes / open cost))`` when that is fewer. The byte total is
-    the file listing's, read from the unprojected relation's statistics (a
-    projection's estimate scales by column widths), so no job runs.
+    Partitions: the scan's splits, coalesced to at most
+    ``min(defaultParallelism, ceil(input bytes / open cost))``; a coalesce
+    without a shuffle never widens, so fewer splits stay as they are. The
+    byte total is the file listing's, read from the unprojected relation's
+    statistics (a projection's estimate scales by column widths), so no
+    job runs.
     """
     if isinstance(paths, str):
         paths = [paths]
@@ -41,13 +43,10 @@ def read_text_files(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     width = min(
         spark.sparkContext.defaultParallelism, max(1, ceil(total / open_cost))
     )
-    files = df.select(
+    return df.select(
         F.col("path").alias("filename"),
         F.decode(F.col("content"), "UTF-8").alias("contents"),
-    )
-    if width < qe.executedPlan().execute().getNumPartitions():
-        return files.coalesce(width)
-    return files
+    ).coalesce(width)
 
 
 def read_lines(spark: SparkSession, paths: str | list[str]) -> DataFrame:

@@ -696,16 +696,7 @@ def corpus_batch_txn(
                 for fut in futures:
                     fut.result()  # re-raise the first member failure
             if emb_batch is not None:
-                pq = PqIvfIndex(cat.root)
-                # the txn's base snapshot encodes: model and codes stay
-                # consistent even when a CAS conflict re-plans the batch
-                books, cells = pq.snapshot(spark, txn.base_version)
-                kept_emb = (
-                    emb_batch.join(survivors, "doc_id", "left_semi")
-                    .select(F.col("doc_id").alias("vec_id"), "e")
-                )
-                rows = pq.encode_with_model(spark, kept_emb, books, cells)
-                pq.stage_append(txn, rows, cells, op=op)
+                _stage_codes(spark, txn, cat.root, emb_batch, survivors, op)
             try:
                 txn.commit(op=op)
                 return True
@@ -751,6 +742,85 @@ def _touched_cells(
         .select("_cell")
         .distinct()
         .collect()
+    )
+
+
+def _drop_cell_vectors(spark: SparkSession, txn, ids: DataFrame) -> None:
+    """Rewrite every IVF-PQ cell member holding a vector of ``ids``
+    (doc_id) without those vectors, inside the open transaction.
+
+    PQ cells stay COPY-ON-WRITE by decision (r13, measured — see SURVEY
+    §2 #... closure): touch detection is ONE union-scan job
+    (:func:`_touched_cells`), the rewrite is O(touched cells) whose sizes
+    the IVF maintenance bounds, and a MOR deferral would put a vector
+    anti-join inside every ANN probe's served hot path to save rewrites
+    that are already small.
+    """
+    from pyspark.sql import functions as F
+
+    vec_ids = ids.select(F.col("doc_id").alias("vec_id"))
+    cells = [r["cell"] for r in txn.read("centroids").collect()]
+    for cell in _touched_cells(spark, txn, cells, vec_ids):
+        txn.overwrite(cell, txn.read(cell).join(vec_ids, "vec_id", "left_anti"))
+
+
+def _stage_codes(
+    spark: SparkSession, txn, root: str, emb: DataFrame, survivors: DataFrame, op: str
+) -> None:
+    """Stage the PQ codes of the ``survivors``' (doc_id, e) embeddings in
+    ``emb`` onto their cells of the open transaction. The transaction's
+    base snapshot encodes, so model and codes stay consistent even when a
+    CAS conflict re-plans the batch."""
+    from pyspark.sql import functions as F
+
+    from ..operators.pq_index import PqIvfIndex
+
+    pq = PqIvfIndex(root)
+    books, cells = pq.snapshot(spark, txn.base_version)
+    kept_emb = emb.join(survivors, "doc_id", "left_semi").select(
+        F.col("doc_id").alias("vec_id"), "e"
+    )
+    rows = pq.encode_with_model(spark, kept_emb, books, cells)
+    pq.stage_append(txn, rows, cells, op=op)
+
+
+def _rebuild_quants(txn, affected, corpus: DataFrame, batch_id: int) -> None:
+    """Overwrite the quantile member: the summaries of languages not in
+    ``affected`` kept, those of ``affected`` rebuilt from ``corpus``
+    (doc rows with lang and text) under ``batch_id``. Rank samples are
+    not linear, so a touched language is rebuilt, never patched.
+
+    Three-valued logic (r10 advice, medium): a NULL in ``affected`` makes
+    ``isin`` evaluate to NULL for every non-matching row, so ``~isin``
+    would silently DROP every untouched language's summary. The null-lang
+    case is split into explicit isNull() branches and the predicate
+    coalesced so NULL never leaks.
+    """
+    from pyspark.sql import functions as F
+
+    from ..functions.text import tokens
+    from .quantiles import summaries_for
+
+    null_affected = None in affected
+    affected_nn = [a for a in affected if a is not None]
+    is_affected = (
+        F.col("event_type").isin(affected_nn) if affected_nn else F.lit(False)
+    )
+    if null_affected:
+        is_affected = is_affected | F.col("event_type").isNull()
+    keep_rows = txn.read(QUANTS).filter(~F.coalesce(is_affected, F.lit(False)))
+    redo_pred = F.col("lang").isin(affected_nn) if affected_nn else F.lit(False)
+    if null_affected:
+        redo_pred = redo_pred | F.col("lang").isNull()
+    redo = corpus.filter(F.coalesce(redo_pred, F.lit(False))).select(
+        "lang",
+        F.size(tokens(F.col("text"))).cast("double").alias("n_tok"),
+    )
+    txn.overwrite(
+        QUANTS,
+        keep_rows.unionByName(
+            summaries_for(redo, "lang", "n_tok", batch_id)
+        ).coalesce(1),
     )
 
 
@@ -884,9 +954,7 @@ def retract_docs(
     """
     from pyspark.sql import functions as F
 
-    from ..functions.text import tokens
     from ..sources.substring_index import _token_gram_counts
-    from .quantiles import summaries_for
 
     if mode not in ("cow", "mor"):
         raise ValueError(f"retract_docs: unknown mode {mode!r}")
@@ -1063,52 +1131,9 @@ def retract_docs(
                 op=op,
             )
             affected = [r["lang"] for r in gone.select("lang").distinct().collect()]
-            # three-valued logic (r10 advice, medium): a NULL in `affected`
-            # makes `isin` evaluate to NULL for every non-matching row, so
-            # `~isin` would silently DROP every untouched language's
-            # summary. Split the null-lang case into explicit isNull()
-            # branches and coalesce the predicate so NULL never leaks.
-            null_affected = any(a is None for a in affected)
-            affected_nn = [a for a in affected if a is not None]
-            is_affected = (
-                F.col("event_type").isin(affected_nn)
-                if affected_nn
-                else F.lit(False)
-            )
-            if null_affected:
-                is_affected = is_affected | F.col("event_type").isNull()
-            keep_rows = txn.read(QUANTS).filter(
-                ~F.coalesce(is_affected, F.lit(False))
-            )
-            redo_pred = (
-                F.col("lang").isin(affected_nn) if affected_nn else F.lit(False)
-            )
-            if null_affected:
-                redo_pred = redo_pred | F.col("lang").isNull()
-            redo = remaining.filter(F.coalesce(redo_pred, F.lit(False))).select(
-                "lang",
-                F.size(tokens(F.col("text"))).cast("double").alias("n_tok"),
-            )
-            txn.overwrite(
-                QUANTS,
-                keep_rows.unionByName(
-                    summaries_for(redo, "lang", "n_tok", -3)
-                ).coalesce(1),
-            )
+            _rebuild_quants(txn, affected, remaining, -3)
             if "centroids" in names:
-                # PQ cells stay COPY-ON-WRITE by decision (r13, measured —
-                # see SURVEY §2 #... closure): touch detection is ONE
-                # union-scan job, the rewrite is O(touched cells) whose
-                # sizes the IVF maintenance bounds, and a MOR deferral
-                # would put a vector anti-join inside every ANN probe's
-                # served hot path to save rewrites that are already small.
-                vec_ids = ids.select(F.col("doc_id").alias("vec_id"))
-                cells = [r["cell"] for r in txn.read("centroids").collect()]
-                for cell in _touched_cells(spark, txn, cells, vec_ids):
-                    txn.overwrite(
-                        cell,
-                        txn.read(cell).join(vec_ids, "vec_id", "left_anti"),
-                    )
+                _drop_cell_vectors(spark, txn, ids)
             txn.commit(op=op)
             return True
         except CommitConflict:
@@ -1268,10 +1293,7 @@ def update_docs(
     from pyspark.sql import functions as F
 
     from ..functions.caching import scoped_persist
-    from ..functions.text import tokens
-    from ..operators.pq_index import PqIvfIndex
     from ..sources.substring_index import _token_gram_counts
-    from .quantiles import summaries_for
 
     if op in cat.committed_ops():
         return False
@@ -1471,38 +1493,10 @@ def update_docs(
                 .distinct()
                 .collect()
             }
-            null_affected = None in affected
-            affected_nn = [a for a in affected if a is not None]
-            is_affected = (
-                F.col("event_type").isin(affected_nn)
-                if affected_nn
-                else F.lit(False)
-            )
-            if null_affected:
-                is_affected = is_affected | F.col("event_type").isNull()
-            keep_rows = txn.read(QUANTS).filter(
-                ~F.coalesce(is_affected, F.lit(False))
-            )
-            redo_pred = (
-                F.col("lang").isin(affected_nn) if affected_nn else F.lit(False)
-            )
-            if null_affected:
-                redo_pred = redo_pred | F.col("lang").isNull()
             final_corpus = remaining.select("doc_id", "text", "lang").unionByName(
                 kept.select("doc_id", "text", "lang")
             )
-            redo = final_corpus.filter(
-                F.coalesce(redo_pred, F.lit(False))
-            ).select(
-                "lang",
-                F.size(tokens(F.col("text"))).cast("double").alias("n_tok"),
-            )
-            txn.overwrite(
-                QUANTS,
-                keep_rows.unionByName(
-                    summaries_for(redo, "lang", "n_tok", -4)
-                ).coalesce(1),
-            )
+            _rebuild_quants(txn, affected, final_corpus, -4)
             if REJECTS in names:
                 # purge any stored trace of the replaced versions, then
                 # store the NEW versions' rejection report rows
@@ -1546,25 +1540,9 @@ def update_docs(
                         )
                 txn.append(QUAR, quar_rows, op=op, stats_cols=["doc_id"])
             if "centroids" in names:
-                # same one-job touch detection + COW decision as
-                # retract_docs (r13)
-                vec_ids = ids.select(F.col("doc_id").alias("vec_id"))
-                cells = [r["cell"] for r in txn.read("centroids").collect()]
-                for cell in _touched_cells(spark, txn, cells, vec_ids):
-                    txn.overwrite(
-                        cell,
-                        txn.read(cell).join(
-                            vec_ids, "vec_id", "left_anti"
-                        ),
-                    )
+                _drop_cell_vectors(spark, txn, ids)
                 if emb_batch is not None:
-                    pq = PqIvfIndex(cat.root)
-                    books, cells = pq.snapshot(spark, txn.base_version)
-                    kept_emb = emb_batch.join(
-                        survivors, "doc_id", "left_semi"
-                    ).select(F.col("doc_id").alias("vec_id"), "e")
-                    rows = pq.encode_with_model(spark, kept_emb, books, cells)
-                    pq.stage_append(txn, rows, cells, op=op)
+                    _stage_codes(spark, txn, cat.root, emb_batch, survivors, op)
             try:
                 txn.commit(op=op)
                 return True

@@ -583,6 +583,39 @@ def _pin_routing(got: tuple[str, ...], want: tuple[str, ...]) -> None:
         )
 
 
+def _cube_lattice(root: str) -> RollupLattice:
+    """The events lattice (levels and all four measure families) over the
+    catalog at ``root``."""
+    return RollupLattice(
+        TableCatalog(root),
+        CUBE_LEVELS,
+        CUBE_SUMS,
+        minmax_cols=CUBE_MINMAX,
+        distinct_cols=CUBE_DISTINCT,
+    )
+
+
+def _ingest_cube(spark: SparkSession, sf_dir: str, root: str) -> RollupLattice:
+    """A new events lattice at ``root`` with the events table ingested as
+    ``CUBE_BATCHES`` ``event_id % CUBE_BATCHES`` batches through
+    :meth:`RollupLattice.ingest_batch`, one catalog CAS each."""
+    from ..sources.tables import load_table
+
+    lat = _cube_lattice(root)
+    ev = load_table(spark, sf_dir, "events").select(
+        F.to_date("ts").alias("day"),
+        "event_type",
+        "value",
+        "event_id",
+        "user_id",
+    )
+    for i in range(CUBE_BATCHES):
+        lat.ingest_batch(
+            spark, ev.filter(F.pmod("event_id", F.lit(CUBE_BATCHES)) == i), i
+        )
+    return lat
+
+
 def _events_cube(spark: SparkSession, sf_dir: str) -> RollupLattice:
     """The served events lattice for ``sf_dir`` — built once per corpus
     behind the shared served-artifact latch (three ``event_id % 3``
@@ -593,40 +626,14 @@ def _events_cube(spark: SparkSession, sf_dir: str) -> RollupLattice:
     wider partial row, not another pass (artifact name bumped to _v2 for
     the r13 schema)."""
     from ..sources.artifacts import served_artifact
-    from ..sources.tables import load_table
 
     def _build(path: str) -> None:
-        lat = RollupLattice(
-            TableCatalog(path),
-            CUBE_LEVELS,
-            CUBE_SUMS,
-            minmax_cols=CUBE_MINMAX,
-            distinct_cols=CUBE_DISTINCT,
-        )
-        ev = load_table(spark, sf_dir, "events").select(
-            F.to_date("ts").alias("day"),
-            "event_type",
-            "value",
-            "event_id",
-            "user_id",
-        )
-        for i in range(CUBE_BATCHES):
-            lat.ingest_batch(
-                spark, ev.filter(F.pmod("event_id", F.lit(CUBE_BATCHES)) == i), i
-            )
         # steady-state serving posture: fold the per-batch partial logs to
         # O(distinct keys) rows per level — the serve-side fold then reads
         # one file per level instead of one per (batch, level)
-        lat.compact(spark)
+        _ingest_cube(spark, sf_dir, path).compact(spark)
 
-    cat = TableCatalog(served_artifact("events_cube_v2", sf_dir, _build))
-    return RollupLattice(
-        cat,
-        CUBE_LEVELS,
-        CUBE_SUMS,
-        minmax_cols=CUBE_MINMAX,
-        distinct_cols=CUBE_DISTINCT,
-    )
+    return _cube_lattice(served_artifact("events_cube_v2", sf_dir, _build))
 
 
 def events_cube_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -732,27 +739,9 @@ def _events_cube_erased(spark: SparkSession, sf_dir: str) -> RollupLattice:
     partials in one CAS). Built once per corpus behind its own latch;
     the nav/minmax artifact is untouched."""
     from ..sources.artifacts import served_artifact
-    from ..sources.tables import load_table
 
     def _build(path: str) -> None:
-        lat = RollupLattice(
-            TableCatalog(path),
-            CUBE_LEVELS,
-            CUBE_SUMS,
-            minmax_cols=CUBE_MINMAX,
-            distinct_cols=CUBE_DISTINCT,
-        )
-        ev = load_table(spark, sf_dir, "events").select(
-            F.to_date("ts").alias("day"),
-            "event_type",
-            "value",
-            "event_id",
-            "user_id",
-        )
-        for i in range(CUBE_BATCHES):
-            lat.ingest_batch(
-                spark, ev.filter(F.pmod("event_id", F.lit(CUBE_BATCHES)) == i), i
-            )
+        lat = _ingest_cube(spark, sf_dir, path)
         lat.retract_keys(
             spark,
             F.col("event_type") == CUBE_ERASE_TYPE,
@@ -760,14 +749,7 @@ def _events_cube_erased(spark: SparkSession, sf_dir: str) -> RollupLattice:
         )
         lat.compact(spark)
 
-    cat = TableCatalog(served_artifact("events_cube_erased", sf_dir, _build))
-    return RollupLattice(
-        cat,
-        CUBE_LEVELS,
-        CUBE_SUMS,
-        minmax_cols=CUBE_MINMAX,
-        distinct_cols=CUBE_DISTINCT,
-    )
+    return _cube_lattice(served_artifact("events_cube_erased", sf_dir, _build))
 
 
 def events_cube_erased(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,12 @@ a name built from a string stays live. Names listed in ``__all__`` and
 bare imports are not callers.
 
 One kernel per computation: no two function bodies in the package,
-nested functions included, are verbatim copies of each other."""
+nested functions included, are verbatim copies of each other, and no run
+of one to three consecutive statements of kernel size appears verbatim in
+two functions. The runs are taken from every statement list of a
+function (its body and the bodies of its ``if``/``for``/``while``/
+``with``/``try`` blocks); nested functions are scanned as functions of
+their own."""
 
 from __future__ import annotations
 
@@ -154,3 +159,48 @@ def verbatim_copies() -> list[list[str]]:
 
 def test_no_function_body_is_a_verbatim_copy():
     assert verbatim_copies() == []
+
+
+# A run of this many nodes is a kernel step (a scoring block, a commit
+# loop); the largest shared runs below it are single statements: one
+# table load, one schema lookup, one column expression.
+MIN_RUN_NODES = 60
+MAX_RUN_STATEMENTS = 3
+
+
+def _statement_lists(fn: ast.AST):
+    """The body of ``fn`` and every block nested in it, nested defs left out."""
+    todo = [fn.body]
+    while todo:
+        body = todo.pop()
+        yield body
+        for st in body:
+            if isinstance(st, _DEFS):
+                continue
+            for field in ("body", "orelse", "finalbody"):
+                todo.append(getattr(st, field, []))
+            todo.extend(h.body for h in getattr(st, "handlers", []))
+
+
+def copied_statement_runs() -> list[tuple[str, ...]]:
+    """Sets of package functions that share a verbatim run of 1 to
+    ``MAX_RUN_STATEMENTS`` consecutive statements (no def among them) of
+    at least ``MIN_RUN_NODES`` ``ast`` nodes."""
+    by_run: dict[str, set[str]] = defaultdict(set)
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for name, fn in _functions(ast.parse(path.read_text()), ""):
+            for body in _statement_lists(fn):
+                for i in range(len(body)):
+                    for k in range(1, MAX_RUN_STATEMENTS + 1):
+                        run = body[i : i + k]
+                        if len(run) < k or isinstance(run[-1], _DEFS):
+                            break
+                        if sum(1 for st in run for _ in ast.walk(st)) >= MIN_RUN_NODES:
+                            dump = ast.dump(ast.Module(body=run, type_ignores=[]))
+                            by_run[dump].add(f"{rel}::{name}")
+    return sorted({tuple(sorted(names)) for names in by_run.values() if len(names) > 1})
+
+
+def test_no_statement_run_is_a_verbatim_copy():
+    assert copied_statement_runs() == []
