@@ -393,7 +393,7 @@ def _probe_pairs(
 def _rerank(vecs: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact top-``TOP_K`` re-rank of (query_id, vec_id) candidates: both
     vectors re-attached, scored by :func:`_exact_pair_scores`, cut by
-    :func:`_top_k`. The one serve tail of every ANN query.
+    :func:`_top_k`. The serve tail of every candidate-based ANN query.
 
     Only the query subset's vectors are broadcast (r15): every candidate
     query_id is ``% QUERY_MOD == 0`` by construction, so the filter is a
